@@ -6,10 +6,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
-/** Central lifecycle owner for the engine's session-keyed memo maps
-  * (shared shingle sets, fitted IVF models, table relations).
+/** Central lifecycle owner for the engine's session-keyed stores: the
+  * plan-keyed [[Memo]] (shingle sets, pair frames, indexes, fitted models)
+  * and the path-keyed ones (table relations, zone-map manifests).
   *
-  * Why it exists: those memos are static maps strong-keyed by
+  * Why it exists: those stores are static maps strong-keyed by
   * `SparkSession`. Release functions exist and well-behaved callers (Bench,
   * specs) invoke them, but a long-lived multi-session JVM that forgets to
   * would leak sessions and cached plans forever. Every [[SessionKeyedCache]]
@@ -74,6 +75,11 @@ final class SessionKeyedCache[K, V](onDrop: V => Unit = (_: V) => ()) {
     SessionCaches.hook(spark)
     Option(m.put((spark, key), value))
   }
+
+  /** Drop the entry only while it still maps to `value`; onDrop is the
+    * caller's to run. */
+  def remove(spark: SparkSession, key: K, value: V): Boolean =
+    m.remove((spark, key), value)
 
   /** The memoized value if present — a pure read that never populates
     * (the consult path for layers that must not trigger the builder,

@@ -54,19 +54,13 @@ object Clusters {
                           smallGraphEdges: Long = SmallGraphEdges): DataFrame =
     connectedComponentsWithRounds(pairs, maxIter, smallGraphEdges)._1
 
-  /** Session-scoped memo of computed label tables, keyed by the pair plan's
-    * semantic hash — the [[graft.dedup.Dedup.sharedShingles]] precedent: d07
-    * and the p01 pipeline both close the SAME pair graph, and the fixpoint
-    * loop is a multi-job eager computation worth running once per corpus.
-    * The labels are localCheckpoint-backed (lineage already truncated), so
-    * eviction needs no unpersist — [[graft.SessionCaches]] reclaims entries
-    * when the session's application ends. */
-  private val ccMemo = new graft.SessionKeyedCache[(Int, Int), DataFrame]()
-
-  /** [[connectedComponents]] through the session memo. */
+  /** [[connectedComponents]] through [[graft.Memo]]: d07 and the p01
+    * pipeline both close the SAME pair graph, and the fixpoint loop is a
+    * multi-job eager computation worth running once per corpus. The labels
+    * are localCheckpoint-backed (lineage already truncated), so they are
+    * kept as a value and eviction needs no unpersist. */
   def sharedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame =
-    ccMemo.getOrElseUpdate(
-      pairs.sparkSession, (pairs.queryExecution.analyzed.semanticHash(), maxIter))(
+    graft.Memo.value("Clusters.components", pairs, maxIter)(
       connectedComponents(pairs, maxIter))
 
   /** [[connectedComponents]] plus the number of rounds the fixpoint loop
@@ -450,7 +444,7 @@ object Clusters {
     // overhead (round-8 profile: d32 spent 5 s on job scheduling for a
     // 47-node graph) — the count doubles as the emptiness check. The count
     // is NOT a wasted evaluation: minHashLshPairs is session-memoized with
-    // persist() (Dedup.pairMemo), so this first action populates the shared
+    // persist() (graft.Memo), so this first action populates the shared
     // cache that powerRanks* and the dupClusters call below then read.
     val integralIds = Seq("d1", "d2").forall(n => pairs.schema(n).dataType match {
       case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |

@@ -1,8 +1,8 @@
 package graft.dedup
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.TextFns
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for the LLM-data-pipeline surface.
@@ -78,37 +78,20 @@ object Dedup {
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
   }
 
-  /** Session-scoped exact-pair registry — the [[sharedShingles]] pattern
-    * one level up: d02's verified pair frame is consumed by the evidence
-    * report (d17), the syndication matrix (p20) and ad-hoc audits, and
-    * each would otherwise re-pay the prefix-filter ssjoin per call.
-    * Memoized per (session, docs plan, threshold, k), persisted; owned by
-    * [[graft.SessionCaches]]; benched as `_shared_jaccard_pairs`. */
-  private val pairsMemo =
-    new graft.SessionKeyedCache[(Int, Long, Int), DataFrame](_.unpersist(blocking = false))
-
-  /** The memoized, persisted d02 pair frame for (docs, threshold, k). */
+  /** d02's verified pair frame, through [[Memo]]: the evidence report
+    * (d17), the syndication matrix (p20) and ad-hoc audits would otherwise
+    * each re-pay the prefix-filter ssjoin. Benched as
+    * `_shared_jaccard_pairs`. */
   def sharedJaccardPairs(docs: DataFrame, threshold: Double = 0.8, k: Int = 3): DataFrame =
-    pairsMemo.getOrElseUpdate(
-      docs.sparkSession,
-      (docs.queryExecution.analyzed.semanticHash(), math.round(threshold * 1e6), k))(
-      ngramJaccardPairs(docs, threshold, k).persist())
+    Memo.frame("Dedup.jaccardPairs", docs, threshold, k)(ngramJaccardPairs(docs, threshold, k))
 
-  private val weightedPairsMemo =
-    new graft.SessionKeyedCache[(Int, Long, Int), DataFrame](_.unpersist(blocking = false))
-
-  /** The memoized, persisted d13 weighted-pair frame — the
-    * [[sharedJaccardPairs]] discipline for the weighted family: d13 and
-    * d40's exact route ask for the identical frame, so the exact weighted
-    * verification (the family's most expensive member) is paid once per
-    * (session, docs, threshold, k) and every later caller reads the
-    * persisted result. Benched as `_shared_weighted_pairs`. */
+  /** d13's weighted-pair frame, through [[Memo]]: d13 and d40's exact
+    * route ask for the identical frame, so the family's most expensive
+    * verification is paid once. Benched as `_shared_weighted_pairs`. */
   def sharedWeightedJaccardPairs(docs: DataFrame, threshold: Double = 0.5,
                                  k: Int = 3): DataFrame =
-    weightedPairsMemo.getOrElseUpdate(
-      docs.sparkSession,
-      (docs.queryExecution.analyzed.semanticHash(), math.round(threshold * 1e6), k))(
-      weightedJaccardPairs(docs, threshold, k).persist())
+    Memo.frame("Dedup.weightedPairs", docs, threshold, k)(
+      weightedJaccardPairs(docs, threshold, k))
 
   /** d17: near-dup evidence report — for every d02 pair, the RAREST
     * shingles the two documents share (rank by corpus df, then shingle;
@@ -288,18 +271,11 @@ object Dedup {
           .otherwise(lit(1.0) - col("dist").cast("double")
             / greatest(col("l1"), col("l2")).cast("double")).as("sim"))
 
-  /** Session-scoped memo for d19's pair frame — the [[sharedShingles]]
-    * lifecycle: d19, d20's `edit` method and d22's closure all consume the
-    * same (docs, maxDist) pair set, so the bucket join + Levenshtein verify
-    * runs once per session, not once per consumer. */
-  private val editPairsMemo =
-    new graft.SessionKeyedCache[(Int, Int), DataFrame](_.unpersist(blocking = false))
-
-  /** The memoized, persisted d19 pair frame for (docs, maxDist). */
+  /** d19's pair frame, through [[Memo]]: d19, d20's `edit` method and
+    * d22's closure all consume the same (docs, maxDist) pair set, so the
+    * bucket join + Levenshtein verify runs once, not once per consumer. */
   def sharedEditPairs(docs: DataFrame, maxDist: Int = 32): DataFrame =
-    editPairsMemo.getOrElseUpdate(
-      docs.sparkSession, (docs.queryExecution.analyzed.semanticHash(), maxDist))(
-      editDistancePairs(docs, maxDist).persist())
+    Memo.frame("Dedup.editPairs", docs, maxDist)(editDistancePairs(docs, maxDist))
 
   /** d28: edit-distance threshold sensitivity curve — pairs and involved
     * documents per max-distance cut, d18's tuning artifact for the
@@ -612,40 +588,12 @@ object Dedup {
       .where(col("jaccard") >= threshold)
   }
 
-  /** Session-scoped shingle-set registry. d02, d03 and the corpus pipeline
-    * all consume the same exploded shingle table; memoizing the *persisted
-    * DataFrame object* (keyed by the docs plan's semantic hash and k) gives
-    * them one shared cache entry instead of three persist() attempts on
-    * plan-identical frames (the CacheManager "already cached" warning), and
-    * gives the cache lifecycle a single owner: call [[releaseShingles]]
-    * after the terminal action of the last consumer. Registered with
-    * [[graft.SessionCaches]], so a forgotten release is reclaimed when the
-    * session's application ends instead of leaking the persisted frames. */
-  private val shingleMemo =
-    new graft.SessionKeyedCache[(Int, Int), DataFrame](_.unpersist(blocking = false))
-
-  /** The memoized, persisted shingle set for `docs` (see [[shingleMemo]]). */
+  /** The shingle set for `docs`, through [[Memo]]. d02, d03 and the
+    * corpus pipeline all consume the same exploded shingle table; one
+    * shared persisted frame replaces three persist() attempts on
+    * plan-identical frames (the CacheManager "already cached" warning). */
   def sharedShingles(docs: DataFrame, k: Int = 3): DataFrame =
-    shingleMemo.getOrElseUpdate(
-      docs.sparkSession, (docs.queryExecution.analyzed.semanticHash(), k))(
-      shingleSets(docs, k).persist())
-
-  /** Unpersist and drop every shingle set memoized under `spark`. */
-  def releaseShingles(spark: SparkSession): Unit = {
-    shingleMemo.purgeSession(Some(spark), None)
-    shingleArrayMemo.purgeSession(Some(spark), None)
-  }
-
-  /** Per-doc SORTED shingle arrays (doc_id, shset, n) — the join-twice
-    * verify payload: candidate-pair verification joins this nDocs-row
-    * frame by doc id (twice) and intersects scan-locally, instead of
-    * exploding candidates against the full (doc_id, shingle) frame and
-    * re-shuffling it by a composite key per query. Same content moves —
-    * one array row per doc instead of |doc| rows — but in ONE exchange at
-    * build time (amortized across d12-family queries via this memo)
-    * rather than two full-frame shuffles per verify. */
-  private val shingleArrayMemo =
-    new graft.SessionKeyedCache[Int, DataFrame](_.unpersist(blocking = false))
+    Memo.frame("Dedup.shingles", docs, k)(shingleSets(docs, k))
 
   /** Bench attribution accessor: the per-doc array frame over `docs`'
     * shared shingles (the [[sharedWeightedShingles]] convention). */
@@ -656,14 +604,19 @@ object Dedup {
   def sharedWeightedArraysFor(docs: DataFrame, k: Int = 3): DataFrame =
     sharedWeightedArrays(weightedShingles(sharedShingles(docs, k)))
 
-  /** The memoized per-doc sorted-array form of a shingle frame. */
+  /** Per-doc SORTED shingle arrays (doc_id, shset, n), through [[Memo]] —
+    * the join-twice verify payload: candidate-pair verification joins this
+    * nDocs-row frame by doc id (twice) and intersects scan-locally, instead
+    * of exploding candidates against the full (doc_id, shingle) frame and
+    * re-shuffling it by a composite key per query. Same content moves —
+    * one array row per doc instead of |doc| rows — but in ONE exchange at
+    * build time (amortized across d12-family queries) rather than two
+    * full-frame shuffles per verify. */
   private[graft] def sharedShingleArrays(sh: DataFrame): DataFrame =
-    shingleArrayMemo.getOrElseUpdate(
-      sh.sparkSession, sh.queryExecution.analyzed.semanticHash())(
+    Memo.frame("Dedup.shingleArrays", sh)(
       sh.groupBy(col("doc_id"))
         .agg(sort_array(collect_list(col("shingle"))).as("shset"),
-          count(lit(1)).as("n"))
-        .persist())
+          count(lit(1)).as("n")))
 
   /** Exploded distinct shingle sets, keyed by xxhash64 of the shingle:
     * (doc_id, shingle: long). Joining/counting on the 8-byte hash instead of
@@ -698,10 +651,10 @@ object Dedup {
     * via a prefix-filtered inverted shingle index — the correctness baseline
     * the LSH path must reproduce. */
   def ngramJaccardPairs(docs: DataFrame, threshold: Double = 0.8, k: Int = 3): DataFrame =
-    // convenience wrapper over the session-scoped registry: repeated calls
-    // (and d03/p01 on the same docs) share ONE persisted shingle set.
-    // Long-lived sessions processing many corpora should either call
-    // releaseShingles between corpora or own the lifecycle outright via
+    // convenience wrapper over the session memo: repeated calls (and
+    // d03/p01 on the same docs) share ONE persisted shingle set. Long-lived
+    // sessions processing many corpora should either call Memo.release
+    // between corpora or own the lifecycle outright via
     // ngramJaccardPairsOf + their own persist/unpersist.
     ngramJaccardPairsOf(sharedShingles(docs, k), threshold)
 
@@ -784,22 +737,14 @@ object Dedup {
   def containmentPairs(docs: DataFrame, threshold: Double = 0.9, k: Int = 3): DataFrame =
     containmentPairsOf(sharedShingles(docs, k), threshold)
 
-  /** Session-scoped memo for d12's pair frame — the [[sharedEditPairs]]
-    * lifecycle: d12 and d41's exact route consume the same
-    * (docs, threshold, k) directed pair set, so the asymmetric
-    * prefix-filtered index join (the family's most expensive verify)
-    * runs once per session, not once per consumer. */
-  private val containmentMemo =
-    new graft.SessionKeyedCache[(Int, Long, Int), DataFrame](
-      _.unpersist(blocking = false))
-
-  /** The memoized, persisted d12 pair frame for (docs, threshold, k). */
+  /** d12's pair frame, through [[Memo]]: d12 and d41's exact route
+    * consume the same (docs, threshold, k) directed pair set, so the
+    * asymmetric prefix-filtered index join (the family's most expensive
+    * verify) runs once, not once per consumer. */
   def sharedContainmentPairs(docs: DataFrame, threshold: Double = 0.9,
                              k: Int = 3): DataFrame =
-    containmentMemo.getOrElseUpdate(
-      docs.sparkSession, (docs.queryExecution.analyzed.semanticHash(),
-        java.lang.Double.doubleToLongBits(threshold), k))(
-      containmentPairs(docs, threshold, k).persist())
+    Memo.frame("Dedup.containmentPairs", docs, threshold, k)(
+      containmentPairs(docs, threshold, k))
 
   /** See [[containmentPairs]]; core over a caller-managed shingle set. */
   def containmentPairsOf(sh: DataFrame, threshold: Double = 0.9): DataFrame = {
@@ -881,22 +826,6 @@ object Dedup {
   def weightedJaccardPairs(docs: DataFrame, threshold: Double = 0.5, k: Int = 3): DataFrame =
     weightedJaccardPairsOf(sharedShingles(docs, k), threshold)
 
-  /** The weighted shingle frame (doc_id, shingle, df, w) is read FOUR
-    * times by one weightedJaccard plan (prefix extraction, candidate
-    * posting lists via the prefix, and the two verify joins + sizes);
-    * without materialization each read re-pays the corpus shingle scan AND
-    * the df aggregation (measured ~4x the query's useful work at sf0.1).
-    * Memoized per (session, shingle plan) and persisted — the
-    * [[sharedShingles]] lifecycle, drained by [[graft.SessionCaches]]. */
-  private val weightedShingleMemo =
-    new graft.SessionKeyedCache[Int, DataFrame](_.unpersist(blocking = false))
-
-  /** The persisted CWS signature frame per (session, weighted-shingle
-    * plan, draw count) — see the memo note inside
-    * [[weightedMinHashLshPairsOf]]. */
-  private val cwsSigMemo =
-    new graft.SessionKeyedCache[(Int, Int), DataFrame](_.unpersist(blocking = false))
-
   /** τ as an exact /1e6 rational (the d02 rule), rejected otherwise. */
   private def tauNum(threshold: Double): Long = {
     val num = math.round(threshold * 1e6)
@@ -912,18 +841,20 @@ object Dedup {
   def sharedWeightedShingles(docs: DataFrame, k: Int = 3): DataFrame =
     weightedShingles(sharedShingles(docs, k))
 
-  /** The memoized, persisted weighted shingle frame (doc_id, shingle, df,
-    * w) for a shingle set — rarity weight by exact integer division,
-    * zero-weight chrome dropped (see [[weightedJaccardPairs]]). */
+  /** The weighted shingle frame (doc_id, shingle, df, w) for a shingle
+    * set, through [[Memo]] — rarity weight by exact integer division,
+    * zero-weight chrome dropped (see [[weightedJaccardPairs]]). One
+    * weightedJaccard plan reads it FOUR times (prefix extraction,
+    * candidate posting lists via the prefix, and the two verify joins +
+    * sizes); unmaterialized, each read re-pays the corpus shingle scan AND
+    * the df aggregation (measured ~4x the query's useful work at sf0.1). */
   private def weightedShingles(sh: DataFrame): DataFrame =
-    weightedShingleMemo.getOrElseUpdate(
-      sh.sparkSession, sh.queryExecution.analyzed.semanticHash()) {
+    Memo.frame("Dedup.weightedShingles", sh) {
       val freq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       sh.join(freq, "shingle")
         .select(col("doc_id"), col("shingle"), col("df"),
           expr("1000000L div df").as("w"))
         .where(col("w") > 0)
-        .persist()
     }
 
   /** Per-doc weighted shingle arrays (doc_id, shset: sorted LONG array
@@ -935,17 +866,12 @@ object Dedup {
     * measured ~4× the whole query at sf0.1. The intersection's weights
     * are then summed by EXPLODING only the common shingles (rows ∝ the
     * pair's true overlap, a fraction of either doc) into one join
-    * against the per-shingle weight table. */
-  private val weightedArrayMemo =
-    new graft.SessionKeyedCache[Int, DataFrame](_.unpersist(blocking = false))
-
+    * against the per-shingle weight table. Through [[Memo]]. */
   private def sharedWeightedArrays(wsh: DataFrame): DataFrame =
-    weightedArrayMemo.getOrElseUpdate(
-      wsh.sparkSession, wsh.queryExecution.analyzed.semanticHash())(
+    Memo.frame("Dedup.weightedArrays", wsh)(
       wsh.groupBy(col("doc_id"))
         .agg(sort_array(collect_list(col("shingle"))).as("shset"),
-          sum(col("w")).as("tw"))
-        .persist())
+          sum(col("w")).as("tw")))
 
   /** Exact weighted verification tail shared by d13 and d14: candidate
     * (d1, d2) pairs → fast long-array intersection → common shingles
@@ -1118,16 +1044,13 @@ object Dedup {
     // it — unpersisted, Spark recomputes the whole projection per side
     // (measured ≈ 3× the stage's cost inside one d14 run at sf0.1). The
     // signature frame is the weighted family's INDEX (the round-7 rule:
-    // build once, serve many), so it memoizes per (session, shingle plan,
+    // build once, serve many), so it goes through Memo per (shingle plan,
     // draws) like [[weightedShingles]] and persists doc-count-sized rows
     // (|docs| × nDraws doubles — index-scale, not corpus-scale).
-    cwsSigMemo.getOrElseUpdate(
-      wsh.sparkSession,
-      (wsh.queryExecution.analyzed.semanticHash(), nDraws))(
+    Memo.frame("Dedup.cwsSignatures", wsh, nDraws)(
       step2.groupBy(col("doc_id"))
         .agg(min(col("c0")).as("cw0"),
-          (1 until nDraws).map(i => min(col(s"c$i")).as(s"cw$i")): _*)
-        .persist())
+          (1 until nDraws).map(i => min(col(s"c$i")).as(s"cw$i")): _*))
   }
 
   /** MinHash signature columns: min over the shingle set of k seeded
@@ -1146,23 +1069,15 @@ object Dedup {
     * This is the shape that holds at 100 TB: signatures are fixed-size, the
     * bucket join shuffles on (band, bucket-hash), and verification touches
     * only candidate pairs. */
-  /** LSH pair sets memoized per (session, corpus plan, parameters) and
-    * persisted: d03, d07 cluster resolution and the p01 pipeline all close
-    * over the SAME pair set, and the verified pair frame is tiny (∝ actual
-    * duplication, not corpus size), so recomputing the signature/band/verify
-    * pipeline per consumer is pure waste. [[graft.SessionCaches]] drains the
-    * persisted frames with the other session memos. */
-  private val pairMemo =
-    new graft.SessionKeyedCache[(Int, Long, Int, Int, Int), DataFrame](
-      _.unpersist(blocking = false))
-
+  /** LSH pair sets go through [[Memo]]: d03, d07 cluster resolution and
+    * the p01 pipeline all close over the SAME pair set, and the verified
+    * pair frame is tiny (∝ actual duplication, not corpus size), so
+    * recomputing the signature/band/verify pipeline per consumer is pure
+    * waste. */
   def minHashLshPairs(docs: DataFrame, threshold: Double = 0.8,
                       bands: Int = 16, rowsPerBand: Int = 4, k: Int = 3): DataFrame =
-    pairMemo.getOrElseUpdate(
-      docs.sparkSession,
-      (docs.queryExecution.analyzed.semanticHash(),
-        java.lang.Double.doubleToLongBits(threshold), bands, rowsPerBand, k))(
-      minHashLshPairsOf(sharedShingles(docs, k), threshold, bands, rowsPerBand).persist())
+    Memo.frame("Dedup.lshPairs", docs, threshold, bands, rowsPerBand, k)(
+      minHashLshPairsOf(sharedShingles(docs, k), threshold, bands, rowsPerBand))
 
   /** d03 core over a caller-managed shingle set — caller owns the
     * persist()/unpersist() lifecycle. */
@@ -1258,26 +1173,17 @@ object Dedup {
     * left-to-right (DuckDB list_cosine_similarity-compatible). Still
     * quadratic in flops — the declared exact baseline; the scale routes are
     * the LSH/IVF paths in graft.similarity.Knn / graft.ml.MlOps. */
-  /** d05's pair frame memoized per (session, corpus plan, threshold,
-    * blocks) — the [[minHashLshPairs]] precedent: d05 (the declared exact
-    * baseline), d38's exact route and the parity/admission consumers all
-    * close over the SAME all-pairs result, and the verified pair frame is
-    * tiny (∝ actual duplication), so re-running the quadratic kernel per
-    * consumer is pure waste. The first consumer pays the materialization
-    * (the bench's d05 entry — the baseline stays honestly timed);
-    * [[graft.SessionCaches]] drains the persisted frame with the other
-    * session memos. */
-  private val embPairMemo =
-    new graft.SessionKeyedCache[(Int, Long, Int), DataFrame](
-      _.unpersist(blocking = false))
-
+  /** d05's pair frame, through [[Memo]] — the [[minHashLshPairs]]
+    * precedent: d05 (the declared exact baseline), d38's exact route and
+    * the parity/admission consumers all close over the SAME all-pairs
+    * result, and the verified pair frame is tiny (∝ actual duplication),
+    * so re-running the quadratic kernel per consumer is pure waste. The
+    * first consumer pays the materialization (the bench's d05 entry — the
+    * baseline stays honestly timed). */
   def embeddingDupPairs(emb: DataFrame, threshold: Double = 0.45,
                         blocks: Int = 8): DataFrame =
-    embPairMemo.getOrElseUpdate(
-      emb.sparkSession,
-      (emb.queryExecution.analyzed.semanticHash(),
-        java.lang.Double.doubleToLongBits(threshold), blocks))(
-      embeddingDupPairsOf(emb, threshold, blocks).persist())
+    Memo.frame("Dedup.embeddingPairs", emb, threshold, blocks)(
+      embeddingDupPairsOf(emb, threshold, blocks))
 
   /** The d05 kernel over a caller-managed lifecycle (no memo). */
   def embeddingDupPairsOf(emb: DataFrame, threshold: Double = 0.45,

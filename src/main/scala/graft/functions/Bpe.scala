@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
@@ -97,11 +97,6 @@ object Bpe {
       text.toLowerCase.split(" ", -1).iterator.flatMap(encodeWordReplay).toArray
   }
 
-  private val models = new graft.SessionKeyedCache[(Int, Int, Int), Model]()
-
-  def clearModels(spark: SparkSession): Unit =
-    models.purgeSession(Some(spark), None)
-
   /** Train merge rules on a corpus' token stream. */
   def train(docs: DataFrame, nMerges: Int = 100, maxVocab: Int = 10000): Model = {
     require(nMerges >= 0 && maxVocab >= 1,
@@ -153,12 +148,9 @@ object Bpe {
     Model(merges.result())
   }
 
-  /** [[train]] memoized per (session, corpus plan, nMerges, maxVocab). */
+  /** [[train]] through [[graft.Memo]]. */
   def sharedModel(docs: DataFrame, nMerges: Int = 100, maxVocab: Int = 10000): Model =
-    models.getOrElseUpdate(
-      docs.sparkSession,
-      (docs.queryExecution.analyzed.semanticHash(), nMerges, maxVocab))(
-      train(docs, nMerges, maxVocab))
+    graft.Memo.value("Bpe.model", docs, nMerges, maxVocab)(train(docs, nMerges, maxVocab))
 
   /** Subword units of a text column under a fitted model (native codegen
     * expression — scan-local). */

@@ -187,38 +187,23 @@ object Multimodal {
     * Scale shape: frame explode is partition-local; the (fh) self-join
     * touches only frames shared by ≥2 videos; one pair-keyed aggregation.
     * Output ∝ real near-dup pairs. */
-  /** Session-scoped frame-hash registry — the sharedShingles pattern for
-    * m06's (doc_id, fh) frame, which the sizes/candidates/verify stages
-    * read three times (each read re-demuxes containers without it).
-    * Memoized per (session, media plan, framing params); lifecycle owned
-    * by [[graft.SessionCaches]]. */
-  private val frameHashMemo =
-    new graft.SessionKeyedCache[(Int, Int, Int), DataFrame](_.unpersist(blocking = false))
-
-  /** m06's verified pair frame memoized per (media plan, threshold,
-    * framing params) — the minHashLshPairs precedent (r15): m06 serves it
-    * and m08's closure consumes the SAME pair set, so the frame self-join
-    * + verify runs once per session; the frame is ∝ real near-dup pairs. */
-  private val videoPairMemo =
-    new graft.SessionKeyedCache[(Int, Long, Int, Int), DataFrame](
-      _.unpersist(blocking = false))
-
+  /** m06's verified pair frame, through [[graft.Memo]]: m06 serves it and
+    * m08's closure consumes the SAME pair set, so the frame self-join +
+    * verify runs once per session; the frame is ∝ real near-dup pairs. */
   def videoNearDups(spark: SparkSession, media: DataFrame,
                     threshold: Double = 0.5,
                     frameBytes: Int = 256, everyN: Int = 4): DataFrame =
-    videoPairMemo.getOrElseUpdate(
-      spark, (media.queryExecution.analyzed.semanticHash(),
-        java.lang.Double.doubleToLongBits(threshold), frameBytes, everyN))(
-      videoNearDupsOf(spark, media, threshold, frameBytes, everyN).persist())
+    graft.Memo.frame("Multimodal.videoPairs", media, threshold, frameBytes, everyN)(
+      videoNearDupsOf(spark, media, threshold, frameBytes, everyN))
 
   private def videoNearDupsOf(spark: SparkSession, media: DataFrame,
                               threshold: Double,
                               frameBytes: Int, everyN: Int): DataFrame = {
-    val frames = frameHashMemo.getOrElseUpdate(
-      spark, (media.queryExecution.analyzed.semanticHash(), frameBytes, everyN))(
+    // the (doc_id, fh) frame is read three times below (sizes, candidates,
+    // verify), and each read re-demuxes containers without the memo
+    val frames = graft.Memo.frame("Multimodal.frameHashes", media, frameBytes, everyN)(
       frameSample(spark, media, frameBytes, everyN).toDF()
-        .select(col("doc_id"), xxhash64(col("frame")).as("fh")).distinct()
-        .persist())
+        .select(col("doc_id"), xxhash64(col("frame")).as("fh")).distinct())
     val sizes = frames.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val common = frames.select(col("doc_id").as("d1"), col("fh"))
       .join(frames.select(col("doc_id").as("d2"), col("fh")), Seq("fh"))

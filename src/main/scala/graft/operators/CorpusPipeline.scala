@@ -48,8 +48,8 @@ object CorpusPipeline {
           col("c_en"), col("c_de"), col("c_es"), col("c_fr")).as("guess"))
     val exactKeepers = Dedup.exact(docs).select(col("keep_id").as("doc_id"))
     // explicit about the shared-cache contract: the shingle set comes from
-    // the session-scoped registry (one persisted copy shared with d02/d03),
-    // released by the session owner via Dedup.releaseShingles
+    // the session memo (one persisted copy shared with d02/d03), released
+    // by the session owner via Memo.release
     val pairs = Dedup.minHashLshPairs(docs) // session pair memo: shared with d03/d07
       .select(col("d1"), col("d2"))
     // transitive closure over the pair graph; everything but each cluster's

@@ -28,8 +28,8 @@ object DataPipeline {
     * corpus is the 100 TB side, so the eval shingle set is broadcast and the
     * corpus-side shingles take a broadcast semi-join — the corpus is NEVER
     * shuffled, only scanned. The shingle explosion itself is scan-local
-    * (one projection), shared with d02/d03 via the session shingle registry
-    * when k matches.
+    * (one projection), shared with d02/d03 via the shingle memo when k
+    * matches.
     */
   def decontaminate(docs: DataFrame, isEval: Column, k: Int = 8): DataFrame = {
     val sh = Dedup.sharedShingles(docs, k) // (doc_id, shingle: long)

@@ -11,26 +11,14 @@ import org.apache.spark.sql.functions._
   * whole-stage codegen; one narrow scan of (doc_id, text[, lang]). */
 object TextQueries {
 
-  /** Session-scoped exploded-token registry — the [[graft.dedup.Dedup
-    * .sharedShingles]] pattern for the (doc_id, token) table that t06, t07
-    * and t10 all explode (and that t06 otherwise scans TWICE — LM fit +
-    * scoring join). Memoized per (session, docs plan), persisted; owned by
-    * [[graft.SessionCaches]], so a forgotten release drains at application
-    * end. The token frame is corpus-sized rows but two narrow columns —
-    * the standard memory-for-rescan trade SURVEY §8.4 prices for t06. */
-  private val tokenMemo =
-    new graft.SessionKeyedCache[Int, DataFrame](_.unpersist(blocking = false))
-
-  /** The memoized, persisted (doc_id, token) explosion for `docs`. */
+  /** The (doc_id, token) explosion for `docs`, through [[graft.Memo]]:
+    * t06, t07 and t10 all explode it (and t06 otherwise scans it TWICE —
+    * LM fit + scoring join). The token frame is corpus-sized rows but two
+    * narrow columns — the standard memory-for-rescan trade SURVEY §8.4
+    * prices for t06. */
   def sharedTokens(docs: DataFrame): DataFrame =
-    tokenMemo.getOrElseUpdate(
-      docs.sparkSession, docs.queryExecution.analyzed.semanticHash())(
-      docs.select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("token"))
-        .persist())
-
-  /** Unpersist and drop every token frame memoized under `spark`. */
-  def releaseTokens(spark: org.apache.spark.sql.SparkSession): Unit =
-    tokenMemo.purgeSession(Some(spark), None)
+    graft.Memo.frame("TextQueries.tokens", docs)(
+      docs.select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("token")))
 
   /** t01: per-document token statistics. */
   def t01TokenStats(t: Tables): DataFrame = {
@@ -95,17 +83,11 @@ object TextQueries {
 
   /** See [[t06UnigramPpl]]; the library surface takes any (doc_id, text)
     * frame so the LM can be fit on one corpus and thresholds audited on a
-    * planted one. Memoized per (session, corpus plan) — t06 serves the
-    * scores and p43's band prune reads them TWICE (percentile bounds +
-    * the band filter), so the LM fit + scoring joins run once per session
-    * (the sharedTokens/minHashLshPairs lifecycle; r15). */
+    * planted one. Through [[graft.Memo]] — t06 serves the scores and p43's
+    * band prune reads them TWICE (percentile bounds + the band filter), so
+    * the LM fit + scoring joins run once per session. */
   def unigramPpl(docs: DataFrame): DataFrame =
-    pplMemo.getOrElseUpdate(
-      docs.sparkSession, docs.queryExecution.analyzed.semanticHash())(
-      unigramPplOf(docs).persist())
-
-  private val pplMemo =
-    new graft.SessionKeyedCache[Int, DataFrame](_.unpersist(blocking = false))
+    graft.Memo.frame("TextQueries.unigramPpl", docs)(unigramPplOf(docs))
 
   /** The t06 kernel over a caller-managed lifecycle (no memo). */
   def unigramPplOf(docs: DataFrame): DataFrame = {

@@ -1,7 +1,7 @@
 package graft.similarity
 
 import graft.functions.VectorFns
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** s22: graph-based ANN search — greedy beam search over a k-nearest-
@@ -40,27 +40,15 @@ import org.apache.spark.sql.functions._
   */
 object GraphSearch {
 
-  private val graphs =
-    new graft.SessionKeyedCache[(Int, Int), DataFrame](_.unpersist(blocking = false))
-  private val vecs =
-    new graft.SessionKeyedCache[Int, DataFrame](_.unpersist(blocking = false))
-
-  /** Drop the memoized graph/vector frames for `spark` (tests, corpus swap). */
-  def clearGraphs(spark: SparkSession): Unit = {
-    graphs.purgeSession(Some(spark), None)
-    vecs.purgeSession(Some(spark), None)
-  }
-
-  /** The persisted (src, dst, cos) edge frame — built at most once per
-    * (session, corpus, graphK) from s08's exact kNN graph. */
+  /** The persisted (src, dst) edge frame from s08's exact kNN graph,
+    * through [[graft.Memo]]. */
   def sharedEdges(emb: DataFrame, graphK: Int = 8): DataFrame =
-    graphs.getOrElseUpdate(
-      emb.sparkSession, (emb.queryExecution.analyzed.semanticHash(), graphK))(
+    graft.Memo.frame("GraphSearch.edges", emb, graphK)(
       Knn.knnGraph(emb, graphK)
-        .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-        .persist())
+        .select(col("query_id").as("src"), col("neighbor_id").as("dst")))
 
-  /** The persisted (v, vec_id) lookup the score step probes. Column order
+  /** The persisted (v, vec_id) lookup the score step probes, through
+    * [[graft.Memo]]. Column order
     * is deliberately (v, vec_id) — the REVERSE of the (vec_id, v)
     * projection every Knn/Pq plan opens with: Spark's CacheManager
     * substitutes a cached plan into ANY query containing it as a subtree,
@@ -69,14 +57,12 @@ object GraphSearch {
     * cache, changing its asserted plan shape). A different output schema
     * can never match their subtrees. */
   private def sharedVecs(emb: DataFrame): DataFrame =
-    vecs.getOrElseUpdate(
-      emb.sparkSession, emb.queryExecution.analyzed.semanticHash())(
+    graft.Memo.frame("GraphSearch.vectors", emb)(
       emb.select(col("embedding").cast("array<double>").as("v"), col("vec_id"))
         // the lookup is probed by broadcast-small candidate sets: a few
         // fat partitions beat scan-width ones (per-hop task overhead);
         // on disk this table would be bucketed by vec_id instead
-        .coalesce(8)
-        .persist())
+        .coalesce(8))
 
   /** Greedy beam search: top-k neighbors for each query via `iters`
     * rounds of graph expansion from the deterministic seed set. */

@@ -46,28 +46,11 @@ import org.apache.spark.sql.functions._
   */
 object IvfPq {
 
-  /** Fitted model: coarse centers + residual codebooks, memoized per
-    * (session, corpus plan, nCells, m, k). */
-  private val models = new graft.SessionKeyedCache[(Int, Int, Int, Int),
-    (Array[Array[Double]], Pq.Codebooks)]()
-
-  /** Materialized serving indexes — the [[encodeRefine]] frame, persisted,
-    * memoized per (session, corpus plan, nCells, m, k). Eviction
-    * unpersists; SessionCaches drains on application end. */
-  private val indexes =
-    new graft.SessionKeyedCache[(Int, Int, Int, Int), DataFrame](_.unpersist(blocking = false))
-
-  def clearModels(spark: SparkSession): Unit = {
-    models.purgeSession(Some(spark), None)
-    indexes.purgeSession(Some(spark), None)
-  }
-
+  /** Fitted model: coarse centers + residual codebooks, through
+    * [[graft.Memo]]. */
   private def modelFor(emb: DataFrame, nCells: Int, m: Int, k: Int)
       : (Array[Array[Double]], Pq.Codebooks) =
-    models.getOrElseUpdate(
-      emb.sparkSession,
-      (emb.queryExecution.analyzed.semanticHash(), nCells, m, k))(
-      train(emb, nCells, m, k))
+    graft.Memo.value("IvfPq.model", emb, nCells, m, k)(train(emb, nCells, m, k))
 
   /** Coarse centers as a literal array<struct<cell, cv>>. */
   private def centsLit(centers: Array[Array[Double]]): Column =
@@ -88,7 +71,7 @@ object IvfPq {
 
   /** Train: coarse Lloyd over the corpus, then PQ codebooks over the
     * residuals of every vector to its assigned centroid. The coarse model
-    * comes from Knn's registry ([[Knn.sharedCenters]]): Lloyd is
+    * comes from Knn's memo ([[Knn.sharedCenters]]): Lloyd is
     * deterministic, so when s02 already trained this (corpus, nCells) the
     * coarse pass costs nothing — one training run serves both index
     * families. */
@@ -122,18 +105,16 @@ object IvfPq {
         Pq.codesExpr(cb, residual(col("v"), cents, col("cell"))).as("codes"))
   }
 
-  /** The memoized, PERSISTED serving index for (corpus, nCells, m, k):
-    * trains at most once and materializes the encode at most once per
-    * session — [[ivfPq]] serves from this, so every query batch after the
-    * first reads the in-memory index only (InMemoryTableScan, no source
-    * scan, no re-encode). */
+  /** The PERSISTED serving index ([[encodeRefine]]) for (corpus, nCells,
+    * m, k), through [[graft.Memo]]: trains at most once and materializes
+    * the encode at most once per session — [[ivfPq]] serves from this, so
+    * every query batch after the first reads the in-memory index only
+    * (InMemoryTableScan, no source scan, no re-encode). */
   def encodedIndex(emb: DataFrame, nCells: Int = 10, m: Int = 8,
                    codebookSize: Int = 16): DataFrame = {
     val (centers, cb) = modelFor(emb, nCells, m, codebookSize)
-    indexes.getOrElseUpdate(
-      emb.sparkSession,
-      (emb.queryExecution.analyzed.semanticHash(), nCells, m, codebookSize))(
-      encodeRefine(emb, centers, cb).persist())
+    graft.Memo.frame("IvfPq.index", emb, nCells, m, codebookSize)(
+      encodeRefine(emb, centers, cb))
   }
 
   /** Stateless serve against a fitted model: encodes on the fly, then

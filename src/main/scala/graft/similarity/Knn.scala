@@ -402,23 +402,17 @@ object Knn {
     * predicate would retrain), composing filter selectivity with cell
     * pruning. Approximate like s02 (recall spec'd vs the exact filtered
     * search in KnnSpec); pre-filter semantics preserved. */
-  /** Labeled serving indexes — [[ivfIndex]] plus the metadata column,
-    * persisted and memoized per (session, corpus plan, nCells): a served
-    * filter must read metadata from the index itself, not re-join the
-    * corpus-sized label table per call (the same per-serve-rescan class
-    * the round-7 index rule exists for). */
-  private val labeledIndexes =
-    new graft.SessionKeyedCache[(Int, Int), DataFrame](_.unpersist(blocking = false))
-
   def filteredIvf(emb: DataFrame, labelPred: String = "label % 2 = 0",
                   queryPred: String = "vec_id < 10", k: Int = 5,
                   nProbe: Int = 3, nCells: Int = 10): DataFrame = {
     val centers = modelFor(emb, nCells)
-    val index = labeledIndexes.getOrElseUpdate(
-      emb.sparkSession, (emb.queryExecution.analyzed.semanticHash(), nCells))(
+    // the labeled serving index ([[ivfIndex]] plus the metadata column),
+    // through Memo: a served filter must read metadata from the index
+    // itself, not re-join the corpus-sized label table per call (the same
+    // per-serve-rescan class the round-7 index rule exists for)
+    val index = graft.Memo.frame("Knn.labeledIndex", emb, nCells)(
       ivfIndex(emb, nCells)
-        .join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
-        .persist())
+        .join(emb.select(col("vec_id"), col("label")), Seq("vec_id")))
     val cents = centsLit(centers)
     val q = ivfIndex(emb, nCells).filter(expr(queryPred))
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
@@ -433,44 +427,19 @@ object Knn {
     topKPerKey(scored, k)
   }
 
-  /** Fitted IVF models, memoized per (session, corpus plan, nCells).
-    * Training (Lloyd over the corpus) and serving (cell-pruned scan) are
-    * separate concerns: the fitted artifact is tiny (nCells × dims doubles)
-    * and corpus-determined, so repeated queries must not re-train per
-    * invocation. [[trainIvf]] is the explicit trainer, [[ivfServe]] the
-    * explicit serving path; [[ivf]] composes them through this registry
-    * (keyed by the corpus plan's semantic hash — a re-read of the same
-    * data reuses the model; a different corpus trains its own). */
-  private val models =
-    new graft.SessionKeyedCache[(Int, Int), Array[Array[Double]]]()
-
-  /** Materialized serving indexes — the assigned (vec_id, v, cell) corpus
-    * frame, persisted, memoized per (session, corpus plan, nCells). The
-    * model registry above makes training once-per-corpus; this makes the
-    * ASSIGNMENT once-per-corpus too. Without it every serve call streams
-    * the whole corpus through the argmin projection before cell pruning —
-    * the one structure that re-pays corpus-scan work per query batch at
-    * 100 TB. Eviction unpersists (SessionCaches drains on app end). */
-  private val indexes =
-    new graft.SessionKeyedCache[(Int, Int), DataFrame](_.unpersist(blocking = false))
-
   /** Train an IVF model: nCells Lloyd centroids over the embedding column.
     * One codegen'd job per iteration; only k×dims doubles reach the driver. */
   def trainIvf(emb: DataFrame, nCells: Int = 10, maxIter: Int = 3): Array[Array[Double]] =
     MlOps.kmeansCenters(emb, nCells, maxIter)
 
-  /** Drop every model and materialized index fitted under `spark` (e.g.
-    * between corpora in tests). */
-  def clearIvfModels(spark: SparkSession): Unit = {
-    models.purgeSession(Some(spark), None)
-    indexes.purgeSession(Some(spark), None)
-    labeledIndexes.purgeSession(Some(spark), None)
-  }
-
+  /** The fitted IVF model, through [[graft.Memo]]. Training (Lloyd over
+    * the corpus) and serving (cell-pruned scan) are separate concerns: the
+    * fitted artifact is tiny (nCells × dims doubles) and corpus-determined,
+    * so repeated queries must not re-train per invocation. [[trainIvf]] is
+    * the explicit trainer, [[ivfServe]] the explicit serving path; [[ivf]]
+    * composes them through the memo. */
   private def modelFor(emb: DataFrame, nCells: Int): Array[Array[Double]] =
-    models.getOrElseUpdate(
-      emb.sparkSession, (emb.queryExecution.analyzed.semanticHash(), nCells))(
-      trainIvf(emb, nCells))
+    graft.Memo.value("Knn.ivfModel", emb, nCells)(trainIvf(emb, nCells))
 
   /** Memoized coarse centers for (session, corpus, nCells) — shared with
     * IVF-PQ's coarse quantizer and d06's cell bucketing: Lloyd is
@@ -504,28 +473,23 @@ object Knn {
   }
 
   /** The from-scratch REBUILT sides of the s11/s31 exact-parity frames —
-    * pure VERIFICATION artifacts (the serve path never needs them),
-    * memoized + persisted per (session, corpus) so the bench attributes
-    * their cost to the `_shared_index_parity` pseudo-entry (the round-8
+    * pure VERIFICATION artifacts (the serve path never needs them), through
+    * [[graft.Memo]] so the bench attributes their cost to the
+    * `_shared_index_parity` pseudo-entry (the round-8
     * shared-materialization discipline) and the s11/s31 entries time the
     * MAINTAINED serve, not the parity check's control arm. */
-  private val parityMemo =
-    new graft.SessionKeyedCache[(Int, String), DataFrame](_.unpersist(blocking = false))
-
   private def upsertRebuilt(emb: DataFrame): DataFrame =
-    parityMemo.getOrElseUpdate(emb.sparkSession,
-      (emb.queryExecution.analyzed.semanticHash(), "upsert")) {
+    graft.Memo.frame("Knn.upsertRebuilt", emb) {
       val centers = modelFor(emb.where(col("vec_id") % 5 =!= 0), 10)
       assigned(emb, centers)
-        .select(col("vec_id"), col("cell").as("cell_rebuilt")).persist()
+        .select(col("vec_id"), col("cell").as("cell_rebuilt"))
     }
 
   private def deleteRebuilt(emb: DataFrame): DataFrame =
-    parityMemo.getOrElseUpdate(emb.sparkSession,
-      (emb.queryExecution.analyzed.semanticHash(), "delete")) {
+    graft.Memo.frame("Knn.deleteRebuilt", emb) {
       val centers = modelFor(emb, 10)
       assigned(emb.where(col("vec_id") % 7 =!= 0), centers)
-        .select(col("vec_id"), col("cell").as("cell_rebuilt")).persist()
+        .select(col("vec_id"), col("cell").as("cell_rebuilt"))
     }
 
   /** Bench attribution hook: materialize both parity rebuilds so their
@@ -600,15 +564,15 @@ object Knn {
       broadcast(tombstones.select(col("vec_id")).distinct()),
       Seq("vec_id"), "left_anti")
 
-  /** The memoized, PERSISTED serving index for (corpus, nCells): trains the
-    * model at most once and materializes the assignment at most once per
-    * session — [[ivf]] serves from this, so the corpus is scanned+assigned
-    * once and every later query batch reads the in-memory index only. */
+  /** The PERSISTED serving index for (corpus, nCells), through
+    * [[graft.Memo]]: trains the model at most once and materializes the
+    * assignment at most once per session — [[ivf]] serves from this, so
+    * the corpus is scanned+assigned once and every later query batch reads
+    * the in-memory index only. Without it every serve call streams the
+    * whole corpus through the argmin projection before cell pruning. */
   def ivfIndex(emb: DataFrame, nCells: Int = 10): DataFrame = {
     val centers = modelFor(emb, nCells)
-    indexes.getOrElseUpdate(
-      emb.sparkSession, (emb.queryExecution.analyzed.semanticHash(), nCells))(
-      assigned(emb, centers).persist())
+    graft.Memo.frame("Knn.ivfIndex", emb, nCells)(assigned(emb, centers))
   }
 
   /** s02's REGISTERED frame: the exact-parity CONTRACT of the IVF index —
@@ -790,13 +754,6 @@ object Knn {
     topKPerKey(scored, k)
   }
 
-  /** Selected farthest-point sets, memoized per (session, corpus plan, k)
-    * — the selection is a fitted model artifact (k rows), the Lloyd/BPE
-    * boundary: construction runs k bounded driver actions, so callers
-    * composing plans must not re-pay them per invocation. */
-  private val fpsMemo =
-    new graft.SessionKeyedCache[(Int, Int), Array[(Int, Long, Double)]]()
-
   /** s12: farthest-point (k-center greedy) diversity sampling — pick k
     * vectors that maximally COVER the embedding space: seed with the
     * smallest vec_id, then repeatedly take the vector farthest from the
@@ -821,15 +778,14 @@ object Knn {
     * flops per row over the whole run — fine at model-fit k; a
     * persisted running-min frame per round would make it k·dims at the
     * price of k materializations, the trade to take if k grows), and the
-    * selection is memoized per (session, corpus, k) like every other
-    * fitted artifact.
+    * selection (k rows, the Lloyd/BPE boundary) goes through [[graft.Memo]]
+    * like every other fitted artifact.
     * Output: (sel_order, vec_id, dist) — dist is the covering radius at
     * selection time (the seed's is 0), monotonically non-increasing. */
   def farthestPointSample(emb: DataFrame, k: Int = 8): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
     val spark = emb.sparkSession
-    val sel = fpsMemo.getOrElseUpdate(
-      spark, (emb.queryExecution.analyzed.semanticHash(), k)) {
+    val sel = graft.Memo.value("Knn.farthestPoints", emb, k) {
       val v = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val seedRow = v.orderBy(col("vec_id")).limit(1)
         .select(col("vec_id"), col("v")).head()
@@ -850,16 +806,6 @@ object Knn {
     import spark.implicits._
     sel.toSeq.toDF("sel_order", "vec_id", "dist")
   }
-
-  /** Drop memoized farthest-point selections for `spark` (test hygiene). */
-  def clearFpsModels(spark: SparkSession): Unit =
-    fpsMemo.purgeSession(Some(spark), None)
-
-  /** MMR selections memoized per (session, corpus plan, n, k, λ-bits) —
-    * like [[fpsMemo]], the selection is a bounded fitted artifact whose
-    * construction runs driver actions. */
-  private val mmrMemo =
-    new graft.SessionKeyedCache[(Int, Int, Int, Long), Array[(Int, Long, Double, Double)]]()
 
   /** s15: MMR (maximal-marginal-relevance) diversity re-rank — Carbonell
     * & Goldstein 1998: from the exact top-`n` shortlist for a query,
@@ -892,9 +838,9 @@ object Knn {
     require(k >= 1 && k <= n, s"need 1 <= k=$k <= n=$n")
     require(lambda >= 0.0 && lambda <= 1.0, s"lambda=$lambda outside [0, 1]")
     val spark = emb.sparkSession
-    val sel = mmrMemo.getOrElseUpdate(
-      spark, (emb.queryExecution.analyzed.semanticHash(), n, k,
-        java.lang.Double.doubleToLongBits(lambda))) {
+    // the selection is a bounded fitted artifact whose construction runs
+    // driver actions: kept per (corpus, n, k, λ) through Memo
+    val sel = graft.Memo.value("Knn.mmr", emb, n, k, lambda) {
       val v = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val qRow = v.orderBy(col("vec_id")).limit(1).head()
       val qid = qRow.getLong(0)
@@ -937,8 +883,4 @@ object Knn {
     import spark.implicits._
     sel.toSeq.toDF("sel_order", "vec_id", "rel", "score")
   }
-
-  /** Drop memoized MMR selections for `spark` (test hygiene). */
-  def clearMmrModels(spark: SparkSession): Unit =
-    mmrMemo.purgeSession(Some(spark), None)
 }

@@ -1,7 +1,7 @@
 package graft.similarity
 
 import graft.functions.VectorFns
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Product quantization — the at-scale ANN memory lever beyond s03's
@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * the one exchange (TopKAgg). Training is m small Lloyd runs whose
   * exchanges carry k×(subDim+1) doubles per partition — corpus-size-
   * independent — and the fitted codebook (m×k×subDim doubles) is a
-  * model artifact memoized per (session, corpus, m, k) like Knn.models.
+  * model artifact kept in [[graft.Memo]] like Knn's IVF model.
   *
   * Approximate by design (codebook distortion) → no SQL oracle; PqSpec
   * pins hand-computed codes/ADC sums on planted codebooks and recall
@@ -34,23 +34,6 @@ object Pq {
 
   /** Fitted codebooks: codebooks(s)(c) = centroid c of subspace s. */
   type Codebooks = Array[Array[Array[Double]]]
-
-  private val models =
-    new graft.SessionKeyedCache[(Int, Int, Int), Codebooks]()
-
-  /** Materialized serving indexes — the (vec_id, v, codes) frame,
-    * persisted, memoized per (session, corpus plan, m, k): the round-7
-    * index rule (s02/s06 precedent) applied to plain PQ, so [[pq]] serves
-    * without re-encoding the corpus per query batch. The raw vector rides
-    * along for the exact re-rank (IndexRefineFlat). */
-  private val indexes =
-    new graft.SessionKeyedCache[(Int, Int, Int), DataFrame](_.unpersist(blocking = false))
-
-  /** Drop every codebook and materialized index fitted under `spark`. */
-  def clearPqModels(spark: SparkSession): Unit = {
-    models.purgeSession(Some(spark), None)
-    indexes.purgeSession(Some(spark), None)
-  }
 
   private def dims(emb: DataFrame): Int =
     emb.select(size(col("embedding"))).head().getInt(0)
@@ -176,20 +159,17 @@ object Pq {
       .select(col("vec_id"), col("v"), codesExpr(cb, col("v")).as("codes"))
 
   private def modelFor(emb: DataFrame, m: Int, k: Int): Codebooks =
-    models.getOrElseUpdate(
-      emb.sparkSession,
-      (emb.queryExecution.analyzed.semanticHash(), m, k))(
-      trainPq(emb, m, k))
+    graft.Memo.value("Pq.codebooks", emb, m, k)(trainPq(emb, m, k))
 
-  /** The memoized, PERSISTED serving index for (corpus, m, k) — [[pq]]
-    * serves from this; repeated query batches read the in-memory index
-    * only (no source scan, no re-encode). */
+  /** The PERSISTED (vec_id, v, codes) serving index for (corpus, m, k),
+    * through [[graft.Memo]] — the round-7 index rule (s02/s06 precedent)
+    * applied to plain PQ: [[pq]] serves from this, so repeated query
+    * batches read the in-memory index only (no source scan, no
+    * re-encode). The raw vector rides along for the exact re-rank
+    * (IndexRefineFlat). */
   def encodedIndex(emb: DataFrame, m: Int = 8, codebookSize: Int = 16): DataFrame = {
     val cb = modelFor(emb, m, codebookSize)
-    indexes.getOrElseUpdate(
-      emb.sparkSession,
-      (emb.queryExecution.analyzed.semanticHash(), m, codebookSize))(
-      pqEncodeRefine(emb, cb).persist())
+    graft.Memo.frame("Pq.index", emb, m, codebookSize)(pqEncodeRefine(emb, cb))
   }
 
   /** s05's REGISTERED frame (the s02 assignment-optimality recipe per
@@ -279,8 +259,8 @@ object Pq {
   }
 
   /** s05: [[pqRefinedIndexed]] with codebooks trained at most once and the
-    * index materialized at most once per (session, corpus plan, m, k) —
-    * the Knn.ivf registry pattern plus the round-7 index rule. */
+    * index materialized at most once per (corpus, m, k) through
+    * [[graft.Memo]] — the round-7 index rule. */
   def pq(emb: DataFrame, queryPred: String = "vec_id < 10", k: Int = 5,
          m: Int = 8, codebookSize: Int = 16, shortlist: Int = 50): DataFrame = {
     val cb = modelFor(emb, m, codebookSize)

@@ -27,19 +27,12 @@ import org.apache.spark.sql.functions._
   * scale paths. */
 object Report {
 
-  /** The memoized, persisted exact-pair baseline — the report references
-    * it from four plan branches (two methods × semi-join + count), and at
-    * O(n²/2) cosines it is exactly what must never recompute per branch.
-    * Drained by [[graft.SessionCaches]] like every session memo. */
-  private val exactMemo =
-    new graft.SessionKeyedCache[(Int, Long), DataFrame](_.unpersist(blocking = false))
-
-  /** Exact all-pairs baseline under the s13 rule: round(cos, 8) ≥ τ. */
+  /** Exact all-pairs baseline under the s13 rule: round(cos, 8) ≥ τ,
+    * through [[graft.Memo]] — the report references it from four plan
+    * branches (two methods × semi-join + count), and at O(n²/2) cosines it
+    * is exactly what must never recompute per branch. */
   private def exactPairs(emb: DataFrame, threshold: Double): DataFrame =
-    exactMemo.getOrElseUpdate(
-      emb.sparkSession,
-      (emb.queryExecution.analyzed.semanticHash(),
-        java.lang.Double.doubleToLongBits(threshold))) {
+    graft.Memo.frame("Report.exactPairs", emb, threshold) {
       val v = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       v.select(col("vec_id").as("d1"), col("v").as("v1"))
         .join(v.select(col("vec_id").as("d2"), col("v").as("v2")), col("d1") < col("d2"))
@@ -47,7 +40,6 @@ object Report {
           round(VectorFns.cosine(col("v1"), col("v2")), 8).as("cos"))
         .where(col("cos") >= threshold)
         .select(col("d1"), col("d2"))
-        .persist()
     }
 
   /** s18: (method, n_pairs, n_exact, n_common, recall, precision).

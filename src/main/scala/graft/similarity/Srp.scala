@@ -50,22 +50,6 @@ import org.apache.spark.sql.functions._
   */
 object Srp {
 
-  /** Verified SRP pair frames memoized per (session, corpus plan, τ,
-    * banding, variant) and persisted — s13, s14, s18 (which consumes BOTH
-    * pipelines in two plan branches each: pair count + exact semi-join)
-    * and d24's standing side all close over the same tiny verified frames
-    * (∝ near-dup pairs, not corpus), so rebuilding the
-    * signature/bucket/verify pipeline per consumer branch is pure waste —
-    * the d03 pairMemo rule. Drained by [[graft.SessionCaches]]. */
-  private val pairMemo =
-    new graft.SessionKeyedCache[(Int, Long, Int, Int, Boolean), DataFrame](
-      _.unpersist(blocking = false))
-
-  private def memoKey(emb: DataFrame, threshold: Double, nBands: Int,
-                      rowsPerBand: Int, multi: Boolean): (Int, Long, Int, Int, Boolean) =
-    (emb.queryExecution.analyzed.semanticHash(),
-      math.round(threshold * 1e6), nBands, rowsPerBand, multi)
-
   /** Default banding: 4 bands × 4 bits = 16 buckets per band — sized for
     * the oracle-checked test corpora (hundreds to thousands of vectors).
     * SIZE THE BUCKET SPACE TO THE CORPUS: per-band occupancy is
@@ -135,12 +119,16 @@ object Srp {
       .select(col(idCol), col("e.band").as("band"), col("e.bucket").as("bucket"))
 
   /** s13: all pairs with round(cos, 8) ≥ `threshold` among SRP bucket
-    * collisions. Output (d1, d2, cos), d1 < d2. */
+    * collisions. Output (d1, d2, cos), d1 < d2. Both verified pair frames
+    * go through [[graft.Memo]]: s13, s14, s18 (which consumes BOTH
+    * pipelines in two plan branches each: pair count + exact semi-join)
+    * and d24's standing side all close over the same tiny verified frames
+    * (∝ near-dup pairs, not corpus), so rebuilding the
+    * signature/bucket/verify pipeline per consumer branch is pure waste. */
   def srpPairs(emb: DataFrame, threshold: Double = 0.45,
                nBands: Int = Bands, rowsPerBand: Int = RowsPerBand): DataFrame =
-    pairMemo.getOrElseUpdate(emb.sparkSession,
-      memoKey(emb, threshold, nBands, rowsPerBand, multi = false))(
-      srpPairsUncached(emb, threshold, nBands, rowsPerBand).persist())
+    graft.Memo.frame("Srp.pairs", emb, threshold, nBands, rowsPerBand)(
+      srpPairsUncached(emb, threshold, nBands, rowsPerBand))
 
   private def srpPairsUncached(emb: DataFrame, threshold: Double,
                                nBands: Int, rowsPerBand: Int): DataFrame = {
@@ -198,9 +186,8 @@ object Srp {
     * candidate pairs only. */
   def srpPairsMultiProbe(emb: DataFrame, threshold: Double = 0.45,
                          nBands: Int = Bands, rowsPerBand: Int = RowsPerBand): DataFrame =
-    pairMemo.getOrElseUpdate(emb.sparkSession,
-      memoKey(emb, threshold, nBands, rowsPerBand, multi = true))(
-      srpPairsMultiProbeUncached(emb, threshold, nBands, rowsPerBand).persist())
+    graft.Memo.frame("Srp.multiProbePairs", emb, threshold, nBands, rowsPerBand)(
+      srpPairsMultiProbeUncached(emb, threshold, nBands, rowsPerBand))
 
   private def srpPairsMultiProbeUncached(emb: DataFrame, threshold: Double,
                                          nBands: Int, rowsPerBand: Int): DataFrame = {

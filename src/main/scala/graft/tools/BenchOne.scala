@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import graft.{GraftSession, SparkEntry}
+import graft.{Bench, GraftSession, SparkEntry}
 
 /** Replicates graft.Bench's harness (session conf, warmup, count() action)
   * for an explicit list of queries — for isolating per-query regressions.
@@ -18,25 +18,15 @@ object BenchOne {
     // order is arbitrary — headOption would make the warmup nondeterministic)
     try SparkEntry.queries("q01_agg")(spark, sfDir).count()
     catch { case _: Throwable => () }
-    // the _shared_* pseudo entries resolve exactly as in graft.Bench, so a
+    // the _shared_* pseudo entries resolve from graft.Bench's list, so a
     // shared materialization can be timed (and warmed) in isolation here
-    def run(name: String, s: SparkSession): Long = name match {
-      case "_shared_shingles" => graft.dedup.Dedup.sharedShingles(graft.Tables(s, sfDir).documents).count()
-      case "_shared_weighted_shingles" => graft.dedup.Dedup.sharedWeightedShingles(graft.Tables(s, sfDir).documents).count()
-      case "_shared_shingle_arrays" => graft.dedup.Dedup.sharedShingleArraysFor(graft.Tables(s, sfDir).documents).count()
-      case "_shared_weighted_arrays" => graft.dedup.Dedup.sharedWeightedArraysFor(graft.Tables(s, sfDir).documents).count()
-      case "_shared_lsh_pairs" => graft.dedup.Dedup.minHashLshPairs(graft.Tables(s, sfDir).documents).count()
-      case "_shared_cws_sig" => graft.dedup.Dedup.sharedCwsSignatures(graft.Tables(s, sfDir).documents).count()
-      case "_shared_srp_pairs" => graft.similarity.Srp.srpPairs(graft.Tables(s, sfDir).embeddings).count()
-      case "_shared_srp_probe" => graft.similarity.Srp.srpPairsMultiProbe(graft.Tables(s, sfDir).embeddings, nBands = 8, rowsPerBand = 8).count()
-      case "_shared_jaccard_pairs" => graft.dedup.Dedup.sharedJaccardPairs(graft.Tables(s, sfDir).documents).count()
-      case "_shared_edit_pairs" => graft.dedup.Dedup.sharedEditPairs(graft.Tables(s, sfDir).documents).count()
-      case "_shared_tokens" => graft.operators.TextQueries.sharedTokens(graft.Tables(s, sfDir).documents).count()
-      case n => SparkEntry.queries(n)(s, sfDir).count()
+    def run(name: String): Long = Bench.sharedBuilds.get(name) match {
+      case Some(build) => build(spark, sfDir)
+      case None => SparkEntry.queries(name)(spark, sfDir).count()
     }
     args.drop(1).foreach { name =>
       val t0 = System.nanoTime()
-      val n = run(name, spark)
+      val n = run(name)
       println(f"$name%s n=$n%d ${(System.nanoTime() - t0) / 1e9}%.3f s")
     }
     spark.stop()

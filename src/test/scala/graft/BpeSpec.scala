@@ -81,9 +81,9 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("training is deterministic across registry resets") {
-    Bpe.clearModels(spark)
+    Memo.release(spark)
     val a = Bpe.sharedModel(tables.documents)
-    Bpe.clearModels(spark)
+    Memo.release(spark)
     val b = Bpe.sharedModel(tables.documents)
     assert(a.merges === b.merges)
   }

@@ -253,11 +253,11 @@ class ClustersSpec extends AnyFunSuite {
       (202L, (base.take(19) :+ "xx").mkString(" ")),
       (203L, (Seq("z1", "z2") ++ base.slice(2, 19) :+ "xx").mkString(" "))
     ).toDF("doc_id", "text")
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     val got = graft.dedup.Clusters.clusterAudit(docs).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getBoolean(5), r.getDouble(6), r.getDouble(7)))).toMap
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     val (cn, ce, cp, cd, cq, cmin, _) = got(101L)
     assert((cn, ce, cp, cd, cq) === ((3L, 3L, 3L, 1000000L, true)), "clique cluster")
     assert(cmin === 1.0, "identical docs edge at J = 1")
@@ -279,11 +279,11 @@ class ClustersSpec extends AnyFunSuite {
       (202L, (base.take(19) :+ "xx").mkString(" ")),
       (203L, (Seq("z1", "z2") ++ base.slice(2, 19) :+ "xx").mkString(" "))
     ).toDF("doc_id", "text")
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     val got = graft.dedup.Clusters.rankCanonical(docs).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(3))))
       .toMap
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     assert(got.keySet === Set(101L, 102L, 103L, 201L, 202L, 203L))
     // clique: perfect symmetry → identical ranks, canonical = min doc_id
     val cliqueRanks = Seq(101L, 102L, 103L).map(got(_)._2).distinct
@@ -320,9 +320,9 @@ class ClustersSpec extends AnyFunSuite {
       (6L, c.zipWithIndex.map { case (w, i) =>
         if (i % 5 == 0) "dd" + w.drop(2) else w }.mkString(" "))
     ).toDF("doc_id", "text")
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     val r = graft.dedup.Clusters.methodClusterAgreement(docs).collect().head
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     assert((r.getLong(0), r.getLong(1), r.getLong(2)) === ((6L, 4L, 4L)),
       "six paired docs; each method sees two singletons from the other family")
     assert((r.getLong(3), r.getLong(4), r.getLong(5)) === ((1L, 1L, 1L)),
@@ -338,11 +338,11 @@ class ClustersSpec extends AnyFunSuite {
     // {4,5} an isolated pair (no witness)
     val docs = Seq((1L, a), (2L, a), (3L, a), (4L, b), (5L, b))
       .toDF("doc_id", "text")
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     val got = graft.dedup.Clusters.pairSupport(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getBoolean(3))))
       .toMap
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     assert(got.keySet === Set((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L)))
     assert(got((1L, 2L)) === ((1L, true)), "doc 3 witnesses 1-2")
     assert(got((1L, 3L)) === ((1L, true)) && got((2L, 3L)) === ((1L, true)))
@@ -358,11 +358,11 @@ class ClustersSpec extends AnyFunSuite {
       (3L, junk), (4L, junk),     // low-decile dup pair -> one dropped
       (5L, (1 to 40).map(i => s"solo$i").mkString(" ")) // unpaired
     ).toDF("doc_id", "text")
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     val got = graft.dedup.Clusters.dropProfile(docs).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     assert(got.values.map(_._1).sum === 5L, "every doc in exactly one bucket")
     assert(got.values.map(_._2).sum === 2L, "one drop per planted pair")
     val (loB, hiB) = (got.filter(_._2._2 > 0).keys.min, got.filter(_._2._2 > 0).keys.max)
@@ -382,9 +382,9 @@ class ClustersSpec extends AnyFunSuite {
       (2L, base.mkString(" ")),
       (3L, (base.take(22) ++ Seq("xx", "yy")).mkString(" "))
     ).toDF("doc_id", "text")
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     val r = graft.dedup.Clusters.thresholdStability(docs).collect().head
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     val (nDocs, nLo, nHi) = (r.getLong(0), r.getLong(1), r.getLong(2))
     val (both, split, stab) = (r.getLong(3), r.getLong(4), r.getLong(5))
     assert((nDocs, nLo, nHi) === ((3L, 1L, 2L)), "loose {A,B,C}; strict {A,B},{C}")

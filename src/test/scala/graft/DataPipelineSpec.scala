@@ -620,13 +620,13 @@ class DataPipelineSpec extends AnyFunSuite {
   }
 
   test("p20 plan: the pair frame broadcasts — the corpus map never shuffle-joins") {
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     val df = DataPipeline.syndicationMatrix(docs)
     df.collect()
     val p = SparkTestSession.finalPlan(df)
     assert(p.contains("BroadcastHashJoin"),
       s"pair-side joins against the corpus map must broadcast:\n$p")
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
   }
 
   test("p20: planted cross- and same-source near-dup pairs land in the right cells") {
@@ -638,10 +638,10 @@ class DataPipelineSpec extends AnyFunSuite {
       (3L, "A", t2), (4L, "A", t2),  // same-source pair (the diagonal)
       (5L, "C", "unrelated words entirely here now")
     ).toDF("doc_id", "source", "text")
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     val got = DataPipeline.syndicationMatrix(planted).collect()
       .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getBoolean(3)))).toMap
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     assert(got === Map(("A", "B") -> ((1L, true)), ("A", "A") -> ((1L, false))))
   }
 
@@ -745,10 +745,10 @@ class DataPipelineSpec extends AnyFunSuite {
       "char-substring containment must drop 1 (verbatim) and 2 (mid-token)")
     // doc 3 shares the 8-gram with the eval doc: p02 drops it, p25 keeps
     // it — the two bracket the contamination decision
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     val p02kept = DataPipeline.decontaminate(docs, isEval)
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     assert(!p02kept.contains(3L) && p02kept.contains(4L))
   }
 
@@ -810,11 +810,11 @@ class DataPipelineSpec extends AnyFunSuite {
   }
 
   test("p28: isolated docs keep round(quality, 6); the planted pair blends") {
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     val out = graft.operators.CorpusPipeline.propagateQuality(plantedP28)
       .collect().map(r => r.getLong(0) ->
         ((r.getDouble(1), r.getDouble(2), r.getDouble(3)))).toMap
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     def r6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val (q3, prop3, _) = out(9103L)
@@ -830,7 +830,7 @@ class DataPipelineSpec extends AnyFunSuite {
   }
 
   test("p28: two-round blend matches a JVM replay over the same pair graph") {
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     val docs = plantedP28
     val q0 = docs.select(col("doc_id"),
       TextFns.tokenCount(col("text")).cast("double").as("nt"),
@@ -857,7 +857,7 @@ class DataPipelineSpec extends AnyFunSuite {
     val want = step(step(q0))
     val got = graft.operators.CorpusPipeline.propagateQuality(docs)
       .select(col("doc_id"), col("propagated")).as[(Long, Double)].collect().toMap
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     got.foreach { case (id, v) =>
       assert(math.abs(v - want(id)) < 1e-9, s"doc $id: got $v want ${want(id)}")
     }
@@ -1305,11 +1305,11 @@ class DataPipelineSpec extends AnyFunSuite {
       (aloneId, (1 to 25).map(i => s"z$i").mkString(" "), "a"), // retained
       (soloReqId, (1 to 25).map(i => s"y$i").mkString(" "), "b") // requested singleton
     ).toDF("doc_id", "text", "source")
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     val got = DataPipeline.forgetPropagate(docs).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), if (r.isNullAt(5)) None else Some(r.getLong(5))))).toMap
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     // source a: 3 docs, 1 requested, its verbatim copy swept, 1 retained
     assert(got("a") === ((3L, 1L, 1L, 1L,
       Some(md5Hash60((1 to 25).map(i => s"z$i").mkString(" "))))))

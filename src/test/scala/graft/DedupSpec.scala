@@ -120,11 +120,11 @@ class DedupSpec extends AnyFunSuite {
       (1L, base), (2L, base),
       (3L, "an entirely unrelated document with its own words only here")
     ).toDF("doc_id", "text")
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
     val rows = Dedup.methodAgreement(docs).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5)))).toMap
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
     // docs 1/2 are flagged by every method; doc 3 by none → every cell of
     // the matrix is (2, 2, 2, 1.0)
     rows.foreach { case ((a, b), v) =>
@@ -202,13 +202,13 @@ class DedupSpec extends AnyFunSuite {
       (1L, "a b c d e"),
       (2L, "a b c d e x y z w"),
       (3L, "p q r s t")).toDF("doc_id", "text")
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
     val got = Dedup.containmentPairs(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got === Set((1L, 2L, 1.0)), "only the contained→container direction")
     val j = Dedup.ngramJaccardPairs(docs).collect()
     assert(j.isEmpty, "jaccard at 0.8 must miss the quote pair")
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
   }
 
   test("d12: exact duplicates contain each other in both directions") {
@@ -216,11 +216,11 @@ class DedupSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "w x y z w x"), (2L, "w x y z w x"), (3L, "totally other text here")
     ).toDF("doc_id", "text")
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
     val got = Dedup.containmentPairs(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got === Set((1L, 2L, 1.0), (2L, 1L, 1.0)))
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
   }
 
   test("d13: weighting separates rare-content overlap from chrome-only overlap") {
@@ -235,12 +235,12 @@ class DedupSpec extends AnyFunSuite {
       (3L, "k l m n o c1 c2 c3"),
       (4L, "k l m n o d1 d2 d3")) ++
       (10L to 15L).map(i => (i, s"k l m n o f$i g$i h$i"))).toDF("doc_id", "text")
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
     val got = Dedup.weightedJaccardPairs(docs, threshold = 0.125)
       .select("d1", "d2").as[(Long, Long)].collect().toSet
     assert(got === Set((1L, 2L)),
       s"rare-content pair qualifies at 0.125, chrome-only pairs must not: $got")
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
   }
 
   test("d13: prefix-filtered result equals the brute-force weighted Jaccard") {
@@ -248,7 +248,7 @@ class DedupSpec extends AnyFunSuite {
     // candidate pruning) — the operator's pair set AND scores must match
     // exactly, which proves the weighted prefix filter drops nothing
     val docs = tables.documents
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
     val sh = Dedup.shingleSets(docs)
     val freq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
     val wsh = sh.join(freq, "shingle")
@@ -270,7 +270,7 @@ class DedupSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(exp.nonEmpty, "the corpus must contain at least one weighted near-dup pair")
     assert(got === exp)
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
   }
 
   test("d14: CWS sketch pairs are a subset of d13 with exact scores and high recall") {
@@ -291,13 +291,13 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("d13 plan: candidates from the prefix probe join — no cartesian, no all-pairs") {
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
     val df = Dedup.weightedJaccardPairs(tables.documents)
     df.collect()
     val p = SparkTestSession.finalPlan(df)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"candidates must come from the shingle-keyed prefix probe, never all-pairs:\n$p")
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
   }
 
   test("d17: evidence lists the rarest shared shingles first, corpus-wide chrome last") {
@@ -309,10 +309,10 @@ class DedupSpec extends AnyFunSuite {
       (1L, "a b c k l m"),
       (2L, "a b c k l m")) ++
       (10L to 13L).map(i => (i, s"k l m x$i y$i z$i"))).toDF("doc_id", "text")
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
     val rows = Dedup.pairEvidence(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getDouble(2), r.getString(3)))).toMap
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
     assert(rows.keySet === Set((1L, 2L)))
     val (j, ev) = rows((1L, 2L))
     assert(j === 1.0)
@@ -322,7 +322,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("d17: the size-routed df restriction yields identical evidence rows") {
     val docs = tables.documents
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
     // the pair-incident doc restriction is itself a LeftSemi on BOTH
     // routes — the routed plan must carry one MORE (the df restriction)
     def semiJoins(df: org.apache.spark.sql.DataFrame): Int =
@@ -360,10 +360,10 @@ class DedupSpec extends AnyFunSuite {
       (2L, "a b c d e f g h i j"),
       (3L, "a b c d e f g h i k"),
       (9L, "entirely different content here now")).toDF("doc_id", "text")
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
     val got = Dedup.nearestDup(docs, threshold = 0.5).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
     // brute-force from the full pair frame
     val pairs = Dedup.ngramJaccardPairs(docs, 0.5).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -389,9 +389,9 @@ class DedupSpec extends AnyFunSuite {
       (2L, (base.take(19) :+ "xx").mkString(" ")),
       (3L, (Seq("z1", "z2") ++ base.slice(2, 19) :+ "xx").mkString(" "))
     ).toDF("doc_id", "text")
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
     val r = Dedup.transitivityGap(docs).collect().head
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ===
       ((2L, 1L, 0L, 1L)), "2 pairs, 1 two-path, 0 closed, 1 chain-only")
     assert(r.getLong(4) === 1000000L, "fully open gap")
@@ -416,10 +416,10 @@ class DedupSpec extends AnyFunSuite {
       (1L, "p q r s t u"), (2L, "p q r s t u"),
       (3L, (1 to 12).map(i => s"t$i").mkString(" ")),
       (4L, (1 to 10).map(i => s"t$i").mkString(" "))).toDF("doc_id", "text")
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
     val curve = Dedup.thresholdCurve(docs).collect()
       .map(r => r.getDouble(0) -> r.getLong(1)).toMap
-    Dedup.releaseShingles(spark)
+    Memo.release(spark)
     assert(curve(0.7) === 2L && curve(0.75) === 2L && curve(0.8) === 2L,
       s"both pairs live at tau <= 0.8: $curve")
     assert(curve(0.85) === 1L && curve(0.9) === 1L && curve(0.95) === 1L,
@@ -768,11 +768,11 @@ class DedupSpec extends AnyFunSuite {
     val tNear = (base.take(23) :+ "xx").mkString(" ")
     val docs = Seq((1L, tIdent), (2L, tIdent), (3L, tNear))
       .toDF("doc_id", "text")
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     val got = graft.dedup.Dedup.minhashCalibration(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getDouble(2), r.getLong(3), r.getDouble(4), r.getDouble(5)))).toMap
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     // identical docs: every component ties → est 1.0, err = 1 - 1 = 0
     val (j12, m12, e12, err12) = got((1L, 2L))
     assert((j12, m12, e12, err12) === ((1.0, 16L, 1.0, 0.0)))

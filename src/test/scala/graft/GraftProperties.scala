@@ -237,7 +237,7 @@ object GraftProperties extends Properties("graft") {
         .toDF("doc_id", "text")
       val rows = graft.operators.TextQueries.lexicalDiversity(df)
         .as[(Long, Long, Long, Long, Double, Double, Double)].collect()
-      graft.operators.TextQueries.releaseTokens(spark)
+      graft.Memo.release(spark)
       rows.forall { case (_, n, types, hapax, ttr, hf, btr) =>
         hapax <= types && types <= n &&
           ttr > 0 && ttr <= 1 && hf >= 0 && hf <= 1 && btr > 0 && btr <= 1
@@ -446,11 +446,11 @@ object GraftProperties extends Properties("graft") {
       d1 <- Gen.listOfN(n1, doc); d2 <- Gen.listOfN(n2, doc)
     } yield (d1, d2)
     forAll(corpus) { case (d1, d2) =>
-      graft.operators.TextQueries.releaseTokens(spark)
+      graft.Memo.release(spark)
       val docs = (d1.map(("A", _)) ++ d2.map(("B", _))).zipWithIndex
         .map { case ((s, t), i) => (i.toLong, s, t) }.toDF("doc_id", "source", "text")
       val rows = graft.operators.TextQueries.jsDivergence(docs).collect()
-      graft.operators.TextQueries.releaseTokens(spark)
+      graft.Memo.release(spark)
       rows.forall { r =>
         val j = r.getDouble(3)
         j >= -1e-9 && j <= math.log(2.0) + 1e-9

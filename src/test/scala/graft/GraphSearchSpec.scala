@@ -13,7 +13,7 @@ class GraphSearchSpec extends AnyFunSuite {
   private val queryPred = "vec_id < 10"
 
   test("s22: every reported score is the exactly-computed cosine (precision 1)") {
-    GraphSearch.clearGraphs(spark)
+    Memo.release(spark)
     val got = GraphSearch.search(tables.embeddings, queryPred, k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3)))
     // unbounded exact ranking reproduces every (query, neighbor) score
@@ -26,7 +26,7 @@ class GraphSearchSpec extends AnyFunSuite {
   }
 
   test("s22: recall@5 vs exact top-5 clears the navigation floor") {
-    GraphSearch.clearGraphs(spark)
+    Memo.release(spark)
     val exact = Knn.bruteForce(tables.embeddings, queryPred, k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val got = GraphSearch.search(tables.embeddings, queryPred, k = 5).collect()
@@ -39,7 +39,7 @@ class GraphSearchSpec extends AnyFunSuite {
   }
 
   test("s22: more iterations never lose neighbors (best-seen is monotone)") {
-    GraphSearch.clearGraphs(spark)
+    Memo.release(spark)
     def bestPerQuery(iters: Int): Map[Long, Double] =
       GraphSearch.search(tables.embeddings, queryPred, k = 1, beam = 8,
         iters = iters).collect()
@@ -55,7 +55,7 @@ class GraphSearchSpec extends AnyFunSuite {
   }
 
   test("s22: per-hop lineage truncation does not change the answer") {
-    GraphSearch.clearGraphs(spark)
+    Memo.release(spark)
     val a = GraphSearch.search(tables.embeddings, queryPred, k = 5, beam = 8,
       iters = 3).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
@@ -91,14 +91,14 @@ class GraphSearchSpec extends AnyFunSuite {
   }
 
   test("s22: result is invariant to input partitioning") {
-    GraphSearch.clearGraphs(spark)
+    Memo.release(spark)
     val a = GraphSearch.search(tables.embeddings, queryPred, k = 5).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    GraphSearch.clearGraphs(spark)
+    Memo.release(spark)
     val b = GraphSearch.search(tables.embeddings.repartition(7), queryPred, k = 5)
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
     assert(a === b)
-    GraphSearch.clearGraphs(spark)
+    Memo.release(spark)
   }
 }

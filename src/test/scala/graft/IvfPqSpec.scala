@@ -31,7 +31,7 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("recall@5 vs exact L2 clears the cell+codebook bound on this corpus") {
-    IvfPq.clearModels(spark)
+    Memo.release(spark)
     val k = 5
     val v = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val q = v.filter("vec_id < 10").select(col("vec_id").as("query_id"), col("v").as("qv"))
@@ -51,14 +51,14 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("registry: repeated calls are deterministic (train-at-most-once)") {
-    IvfPq.clearModels(spark)
+    Memo.release(spark)
     val a = IvfPq.ivfPq(emb).collect()
     val b = IvfPq.ivfPq(emb).collect()
     assert(a.toSeq === b.toSeq)
   }
 
   test("serving index is materialized once: second serve reads the in-memory index") {
-    IvfPq.clearModels(spark)
+    Memo.release(spark)
     val first = IvfPq.ivfPq(emb).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val df2 = IvfPq.ivfPq(emb)

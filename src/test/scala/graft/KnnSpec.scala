@@ -52,7 +52,7 @@ class KnnSpec extends AnyFunSuite {
   }
 
   test("s07 indexed: IVF radius is a precision-1 subset of exact radius with bounded recall") {
-    Knn.clearIvfModels(spark)
+    Memo.release(spark)
     val tau = 0.1
     val exact = Knn.radius(tables.embeddings, "vec_id < 5", tau).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -78,7 +78,7 @@ class KnnSpec extends AnyFunSuite {
   }
 
   test("s08 served: IVF-pruned graph is edge-exact where emitted, recall above the probe floor") {
-    Knn.clearIvfModels(spark)
+    Memo.release(spark)
     val exact = Knn.knnGraph(tables.embeddings, k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val served = Knn.knnGraphIvf(tables.embeddings, k = 5, nProbe = 3, nCells = 10).collect()
@@ -137,7 +137,7 @@ class KnnSpec extends AnyFunSuite {
   }
 
   test("s10 served: filteredIvf is filter-pure with recall above the probe floor") {
-    Knn.clearIvfModels(spark)
+    Memo.release(spark)
     val exact = Knn.filteredBruteForce(tables.embeddings).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val served = Knn.filteredIvf(tables.embeddings).collect()
@@ -201,7 +201,7 @@ class KnnSpec extends AnyFunSuite {
     // the second default call hits the model registry (object identity)
     val again = Knn.ivf(tables.embeddings, "vec_id < 7", k = 3, nProbe = 2)
     assert(again.count() > 0)
-    Knn.clearIvfModels(spark)
+    Memo.release(spark)
   }
 
   test("s02 parity frame: full row universe, every assigned cell the argmin") {
@@ -263,7 +263,7 @@ class KnnSpec extends AnyFunSuite {
   }
 
   test("ivf serving index is materialized once: second serve reads the in-memory index") {
-    Knn.clearIvfModels(spark)
+    Memo.release(spark)
     val first = Knn.ivf(tables.embeddings, "vec_id < 5", k = 5).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     // the assigned frame is persisted and fully materialized by the first serve
@@ -276,7 +276,7 @@ class KnnSpec extends AnyFunSuite {
     assert(plan.contains("InMemoryTableScan"),
       s"second serve must read the cached index:\n$plan")
     assert(df2.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet === first)
-    Knn.clearIvfModels(spark)
+    Memo.release(spark)
   }
 
   test("durable IVF index: probed-cell PartitionFilters; parity with stateless serve") {
@@ -302,7 +302,7 @@ class KnnSpec extends AnyFunSuite {
   }
 
   test("s12: farthest-point sample replays the JVM greedy exactly") {
-    Knn.clearFpsModels(spark)
+    Memo.release(spark)
     val k = 8
     val got = Knn.farthestPointSample(tables.embeddings, k)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
@@ -358,7 +358,7 @@ class KnnSpec extends AnyFunSuite {
 
   test("s15: selection laws — orders 0..k-1, distinct ids, first pick is argmax relevance") {
     val k = 6
-    Knn.clearMmrModels(spark)
+    Memo.release(spark)
     val got = Knn.mmrRerank(tables.embeddings, n = 20, k = k)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
       .sortBy(_._1)

@@ -294,7 +294,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("s22: graph expansion joins broadcast the frontier, never shuffle the edge list") {
-    graft.similarity.GraphSearch.clearGraphs(spark)
+    graft.Memo.release(spark)
     // production `search` localCheckpoints per hop (lineage truncation),
     // which hides the joins from the final plan; the no-truncate walk is
     // spec-pinned result-identical and keeps every hop in ONE plan
@@ -310,7 +310,7 @@ class PlanSpec extends AnyFunSuite {
       l.contains("Exchange hashpartitioning") &&
         (l.contains("(src") || l.contains("(dst") || l.contains("(vec_id")))
     assert(!badExchange, s"an expansion join shuffled the edge/vector side:\n$p")
-    graft.similarity.GraphSearch.clearGraphs(spark)
+    graft.Memo.release(spark)
   }
 
   test("q108/q112: plan-borne anchors — construction launches zero jobs") {

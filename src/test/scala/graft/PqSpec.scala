@@ -47,7 +47,7 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("recall@5 vs the exact-L2 ranking clears the codebook bound on this corpus") {
-    Pq.clearPqModels(spark)
+    Memo.release(spark)
     val k = 5
     val exact = {
       val v = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -75,14 +75,14 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("the PQ registry trains once per (corpus, m, k): second call replans nothing new") {
-    Pq.clearPqModels(spark)
+    Memo.release(spark)
     val a = Pq.pq(emb).collect()
     val b = Pq.pq(emb).collect() // registry hit — no retrain (covered by timing-free identity)
     assert(a.toSeq === b.toSeq, "PQ search must be deterministic across registry hits")
   }
 
   test("serving index is materialized once: second serve reads the in-memory index") {
-    Pq.clearPqModels(spark)
+    Memo.release(spark)
     val first = Pq.pq(emb).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val df2 = Pq.pq(emb)
@@ -90,7 +90,7 @@ class PqSpec extends AnyFunSuite {
     assert(plan.contains("InMemoryTableScan"),
       s"second serve must read the cached encoded index, not re-encode:\n$plan")
     assert(df2.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet === first)
-    Pq.clearPqModels(spark)
+    Memo.release(spark)
   }
 
   test("plan: encoding is scan-local; search shuffles only for the top-k agg") {

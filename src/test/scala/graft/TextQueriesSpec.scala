@@ -52,10 +52,10 @@ class TextQueriesSpec extends AnyFunSuite {
       (2L, "B", "a b b"),
       (3L, "C", "x")
     ).toDF("doc_id", "source", "text")
-    TextQueries.releaseTokens(spark)
+    Memo.release(spark)
     val got = TextQueries.jsDivergence(docs).collect()
       .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getDouble(3)))).toMap
-    TextQueries.releaseTokens(spark)
+    Memo.release(spark)
     // KL(P||M) = 2/3·ln(4/3) + 1/3·ln(2/3), symmetric here, so JSD = that
     val expected = 2.0 / 3 * math.log(4.0 / 3) + 1.0 / 3 * math.log(2.0 / 3)
     assert(got.keySet === Set(("A", "B")),
@@ -73,10 +73,10 @@ class TextQueriesSpec extends AnyFunSuite {
       (2L, "a b c e"),    // 1 OOV of 4
       (3L, "a b a")       // 0 OOV
     ).toDF("doc_id", "text")
-    TextQueries.releaseTokens(spark)
+    Memo.release(spark)
     val got = TextQueries.oovRate(docs, vocabSize = 3).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-    TextQueries.releaseTokens(spark)
+    Memo.release(spark)
     assert(got(1L) === ((5L, 1L, 0.2)))
     assert(got(2L) === ((4L, 1L, 0.25)))
     assert(got(3L) === ((3L, 0L, 0.0)))
@@ -116,10 +116,10 @@ class TextQueriesSpec extends AnyFunSuite {
       (3L, s"$chrome third iota kappa lambda mu content three"),
       (4L, "entirely original words nothing shared here at all")
     ).toDF("doc_id", "text")
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     val got = TextQueries.boilerplate(planted).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     // the chrome prefix contributes 3-gram shingles with df = 3; each
     // doc's unique tail has df = 1 — JVM recount per doc
     def sh(s: String): Set[Seq[String]] =
@@ -204,7 +204,7 @@ class TextQueriesSpec extends AnyFunSuite {
   }
 
   test("t06/t07/t10 share one persisted token frame (tokenize once per session)") {
-    TextQueries.releaseTokens(spark)
+    Memo.release(spark)
     val t = tables
     TextQueries.t06UnigramPpl(t).count() // materializes the shared frame
     val plan7 = TextQueries.t07TokenEntropy(t).queryExecution.executedPlan.toString
@@ -215,18 +215,18 @@ class TextQueriesSpec extends AnyFunSuite {
       s"t10 must read the shared token cache:\n$plan10")
     // one cache entry per (session, corpus) — not one per query
     assert(TextQueries.sharedTokens(t.documents) eq TextQueries.sharedTokens(t.documents))
-    TextQueries.releaseTokens(spark)
+    Memo.release(spark)
   }
 
   test("t10 plan: df table broadcast back to the term counts — no sort-merge join") {
-    TextQueries.releaseTokens(spark)
+    Memo.release(spark)
     val df = TextQueries.t10TfidfKeywords(tables)
     df.collect()
     val p = SparkTestSession.finalPlan(df)
     assert(p.contains("BroadcastExchange"),
       s"the vocab-sized df table (and the 1-row N) must broadcast:\n$p")
     assert(!p.contains("CartesianProduct"), p)
-    TextQueries.releaseTokens(spark)
+    Memo.release(spark)
   }
 
   test("t06/t09 perplexity DataFrames launch zero jobs at construction") {
@@ -268,7 +268,7 @@ class TextQueriesSpec extends AnyFunSuite {
     assert(plan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }.nonEmpty, s"the prefix count must be a window sum over w1:\n$plan")
-    TextQueries.releaseTokens(spark)
+    Memo.release(spark)
   }
 
   test("t19: encoding-noise counts match hand-planted damage") {
@@ -298,7 +298,7 @@ class TextQueriesSpec extends AnyFunSuite {
 
   test("t20: novelty is 1 for the first doc, 0 for its copy, partial for a remix") {
     import spark.implicits._
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon"), // 3 trigram shingles, all first
       (2L, "alpha beta gamma delta epsilon"), // exact copy: nothing novel
@@ -308,7 +308,7 @@ class TextQueriesSpec extends AnyFunSuite {
     val got = TextQueries.noveltyScore(docs)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-    graft.dedup.Dedup.releaseShingles(spark)
+    graft.Memo.release(spark)
     assert(got(1L) === ((3L, 3L, 1.0)), "the first arrival is fully novel")
     assert(got(2L) === ((3L, 0L, 0.0)), "an exact copy adds nothing")
     assert(got(3L) === ((3L, 2L, 2.0 / 3.0)), "the remix adds only its new shingles")
@@ -328,7 +328,7 @@ class TextQueriesSpec extends AnyFunSuite {
     ).toDF("doc_id", "source", "text")
     val got = graft.operators.TextQueries.tokenGini(docs).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-    graft.operators.TextQueries.releaseTokens(spark)
+    graft.Memo.release(spark)
     assert(got("uni") === ((4L, 4L, 0.0)), "uniform mass has zero concentration")
     assert(got("hand") === ((3L, 6L, 4.0 / 18.0)), "hand-computed Gini")
     // conc: ascending (freq, token) order is (y,1),(z,1),(x,9) -> ranks
@@ -468,10 +468,10 @@ class TextQueriesSpec extends AnyFunSuite {
       (3L, "B", "common words here again and again"),
       (4L, "B", "more common words here too again")
     ).toDF("doc_id", "source", "text")
-    TextQueries.releaseTokens(spark)
+    Memo.release(spark)
     val got = TextQueries.chi2Keyness(docs, k = 3, minDf = 5).collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3), r.getDouble(4)))
-    TextQueries.releaseTokens(spark)
+    Memo.release(spark)
     val topA = got.filter(_._1 == "A").minBy(_._2)
     assert(topA._3 === "zebra", s"zebra must be source A's top keyword: ${got.toSeq}")
     assert(topA._4 === 6L)
@@ -498,7 +498,7 @@ class TextQueriesSpec extends AnyFunSuite {
       (1L, "fn burst burst burst burst"),
       (2L, "fn pad"), (3L, "fn pad"), (4L, "fn pad")
     ).toDF("doc_id", "text")
-    TextQueries.releaseTokens(spark)
+    Memo.release(spark)
     val got = TextQueries.burstiness(docs, minDf = 1).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     // JVM brute force over the padded per-doc count vectors (zeros real)
@@ -512,7 +512,7 @@ class TextQueriesSpec extends AnyFunSuite {
     assert(got("burst") === ((1L, 4L, vmr(Seq(4, 0, 0, 0)))))
     // equal total mass (4 each): the clumped token must read far burstier
     assert(got("burst")._3 > got("fn")._3 + 2.0)
-    TextQueries.releaseTokens(spark)
+    Memo.release(spark)
     // real-fixture law: VMR ≥ the exact minimum (all-equal counts) and the
     // algebraic identity holds for every row
     val all = tables.documents.count().toDouble
@@ -535,12 +535,12 @@ class TextQueriesSpec extends AnyFunSuite {
       (4L, "temp", "x y"), (5L, "temp", "x y x y"),
       (6L, "temp", "x y x y x y x y")
     ).toDF("doc_id", "source", "text")
-    TextQueries.releaseTokens(spark)
+    Memo.release(spark)
     val got = TextQueries.heapsFit(docs).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
     assert(got("uniq") === ((3L, 1.0, 1.0)), "all-unique shard must fit beta = 1 exactly")
     assert(got("temp")._2 === 0.0, "saturated-vocabulary shard must fit beta = 0")
-    TextQueries.releaseTokens(spark)
+    Memo.release(spark)
     // real fixture: JVM OLS re-derivation per source (the t14 pattern)
     val perDoc = tables.documents
       .select(col("source"), col("doc_id"), split(lower(col("text")), " ").as("toks"))
@@ -692,7 +692,7 @@ class TextQueriesSpec extends AnyFunSuite {
       (3L, "c c d", "sB"), (4L, "d c c", "sB"),
       (5L, "a b c d", "sC")
     ).toDF("doc_id", "text", "source")
-    graft.operators.TextQueries.releaseTokens(SparkTestSession.spark)
+    graft.Memo.release(SparkTestSession.spark)
     val got = graft.operators.TextQueries.lmTransfer(docs).collect()
       .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getDouble(3))))
       .toMap
@@ -725,7 +725,7 @@ class TextQueriesSpec extends AnyFunSuite {
     // 8 'a', 4 'b', 2 'c', 1 'd', 1 'e' → total 16
     val docs = Seq((1L, "a a a a b b c d"), (2L, "a a a a b b c e"))
       .toDF("doc_id", "text")
-    graft.operators.TextQueries.releaseTokens(SparkTestSession.spark)
+    graft.Memo.release(SparkTestSession.spark)
     val got = graft.operators.TextQueries.coverageCurve(docs, Seq(1, 2, 3, 4, 8))
       .collect()
       .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
