@@ -19,8 +19,9 @@ import graft.sources.ZoneMapFileIndex
   * nothing; survivors still run the full predicate). Idempotent — an
   * already-swapped relation is left alone — so it is safe under the
   * optimizer's fixed-point batches, and a raw `spark.table(name)` / SQL
-  * text query over the prepared table prunes exactly like the explicit
-  * `ZoneMaps.prunedRead` API (spec-pinned equal survivor sets).
+  * text query over the prepared table opens exactly the files
+  * `ZoneMaps.pruneFiles` keeps (spec-pinned equal survivor sets). This is
+  * the engine's only zone-map read path.
   *
   * This is the round-10 [[RewriteLowCardWindow]] precedent applied to the
   * metadata layer: an engine capability a user had to call by name,

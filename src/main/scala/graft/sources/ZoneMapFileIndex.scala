@@ -67,10 +67,10 @@ import graft.SessionKeyedCache
   * Scale notes: the manifest consult is driver-side over #files rows (the
   * same object every table format's planner holds); the underlying
   * listing is delegated, so partition-pruning and listing parallelism are
-  * untouched. Above `spark.graft.zonemap.distributedProbeFiles` manifest
-  * rows the bloom probe routes through the distributed form
-  * ([[ZoneMaps.membershipPruneFilesDistributed]]) — the StatsRoute
-  * discipline: proven-small probes driver-side, big fans out.
+  * untouched. Memoized bloom rows are probed on the driver; a table
+  * loaded above `spark.graft.zonemap.persistedConsultRows` keeps its
+  * blooms off the driver and is probed executor-side straight from the
+  * persisted manifest ([[ZoneMaps.membershipPruneFilesDistributed]]).
   */
 final class ZoneMapFileIndex(
     spark: SparkSession,
@@ -241,8 +241,8 @@ object ZoneMapFileIndex {
 
   /** The registration for a single-root FileIndex, if any — exact
     * directory match (a scan listing explicit FILES under the dir, e.g.
-    * the explicit `prunedRead` API's survivor scan, has different roots
-    * and is deliberately not re-pruned). */
+    * q139's read of the distributed probe's survivor set, has different
+    * roots and is deliberately not re-pruned). */
   def registeredFor(spark: SparkSession,
                     location: FileIndex): Option[Registration] =
     location.rootPaths match {
@@ -348,7 +348,7 @@ object ZoneMapFileIndex {
       case Some(ks) if bloom.contains(c) =>
         ZoneMaps.membershipSourceIfSeeded(spark, dir, c) match {
           case Some(Left(mrows)) =>
-            val byBloom = bloomProbe(spark, mrows, c, ks)
+            val byBloom = ZoneMaps.membershipPruneFiles(mrows, c, ks).toSet
             byEnvelope.filter(byBloom.contains)
           case Some(Right(manifestPath)) =>
             // the persisted-consult route: blooms are probed EXECUTOR-side
@@ -365,30 +365,6 @@ object ZoneMapFileIndex {
     }
     (files.map(normPath).toSet,
       man.map(r => normPath(r.getAs[String]("file"))).toSet)
-  }
-
-  /** The membership probe with the size-triggered route (the StatsRoute
-    * discipline): at or below `spark.graft.zonemap.distributedProbeFiles`
-    * manifest rows the driver probes the memoized blooms directly; above
-    * it the rows fan out and each partition probes its own files' blooms
-    * ([[ZoneMaps.membershipPruneFilesDistributed]] — only surviving paths
-    * come back). Both routes share the envelope-restrict + `mightContainLong`
-    * kernel, spec-pinned identical. */
-  private def bloomProbe(spark: SparkSession, mrows: Array[org.apache.spark.sql.Row],
-                         c: String, ks: Array[Long]): Set[String] = {
-    // tolerant parse: a malformed session value degrades to the default
-    // (driver-side probe) instead of failing every membership-pruned query
-    // with a NumberFormatException at planning time
-    val threshold = scala.util.Try(spark.conf
-      .get("spark.graft.zonemap.distributedProbeFiles", "65536").toInt)
-      .getOrElse(65536)
-    if (mrows.length <= threshold)
-      ZoneMaps.membershipPruneFiles(mrows, c, ks).toSet
-    else {
-      val df = spark.createDataFrame(
-        java.util.Arrays.asList(mrows: _*), mrows.head.schema)
-      ZoneMaps.membershipPruneFilesDistributed(df, c, ks).toSet
-    }
   }
 
   /** Could a file whose [min, max] string envelope is [mn, mx] contain a

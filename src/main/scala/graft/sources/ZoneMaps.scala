@@ -38,12 +38,16 @@ import graft.SessionKeyedCache
   *     table maintained per ingest batch (the p21 shard-manifest
   *     discipline); here it is session-memoized, built at most once per
   *     (session, directory).
-  *   - [[pruneFiles]] / [[prunedRead]]: driver-side envelope filter over
-  *     the manifest rows (bounded by #files — the same object a table
-  *     format's metadata layer holds on the driver), then a scan of ONLY
-  *     the surviving files with the predicate re-applied as a residual
-  *     (zone maps prune at file grain; the residual keeps row-level
-  *     exactness regardless of envelope looseness).
+  *   - [[ZoneMapFileIndex]]: the one read path. A directory registered
+  *     with [[ZoneMapFileIndex.enable]] answers `listFiles` from the
+  *     manifest rows (bounded by #files — the same object a table
+  *     format's metadata layer holds on the driver), so a plain
+  *     `spark.read.parquet(dir).where(…)` or SQL query opens ONLY the
+  *     surviving files, and Spark still runs the predicate on them (zone
+  *     maps prune at file grain; the residual keeps row-level exactness
+  *     regardless of envelope looseness). [[pruneFiles]] /
+  *     [[membershipPruneFiles]] compute the same survivor sets over the
+  *     manifest for callers that want to report them.
   *
   * Null discipline: min/max ignore NULLs, so an all-NULL file carries a
   * NULL envelope and is dropped by the overlap test — correct, because a
@@ -192,7 +196,7 @@ object ZoneMaps extends Logging {
   /** The manifest as a DataFrame: one row per file with its row count and,
     * per tracked column, `<c>_min` / `<c>_max` / `<c>_nulls` — plus, for
     * each `bloomCols` member, a `<c>_bloom` per-file key Bloom filter (the
-    * MEMBERSHIP grade — see [[buildMembership]] for the contract; bloom
+    * MEMBERSHIP grade — see [[membershipRows]] for the contract; bloom
     * columns must be integral join keys). One scan, reading only the
     * tracked columns (column pruning reaches the parquet reader — the
     * group key is the file name the scan already knows); the blooms merge
@@ -213,8 +217,8 @@ object ZoneMaps extends Logging {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** A per-group Bloom filter over `keyCol` cast to long — the sketch both
-    * [[build]] (membership manifests) and [[buildMembership]] insert with;
+  /** A per-group Bloom filter over `keyCol` cast to long — the sketch
+    * [[build]] (membership manifests) inserts with;
     * the driver probe uses the library's own `mightContainLong`, the exact
     * hash, so a present key can never probe false (no false negatives). */
   private def bloomAgg(keyCol: Column, expectedKeysPerFile: Long,
@@ -335,13 +339,13 @@ object ZoneMaps extends Logging {
                       bloomCols: Seq[String] = Nil): Array[Row] = {
     // purge EVERY memo for this dir first (not just the keys derived from
     // `cols`): a manifest memoized under a different column set — a prior
-    // prunedRead on another column, an earlier multi-column build — names
-    // the now-deleted files and would prune to FileNotFound at scan time
+    // prune on another column, an earlier multi-column build — names the
+    // now-deleted files, so every scan would ride the stale-manifest guard
     manifestCache.purgeKeys(spark, _._1 == dir)
     membershipCache.purgeKeys(spark, _._1 == dir)
     persistedMembershipCache.purgeKeys(spark, _._1 == dir)
     // `bloomCols` rides the SAME build (one scan carries envelopes AND
-    // blooms — cheaper than a separate buildMembership pass) and seeds the
+    // blooms — cheaper than a separate membership pass) and seeds the
     // membership memo, so bloom-carrying session rows stay maintainable by
     // [[incrementalBuild]] without a schema split between the two memos
     val rows = build(spark, dir, cols, bloomCols,
@@ -423,8 +427,8 @@ object ZoneMaps extends Logging {
           else {
             // INSERT OVERWRITE from an empty source leaves zero data files;
             // a durable manifest still naming the vanished files would seed
-            // a fresh session with stale rows (explicit prunedRead then
-            // reads nonexistent paths). Land an EMPTY manifest with the
+            // a fresh session with stale rows (a survivor set of
+            // nonexistent paths). Land an EMPTY manifest with the
             // standing schema; with no schema to name, drop the manifest —
             // loadManifest fails loudly instead of serving deleted files.
             memo.headOption.map(_.schema)
@@ -617,14 +621,6 @@ object ZoneMaps extends Logging {
     * integrals widened, mixed numeric widths exact in decimal space). */
   private[graft] def cmpExternal(a: Any, b: Any): Int = cmp(a, b)
 
-  /** The membership memo for (dir, keyCol) ONLY if already seeded (by
-    * [[loadManifest]]/[[persistManifest]] or a prior [[membershipRows]]
-    * call) — the transparent serve path must never trigger a fact-data
-    * scan to build blooms mid-query. */
-  private[sources] def membershipRowsIfSeeded(spark: SparkSession, dir: String,
-                                              keyCol: String): Option[Array[Row]] =
-    membershipCache.peek(spark, (dir, keyCol))
-
   /** The membership consult's SOURCE for (dir, keyCol), if seeded: either
     * the driver-memoized bloom rows (Left — the ≤threshold route) or the
     * persisted manifest's path (Right — the big-table route, probed
@@ -650,49 +646,11 @@ object ZoneMaps extends Logging {
         (if (hiInclusive) cmp(mn, hi) <= 0 else cmp(mn, hi) < 0)
     }.map(_.getAs[String]("file"))
 
-  /** Manifest-pruned scan of `dir` for `zoneCol` ∈ [lo, hi): reads ONLY the
-    * overlapping files (skipped files cost nothing — no footer, no task),
-    * then re-applies the predicate as a residual filter. `loCol`/`hiCol`
-    * are the same bounds as Catalyst literals (callers pass both forms so
-    * no engine-side conversion can disagree with the driver-side one).
-    * An empty survivor set returns the empty frame through a footer-only
-    * schema read with a false predicate — zero data rows scanned. */
-  def prunedRead(spark: SparkSession, dir: String, zoneCol: String,
-                 lo: Any, hi: Any, loCol: Column, hiCol: Column): DataFrame = {
-    val manifest = manifestRows(spark, dir, Seq(zoneCol))
-    val files = pruneFiles(manifest, zoneCol, lo, hi)
-    // the ScanWindowWatch discipline: degradation is observable, not
-    // silent — but only blame the layout when the predicate is a STRICT
-    // subinterval of the data's domain (a full-history range keeping
-    // every file is the correct answer, not degeneracy)
-    if (files.length == manifest.length && manifest.length > 1) {
-      val mins = manifest.map(_.getAs[Any](s"${zoneCol}_min")).filter(_ != null)
-      val maxs = manifest.map(_.getAs[Any](s"${zoneCol}_max")).filter(_ != null)
-      val strictSub = mins.nonEmpty &&
-        (cmp(lo, mins.min(Ordering.fromLessThan[Any](cmp(_, _) < 0))) > 0 ||
-         cmp(hi, maxs.max(Ordering.fromLessThan[Any](cmp(_, _) < 0))) <= 0)
-      if (strictSub)
-        logWarning(s"zone-map prune on '$zoneCol' kept every file of $dir " +
-          s"(${manifest.length}) for a strict subrange — the layout does " +
-          "not separate this column; cluster by it (clusteredWrite) or " +
-          "add it to a clusteredWriteZ pair")
-    }
-    if (files.isEmpty) spark.read.parquet(dir).where(lit(false))
-    else {
-      val df = spark.read.parquet(files.toIndexedSeq.map(readablePath): _*)
-      // cast the bounds to the column's own type (TIMESTAMP vs NTZ differs
-      // by testdata generation; under the pinned-UTC session the cast is
-      // value-identical either way)
-      val dt = df.schema(zoneCol).dataType
-      df.where(col(zoneCol) >= loCol.cast(dt) && col(zoneCol) < hiCol.cast(dt))
-    }
-  }
-
   /** Persist the manifest as a parquet table — the durable form the
     * production story uses (build once per ingest, read per query session,
     * maintain with [[incrementalBuild]] + rewrite). One tiny write:
     * #files rows (× bloom bytes when `bloomCols` is non-empty — size the
-    * blooms to the real per-file key count, [[buildMembership]]'s note). */
+    * blooms to the real per-file key count, [[membershipRows]]'s note). */
   def writeManifest(spark: SparkSession, dir: String, cols: Seq[String],
                     manifestPath: String, bloomCols: Seq[String] = Nil,
                     expectedKeysPerFile: Long = 1L << 13): Unit =
@@ -700,13 +658,15 @@ object ZoneMaps extends Logging {
       .write.mode("overwrite").parquet(manifestPath)
 
   /** Load a persisted manifest into the session memo so every
-    * [[prunedRead]]/[[joinPrunedRead]]/[[membershipPrunedRead]] over `dir`
-    * consults it without re-scanning the data — the session-open step a
-    * query service runs. Seeds the per-column subset keys too: prunedRead
-    * looks up (dir, Seq(zoneCol)), and a multi-column manifest row carries
-    * every tracked column's envelope — and, when the persisted manifest
-    * carries `<c>_bloom` columns, the MEMBERSHIP memo for each, so bloom
-    * pruning is fresh-session durable exactly like envelope pruning.
+    * [[ZoneMapFileIndex]] scan of `dir` (and every [[pruneFiles]] /
+    * [[membershipPruneFiles]] survivor count) consults it without
+    * re-scanning the data — the session-open step a query service runs
+    * ([[graft.GraftSession.openTable]] then registers the index). Seeds
+    * the per-column subset keys too: the index looks up (dir,
+    * Seq(zoneCol)), and a multi-column manifest row carries every tracked
+    * column's envelope — and, when the persisted manifest carries
+    * `<c>_bloom` columns, the MEMBERSHIP memo for each, so bloom pruning is
+    * fresh-session durable exactly like envelope pruning.
     *
     * SIZE-ROUTED consult (the 100 TB rung): above
     * `spark.graft.zonemap.persistedConsultRows` manifest rows
@@ -763,27 +723,17 @@ object ZoneMaps extends Logging {
 
   /** Join-driven file pruning — dynamic partition pruning at the FILE
     * grain: bound the dim side's join-key domain with one tiny aggregate
-    * (a 1-row job over the already-filtered dim), prune the fact's files
-    * to the envelopes overlapping [min, max], and return the pruned fact
-    * scan for the caller's join — the join's own equality removes any
-    * envelope-loose rows, so no residual is needed and correctness never
-    * depends on envelope tightness. Effective exactly when the fact is
-    * CLUSTERED by the join key and the dim's surviving key range is
-    * narrow (time-correlated ingest keys, the common star-join case) —
-    * the same contract as Spark's own DPP one level down: DPP skips
-    * unmatched PARTITIONS after listing; this skips unmatched FILES
-    * before any footer is opened. An empty dim prunes everything (the
-    * empty-join fast path, zero fact rows scanned). */
-  def joinPrunedRead(spark: SparkSession, factDir: String, zoneCol: String,
-                     dimKeys: DataFrame, dimKeyCol: String): DataFrame =
-    readFiles(spark, factDir,
-      joinPruneFiles(spark, factDir, zoneCol, dimKeys, dimKeyCol))
-
-  /** [[joinPrunedRead]]'s survivor set as file paths — exposed so callers
-    * (and the registered proof queries) can report how much was pruned
-    * without re-deriving it from `inputFiles` (whose empty-survivor
-    * fallback frame lists every file despite scanning none). Empty dim →
-    * empty array (everything pruned). */
+    * (a 1-row job over the already-filtered dim) and keep the fact files
+    * whose envelopes overlap [min, max]. A caller reads the same set
+    * through [[ZoneMapFileIndex]] by filtering the registered fact on
+    * `zoneCol BETWEEN min AND max`; the join's own equality removes any
+    * envelope-loose rows, so correctness never depends on envelope
+    * tightness. Effective exactly when the fact is CLUSTERED by the join
+    * key and the dim's surviving key range is narrow (time-correlated
+    * ingest keys, the common star-join case) — the same contract as
+    * Spark's own DPP one level down: DPP skips unmatched PARTITIONS after
+    * listing; this skips unmatched FILES before any footer is opened.
+    * Empty dim → empty array (everything pruned). */
   def joinPruneFiles(spark: SparkSession, factDir: String, zoneCol: String,
                      dimKeys: DataFrame, dimKeyCol: String): Array[String] = {
     val r = dimKeys.agg(min(col(dimKeyCol)), max(col(dimKeyCol))).head()
@@ -809,114 +759,55 @@ object ZoneMaps extends Logging {
               case _: IllegalArgumentException => None })
       .getOrElse(f)
 
-  /** Scan exactly `files` of `dir` — the empty set short-circuits through a
-    * footer-only schema read under a false predicate (zero data scanned). */
-  private def readFiles(spark: SparkSession, dir: String,
-                        files: Array[String]): DataFrame =
-    if (files.isEmpty) spark.read.parquet(dir).where(lit(false))
-    else spark.read.parquet(files.toIndexedSeq.map(readablePath): _*)
-
   // ---- membership manifest: per-file key Bloom filters ---------------------
 
   private val membershipCache = new SessionKeyedCache[(String, String), Array[Row]]()
 
-  /** The membership manifest: one row per file with the key column's
+  /** Collected membership-manifest rows, built at most once per
+    * (session, dir, keyCol): one row per file with the key column's
     * [min, max] envelope AND a Bloom filter over its key SET — the sketch
     * that closes the gap a pure envelope leaves open for star joins. A
     * scattered dim key set ("these 200 customer ids" spread over the
     * domain) reduces to a [min, max] spanning everything, so envelope-only
-    * join pruning ([[joinPrunedRead]]) keeps every file even on a
+    * join pruning ([[joinPruneFiles]]) keeps every file even on a
     * perfectly key-clustered fact; per-file key MEMBERSHIP prunes exactly
     * the files at least one dim key actually lands in. Parquet's own
     * column-index blooms answer the same question one level down — AFTER
     * the footer is opened; this answers it before any file is listed into
     * the scan.
     *
-    * Built in ONE scan like [[build]] (partial aggregation merges the
-    * per-partition blooms map-side; the exchange carries #files rows ×
-    * bloom bytes). Keys are the column cast to long (integral join keys —
-    * the star-join case); the driver-side probe uses the sketch library's
-    * own `mightContainLong`, the exact hash the aggregate inserted with,
-    * so a present key can never probe false (no false negatives — files
-    * are only ever OVER-kept, never wrongly skipped).
-    *
-    * Sizing: `bitsPerFile` defaults to ~1.2 MB (10⁶ expected distinct keys
-    * per file at ~1 % FPP — a 128 MB parquet file of short fact rows).
-    * The manifest is #files × (bits/8) bytes: at 10⁵ files ≈ tens of GB in
-    * the DEFAULT sizing, so size it to the real per-file key count — the
-    * demo layouts use 2¹⁶ bits. Like [[build]]'s manifest it is a durable
-    * table in production (write with [[writeManifest]]'s discipline);
-    * driver-resident probing holds to ~10⁵ files, beyond which the probe
-    * itself becomes a broadcast join of dim keys against the manifest
-    * table (same plan shape, distributed — the p07 machinery). */
-  def buildMembership(spark: SparkSession, dir: String, keyCol: String,
-                      expectedKeysPerFile: Long = 1L << 20,
-                      fpp: Double = 0.01): DataFrame = {
-    val keyLong = col(keyCol).cast("long")
-    spark.read.parquet(dir)
-      .groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("n_rows"),
-        min(keyLong).as(s"${keyCol}_min"), max(keyLong).as(s"${keyCol}_max"),
-        bloomAgg(col(keyCol), expectedKeysPerFile, fpp).as(s"${keyCol}_bloom"))
-  }
-
-  /** Collected membership-manifest rows, built at most once per
-    * (session, dir, keyCol) — the demo sizing (2¹⁶ bits ≈ 8 KB/file; the
-    * test layouts hold ≤ a few thousand distinct keys per file, so
-    * effective FPP ≪ 1 %). */
+    * The rows are [[build]]'s with `keyCol` as the bloom column (ONE scan;
+    * partial aggregation merges the per-partition blooms map-side). Keys
+    * are the column cast to long (integral join keys — the star-join
+    * case); the probe uses the sketch library's own `mightContainLong`,
+    * the exact hash the aggregate inserted with, so a present key can
+    * never probe false (no false negatives — files are only ever
+    * OVER-kept, never wrongly skipped). Sizing is the demo one: 2¹³
+    * expected keys per file at 1 % FPP (the test layouts hold ≤ a few
+    * thousand distinct keys per file). The manifest is #files × bloom
+    * bytes, so size it to the real per-file key count; like [[build]]'s
+    * manifest it is a durable table in production ([[writeManifest]]),
+    * and past ~10⁵ files the probe runs executor-side
+    * ([[membershipPruneFilesDistributed]]). */
   def membershipRows(spark: SparkSession, dir: String,
                      keyCol: String): Array[Row] =
     membershipCache.getOrElseUpdate(spark, (dir, keyCol))(
-      buildMembership(spark, dir, keyCol,
-        expectedKeysPerFile = 1L << 13, fpp = 0.01).collect())
+      build(spark, dir, Nil, Seq(keyCol)).collect())
 
-  /** Files at least one of `keys` might land in: restrict the sorted key
-    * list to the file's [min, max] envelope first (binary search — a key
-    * outside the envelope cannot be present regardless of what the bloom
-    * says), then probe the in-range keys against the file's bloom. A file
-    * is kept iff some key survives both tests; "might contain" keeps the
-    * no-false-negative contract, so pruning can only err toward keeping.
-    * Cost: #files × log|keys| searches + (keys-in-envelope) probes —
-    * driver-side, the same metadata class as [[pruneFiles]]. */
+  /** Files at least one of `keys` might land in ([[BloomProbe]]'s test
+    * per manifest row). Cost: #files × log|keys| searches +
+    * (keys-in-envelope) probes — driver-side, the same metadata class as
+    * [[pruneFiles]]. */
   def membershipPruneFiles(manifest: Array[Row], keyCol: String,
                            keys: Array[Long]): Array[String] = {
-    require(isSorted(keys), "membershipPruneFiles: keys must be sorted")
+    require(BloomProbe.isSorted(keys), "membershipPruneFiles: keys must be sorted")
     manifest.filter { r =>
-      val mnA = r.getAs[Any](s"${keyCol}_min")
-      val mxA = r.getAs[Any](s"${keyCol}_max")
-      mnA != null && mxA != null && {
-        val mn = mnA.asInstanceOf[Number].longValue
-        val mx = mxA.asInstanceOf[Number].longValue
-        val from = lowerBound(keys, mn)
-        from < keys.length && keys(from) <= mx && {
-          val bloom = org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(
-              r.getAs[Array[Byte]](s"${keyCol}_bloom")))
-          var i = from
-          var hit = false
-          while (!hit && i < keys.length && keys(i) <= mx) {
-            hit = bloom.mightContainLong(keys(i)); i += 1
-          }
-          hit
-        }
-      }
+      val mn = r.getAs[Any](s"${keyCol}_min")
+      val mx = r.getAs[Any](s"${keyCol}_max")
+      mn != null && mx != null && BloomProbe.mightHoldAny(keys,
+        mn.asInstanceOf[Number].longValue, mx.asInstanceOf[Number].longValue,
+        r.getAs[Array[Byte]](s"${keyCol}_bloom"))
     }.map(_.getAs[String]("file"))
-  }
-
-  private def isSorted(xs: Array[Long]): Boolean = {
-    var i = 1
-    while (i < xs.length && xs(i - 1) <= xs(i)) i += 1
-    i >= xs.length
-  }
-
-  /** First index with keys(i) >= lo (keys sorted ascending). */
-  private def lowerBound(keys: Array[Long], lo: Long): Int = {
-    var a = 0; var b = keys.length
-    while (a < b) {
-      val m = (a + b) >>> 1
-      if (keys(m) < lo) a = m + 1 else b = m
-    }
-    a
   }
 
   /** The ≥10⁵-files form of [[membershipPruneFiles]]: the manifest stays a
@@ -924,71 +815,30 @@ object ZoneMaps extends Logging {
     * outgrows the driver), the bounded dim key set broadcasts, and each
     * manifest partition probes its own files' blooms locally; only the
     * SURVIVING file paths come back (≤ #files strings — the same driver
-    * object [[pruneFiles]] returns). Same contract as the driver-side
-    * path, spec-pinned equal on the same fixture. */
+    * object [[pruneFiles]] returns). Same [[BloomProbe]] kernel as the
+    * driver-side path, spec-pinned equal on the same fixture. */
   def membershipPruneFilesDistributed(manifest: DataFrame, keyCol: String,
                                       keys: Array[Long]): Array[String] = {
-    require(isSorted(keys), "membershipPruneFilesDistributed: keys must be sorted")
+    require(BloomProbe.isSorted(keys),
+      "membershipPruneFilesDistributed: keys must be sorted")
     val bKeys = manifest.sparkSession.sparkContext.broadcast(keys)
     manifest.select(col("file"), col(s"${keyCol}_min").cast("long"),
         col(s"${keyCol}_max").cast("long"), col(s"${keyCol}_bloom"))
       .rdd.mapPartitions { it =>
-        // self-contained closure: no module capture, the key array comes
-        // from the broadcast, the bound/probe logic is re-stated locally
         val ks = bKeys.value
-        def lb(lo: Long): Int = {
-          var a = 0; var b = ks.length
-          while (a < b) { val m = (a + b) >>> 1; if (ks(m) < lo) a = m + 1 else b = m }
-          a
-        }
-        it.filter { r =>
-          !r.isNullAt(1) && !r.isNullAt(2) && {
-            val mn = r.getLong(1); val mx = r.getLong(2)
-            val from = lb(mn)
-            from < ks.length && ks(from) <= mx && {
-              val bloom = org.apache.spark.util.sketch.BloomFilter.readFrom(
-                new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](3)))
-              var i = from; var hit = false
-              while (!hit && i < ks.length && ks(i) <= mx) {
-                hit = bloom.mightContainLong(ks(i)); i += 1
-              }
-              hit
-            }
-          }
-        }.map(_.getString(0))
+        it.filter(r => !r.isNullAt(1) && !r.isNullAt(2) &&
+          BloomProbe.mightHoldAny(ks, r.getLong(1), r.getLong(2),
+            r.getAs[Array[Byte]](3)))
+          .map(_.getString(0))
       }.collect()
   }
-
-  /** Membership-grade join-driven file pruning — [[joinPrunedRead]] for
-    * SCATTERED dim key sets: collect the dim's distinct keys (the same
-    * driver-bounded object Spark's own DPP broadcasts), probe each fact
-    * file's key bloom, scan only files some key might land in. The join
-    * equality downstream is the residual, so correctness never depends on
-    * the bloom (false positives only over-keep). A dim wider than
-    * `maxKeys` distinct keys falls back to envelope pruning — at that
-    * width the key set is dense enough that envelopes prune comparably,
-    * and the driver never holds an unbounded collect. */
-  def membershipPrunedRead(spark: SparkSession, factDir: String,
-                           keyCol: String, dimKeys: DataFrame,
-                           dimKeyCol: String,
-                           maxKeys: Int = 100000): DataFrame =
-    boundedDimKeys(dimKeys, dimKeyCol, maxKeys) match {
-      case Some(keys) if keys.isEmpty => readFiles(spark, factDir, Array.empty)
-      case Some(keys) => readFiles(spark, factDir,
-        membershipPruneFiles(membershipRows(spark, factDir, keyCol),
-          keyCol, keys))
-      case None =>
-        logWarning(s"membershipPrunedRead: dim exceeds $maxKeys distinct " +
-          s"keys; falling back to envelope pruning for $factDir")
-        joinPrunedRead(spark, factDir, keyCol, dimKeys, dimKeyCol)
-    }
 
   /** The maxKeys-GUARDED dim key collect every membership consumer shares
     * (the registered proof queries included — no caller holds an unbounded
     * collect): distinct non-null keys cast to long, sorted, or None when
     * the dim exceeds `maxKeys` — at that width the key set is dense enough
-    * that envelope pruning prunes comparably, and the caller falls back.
-    * The limit(maxKeys+1) bounds the driver transfer itself, not just the
+    * that envelope pruning prunes comparably, and the caller falls back to
+    * a key-range filter ([[joinPruneFiles]]). The limit(maxKeys+1) bounds the driver transfer itself, not just the
     * retained array. */
   def boundedDimKeys(dimKeys: DataFrame, dimKeyCol: String,
                      maxKeys: Int = 100000): Option[Array[Long]] = {
@@ -1047,24 +897,28 @@ object ZoneMaps extends Logging {
   /** A range-clustered lineitem copy (by l_shipdate, [[demoFiles]] files)
     * under a fresh per-session temp directory — written at most once per
     * (session, source dir), the ingest-side step a production table does
-    * once per batch. A fresh temp dir per session (never a fixed path)
-    * keeps the memoized manifest and the files on disk consistent by
-    * construction. */
+    * once per batch — and registered with [[ZoneMapFileIndex]], so a
+    * filtered `spark.read.parquet` of it prunes. A fresh temp dir per
+    * session (never a fixed path) keeps the memoized manifest and the
+    * files on disk consistent by construction. */
   private def clusteredLineitem(spark: SparkSession, dir: String): String =
-    clusteredCache.getOrElseUpdate(spark, dir) {
-      val out = Files.createTempDirectory("graft_zonemap_").toString
-      clusteredWrite(graft.Tables(spark, dir).lineitem, "l_shipdate", out, demoFiles)
-      out
-    }
+    clusteredCache.getOrElseUpdate(spark, dir)(
+      registeredCopy(spark, dir, "graft_zonemap_", "l_shipdate"))
 
   /** A lineitem copy key-clustered by l_orderkey (for the join-pruning
-    * proof), memoized like [[clusteredLineitem]]. */
+    * proof), written and registered like [[clusteredLineitem]]. */
   private def clusteredLineitemByKey(spark: SparkSession, dir: String): String =
-    clusteredCache.getOrElseUpdate(spark, s"$dir#bykey") {
-      val out = Files.createTempDirectory("graft_zonemap_k_").toString
-      clusteredWrite(graft.Tables(spark, dir).lineitem, "l_orderkey", out, demoFiles)
-      out
-    }
+    clusteredCache.getOrElseUpdate(spark, s"$dir#bykey")(
+      registeredCopy(spark, dir, "graft_zonemap_k_", "l_orderkey"))
+
+  private def registeredCopy(spark: SparkSession, dir: String, prefix: String,
+                             zoneCol: String): String = {
+    val out = Files.createTempDirectory(prefix).toString
+    clusteredWrite(graft.Tables(spark, dir).lineitem, zoneCol, out, demoFiles)
+    ZoneMapFileIndex.enable(spark, out, Seq(zoneCol))
+    graft.GraftSession.ensureOptimizations(spark)
+    out
+  }
 
   private[graft] val membershipDemoFiles = 16
 
@@ -1105,25 +959,28 @@ object ZoneMaps extends Logging {
     * [min, max] spans essentially the full key domain, so
     * [[joinPruneFiles]] keeps every file of the part-clustered fact
     * (spec-pinned contrast), while the per-file key blooms keep only the
-    * ~6 files a dim key actually lands in. The oracle joins the UNPRUNED
+    * ~6 files a dim key actually lands in. The fact is read through
+    * [[ZoneMapFileIndex]] ([[openedPartTable]] registers the layout with
+    * its blooms): the `l_partkey IN (keys)` filter reaches `listFiles`
+    * and the index probes the blooms. The oracle joins the UNPRUNED
     * table, so a wrong skip loses rows and hash-fails; `pruned` pins that
     * files were really skipped. The join equality is the residual — no
     * bloom or envelope tightness assumption anywhere. */
   def q135MembershipPrune(spark: SparkSession, dir: String): DataFrame = {
+    openedPartTable(spark, dir)
     val cdir = clusteredLineitemByPart(spark, dir)
     val dim = graft.Tables(spark, dir).part
       .where(pmod(col("p_partkey"), lit(398L)) === 7)
       .select(col("p_partkey"))
-    // the maxKeys-GUARDED collect (the same call membershipPrunedRead
-    // makes) — the registered proof query models the production call
-    // shape; the ~0.25 % slice can never exceed the guard, so getOrElse
-    // is the impossible-branch fail-loud
+    // the maxKeys-GUARDED collect — the registered proof query models the
+    // production call shape; the ~0.25 % slice can never exceed the
+    // guard, so getOrElse is the impossible-branch fail-loud
     val keys = boundedDimKeys(dim, "p_partkey").getOrElse(sys.error(
       "q135: demo dim slice exceeded the membership key guard"))
     val mrows = membershipRows(spark, cdir, "l_partkey")
     val files = membershipPruneFiles(mrows, "l_partkey", keys)
-    val fact = readFiles(spark, cdir, files)
-    fact.join(broadcast(dim), col("l_partkey") === col("p_partkey"))
+    spark.read.parquet(cdir).where(col("l_partkey").isin(keys.toSeq: _*))
+      .join(broadcast(dim), col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_partkey").as("partkey"))
       .agg(count(lit(1)).as("n_rows"),
         (round(sum(col("l_quantity")), 4) + lit(0.0)).as("sum_qty"))
@@ -1176,8 +1033,8 @@ object ZoneMaps extends Logging {
     * its exact `n_rows` without being opened; only files STRADDLING an
     * endpoint are scanned and filtered. On a clustered layout that is ≤2
     * files regardless of range width — a year-wide count over a 10⁵-file
-    * table costs two file scans plus a driver fold, where even
-    * [[prunedRead]] would scan every overlapping file. Returns
+    * table costs two file scans plus a driver fold, where even a pruned
+    * scan would open every overlapping file. Returns
     * (n_rows, files_scanned, files_total). */
   def countInRange(spark: SparkSession, dir: String, zoneCol: String,
                    lo: Any, hi: Any, loCol: Column, hiCol: Column): DataFrame = {
@@ -1210,36 +1067,46 @@ object ZoneMaps extends Logging {
   /** Zone-map-served top-k — ORDER BY zoneCol DESC LIMIT k reading only
     * the TAIL files (the "latest k events" query, which at 100 TB must
     * not sort the table): take files in descending-max order until their
-    * row counts cover k, let cMin be the smallest `min` among them, and
-    * scan every file whose max ≥ cMin. Correct for ANY layout: the taken
-    * prefix holds ≥ k rows with values ≥ their files' mins ≥ cMin, so the
-    * k-th largest value t ≥ cMin, and every row ≥ t lives in a scanned
-    * file; on a clustered layout (disjoint envelopes) the scanned set IS
-    * the minimal tail. The caller's own orderBy/limit runs on the pruned
-    * scan — Spark's TakeOrderedAndProject keeps the sort partial + heap-
-    * bounded, so the total cost is (tail files) not (table sort). */
+    * non-NULL row counts cover k, let cMin be the smallest `min` among
+    * them, and scan every file whose max ≥ cMin. Correct for ANY layout:
+    * the taken prefix holds ≥ k rows with values ≥ their files' mins ≥
+    * cMin, so the k-th largest value t ≥ cMin, and every row ≥ t lives in
+    * a scanned file; on a clustered layout (disjoint envelopes) the
+    * scanned set IS the minimal tail. When the table holds fewer than k
+    * non-NULL values, DESC's NULLS LAST puts NULL rows into the top-k, so
+    * every file is scanned (all-NULL ones included). The caller's own
+    * orderBy/limit runs on the pruned scan — Spark's TakeOrderedAndProject
+    * keeps the sort partial + heap-bounded, so the total cost is (tail
+    * files) not (table sort). */
   def topTailFiles(spark: SparkSession, dir: String, zoneCol: String,
                    k: Long): Array[String] = {
     if (k <= 0) return Array.empty
     val man = manifestRows(spark, dir, Seq(zoneCol))
+    (topTailBound(man, zoneCol, k) match {
+      case Some(cMin) => man.filter { r =>
+        val mx = r.getAs[Any](s"${zoneCol}_max")
+        mx != null && cmp(mx, cMin) >= 0
+      }
+      case None => man
+    }).map(_.getAs[String]("file"))
+  }
+
+  /** [[topTailFiles]]'s cMin, or None when the manifest's non-NULL zone
+    * values cannot cover k (then the top-k holds NULL rows and no bound
+    * applies). Only NON-NULL rows count toward coverage: NULL rows sort
+    * after every value in DESC order, so a taken file's nulls contribute
+    * nothing to the top-k — counting them would let cMin land above the
+    * true k-th value and silently skip files holding rows between them. */
+  private def topTailBound(man: Array[Row], zoneCol: String,
+                           k: Long): Option[Any] = {
     val ord = Ordering.fromLessThan[Any](cmp(_, _) < 0)
-    val nonNull = man.filter(_.getAs[Any](s"${zoneCol}_max") != null)
-    if (nonNull.isEmpty) return Array.empty
-    val descByMax = nonNull.sortBy(_.getAs[Any](s"${zoneCol}_max"))(ord.reverse)
-    var cum = 0L
-    val taken = descByMax.takeWhile { r =>
-      // count only NON-NULL zone rows toward coverage: NULL rows sort
-      // after every value in DESC order (or are filtered by the caller's
-      // predicate), so a taken file's nulls contribute nothing to the
-      // top-k — counting them would let cMin land above the true k-th
-      // value and silently skip files holding rows between them
-      val need = cum < k
-      cum += r.getAs[Long]("n_rows") - r.getAs[Long](s"${zoneCol}_nulls")
-      need
-    }
-    val cMin = taken.map(_.getAs[Any](s"${zoneCol}_min")).min(ord)
-    nonNull.filter(r => cmp(r.getAs[Any](s"${zoneCol}_max"), cMin) >= 0)
-      .map(_.getAs[String]("file"))
+    val descByMax = man.filter(_.getAs[Any](s"${zoneCol}_max") != null)
+      .sortBy(_.getAs[Any](s"${zoneCol}_max"))(ord.reverse)
+    val covered = descByMax.scanLeft(0L)((c, r) =>
+      c + r.getAs[Long]("n_rows") - r.getAs[Long](s"${zoneCol}_nulls"))
+    val n = covered.indexWhere(_ >= k)
+    if (n < 0) None
+    else Some(descByMax.take(n).map(_.getAs[Any](s"${zoneCol}_min")).min(ord))
   }
 
   /** Bench attribution hooks (the `_shared_*` discipline): materialize the
@@ -1278,9 +1145,10 @@ object ZoneMaps extends Logging {
 
   /** q134: join-driven file pruning, end to end — the dim side is the
     * lowest eighth of the orderkey domain (the time-correlated-ingest
-    * shape: recent keys, narrow span); [[joinPrunedRead]] bounds it with
-    * one 1-row aggregate and scans only the overlapping files of the
-    * key-clustered fact. The oracle joins the UNPRUNED table, so a wrong
+    * shape: recent keys, narrow span); one 1-row aggregate bounds its key
+    * range, and the `l_orderkey BETWEEN lo AND hi` filter on the
+    * registered key-clustered fact makes [[ZoneMapFileIndex]] open only
+    * the overlapping files. The oracle joins the UNPRUNED table, so a wrong
     * skip loses rows and hash-fails; `pruned` pins that files were really
     * skipped (a ~12 % key slice cannot overlap all 8 disjoint range
     * files). The join equality is the residual — no envelope tightness
@@ -1293,15 +1161,14 @@ object ZoneMaps extends Logging {
     val cut = b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 8
     val dim = orders.where(col("o_orderkey") <= cut)
       .select(col("o_orderkey"), col("o_orderdate"))
-    // derive `pruned` from the survivor set itself, NOT from
-    // fact.inputFiles: the empty-dim/empty-survivor fallback frame is a
-    // full-dir scan under lit(false), whose inputFiles lists every file
-    // even though zero data is read
-    val files = joinPruneFiles(spark, cdir, "l_orderkey", dim, "o_orderkey")
-    val fact = readFiles(spark, cdir, files)
-    val total = manifestRows(spark, cdir, Seq("l_orderkey")).length
-    val scanned = files.length
-    fact.join(dim, col("l_orderkey") === col("o_orderkey"))
+    val k = dim.agg(min(col("o_orderkey")), max(col("o_orderkey"))).head()
+    val man = manifestRows(spark, cdir, Seq("l_orderkey"))
+    val total = man.length
+    val scanned = pruneFiles(man, "l_orderkey", k.get(0), k.get(1),
+      hiInclusive = true).length
+    spark.read.parquet(cdir)
+      .where(col("l_orderkey").between(k.get(0), k.get(1)))
+      .join(dim, col("l_orderkey") === col("o_orderkey"))
       .groupBy(year(col("o_orderdate").cast("date")).as("yr"))
       .agg(count(lit(1)).as("n_rows"),
         (round(sum(col("l_quantity")), 4) + lit(0.0)).as("sum_qty"))
@@ -1378,8 +1245,10 @@ object ZoneMaps extends Logging {
     * [56.25 %, 93.75 %) band): a (orderkey, partkey)-only layout leaves
     * every file's suppkey envelope spanning the domain (spec-contrasted),
     * while the 3-way interleave bounds each file in ALL three dimensions,
-    * so the strip skips the files whose suppkey strip misses it. Oracle
-    * recomputes from the unpruned table; `pruned` pins real skips. */
+    * so the strip skips the files whose suppkey strip misses it. The
+    * band is a filter on the prepared catalog table, so
+    * [[ZoneMapFileIndex]] does the skipping. Oracle recomputes from the
+    * unpruned table; `pruned` pins real skips. */
   def q142ZOrder3(spark: SparkSession, dir: String): DataFrame = {
     val cdir = preparedZ3Lineitem(spark, dir)
     val manifest = manifestRows(spark, cdir,
@@ -1391,7 +1260,7 @@ object ZoneMaps extends Logging {
     val lo = kmin + (kmax - kmin) * 9 / 16
     val hi = kmin + (kmax - kmin) * 15 / 16
     val files = pruneFiles(manifest, "l_suppkey", lo, hi)
-    readFiles(spark, cdir, files)
+    spark.table("graft_q142_zprep3")
       .where(col("l_suppkey") >= lo && col("l_suppkey") < hi)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_rows"),
@@ -1588,10 +1457,11 @@ object ZoneMaps extends Logging {
     * column — exactly the predicate a single-column (orderkey) clustering
     * serves not at all: Z-locality bounds every file's l_partkey envelope
     * to ~¼ of rank space, so a 15 % partkey range skips the ¾ of files
-    * whose strip misses it. The oracle recomputes from the unpruned
-    * table; `pruned` pins real skips; the durable-manifest half (a fresh
-    * memo loading #files rows with ZERO data-dir jobs) is spec-pinned in
-    * ZoneMapsSpec. */
+    * whose strip misses it — read as a filter on the prepared catalog
+    * table, which [[ZoneMapFileIndex]] prunes. The oracle recomputes from
+    * the unpruned table; `pruned` pins real skips; the durable-manifest
+    * half (a fresh memo loading #files rows with ZERO data-dir jobs) is
+    * spec-pinned in ZoneMapsSpec. */
   def q136ZOrderPrepared(spark: SparkSession, dir: String): DataFrame = {
     val cdir = preparedZLineitem(spark, dir)
     val manifest = manifestRows(spark, cdir, Seq("l_orderkey", "l_partkey"))
@@ -1605,7 +1475,7 @@ object ZoneMaps extends Logging {
     val lo = kmin + (kmax - kmin) / 8
     val hi = kmin + (kmax - kmin) / 4
     val files = pruneFiles(manifest, "l_partkey", lo, hi)
-    readFiles(spark, cdir, files)
+    spark.table("graft_q136_zprep")
       .where(col("l_partkey") >= lo && col("l_partkey") < hi)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_rows"),
@@ -1625,8 +1495,11 @@ object ZoneMaps extends Logging {
     statsOnlyAggregate(spark, clusteredLineitem(spark, dir), "l_shipdate")
 
   /** q138: zone-map-served top-k — the latest 100 lineitem rows by ship
-    * date, reading ONLY the tail file(s) of the date-clustered layout
-    * ([[topTailFiles]]); the orderBy+limit on the pruned scan plans as
+    * date, reading ONLY the tail file(s) of the date-clustered layout: the
+    * `l_shipdate >= cMin` filter ([[topTailFiles]]'s bound) makes
+    * [[ZoneMapFileIndex]] open exactly [[topTailFiles]]'s set, and no
+    * filter applies when the bound does not exist (fewer than 100
+    * non-NULL dates). The orderBy+limit on the pruned scan plans as
     * TakeOrderedAndProject (heap-clipped partial top-k, no global sort).
     * Ordering by the FULL projected tuple makes the boundary multiset
     * deterministic (rows tied on every output column are interchangeable),
@@ -1635,9 +1508,12 @@ object ZoneMaps extends Logging {
     * one file's share of the 8-file layout). */
   def q138ZoneMapTopK(spark: SparkSession, dir: String): DataFrame = {
     val cdir = clusteredLineitem(spark, dir)
-    val total = manifestRows(spark, cdir, Seq("l_shipdate")).length
+    val man = manifestRows(spark, cdir, Seq("l_shipdate"))
+    val total = man.length
     val files = topTailFiles(spark, cdir, "l_shipdate", 100L)
-    readFiles(spark, cdir, files)
+    val all = spark.read.parquet(cdir)
+    topTailBound(man, "l_shipdate", 100L)
+      .fold(all)(cMin => all.where(col("l_shipdate") >= lit(cMin)))
       .orderBy(col("l_shipdate").desc, col("l_orderkey").asc,
         col("l_linenumber").asc, col("l_quantity").asc)
       .limit(100)
@@ -1672,7 +1548,7 @@ object ZoneMaps extends Logging {
     // metadata the session already holds; no count() job per call
     val total = membershipRows(spark, cdir, "l_partkey").length
     val files = membershipPruneFilesDistributed(manifest, "l_partkey", keys)
-    readFiles(spark, cdir, files)
+    spark.read.parquet(files.toIndexedSeq.map(readablePath): _*)
       .join(broadcast(dim), col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_partkey").as("partkey"))
       .agg(count(lit(1)).as("n_rows"),
@@ -1707,8 +1583,9 @@ object ZoneMaps extends Logging {
   }
 
   /** q133: zone-map-pruned scan, end to end — cluster lineitem by ship
-    * date, build the file manifest, prune to the files overlapping
-    * calendar-1996, and aggregate the survivors. The oracle recomputes the
+    * date, build the file manifest, filter the registered layout to
+    * calendar-1996 (so [[ZoneMapFileIndex]] opens only the overlapping
+    * files), and aggregate the survivors. The oracle recomputes the
     * aggregate from the UNPRUNED table, so a manifest that drops a needed
     * file (or keeps rows outside the range) hash-fails; `pruned` pins that
     * the scan really skipped files (a year is ~15 % of the 1995–2001 span,
@@ -1716,18 +1593,56 @@ object ZoneMaps extends Logging {
     * `files_total` pins the clustered layout. */
   def q133ZoneMapPrune(spark: SparkSession, dir: String): DataFrame = {
     val cdir = clusteredLineitem(spark, dir)
-    val lo = java.time.LocalDateTime.parse("1996-01-01T00:00:00")
-    val hi = java.time.LocalDateTime.parse("1997-01-01T00:00:00")
-    val loCol = lit("1996-01-01 00:00:00").cast("timestamp_ntz")
-    val hiCol = lit("1997-01-01 00:00:00").cast("timestamp_ntz")
-    val total = manifestRows(spark, cdir, Seq("l_shipdate")).length
-    val scanned = pruneFiles(manifestRows(spark, cdir, Seq("l_shipdate")),
-      "l_shipdate", lo, hi).length
-    prunedRead(spark, cdir, "l_shipdate", lo, hi, loCol, hiCol)
+    val man = manifestRows(spark, cdir, Seq("l_shipdate"))
+    val total = man.length
+    val scanned = pruneFiles(man, "l_shipdate",
+      java.time.LocalDateTime.parse("1996-01-01T00:00:00"),
+      java.time.LocalDateTime.parse("1997-01-01T00:00:00")).length
+    val df = spark.read.parquet(cdir)
+    // cast the bounds to the column's own type (TIMESTAMP vs NTZ differs
+    // by testdata generation; under the pinned-UTC session the cast is
+    // value-identical either way)
+    val dt = df.schema("l_shipdate").dataType
+    df.where(col("l_shipdate") >= lit("1996-01-01 00:00:00").cast(dt) &&
+        col("l_shipdate") < lit("1997-01-01 00:00:00").cast(dt))
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_rows"),
         (round(sum(col("l_quantity")), 4) + lit(0.0)).as("sum_qty"))
       .withColumn("files_total", lit(total))
       .withColumn("pruned", lit(scanned < total))
+  }
+}
+
+/** The membership probe kernel — [[ZoneMaps.membershipPruneFiles]] runs it
+  * on the driver and [[ZoneMaps.membershipPruneFilesDistributed]] inside
+  * its executor closure. A top-level object, so that closure captures
+  * nothing but the broadcast keys. `keys` are sorted ascending. */
+private[sources] object BloomProbe {
+
+  def isSorted(xs: Array[Long]): Boolean = {
+    var i = 1
+    while (i < xs.length && xs(i - 1) <= xs(i)) i += 1
+    i >= xs.length
+  }
+
+  /** Might a file with key envelope [mn, mx] and serialized Bloom filter
+    * `bloom` hold one of `keys`? The keys are restricted to the envelope
+    * first (binary search — a key outside it cannot be present whatever
+    * the bloom says), then the in-range keys are probed. "Might contain"
+    * keeps the no-false-negative contract, so pruning only errs toward
+    * keeping a file. */
+  def mightHoldAny(keys: Array[Long], mn: Long, mx: Long,
+                   bloom: Array[Byte]): Boolean = {
+    var a = 0; var b = keys.length // first index with keys(i) >= mn
+    while (a < b) { val m = (a + b) >>> 1; if (keys(m) < mn) a = m + 1 else b = m }
+    a < keys.length && keys(a) <= mx && {
+      val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
+        new java.io.ByteArrayInputStream(bloom))
+      var i = a; var hit = false
+      while (!hit && i < keys.length && keys(i) <= mx) {
+        hit = bf.mightContainLong(keys(i)); i += 1
+      }
+      hit
+    }
   }
 }

@@ -331,10 +331,11 @@ object GraftProperties extends Properties("graft") {
 
   property("membership-pruned join equals the naive join on arbitrary key layouts") = {
     // arbitrary fact key multisets (gaps, duplicates, negatives) against
-    // arbitrary dim key sets: the bloom-pruned scan joined on the key must
-    // equal the unpruned join — false positives only over-keep, envelope
-    // restriction and bloom rejection must never lose a matching row —
-    // and the surviving file set must be a subset of the envelope path's
+    // arbitrary dim key sets: the IN-filtered read of the bloom-registered
+    // dir joined on the key must equal the in-memory join — false
+    // positives only over-keep, envelope restriction and bloom rejection
+    // must never lose a matching row — the scan must open exactly the
+    // bloom survivors, and they must be a subset of the envelope path's
     val factKeys: Gen[List[Long]] = Gen.chooseNum(5, 60).flatMap(n =>
       Gen.listOfN(n, Gen.chooseNum(-50L, 120L)))
     val dimKeys: Gen[List[Long]] = Gen.chooseNum(1, 12).flatMap(n =>
@@ -345,21 +346,22 @@ object GraftProperties extends Properties("graft") {
         val fact = fk.zipWithIndex.map { case (k, i) => (k, i.toLong) }
           .toDF("k", "payload")
         graft.sources.ZoneMaps.clusteredWrite(fact, "k", dir, nFiles)
-        val dim = dk.map(Tuple1(_)).toDF("dk").distinct()
-        val pruned = graft.sources.ZoneMaps
-          .membershipPrunedRead(spark, dir, "k", dim, "dk")
-        val got = pruned.join(dim, col("k") === col("dk"))
-          .groupBy().agg(count(lit(1)), coalesce(sum(col("payload")), lit(0L)))
-          .head()
-        val want = spark.read.parquet(dir).join(dim, col("k") === col("dk"))
-          .groupBy().agg(count(lit(1)), coalesce(sum(col("payload")), lit(0L)))
-          .head()
-        val envelope = graft.sources.ZoneMaps
-          .joinPruneFiles(spark, dir, "k", dim, "dk").toSet
         val member = graft.sources.ZoneMaps.membershipPruneFiles(
           graft.sources.ZoneMaps.membershipRows(spark, dir, "k"), "k",
           dk.distinct.sorted.toArray).toSet
-        got == want && member.subsetOf(envelope)
+        SparkTestSession.registered(dir, Seq("k"), Seq("k"))
+        val dim = dk.map(Tuple1(_)).toDF("dk").distinct()
+        val pruned = spark.read.parquet(dir).where(col("k").isin(dk.distinct: _*))
+        val got = pruned.join(dim, col("k") === col("dk"))
+          .groupBy().agg(count(lit(1)), coalesce(sum(col("payload")), lit(0L)))
+          .head()
+        val hits = fk.zipWithIndex.filter { case (k, _) => dk.contains(k) }
+        val envelope = graft.sources.ZoneMaps
+          .joinPruneFiles(spark, dir, "k", dim, "dk").toSet
+        got.getLong(0) == hits.size.toLong &&
+          got.getLong(1) == hits.map(_._2.toLong).sum &&
+          SparkTestSession.scannedFiles(pruned) == member.size &&
+          member.subsetOf(envelope)
     }
   }
 
@@ -424,6 +426,8 @@ object GraftProperties extends Properties("graft") {
         val got = df.agg(count(lit(1)),
           coalesce(sum(col("payload")), lit(0L))).head()
         val expRows = fk.zipWithIndex.filter { case (k, _) => keep(k) }
+        // a contradictory predicate (kind 0 with lo == hi) folds to an
+        // empty LocalRelation: no scan is left to swap, which is fine
         val swapped = df.queryExecution.optimizedPlan.collectFirst {
           case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
             lr.relation match {
@@ -431,7 +435,7 @@ object GraftProperties extends Properties("graft") {
                 h.location.isInstanceOf[graft.sources.ZoneMapFileIndex]
               case _ => false
             }
-        }.getOrElse(false)
+        }.getOrElse(true)
         got.getLong(0) == expRows.size.toLong &&
           got.getLong(1) == expRows.map(_._2.toLong).sum &&
           swapped
@@ -715,7 +719,7 @@ object GraftProperties extends Properties("graft") {
     d
   }
 
-  property("ZoneMaps.prunedRead ≡ naive range filter for arbitrary ranges") =
+  property("transparent range read ≡ naive range filter for arbitrary ranges") =
     forAll(Gen.chooseNum(0, 3000), Gen.chooseNum(1, 3000)) { (off, len) =>
       // random [lo, hi) windows across (and beyond) the 1995–2001 domain —
       // degenerate, empty and full-cover ranges all land here
@@ -723,12 +727,16 @@ object GraftProperties extends Properties("graft") {
       val hi = lo.plusDays(len)
       def lit_(d: java.time.LocalDateTime) =
         lit(d.toString.replace("T", " ")).cast("timestamp_ntz")
-      val pruned = graft.sources.ZoneMaps.prunedRead(
-        spark, zmDir, "l_shipdate", lo, hi, lit_(lo), lit_(hi))
-      val want = spark.read.parquet(zmDir)
-        .where(col("l_shipdate") >= lit_(lo) && col("l_shipdate") < lit_(hi))
+      val range = col("l_shipdate") >= lit_(lo) && col("l_shipdate") < lit_(hi)
+      // registered per case: another property's session release drops it
+      val pruned = spark.read
+        .parquet(SparkTestSession.registered(zmDir, Seq("l_shipdate"))).where(range)
+      val want = SparkTestSession.tables.lineitem.where(range)
+      val man = graft.sources.ZoneMaps.manifestRows(spark, zmDir, Seq("l_shipdate"))
       pruned.count() == want.count() &&
-        pruned.exceptAll(want).isEmpty && want.exceptAll(pruned).isEmpty
+        pruned.exceptAll(want).isEmpty && want.exceptAll(pruned).isEmpty &&
+        SparkTestSession.scannedFiles(pruned) ==
+          graft.sources.ZoneMaps.pruneFiles(man, "l_shipdate", lo, hi).length
     }
 
   // the chunk rule now backs p57/p58/p59/p61 and their DuckDB oracles —
@@ -807,16 +815,21 @@ object GraftProperties extends Properties("graft") {
     d
   }
 
-  property("joinPrunedRead ≡ naive join for arbitrary dim key slices") =
+  property("join-bound pruned read ≡ naive join for arbitrary dim key slices") =
     forAll(Gen.chooseNum(0L, 70000L), Gen.chooseNum(0L, 40000L)) { (lo, len) =>
       val dim = SparkTestSession.tables.orders
         .where(col("o_orderkey") >= lo && col("o_orderkey") < lo + len)
         .select(col("o_orderkey"))
-      val fact = graft.sources.ZoneMaps.joinPrunedRead(
-        spark, jpDir, "l_orderkey", dim, "o_orderkey")
+      // the fact filtered to the dim's key range (NULL bounds for an empty
+      // slice make the filter false and remove the scan)
+      val k = dim.agg(min(col("o_orderkey")), max(col("o_orderkey"))).head()
+      val fact = spark.read
+        .parquet(SparkTestSession.registered(jpDir, Seq("l_orderkey")))
+        .where(col("l_orderkey").between(k.get(0), k.get(1)))
       val got = fact.join(dim, col("l_orderkey") === col("o_orderkey")).count()
-      val want = spark.read.parquet(jpDir)
+      val want = SparkTestSession.tables.lineitem
         .join(dim, col("l_orderkey") === col("o_orderkey")).count()
-      got == want
+      got == want && SparkTestSession.scannedFiles(fact) == graft.sources.ZoneMaps
+        .joinPruneFiles(spark, jpDir, "l_orderkey", dim, "o_orderkey").length
     }
 }

@@ -111,20 +111,15 @@ class PlanSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
     sources.Sources.writePartitioned(
       tables.orders.withColumn("month", month(col("o_orderdate"))), dir, "month")
-    def scanOf(df: org.apache.spark.sql.DataFrame) = {
-      df.collect()
-      df.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.head
-    }
-    val pruned = scanOf(spark.read.parquet(dir).filter(col("month") === 3))
+    val pruned = spark.read.parquet(dir).filter(col("month") === 3)
+    val prunedFiles = scannedFiles(pruned)
     // the month predicate must surface as a PartitionFilter (pruned at
     // listing time), not a data Filter evaluated per row after a full read
-    assert(pruned.partitionFilters.exists(_.toString.contains("month")),
-      s"month predicate not a partition filter: ${pruned.partitionFilters}")
-    val full = scanOf(spark.read.parquet(dir))
-    val (prunedFiles, allFiles) =
-      (pruned.metrics("numFiles").value, full.metrics("numFiles").value)
+    val partitionFilters =
+      fileScans(pruned.queryExecution.executedPlan).head.partitionFilters
+    assert(partitionFilters.exists(_.toString.contains("month")),
+      s"month predicate not a partition filter: $partitionFilters")
+    val allFiles = scannedFiles(spark.read.parquet(dir))
     assert(prunedFiles > 0 && prunedFiles < allFiles,
       s"pruning read $prunedFiles of $allFiles files")
     // pruned read returns exactly the month's rows

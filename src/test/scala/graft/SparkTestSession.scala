@@ -8,6 +8,43 @@ object SparkTestSession {
   val sf: String = "/root/testdata/sf0.001"
   lazy val tables: Tables = Tables(spark, sf)
 
+  /** Every FileSourceScanExec in the FINAL adaptive plan (descending into
+    * materialized stages). */
+  def fileScans(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      fileScans(a.executedPlan)
+    case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+      fileScans(s.plan)
+    case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
+    case o => o.children.flatMap(fileScans)
+  }
+
+  /** Runs `df`, then sums the plan's `numFiles` scan metric: the files the
+    * query really opened (0 when the optimizer removed every scan). */
+  def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
+    df.collect()
+    fileScans(df.queryExecution.executedPlan)
+      .map(_.metrics("numFiles").value).sum
+  }
+
+  /** Does every file scan of `df` ride the manifest-backed index? */
+  def ridesIndex(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val scans = fileScans(df.queryExecution.executedPlan)
+    scans.nonEmpty && scans.forall(
+      _.relation.location.isInstanceOf[graft.sources.ZoneMapFileIndex])
+  }
+
+  /** Register `dir` for transparent zone-map pruning on `cols` (blooms on
+    * `bloomCols`, whose membership memo must already be seeded) and
+    * return it. */
+  def registered(dir: String, cols: Seq[String],
+                 bloomCols: Seq[String] = Nil): String = {
+    graft.sources.ZoneMapFileIndex.enable(spark, dir, cols, bloomCols)
+    GraftSession.ensureOptimizations(spark)
+    dir
+  }
+
   /** The FINAL adaptive plan as a string, with every `== Initial Plan ==`
     * section removed — including NESTED ones: a cached relation embeds its
     * own AdaptiveSparkPlan, so the old `split("== Initial Plan ==")(0)`

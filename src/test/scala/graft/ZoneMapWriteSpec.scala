@@ -13,32 +13,9 @@ import graft.sources.{ZoneMapFileIndex, ZoneMaps}
   * path append folds the manifest forward inside the command), the
   * batch-granularity idempotent commit, URL-encoding-safe path
   * normalization, scheme-qualified registry keys, NULL-predicate and
-  * string-prefix pruning, and the size-routed distributed bloom probe. */
+  * string-prefix pruning, and the persisted-consult bloom probe. */
 class ZoneMapWriteSpec extends AnyFunSuite {
   import SparkTestSession._
-
-  /** Every FileSourceScanExec in the FINAL adaptive plan. */
-  private def fileScans(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      fileScans(a.executedPlan)
-    case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      fileScans(s.plan)
-    case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-    case o => o.children.flatMap(fileScans)
-  }
-
-  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
-    df.collect()
-    fileScans(df.queryExecution.executedPlan)
-      .map(_.metrics("numFiles").value).sum
-  }
-
-  private def ridesIndex(df: org.apache.spark.sql.DataFrame): Boolean = {
-    val scans = fileScans(df.queryExecution.executedPlan)
-    scans.nonEmpty && scans.forall(
-      _.relation.location.isInstanceOf[ZoneMapFileIndex])
-  }
 
   // ---- path normalization & registry keys ----------------------------------
 
@@ -509,34 +486,6 @@ class ZoneMapWriteSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got.map(r => (r.getAs[String]("l_returnflag"),
       r.getAs[Long]("n_rows"), r.getAs[Double]("sum_qty"))).toSet == want)
-  }
-
-  // ---- distributed bloom probe route ----------------------------------------
-
-  test("the distributed bloom probe route yields the identical survivor set") {
-    val base = Files.createTempDirectory("graft_zmw_dist_").toString
-    val out = s"$base/t"; val mf = s"$base/m"
-    GraftSession.prepareTable(spark, "graft_zmw_dist",
-      s"$sf/lineitem.parquet", out, Seq("l_partkey"), Nil,
-      nFiles = 8, manifestPath = Some(mf), bloomCols = Seq("l_partkey"))
-    val man = ZoneMaps.manifestRows(spark, out, Seq("l_partkey"))
-    val gmin = man.map(_.getAs[Long]("l_partkey_min")).min
-    val gmax = man.map(_.getAs[Long]("l_partkey_max")).max
-    val keys = Array(gmin, gmax).sorted
-    val q = "SELECT count(*) AS c FROM graft_zmw_dist " +
-      s"WHERE l_partkey IN (${keys.mkString(", ")})"
-    val want = tables.lineitem.where(col("l_partkey").isin(keys.toSeq: _*)).count()
-    val driverScan = scannedFiles(spark.sql(q))
-    assert(spark.sql(q).collect().head.getLong(0) == want)
-    // flip the route: every probe now fans out (threshold 0)
-    spark.conf.set("spark.graft.zonemap.distributedProbeFiles", "0")
-    try {
-      val df = spark.sql(q)
-      assert(df.collect().head.getLong(0) == want)
-      assert(scannedFiles(spark.sql(q)) == driverScan,
-        "both probe routes must keep the identical survivor set")
-    } finally spark.conf.unset("spark.graft.zonemap.distributedProbeFiles")
-    spark.sql("DROP TABLE IF EXISTS graft_zmw_dist")
   }
 
   // ---- persisted-consult route (blooms never on the driver) -----------------

@@ -10,7 +10,8 @@ import graft.sources.ZoneMaps
 /** Zone-map contract: the clustered layout yields disjoint file envelopes,
   * the manifest is exact per file, pruning never changes results (for any
   * range, including empty and full), and it really skips files — asserted
-  * on `inputFiles` of the pruned scan, not just the manifest count. */
+  * on the `numFiles` metric of the scan a filtered read of the registered
+  * directory executes, not just the manifest count. */
 class ZoneMapsSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -61,52 +62,64 @@ class ZoneMapsSpec extends AnyFunSuite {
       ("1990-01-01T00:00:00Z", "1991-01-01T00:00:00Z"), // fully before: empty
       ("1990-01-01T00:00:00Z", "2030-01-01T00:00:00Z"), // covers everything
       ("2001-10-01T00:00:00Z", "2030-01-01T00:00:00Z")) // tail sliver
+    registered(dir, Seq("l_shipdate"))
     for ((lo, hi) <- ranges) {
-      val pruned = ZoneMaps.prunedRead(spark, dir, "l_shipdate",
-        ts(lo), ts(hi), tsCol(lo), tsCol(hi))
-      val want = spark.read.parquet(dir)
-        .where(col("l_shipdate") >= tsCol(lo) && col("l_shipdate") < tsCol(hi))
+      val range = col("l_shipdate") >= tsCol(lo) && col("l_shipdate") < tsCol(hi)
+      val pruned = spark.read.parquet(dir).where(range)
+      val want = tables.lineitem.where(range)
       assert(pruned.count() == want.count(), s"count drift for [$lo,$hi)")
       assert(pruned.exceptAll(want).isEmpty && want.exceptAll(pruned).isEmpty,
         s"row drift for [$lo,$hi)")
+      assert(scannedFiles(pruned) ==
+        ZoneMaps.pruneFiles(manifest, "l_shipdate", ts(lo), ts(hi)).length,
+        s"the scan must open exactly the envelope survivors of [$lo,$hi)")
     }
   }
 
   test("pruning really skips files — narrow range scans a strict subset") {
-    val pruned = ZoneMaps.prunedRead(spark, dir, "l_shipdate",
-      ts("1996-01-01T00:00:00Z"), ts("1997-01-01T00:00:00Z"),
-      tsCol("1996-01-01 00:00:00"), tsCol("1997-01-01 00:00:00"))
-    val scanned = pruned.inputFiles.length
-    assert(scanned > 0 && scanned < 6,
-      s"expected a strict file subset for a ~1/7th range, scanned $scanned/6")
-    // empty range: zero files scheduled (footer-only schema read)
+    def scanned(lo: String, hi: String): Long =
+      scannedFiles(spark.read.parquet(registered(dir, Seq("l_shipdate")))
+        .where(col("l_shipdate") >= tsCol(lo) && col("l_shipdate") < tsCol(hi)))
+    val narrow = scanned("1996-01-01 00:00:00", "1997-01-01 00:00:00")
+    assert(narrow > 0 && narrow < 6,
+      s"expected a strict file subset for a ~1/7th range, scanned $narrow/6")
+    // empty range: zero files scheduled
     val none = ZoneMaps.pruneFiles(manifest, "l_shipdate",
       ts("1990-01-01T00:00:00Z"), ts("1991-01-01T00:00:00Z"))
     assert(none.isEmpty)
+    assert(scanned("1990-01-01 00:00:00", "1991-01-01 00:00:00") == 0)
   }
 
-  test("joinPrunedRead: key-clustered fact prunes by the dim's key range (long column)") {
+  test("join pruning: key-clustered fact prunes by the dim's key range (long column)") {
     // also exercises the non-timestamp manifest path: a LONG zone column
     val d3 = Files.createTempDirectory("graft_zm_join_").toString
     ZoneMaps.clusteredWrite(tables.lineitem, "l_orderkey", d3, 6)
+    registered(d3, Seq("l_orderkey"))
     // dim: a narrow orderkey slice (the time-correlated-ingest shape)
     val keys = tables.orders.select(col("o_orderkey"))
     val loHi = keys.agg(min(col("o_orderkey")), max(col("o_orderkey"))).head()
     val cut = loHi.getLong(0) + (loHi.getLong(1) - loHi.getLong(0)) / 10
     val dim = tables.orders.where(col("o_orderkey") <= cut)
       .select(col("o_orderkey"), col("o_orderdate"))
-    val fact = ZoneMaps.joinPrunedRead(spark, d3, "l_orderkey", dim, "o_orderkey")
-    assert(fact.inputFiles.length > 0 && fact.inputFiles.length < 6,
-      s"narrow dim range should prune files, scanned ${fact.inputFiles.length}/6")
+    // the fact filtered to the dim's key range — one 1-row aggregate
+    def fact(dim: org.apache.spark.sql.DataFrame) = {
+      val k = dim.agg(min(col("o_orderkey")), max(col("o_orderkey"))).head()
+      spark.read.parquet(d3).where(col("l_orderkey").between(k.get(0), k.get(1)))
+    }
+    val scanned = scannedFiles(fact(dim))
+    assert(scanned > 0 && scanned < 6,
+      s"narrow dim range should prune files, scanned $scanned/6")
+    assert(scanned ==
+      ZoneMaps.joinPruneFiles(spark, d3, "l_orderkey", dim, "o_orderkey").length)
     // the pruned join equals the naive join — the join equality is the residual
-    val got = fact.join(dim, col("l_orderkey") === col("o_orderkey")).count()
-    val want = spark.read.parquet(d3)
+    val got = fact(dim).join(dim, col("l_orderkey") === col("o_orderkey")).count()
+    val want = tables.lineitem
       .join(dim, col("l_orderkey") === col("o_orderkey")).count()
     assert(got == want && want > 0)
     // empty dim: everything pruned, zero rows, no error
-    val none = ZoneMaps.joinPrunedRead(spark, d3, "l_orderkey",
-      dim.where(lit(false)), "o_orderkey")
-    assert(none.count() == 0)
+    val empty = dim.where(lit(false))
+    assert(ZoneMaps.joinPruneFiles(spark, d3, "l_orderkey", empty, "o_orderkey").isEmpty)
+    assert(scannedFiles(fact(empty)) == 0 && fact(empty).count() == 0)
   }
 
   test("clusteredWriteZ: one layout prunes on EITHER column; single-column layout cannot") {
@@ -197,15 +210,18 @@ class ZoneMapsSpec extends AnyFunSuite {
     val stats = rel.stats.attributeStats
     assert(stats.exists { case (a, s) =>
       a.name == "o_custkey" && s.distinctCount.isDefined })
-    // the manifest was built and prunes: a narrow range scans a strict
-    // subset and equals the naive filter
+    // the manifest was built and the table prunes: a narrow range scans a
+    // strict subset and equals the naive filter
     val lo = ts("1996-01-01T00:00:00Z"); val hi = ts("1997-01-01T00:00:00Z")
-    val pruned = ZoneMaps.prunedRead(spark, out, "o_orderdate", lo, hi,
-      tsCol("1996-01-01 00:00:00"), tsCol("1997-01-01 00:00:00"))
-    assert(pruned.inputFiles.length < 4)
-    val want = spark.read.parquet(out)
-      .where(col("o_orderdate") >= tsCol("1996-01-01 00:00:00") &&
-        col("o_orderdate") < tsCol("1997-01-01 00:00:00")).count()
+    val range = col("o_orderdate") >= tsCol("1996-01-01 00:00:00") &&
+      col("o_orderdate") < tsCol("1997-01-01 00:00:00")
+    val pruned = spark.table(name).where(range)
+    val scanned = scannedFiles(pruned)
+    assert(ridesIndex(pruned) && scanned < 4)
+    assert(scanned == ZoneMaps.pruneFiles(
+      ZoneMaps.manifestRows(spark, out, Seq("o_orderdate")), "o_orderdate",
+      lo, hi).length)
+    val want = spark.read.parquet(s"$sf/orders.parquet").where(range).count()
     assert(pruned.count() == want)
     spark.sql(s"DROP TABLE IF EXISTS $name")
   }
@@ -217,10 +233,14 @@ class ZoneMapsSpec extends AnyFunSuite {
     val loaded = ZoneMaps.loadManifest(spark, dir, Seq("l_shipdate"), mp)
     assert(loaded.length == 6 &&
       loaded.map(_.getAs[Long]("n_rows")).sum == tables.lineitem.count())
-    val pruned = ZoneMaps.prunedRead(spark, dir, "l_shipdate",
-      ts("1996-01-01T00:00:00Z"), ts("1997-01-01T00:00:00Z"),
-      tsCol("1996-01-01 00:00:00"), tsCol("1997-01-01 00:00:00"))
-    assert(pruned.inputFiles.length < 6 && pruned.count() > 0)
+    val range = col("l_shipdate") >= tsCol("1996-01-01 00:00:00") &&
+      col("l_shipdate") < tsCol("1997-01-01 00:00:00")
+    val pruned = spark.read.parquet(registered(dir, Seq("l_shipdate"))).where(range)
+    val scanned = scannedFiles(pruned)
+    assert(scanned < 6 && scanned == ZoneMaps.pruneFiles(loaded, "l_shipdate",
+      ts("1996-01-01T00:00:00Z"), ts("1997-01-01T00:00:00Z")).length)
+    val want = tables.lineitem.where(range).count()
+    assert(pruned.count() == want && want > 0)
   }
 
   test("prepareTable re-ingest refreshes the manifest (no stale file paths)") {
@@ -228,15 +248,19 @@ class ZoneMapsSpec extends AnyFunSuite {
     def run(): Long = {
       GraftSession.prepareTable(spark, "graft_zm_reprep_spec",
         s"$sf/orders.parquet", out, Seq("o_orderdate"), Nil, nFiles = 3)
-      // a prune over the CURRENT files — a stale manifest would hand
-      // spark.read.parquet paths deleted by the second clusteredWrite
-      ZoneMaps.prunedRead(spark, out, "o_orderdate",
-        ts("1990-01-01T00:00:00Z"), ts("2030-01-01T00:00:00Z"),
-        tsCol("1990-01-01 00:00:00"), tsCol("2030-01-01 00:00:00")).count()
+      // a prune over the CURRENT files — a stale manifest would name the
+      // paths the second clusteredWrite deleted, and every listed file
+      // would ride the stale-manifest guard
+      spark.read.parquet(out)
+        .where(col("o_orderdate") >= tsCol("1990-01-01 00:00:00") &&
+          col("o_orderdate") < tsCol("2030-01-01 00:00:00")).count()
     }
+    val staleBefore = graft.sources.ZoneMapFileIndex.staleServesFor(out)
     val first = run()
     val second = run() // re-ingest: every part file is rewritten
     assert(first == second && second == tables.orders.count())
+    assert(graft.sources.ZoneMapFileIndex.staleServesFor(out) == staleBefore,
+      "the re-ingested table must be served from a manifest that knows its files")
     spark.sql("DROP TABLE IF EXISTS graft_zm_reprep_spec")
   }
 
@@ -257,11 +281,14 @@ class ZoneMapsSpec extends AnyFunSuite {
     assert(member.length <= keyVals.length,
       s"three scattered keys can hit at most 3 disjoint-range files, kept ${member.length}")
     assert(member.nonEmpty)
-    // parity: the membership-pruned join equals the naive join — the join
-    // equality is the residual, bloom false positives only over-keep
-    val got = ZoneMaps.membershipPrunedRead(spark, d, "l_partkey", dim, "k")
-      .join(dim, col("l_partkey") === col("k")).count()
-    val want = spark.read.parquet(d)
+    // the IN-filtered read of the registered dir opens exactly the bloom
+    // survivors, and its join equals the naive join — the join equality is
+    // the residual, bloom false positives only over-keep
+    registered(d, Seq("l_partkey"), Seq("l_partkey"))
+    val fact = spark.read.parquet(d).where(col("l_partkey").isin(keyVals: _*))
+    assert(scannedFiles(fact) == member.length)
+    val got = fact.join(dim, col("l_partkey") === col("k")).count()
+    val want = tables.lineitem
       .join(dim, col("l_partkey") === col("k")).count()
     assert(got == want && want > 0)
   }
@@ -281,8 +308,9 @@ class ZoneMapsSpec extends AnyFunSuite {
     val present = Array(100L, 700L)
     val kept = ZoneMaps.membershipPruneFiles(rows, "k", present)
     assert(kept.nonEmpty && kept.length <= 2)
-    val dim = spark.createDataFrame(odd.toSeq.map(Tuple1(_))).toDF("k")
-    assert(ZoneMaps.membershipPrunedRead(spark, d, "k", dim, "k").count() == 0)
+    registered(d, Seq("k"), Seq("k"))
+    val absent = spark.read.parquet(d).where(col("k").isin(odd.toSeq: _*))
+    assert(scannedFiles(absent) == 0 && absent.count() == 0)
   }
 
   test("distributed membership probe equals the driver-side path") {
@@ -292,8 +320,7 @@ class ZoneMapsSpec extends AnyFunSuite {
     val driverSide = ZoneMaps.membershipPruneFiles(
       ZoneMaps.membershipRows(spark, d, "l_partkey"), "l_partkey", keys).sorted
     val distributed = ZoneMaps.membershipPruneFilesDistributed(
-      ZoneMaps.buildMembership(spark, d, "l_partkey",
-        expectedKeysPerFile = 1L << 13), "l_partkey", keys).sorted
+      ZoneMaps.build(spark, d, Nil, Seq("l_partkey")), "l_partkey", keys).sorted
     assert(distributed.sameElements(driverSide) && driverSide.nonEmpty)
   }
 
@@ -301,14 +328,22 @@ class ZoneMapsSpec extends AnyFunSuite {
     val d = Files.createTempDirectory("graft_zm_wide_").toString
     ZoneMaps.clusteredWrite(tables.lineitem, "l_partkey", d, 8)
     val dim = spark.createDataFrame(Seq(3L, 99L, 197L).map(Tuple1(_))).toDF("k")
-    val fb = ZoneMaps.membershipPrunedRead(spark, d, "l_partkey", dim, "k",
-      maxKeys = 2)
-    val env = ZoneMaps.joinPrunedRead(spark, d, "l_partkey", dim, "k")
-    assert(fb.inputFiles.sorted.sameElements(env.inputFiles.sorted),
-      "over-maxKeys dim must take the envelope route")
-    // empty dim prunes everything
-    assert(ZoneMaps.membershipPrunedRead(spark, d, "l_partkey",
-      dim.where(lit(false)), "k").count() == 0)
+    // over maxKeys the guarded collect declines instead of holding the keys
+    assert(ZoneMaps.boundedDimKeys(dim, "k", maxKeys = 2).isEmpty)
+    assert(ZoneMaps.boundedDimKeys(dim, "k", maxKeys = 3)
+      .exists(_.sameElements(Array(3L, 99L, 197L))))
+    // the fallback: the dim's key range as a filter on the registered fact
+    // opens exactly the envelope survivors, and the join stays exact
+    registered(d, Seq("l_partkey"))
+    val b = dim.agg(min(col("k")), max(col("k"))).head()
+    val fact = spark.read.parquet(d)
+      .where(col("l_partkey").between(b.get(0), b.get(1)))
+    assert(scannedFiles(fact) ==
+      ZoneMaps.joinPruneFiles(spark, d, "l_partkey", dim, "k").length)
+    assert(fact.join(dim, col("l_partkey") === col("k")).count() ==
+      tables.lineitem.join(dim, col("l_partkey") === col("k")).count())
+    // empty dim: nothing to hold, nothing to scan
+    assert(ZoneMaps.boundedDimKeys(dim.where(lit(false)), "k").exists(_.isEmpty))
   }
 
   test("pruneFiles: mixed-width numeric bounds prune; incomparable types error clearly") {
@@ -346,9 +381,12 @@ class ZoneMapsSpec extends AnyFunSuite {
     assert(fresh.length == 4)
     val lo = tables.orders.agg(min(col("o_custkey"))).head().getLong(0)
     val hi = tables.orders.agg(max(col("o_custkey"))).head().getLong(0)
-    val full = ZoneMaps.prunedRead(spark, d, "o_custkey", lo, hi + 1,
-      lit(lo), lit(hi + 1))
-    assert(full.count() == tables.orders.count())
+    val staleBefore = graft.sources.ZoneMapFileIndex.staleServesFor(d)
+    val full = spark.read.parquet(registered(d, Seq("o_custkey")))
+      .where(col("o_custkey") >= lo && col("o_custkey") < hi + 1)
+    assert(scannedFiles(full) == 4 && full.count() == tables.orders.count())
+    assert(graft.sources.ZoneMapFileIndex.staleServesFor(d) == staleBefore,
+      "the index must consult the refreshed manifest, not the purged one")
   }
 
   test("persisted manifest serves a fresh session with ZERO data-dir access") {
@@ -411,12 +449,12 @@ class ZoneMapsSpec extends AnyFunSuite {
     assert(keptEd <= 4,
       s"equi-depth bucketing should keep pruning under the outlier (kept $keptEd/8)")
     // correctness never depends on the layout: pruned ≡ naive on both
-    for (dz <- Seq(dLin, dEd)) {
-      val pruned = ZoneMaps.prunedRead(spark, dz, "k1", 0L, 25L,
-        lit(0L), lit(25L)).count()
-      val naive = spark.read.parquet(dz)
-        .where(col("k1") >= 0L && col("k1") < 25L).count()
-      assert(pruned == naive && naive > 0)
+    for ((dz, kept) <- Seq(dLin -> keptLin, dEd -> keptEd)) {
+      val range = col("k1") >= 0L && col("k1") < 25L
+      val pruned = spark.read.parquet(registered(dz, Seq("k1"))).where(range)
+      assert(scannedFiles(pruned) == kept)
+      val naive = skewed.where(range).count()
+      assert(pruned.count() == naive && naive > 0)
     }
   }
 
@@ -446,6 +484,19 @@ class ZoneMapsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got.map(r => (r.getAs[Long]("partkey"), r.getAs[Long]("n_rows"),
       r.getAs[Double]("sum_qty"))).toSet == want)
+    // the IN-filtered fact scan rode the index and its blooms skipped files
+    val scanned = indexedScannedFiles(SparkEntry.queries("q135_membership_prune")(spark, sf))
+    assert(scanned > 0 && scanned < ZoneMaps.membershipDemoFiles)
+  }
+
+  /** Files opened by `df`'s zone-map-indexed scans only (a join's dim
+    * side reads an unregistered table). */
+  private def indexedScannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
+    df.collect()
+    val idx = fileScans(df.queryExecution.executedPlan)
+      .filter(_.relation.location.isInstanceOf[graft.sources.ZoneMapFileIndex])
+    assert(idx.nonEmpty, "the fact scan must ride the zone-map index")
+    idx.map(_.metrics("numFiles").value).sum
   }
 
   test("q136 registered query: recipe layout prunes the SECOND column, matches naive") {
@@ -504,6 +555,8 @@ class ZoneMapsSpec extends AnyFunSuite {
       want.map(t => (t._2, t._3, t._4)).sorted)
     // the tail prune is strict, and the covering law holds for any k on
     // the clustered layout: taken files hold >= k rows
+    val df = SparkEntry.queries("q138_zonemap_topk")(spark, sf)
+    assert(ridesIndex(df) && scannedFiles(df) < ZoneMaps.demoFiles)
     val files = ZoneMaps.topTailFiles(spark, dir, "l_shipdate", 50L)
     assert(files.nonEmpty && files.length < 6)
     val inTail = spark.read.parquet(files.toIndexedSeq: _*).count()
@@ -575,21 +628,30 @@ class ZoneMapsSpec extends AnyFunSuite {
     val gotSet = rows.map(r => (r.getAs[String]("l_returnflag"),
       r.getAs[Long]("n_rows"), r.getAs[Double]("sum_qty"))).toSet
     assert(gotSet == want)
+    // the year filter rode the zone-map index and skipped files
+    val scanned = scannedFiles(got)
+    assert(ridesIndex(got) && scanned > 0 && scanned < ZoneMaps.demoFiles)
+  }
+
+  test("q134 registered query: the dim's key range prunes the fact scan, join matches naive") {
+    val df = SparkEntry.queries("q134_zonemap_join")(spark, sf)
+    val rows = df.collect()
+    assert(rows.nonEmpty && rows.forall(_.getAs[Boolean]("pruned")))
+    val b = tables.orders.agg(min(col("o_orderkey")), max(col("o_orderkey"))).head()
+    val cut = b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 8
+    val want = tables.lineitem
+      .join(tables.orders.where(col("o_orderkey") <= cut),
+        col("l_orderkey") === col("o_orderkey"))
+      .groupBy(year(col("o_orderdate").cast("date")))
+      .agg(count(lit(1)), round(sum(col("l_quantity")), 4) + lit(0.0))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(rows.map(r => (r.getAs[Int]("yr"), r.getAs[Long]("n_rows"),
+      r.getAs[Double]("sum_qty"))).toSet == want)
+    val scanned = indexedScannedFiles(df)
+    assert(scanned > 0 && scanned < ZoneMaps.demoFiles)
   }
 
   // ---- transparent (planner-applied) pruning -------------------------------
-
-  /** Every FileSourceScanExec in the FINAL adaptive plan (descending into
-    * materialized stages). */
-  private def fileScans(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      fileScans(a.executedPlan)
-    case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      fileScans(s.plan)
-    case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-    case o => o.children.flatMap(fileScans)
-  }
 
   test("transparent pruning: raw SQL over a prepared table scans exactly the explicit survivor set") {
     val base = Files.createTempDirectory("graft_zm_transp_").toString
@@ -617,7 +679,7 @@ class ZoneMapsSpec extends AnyFunSuite {
     val explicit = ZoneMaps.pruneFiles(man, "o_orderkey", gmin, cut)
     assert(explicit.length < man.length)
     assert(scans.map(_.metrics("numFiles").value).sum == explicit.length,
-      "transparent scan must open exactly the explicit prunedRead survivors")
+      "transparent scan must open exactly the pruneFiles survivors")
     // the lint accepts the swapped plan and flags a rule-less one
     assert(graft.plans.PlanLint.unprunedPreparedScans(df).isEmpty)
     val rules = spark.experimental.extraOptimizations
@@ -777,6 +839,7 @@ class ZoneMapsSpec extends AnyFunSuite {
     val d2 = Files.createTempDirectory("graft_zm_z2_").toString
     ZoneMaps.clusteredWriteZN(df3, Seq("a", "b", "c"), d3, 16)
     ZoneMaps.clusteredWriteZN(df3, Seq("a", "b"), d2, 16)
+    registered(d3, Seq("a", "b", "c"))
     for (cn <- Seq("a", "b", "c")) {
       val man = ZoneMaps.manifestRows(spark, d3, Seq(cn))
       val lo = man.map(_.getAs[Long](s"${cn}_min")).min
@@ -788,10 +851,11 @@ class ZoneMapsSpec extends AnyFunSuite {
       val bLo = lo + (hi - lo) * 9 / 16; val bHi = lo + (hi - lo) * 13 / 16
       val kept = ZoneMaps.pruneFiles(man, cn, bLo, bHi).length
       assert(kept < man.length, s"3-col layout must prune on '$cn' (kept $kept/16)")
-      // pruned ≡ naive
-      assert(ZoneMaps.prunedRead(spark, d3, cn, bLo, bHi,
-        lit(bLo), lit(bHi)).count() ==
-        spark.read.parquet(d3).where(col(cn) >= bLo && col(cn) < bHi).count())
+      // pruned ≡ naive, opening exactly the kept files
+      val band = col(cn) >= bLo && col(cn) < bHi
+      val pruned = spark.read.parquet(d3).where(band)
+      assert(scannedFiles(pruned) == kept)
+      assert(pruned.count() == df3.where(band).count())
     }
     // contrast: the 2-column layout leaves 'c' envelopes spanning the
     // domain — the same band prunes nothing
@@ -851,10 +915,17 @@ class ZoneMapsSpec extends AnyFunSuite {
     val gmax = man.map(_.getAs[Long]("l_partkey_max")).max
     import spark.implicits._
     val dim = Seq(gmin, gmax).toDF("dk")
-    val pruned = ZoneMaps.membershipPrunedRead(spark, s"$base/t",
-      "l_partkey", dim, "dk")
+    assert(ZoneMaps.membershipSourceIfSeeded(spark, s"$base/t", "l_partkey")
+      .exists(_.isLeft), "prepareTable must seed the membership memo")
+    val member = ZoneMaps.membershipPruneFiles(
+      ZoneMaps.membershipRows(spark, s"$base/t", "l_partkey"), "l_partkey",
+      Array(gmin, gmax).sorted)
+    assert(member.length < man.length, "blooms must skip files")
+    val pruned = spark.table("graft_zm_bnm_spec")
+      .where(col("l_partkey").isin(gmin, gmax))
+    assert(scannedFiles(pruned) == member.length)
     val got = pruned.join(dim, col("l_partkey") === col("dk")).count()
-    val want = spark.read.parquet(s"$base/t")
+    val want = tables.lineitem
       .join(dim, col("l_partkey") === col("dk")).count()
     assert(got == want && want > 0)
     spark.sql("DROP TABLE IF EXISTS graft_zm_bnm_spec")
@@ -946,6 +1017,27 @@ class ZoneMapsSpec extends AnyFunSuite {
     assert(topPruned == topFull,
       "tail-file top-k over a null-bearing tail must equal the full sort")
     assert(files.length == 2, "both files are needed once nulls are discounted")
+  }
+
+  test("topTailFiles: fewer than k non-NULL values scans every file, all-NULL ones included") {
+    // file A = {1, 2, 3}, file B = 5 NULLs, k = 5: DESC sorts NULLS LAST,
+    // so two of B's NULL rows belong to the top 5
+    import spark.implicits._
+    val nulls = (n: Int) => Seq.fill(n)(null.asInstanceOf[java.lang.Long])
+    val d = Files.createTempDirectory("graft_zm_nullfew_").toString
+    Seq(1L, 2L, 3L).toDF("v").coalesce(1).write.mode("append").parquet(d)
+    nulls(5).toDF("v").coalesce(1).write.mode("append").parquet(d)
+    def top(df: org.apache.spark.sql.DataFrame): Seq[Option[Any]] =
+      df.orderBy(col("v").desc).limit(5).collect().map(r => Option(r.get(0))).toSeq
+    val files = ZoneMaps.topTailFiles(spark, d, "v", 5L)
+    assert(top(spark.read.parquet(files.toIndexedSeq: _*)) == top(spark.read.parquet(d)),
+      "the tail-file top-k must equal the full sort, NULL rows included")
+    assert(files.length == 2)
+    // an all-NULL table has no bound to prune by: every file is scanned
+    val n = Files.createTempDirectory("graft_zm_allnull_").toString
+    nulls(4).toDF("v").repartition(2).write.mode("overwrite").parquet(n)
+    assert(ZoneMaps.topTailFiles(spark, n, "v", 3L).length ==
+      spark.read.parquet(n).inputFiles.length)
   }
 
   test("statsOnlyAggregate emits extremes in the COLUMN's own type") {
