@@ -125,10 +125,11 @@ object GraftSession {
     * and measured-NDV route those plans identically, and size/rowCount
     * (which DO fold exactly) are what StatsRoute and join planning read.
     * Callers needing NDV on other columns pass `statsCols` to
-    * [[prepareTable]] and get the ANALYZE scan for exactly those. String
-    * zone columns contribute nullCount only (Spark's catalog does not
-    * round-trip string min/max). Non-string min/max land through the same
-    * `CatalogColumnStat` serialization ANALYZE uses. */
+    * [[prepareTable]] and get the ANALYZE scan for exactly those.
+    * Variable-length zone columns contribute nullCount only (the catalog
+    * does not round-trip their min/max; their lengths are not in the
+    * manifest). Fixed-width stats land as ANALYZE writes them. An
+    * unreadable directory size falls back to [[analyzeForStats]]. */
   private[graft] def statsFromManifest(s: SparkSession, name: String,
       parquetDir: String, zoneCols: Seq[String],
       rows: Array[org.apache.spark.sql.Row]): String = {
@@ -136,13 +137,17 @@ object GraftSession {
     import org.apache.spark.sql.catalyst.catalog.CatalogStatistics
     import org.apache.spark.sql.catalyst.plans.logical.ColumnStat
     import org.apache.spark.sql.types._
+    require(rows.nonEmpty, s"statsFromManifest($name): empty manifest")
+    val dirPath = new org.apache.hadoop.fs.Path(parquetDir)
+    val size = scala.util.Try(dirPath.getFileSystem(
+      s.sessionState.newHadoopConf()).getContentSummary(dirPath).getLength)
+    if (size.isFailure) return analyzeForStats(s, name, parquetDir, zoneCols)
     s.conf.set("spark.sql.cbo.enabled", "true")
     ensureExternalTable(s, name, parquetDir)
-    require(rows.nonEmpty, s"statsFromManifest($name): empty manifest")
     val ord = Ordering.fromLessThan[Any](
       graft.sources.ZoneMaps.cmpExternal(_, _) < 0)
     val rowCount = rows.map(_.getAs[Number]("n_rows").longValue).sum
-    def minMaxSupported(dt: DataType): Boolean = dt match {
+    def fixedWidth(dt: DataType): Boolean = dt match {
       case BooleanType | ByteType | ShortType | IntegerType | LongType |
            FloatType | DoubleType | DateType | TimestampType |
            TimestampNTZType | _: DecimalType => true
@@ -156,25 +161,22 @@ object GraftSession {
         val nulls = rows.map(r => Option(r.getAs[Any](s"${c}_nulls"))
           .map(_.asInstanceOf[Number].longValue).getOrElse(0L)).sum
         val toCat = CatalystTypeConverters.createToCatalystConverter(dt)
+        val len = if (fixedWidth(dt)) Some(dt.defaultSize.toLong) else None
         val stat = ColumnStat(
           distinctCount = None,
-          min = if (mins.isEmpty || !minMaxSupported(dt)) None
+          min = if (mins.isEmpty || len.isEmpty) None
                 else Some(toCat(mins.min(ord))),
-          max = if (maxs.isEmpty || !minMaxSupported(dt)) None
+          max = if (maxs.isEmpty || len.isEmpty) None
                 else Some(toCat(maxs.max(ord))),
           nullCount = Some(BigInt(nulls)),
-          avgLen = Some(dt.defaultSize.toLong),
-          maxLen = Some(dt.defaultSize.toLong))
+          avgLen = len,
+          maxLen = len)
         c -> stat.toCatalogColumnStat(c, dt)
       }.toOption
     }.toMap
-    val dirPath = new org.apache.hadoop.fs.Path(parquetDir)
-    val fs = dirPath.getFileSystem(s.sessionState.newHadoopConf())
-    val sizeInBytes = scala.util.Try(
-      fs.getContentSummary(dirPath).getLength).getOrElse(0L)
     val ident = TableIdentifier(name)
     s.sessionState.catalog.alterTableStats(ident, Some(
-      CatalogStatistics(BigInt(sizeInBytes), Some(BigInt(rowCount)), colStats)))
+      CatalogStatistics(BigInt(size.get), Some(BigInt(rowCount)), colStats)))
     // drop any cached relation so the next spark.table(name) plans with the
     // fresh stats (the same invalidation ANALYZE performs)
     s.sessionState.catalog.refreshTable(ident)
@@ -286,13 +288,9 @@ object GraftSession {
     // saves ANALYZE's second full scan of outDir per ingest (guide §1.2:
     // fewer passes; see [[statsFromManifest]] for the exactness argument).
     // The ANALYZE scan remains for callers asking for NON-zone statsCols
-    // (their stats aren't in the manifest) and behind the conf flip
-    // `spark.graft.stats.fromManifest=false` (the A/B spec's lever).
+    // (their stats aren't in the manifest).
     val extraStats = statsCols.filterNot(zoneCols.contains)
-    val fromManifest = scala.util.Try(
-      s.conf.get("spark.graft.stats.fromManifest", "true").toBoolean)
-      .getOrElse(true)
-    if (!fromManifest || extraStats.nonEmpty || manRows.isEmpty)
+    if (extraStats.nonEmpty || manRows.isEmpty)
       analyzeForStats(s, name, outDir, (zoneCols ++ extraStats).toSeq)
     else statsFromManifest(s, name, outDir, zoneCols, manRows)
   }

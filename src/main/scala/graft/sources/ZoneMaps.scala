@@ -223,15 +223,9 @@ object ZoneMaps extends Logging {
     * hash, so a present key can never probe false (no false negatives). */
   private def bloomAgg(keyCol: Column, expectedKeysPerFile: Long,
                        fpp: Double): Column = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graft.ColumnBridge
     require(fpp > 0 && fpp < 1, s"fpp=$fpp must be in (0, 1)")
-    val numBits = math.max(64L, math.ceil(
+    bloomAggSized(keyCol, expectedKeysPerFile, math.ceil(
       -expectedKeysPerFile * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
-    ColumnBridge.toColumn(new BloomFilterAggregate(
-      ColumnBridge.toExpression(keyCol.cast("long")),
-      Literal(expectedKeysPerFile), Literal(numBits)).toAggregateExpression())
   }
 
   /** [[bloomAgg]] with the bit width pinned directly — the fold path sizes
@@ -248,42 +242,24 @@ object ZoneMaps extends Logging {
       Literal(math.max(64L, numBits))).toAggregateExpression())
   }
 
-  /** The rename-aside sibling a mid-swap fold parks the old manifest at. */
-  private[sources] val FoldPrevSuffix = "__fold_prev"
-
-  /** Restore `p` from its rename-aside sibling if a fold crashed between
-    * the two swap renames (manifest absent, sibling present) — the WRITER
-    * half of the crash contract; readers go through
-    * [[resolveManifestPath]] and never mutate. */
-  private[sources] def recoverManifest(spark: SparkSession, p: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val prev = new org.apache.hadoop.fs.Path(p + FoldPrevSuffix)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(hp) && fs.exists(prev)) {
-      logWarning(s"zone-map manifest $p absent with parked sibling $prev " +
-        "present (a fold crashed mid-swap) — restoring the pre-fold manifest")
-      require(fs.rename(prev, hp),
-        s"recoverManifest: restore $prev -> $hp failed")
-    }
-  }
-
-  /** The path a READER should load the durable manifest from: `p` itself
-    * when present, else the rename-aside sibling a concurrent/crashed fold
-    * parked the old manifest at (serves the one-rename swap window without
-    * mutating anything), else `p` unchanged so the caller fails loudly on
-    * the path it was given. */
+  /** The path a reader loads the durable manifest at `p` from
+    * ([[DurableSwap.resolve]]): `p`, or the copy a fold parked mid-swap. */
   private[graft] def resolveManifestPath(spark: SparkSession,
                                          p: String): String = {
     val hp = new org.apache.hadoop.fs.Path(p)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(hp)) p
-    else {
-      val prev = new org.apache.hadoop.fs.Path(p + FoldPrevSuffix)
-      if (fs.exists(prev)) {
-        logWarning(s"zone-map manifest $p absent — serving the parked " +
-          s"pre-fold manifest $prev (a fold is mid-swap or crashed there)")
-        prev.toString
-      } else p
+    DurableSwap.resolve(
+      hp.getFileSystem(spark.sessionState.newHadoopConf()), hp).toString
+  }
+
+  /** Replace the durable manifest at `p` with `df` through
+    * [[DurableSwap.replace]]. `df` is built after a manifest parked by a
+    * crashed swap is restored, so it may read `p`. */
+  private def swapManifest(spark: SparkSession, p: String)(
+      df: => DataFrame): Unit = {
+    val hp = new org.apache.hadoop.fs.Path(p)
+    DurableSwap.replace(
+      hp.getFileSystem(spark.sessionState.newHadoopConf()), hp) { tmp =>
+      df.coalesce(1).write.parquet(tmp.toString)
     }
   }
 
@@ -312,10 +288,17 @@ object ZoneMaps extends Logging {
     * registration for `dir` (test + lifecycle hook — simulates a fresh
     * session for one table without draining the whole session's caches). */
   private[graft] def dropMemos(spark: SparkSession, dir: String): Unit = {
+    purgeMemos(spark, dir)
+    ZoneMapFileIndex.disable(spark, dir)
+  }
+
+  /** Drop every manifest and membership memo of `dir`, whatever column
+    * set it was keyed under: after a rewrite or an append they all name
+    * the old file set. */
+  private def purgeMemos(spark: SparkSession, dir: String): Unit = {
     manifestCache.purgeKeys(spark, _._1 == dir)
     membershipCache.purgeKeys(spark, _._1 == dir)
     persistedMembershipCache.purgeKeys(spark, _._1 == dir)
-    ZoneMapFileIndex.disable(spark, dir)
   }
 
   /** Collected manifest rows, built at most once per (session, dir, cols).
@@ -337,24 +320,15 @@ object ZoneMaps extends Logging {
   def refreshManifest(spark: SparkSession, dir: String,
                       cols: Seq[String],
                       bloomCols: Seq[String] = Nil): Array[Row] = {
-    // purge EVERY memo for this dir first (not just the keys derived from
-    // `cols`): a manifest memoized under a different column set — a prior
-    // prune on another column, an earlier multi-column build — names the
-    // now-deleted files, so every scan would ride the stale-manifest guard
-    manifestCache.purgeKeys(spark, _._1 == dir)
-    membershipCache.purgeKeys(spark, _._1 == dir)
-    persistedMembershipCache.purgeKeys(spark, _._1 == dir)
     // `bloomCols` rides the SAME build (one scan carries envelopes AND
     // blooms — cheaper than a separate membership pass) and seeds the
     // membership memo, so bloom-carrying session rows stay maintainable by
-    // [[incrementalBuild]] without a schema split between the two memos
+    // [[incrementalBuild]] without a schema split between the two memos.
+    // EVERY memo for this dir is replaced, not just the keys derived from
+    // `cols`: one memoized under another column set names deleted files
     val rows = build(spark, dir, cols, bloomCols,
       expectedKeysPerFile = 1L << 13).collect()
-    seed(spark, dir, cols, rows)
-    bloomCols.foreach { c =>
-      membershipCache.put(spark, (dir, c), rows)
-      manifestCache.put(spark, (dir, Seq(c)), rows)
-    }
+    seedMaintained(spark, dir, cols, rows, bloomCols)
     rows
   }
 
@@ -377,9 +351,7 @@ object ZoneMaps extends Logging {
   private[graft] def seedMaintained(spark: SparkSession, dir: String,
                                     cols: Seq[String], rows: Array[Row],
                                     bloomCols: Seq[String] = Nil): Unit = {
-    manifestCache.purgeKeys(spark, _._1 == dir)
-    membershipCache.purgeKeys(spark, _._1 == dir)
-    persistedMembershipCache.purgeKeys(spark, _._1 == dir)
+    purgeMemos(spark, dir)
     seed(spark, dir, cols, rows)
     bloomCols.foreach { c =>
       membershipCache.put(spark, (dir, c), rows)
@@ -420,29 +392,21 @@ object ZoneMaps extends Logging {
           reg.bloomCols)
         seedMaintained(spark, reg.dir, reg.zoneCols, updated, reg.bloomCols)
         reg.manifestPath.foreach { p =>
-          if (updated.nonEmpty)
-            spark.createDataFrame(
-              java.util.Arrays.asList(updated: _*), updated.head.schema)
-              .coalesce(1).write.mode("overwrite").parquet(p)
-          else {
-            // INSERT OVERWRITE from an empty source leaves zero data files;
-            // a durable manifest still naming the vanished files would seed
-            // a fresh session with stale rows (a survivor set of
-            // nonexistent paths). Land an EMPTY manifest with the
-            // standing schema; with no schema to name, drop the manifest —
-            // loadManifest fails loudly instead of serving deleted files.
-            memo.headOption.map(_.schema)
-              .orElse(scala.util.Try(spark.read.parquet(p).schema).toOption)
-            match {
-              case Some(sch) => spark.createDataFrame(
-                java.util.Collections.emptyList[Row](), sch)
-                .coalesce(1).write.mode("overwrite").parquet(p)
-              case None =>
-                val hp = new org.apache.hadoop.fs.Path(p)
-                hp.getFileSystem(spark.sessionState.newHadoopConf())
-                  .delete(hp, true)
-                ()
-            }
+          // an INSERT OVERWRITE from an empty source leaves no data files:
+          // land an EMPTY manifest with the standing schema (one naming the
+          // vanished files would seed a fresh session with deleted paths);
+          // with no schema to name, drop it so loadManifest fails loudly
+          updated.headOption.orElse(memo.headOption).map(_.schema)
+            .orElse(scala.util.Try(
+              spark.read.parquet(resolveManifestPath(spark, p)).schema).toOption)
+          match {
+            case Some(sch) => swapManifest(spark, p)(spark.createDataFrame(
+              java.util.Arrays.asList(updated: _*), sch))
+            case None =>
+              val hp = new org.apache.hadoop.fs.Path(p)
+              hp.getFileSystem(spark.sessionState.newHadoopConf())
+                .delete(hp, true)
+              ()
           }
         }
     }
@@ -453,10 +417,11 @@ object ZoneMaps extends Logging {
     * keep the durable manifest's rows for still-present files via a
     * broadcast semi-join on the file name, union the fresh files' stats
     * (ONE scan of just the inserted files, blooms aggregated
-    * executor-side), land the result at a scratch sibling and swap it in —
-    * parquet cannot overwrite a path it is reading. The driver touches
-    * file-name strings and envelope rows only; re-seeds follow the same
-    * envelopes-only policy [[loadManifest]] applied. */
+    * executor-side), and land the result through [[DurableSwap.replace]],
+    * whose scratch sibling also lets the fold read the manifest it
+    * replaces (parquet cannot overwrite a path it is reading). The driver
+    * touches file-name strings and envelope rows only; re-seeds follow the
+    * same envelopes-only policy [[loadManifest]] applied. */
   private def foldPersistedManifest(spark: SparkSession,
                                     reg: ZoneMapFileIndex.Registration,
                                     p: String): Unit = {
@@ -467,90 +432,70 @@ object ZoneMaps extends Logging {
     val current = listing.map(norm).toSet
     val known = memo.map(r => norm(r.getAs[String]("file"))).toSet
     val fresh = listing.filterNot(f => known(norm(f)))
-    // self-heal a prior crash mid-swap first: if the manifest is absent but
-    // its rename-aside sibling exists, the previous fold died between the
-    // two renames — restore the pre-fold manifest before folding forward
-    recoverManifest(spark, p)
-    val man = spark.read.parquet(p)
     // keep rows for files still present — raw manifest spellings (the memo
     // rows ARE collected manifest rows, so the strings match exactly)
     val keptNames = memo.map(_.getAs[String]("file"))
       .filter(f => current(norm(f)))
-    val keptDf = man.join(
-      broadcast(spark.createDataFrame(
-        java.util.Arrays.asList(keptNames.map(org.apache.spark.sql.Row(_)): _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("file",
-            org.apache.spark.sql.types.StringType))))),
-      Seq("file"), "left_semi")
     val statCols = (reg.zoneCols ++
       reg.bloomCols.filterNot(reg.zoneCols.contains)).toSeq
-    // size fresh-file blooms to the STANDING manifest's own sizing (r15
-    // ADVICE): a table built with a larger expectedKeysPerFile must not get
-    // undersized (degraded-FPP) blooms folded in. One octet_length over one
-    // durable row per bloom column — the bit count round-trips to the
-    // (items, bits) pair the original writeManifest aggregated with; no
-    // bloom BYTES tour the driver. An empty/bloom-less manifest falls back
-    // to the writeManifest default sizing.
-    val freshBloomParams: Map[String, (Long, Long)] = reg.bloomCols.flatMap { c =>
-      scala.util.Try {
-        man.where(col(s"${c}_bloom").isNotNull)
-          .select(octet_length(col(s"${c}_bloom")).cast("long")).limit(1)
-          .collect().headOption.map { r =>
-            // serialized form: 16 header bytes (version, numHashFunctions,
-            // word count, each int, plus the stream's own int) + 8 bytes
-            // per 64-bit word ⇒ words = (len − 16) / 8, numBits = 64·words
-            // (spec-pinned: the folded row's bloom length must EQUAL the
-            // standing rows' — a format drift only degrades sizing
-            // effectiveness, never correctness)
-            val words = math.max(1L, (r.getLong(0) - 16L) / 8L)
-            val numBits = words * 64L
-            val items = math.max(1L, math.round(
-              -numBits * math.log(2) * math.log(2) / math.log(0.01)))
-            c -> ((items, numBits))
-          }
-      }.toOption.flatten
-    }.toMap
-    val aggs = count(lit(1)).as("n_rows") +: (statCols.flatMap { c =>
-      Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max"),
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}_nulls"))
-    } ++ reg.bloomCols.map { c =>
-      (freshBloomParams.get(c) match {
-        case Some((items, bits)) => bloomAggSized(col(c), items, bits)
-        case None => bloomAgg(col(c), 1L << 13, 0.01)
-      }).as(s"${c}_bloom")
-    })
-    val nextDf =
+    // the block reads `p` while the swap writes its scratch sibling; it
+    // runs after a manifest parked by a crashed fold is restored
+    swapManifest(spark, p) {
+      val man = spark.read.parquet(p)
+      val keptDf = man.join(
+        broadcast(spark.createDataFrame(
+          java.util.Arrays.asList(keptNames.map(org.apache.spark.sql.Row(_)): _*),
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("file",
+              org.apache.spark.sql.types.StringType))))),
+        Seq("file"), "left_semi")
+      // size fresh-file blooms to the STANDING manifest's own sizing (a
+      // table built with a larger expectedKeysPerFile must not get
+      // degraded-FPP blooms folded in) from one octet_length per bloom
+      // column; no bloom BYTES tour the driver. An empty or bloom-less
+      // manifest, or a bloom not in the V2 layout, gets the default sizing.
+      val freshBloomParams: Map[String, (Long, Long)] = reg.bloomCols.flatMap { c =>
+        scala.util.Try {
+          man.where(col(s"${c}_bloom").isNotNull)
+            .select(octet_length(col(s"${c}_bloom")).cast("long")).limit(1)
+            .collect().headOption.flatMap { r =>
+              // V2 layout: 16 header bytes (version, numHashFunctions, word
+              // count, the stream's own int) + 8 bytes per 64-bit word, so
+              // numBits = 64·(len − 16)/8. Any other length (a V1 12-byte
+              // header) would silently drop a word
+              val len = r.getLong(0)
+              if (len < 24L || (len - 16L) % 8L != 0L) {
+                logWarning(s"zone-map manifest $p: ${c}_bloom holds $len " +
+                  "bytes, not a V2 bloom (16 header bytes + 8 per word) — " +
+                  "fresh files fold in at the default bloom sizing")
+                None
+              } else {
+                val numBits = (len - 16L) / 8L * 64L
+                val items = math.max(1L, math.round(
+                  -numBits * math.log(2) * math.log(2) / math.log(0.01)))
+                Some(c -> ((items, numBits)))
+              }
+            }
+        }.toOption.flatten
+      }.toMap
+      val aggs = count(lit(1)).as("n_rows") +: (statCols.flatMap { c =>
+        Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max"),
+          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}_nulls"))
+      } ++ reg.bloomCols.map { c =>
+        (freshBloomParams.get(c) match {
+          case Some((items, bits)) => bloomAggSized(col(c), items, bits)
+          case None => bloomAgg(col(c), 1L << 13, 0.01)
+        }).as(s"${c}_bloom")
+      })
       if (fresh.isEmpty) keptDf
       else keptDf.unionByName(
         spark.read.parquet(fresh.toIndexedSeq.map(readablePath): _*)
           .groupBy(input_file_name().as("file"))
           .agg(aggs.head, aggs.tail: _*),
         allowMissingColumns = false)
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val tmp = new org.apache.hadoop.fs.Path(p + "__fold_next")
-    val prev = new org.apache.hadoop.fs.Path(p + FoldPrevSuffix)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    nextDf.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    // RENAME-ASIDE swap (r15 judge ask #3 — the old delete-then-rename left
-    // a window with NO manifest at all; a crash there demanded a manual
-    // rebuild and a concurrent reader failed hard): park the old manifest
-    // at a deterministic sibling, rename the new one in, then drop the
-    // parked copy. At every crash point either `p` exists (old or new) or
-    // `p__fold_prev` holds the pre-fold manifest — [[resolveManifestPath]]
-    // serves readers from the sibling during the one-rename window, and
-    // [[recoverManifest]] restores it on the next fold/load.
-    fs.delete(prev, true)
-    require(fs.rename(hp, prev),
-      s"foldPersistedManifest: park $hp -> $prev failed before swap")
-    require(fs.rename(tmp, hp),
-      s"foldPersistedManifest: swap $tmp -> $hp failed after fold write; " +
-        s"the pre-fold manifest is recoverable at $prev")
-    fs.delete(prev, true)
+    }
     // re-seed under the loadManifest policy (the table IS the big route)
-    manifestCache.purgeKeys(spark, _._1 == reg.dir)
-    membershipCache.purgeKeys(spark, _._1 == reg.dir)
-    persistedMembershipCache.purgeKeys(spark, _._1 == reg.dir)
+    purgeMemos(spark, reg.dir)
     val rows = spark.read.parquet(p)
       .drop(reg.bloomCols.map(c => s"${c}_bloom"): _*).collect()
     seed(spark, reg.dir, reg.zoneCols, rows)
@@ -650,12 +595,13 @@ object ZoneMaps extends Logging {
     * production story uses (build once per ingest, read per query session,
     * maintain with [[incrementalBuild]] + rewrite). One tiny write:
     * #files rows (× bloom bytes when `bloomCols` is non-empty — size the
-    * blooms to the real per-file key count, [[membershipRows]]'s note). */
+    * blooms to the real per-file key count, [[membershipRows]]'s note),
+    * swapped in crash-safely over any manifest already at the path. */
   def writeManifest(spark: SparkSession, dir: String, cols: Seq[String],
                     manifestPath: String, bloomCols: Seq[String] = Nil,
                     expectedKeysPerFile: Long = 1L << 13): Unit =
-    build(spark, dir, cols, bloomCols, expectedKeysPerFile).coalesce(1)
-      .write.mode("overwrite").parquet(manifestPath)
+    swapManifest(spark, manifestPath)(
+      build(spark, dir, cols, bloomCols, expectedKeysPerFile))
 
   /** Load a persisted manifest into the session memo so every
     * [[ZoneMapFileIndex]] scan of `dir` (and every [[pruneFiles]] /
@@ -682,9 +628,7 @@ object ZoneMaps extends Logging {
     * envelope-restrict + `mightContainLong` kernel — conf-flip spec). */
   def loadManifest(spark: SparkSession, dir: String, cols: Seq[String],
                    manifestPath: String): Array[Row] = {
-    // a fold crashed mid-swap leaves the manifest parked at its sibling;
-    // read through the resolver (non-mutating) so a query session opening
-    // the table during/after that window still resolves a manifest
+    // a manifest parked by a crashed swap still opens (read-only)
     val df = spark.read.parquet(resolveManifestPath(spark, manifestPath))
     val bloomFields = df.schema.fieldNames.filter(_.endsWith("_bloom")).toSeq
     // #rows from parquet footers — a metadata-only job, no bloom bytes move
@@ -714,9 +658,7 @@ object ZoneMaps extends Logging {
   def persistManifest(spark: SparkSession, dir: String, cols: Seq[String],
                       manifestPath: String,
                       bloomCols: Seq[String] = Nil): Array[Row] = {
-    manifestCache.purgeKeys(spark, _._1 == dir)
-    membershipCache.purgeKeys(spark, _._1 == dir)
-    persistedMembershipCache.purgeKeys(spark, _._1 == dir)
+    purgeMemos(spark, dir)
     writeManifest(spark, dir, cols, manifestPath, bloomCols)
     loadManifest(spark, dir, cols, manifestPath)
   }

@@ -421,20 +421,21 @@ object EventStreams {
   }
 
   private val LedgerName = "_graft_commits"
-  private val LedgerNextName = "_graft_commits_next"
 
-  /** Every committed batchId discoverable in `dir`: the ledger, the
-    * ledger's scratch sibling, and any standing per-batch marker files —
-    * the union is what makes [[compactCommitMarkers]]'s swap safe at every
-    * crash point (an id leaves the marker file only after it is durable in
-    * the renamed ledger; a torn scratch write is rejected line-by-line
-    * while the old ledger and the marker both still name the id). */
+  /** Every committed batchId discoverable in `dir`: the ledger as
+    * [[graft.sources.DurableSwap.resolve]] serves it (the ledger, or the
+    * copy a crashed compaction parked) plus any standing per-batch marker
+    * files. An id loses its marker only after a compaction has swapped a
+    * ledger naming it into place, so the union names every committed id
+    * at every crash point. */
   private[graft] def committedBatchIds(fs: org.apache.hadoop.fs.FileSystem,
                                        dir: String): Set[Long] = {
-    def ledgerIds(p: org.apache.hadoop.fs.Path): Set[Long] =
-      if (!fs.exists(p)) Set.empty
+    val ledger = graft.sources.DurableSwap.resolve(
+      fs, new org.apache.hadoop.fs.Path(dir, LedgerName))
+    val ledgerIds: Set[Long] =
+      if (!fs.exists(ledger)) Set.empty
       else {
-        val in = fs.open(p)
+        val in = fs.open(ledger)
         val txt =
           try scala.io.Source.fromInputStream(in, "UTF-8").mkString
           finally in.close()
@@ -444,8 +445,8 @@ object EventStreams {
         // batch on replay. The ledger writes fixed-width 20-digit ids, so a
         // torn new-format line is short and rejected; legacy unpadded lines
         // are accepted only when newline-TERMINATED (only the final,
-        // unterminated chunk of a file can be torn). A rejected id is still
-        // covered by its marker / the previous ledger.
+        // unterminated chunk of a file can be torn). A swapped-in ledger is
+        // complete, so this only guards against a filesystem that tears.
         val chunks = txt.split("\n", -1)
         chunks.iterator.zipWithIndex.flatMap { case (raw, i) =>
           val l = raw.stripSuffix("\r").trim
@@ -463,9 +464,7 @@ object EventStreams {
       .flatMap(s => scala.util.Try(
         s.getPath.getName.stripPrefix("_graft_committed_b").toLong).toOption)
       .toSet
-    markers ++
-      ledgerIds(new org.apache.hadoop.fs.Path(dir, LedgerName)) ++
-      ledgerIds(new org.apache.hadoop.fs.Path(dir, LedgerNextName))
+    markers ++ ledgerIds
   }
 
   /** Fold per-batch commit markers into the single `_graft_commits` ledger
@@ -474,12 +473,12 @@ object EventStreams {
     * (~500k/year at a batch a minute — every listStatus/globStatus walks
     * them and object stores bill the LIST). The marker file stays the
     * atomic COMMIT POINT (createNewFile); this compaction runs after it.
-    * Crash-safe by ordering: (1) write the scratch ledger with every known
-    * id, (2) drop the old ledger, (3) rename scratch → ledger, (4) delete
-    * the folded markers. At any interruption every id is still named by a
-    * marker, the old ledger, or the complete scratch —
-    * [[committedBatchIds]] reads the union. All names are
-    * underscore-prefixed: listing-invisible to Spark scans. */
+    * Crash-safe by ordering: (1) replace the ledger with one naming every
+    * known id through [[graft.sources.DurableSwap.replace]], (2) delete the
+    * folded markers. Until (1) completes every id is named by a marker or
+    * by the old ledger (possibly parked); after it, by the new ledger —
+    * [[committedBatchIds]] reads the union. All names, the swap's siblings
+    * included, are underscore-prefixed: listing-invisible to Spark scans. */
   private[graft] def compactCommitMarkers(fs: org.apache.hadoop.fs.FileSystem,
                                           dir: String): Unit =
     compactCommitMarkersOf(fs, dir, committedBatchIds(fs, dir))
@@ -491,19 +490,17 @@ object EventStreams {
       fs: org.apache.hadoop.fs.FileSystem, dir: String,
       ids: Set[Long]): Unit = {
     if (ids.isEmpty) return
-    val ledger = new org.apache.hadoop.fs.Path(dir, LedgerName)
-    val next = new org.apache.hadoop.fs.Path(dir, LedgerNextName)
-    val out = fs.create(next, true)
-    // fixed-width 20-digit ids: self-validating against torn tails (see
-    // [[committedBatchIds]] — a torn prefix of a padded id is short and
-    // rejected instead of parsing as a smaller phantom id)
-    try out.write(ids.toSeq.sorted.map(id => f"$id%020d")
-      .mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(ledger, false)
-    require(fs.rename(next, ledger),
-      s"compactCommitMarkers: swap $next -> $ledger failed")
+    graft.sources.DurableSwap.replace(
+        fs, new org.apache.hadoop.fs.Path(dir, LedgerName)) { scratch =>
+      val out = fs.create(scratch, true)
+      // fixed-width 20-digit ids: self-validating against torn tails (see
+      // [[committedBatchIds]] — a torn prefix of a padded id is short and
+      // rejected instead of parsing as a smaller phantom id)
+      try out.write(ids.toSeq.sorted.map(id => f"$id%020d")
+        .mkString("", "\n", "\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
     // delete ONLY the markers belonging to the snapshot `ids` just folded
     // (names are derivable from the ids): a concurrent writer landing its
     // marker between the snapshot and this delete keeps its only commit

@@ -442,6 +442,77 @@ object GraftProperties extends Properties("graft") {
     }
   }
 
+  property("the commit ledger names exactly the committed ids through compaction crashes") = {
+    // a step is 0 (commit the next id: its marker lands), k in 1..12 (a
+    // compaction that crashes after its k-th filesystem step; early steps
+    // weighted, where a swap's windows sit) or -1 (a clean compaction).
+    // After every step the committed set reads back exactly: no id lost,
+    // none phantom
+    val step: Gen[Int] = Gen.frequency(4 -> Gen.const(0),
+      3 -> Gen.chooseNum(1, 3), 2 -> Gen.chooseNum(4, 12), 1 -> Gen.const(-1))
+    Prop.forAllNoShrink(Gen.chooseNum(20, 60).flatMap(Gen.listOfN(_, step))) {
+      steps =>
+        import graft.streaming.EventStreams
+        val dir = tmp("graft_prop_ledger_")
+        val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+          new org.apache.hadoop.conf.Configuration())
+        fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
+        var committed = Set.empty[Long]
+        steps.forall { k =>
+          if (k == 0) {
+            val id = committed.size + 1L
+            fs.createNewFile(
+              new org.apache.hadoop.fs.Path(dir, f"_graft_committed_b$id%06d"))
+            committed += id
+          } else if (k < 0) EventStreams.compactCommitMarkers(fs, dir)
+          else CrashingFs.crashed(k)(EventStreams.compactCommitMarkers(_, dir))
+          EventStreams.committedBatchIds(fs, dir) == committed
+        }
+    }
+  }
+
+  property("DurableSwap.replace crashed at any step leaves the old or the new content") = {
+    // a directory target of 1-3 files; each case crashes one replace after
+    // every filesystem step in turn. resolve must then serve the complete
+    // old content (none when there was no target) or the complete new one,
+    // and the next clean replace must leave the target and no sibling
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    import graft.sources.DurableSwap
+    val content: Gen[Map[String, String]] = Gen.chooseNum(1, 3).flatMap(n =>
+      Gen.listOfN(n, Gen.alphaNumStr)).map(_.zipWithIndex.map {
+        case (v, i) => s"part-$i" -> v }.toMap)
+    Prop.forAllNoShrink(Gen.option(content), content, content) {
+      (old, next, last) =>
+        val fs = FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+        def write(wfs: FileSystem, c: Map[String, String])(dst: Path): Unit =
+          c.foreach { case (n, v) =>
+            val out = wfs.create(new Path(dst, n), true)
+            try out.write(v.getBytes("UTF-8")) finally out.close()
+          }
+        def read(p: Path): Option[Map[String, String]] =
+          if (!fs.exists(p)) None
+          else Some(fs.listStatus(p).map { st =>
+            val in = fs.open(st.getPath)
+            try st.getPath.getName ->
+              new String(in.readAllBytes(), "UTF-8")
+            finally in.close()
+          }.toMap)
+        (1 to 12).forall { k =>
+          val base = new Path(tmp("graft_prop_swap_"))
+          val target = new Path(base, "m")
+          fs.mkdirs(base)
+          old.foreach(c => write(fs, c)(target))
+          val crashed = CrashingFs.crashed(k)(cfs =>
+            DurableSwap.replace(cfs, target)(write(cfs, next)))
+          val seen = read(DurableSwap.resolve(fs, target))
+          DurableSwap.replace(fs, target)(write(fs, last))
+          (seen == Some(next) || (crashed && seen == old)) &&
+            read(target) == Some(last) &&
+            fs.listStatus(base).map(_.getPath.getName).toSet == Set("m")
+        }
+    }
+  }
+
   property("JS divergence is bounded by ln 2, zero iff distributions match") = {
     val word = Gen.oneOf("a", "b", "c", "d", "e")
     val doc = Gen.chooseNum(1, 8).flatMap(n => Gen.listOfN(n, word)).map(_.mkString(" "))

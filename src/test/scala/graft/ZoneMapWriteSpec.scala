@@ -308,7 +308,6 @@ class ZoneMapWriteSpec extends AnyFunSuite {
     val marker = new org.apache.hadoop.fs.Path(dir, f"_graft_committed_b${3L}%06d")
     fs.delete(marker, false)
     fs.delete(new org.apache.hadoop.fs.Path(dir, "_graft_commits"), false)
-    fs.delete(new org.apache.hadoop.fs.Path(dir, "_graft_commits_next"), false)
     assert(!graft.streaming.EventStreams.committedBatchIds(fs, dir).contains(3L),
       "test setup: the commit record must be gone")
     val one = new java.io.File(dir).listFiles()
@@ -639,6 +638,29 @@ class ZoneMapWriteSpec extends AnyFunSuite {
     assert(EventStreams.committedBatchIds(fs, dir) == Set.empty[Long])
   }
 
+  test("two ledger compactions crashing in a row lose no committed id") {
+    import graft.streaming.EventStreams
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sessionState.newHadoopConf())
+    // ids 1 and 2 commit and fold into the ledger (their markers go), id 3
+    // commits; then compaction A crashes after its a-th filesystem step and
+    // compaction B after its b-th. A delete-then-rename swap lost 1 and 2
+    // at (a, b) = (2, 1): A died right after deleting the ledger, and B's
+    // scratch create truncated the only other copy of them
+    for (a <- 1 to 10; b <- 1 to 10) {
+      val dir = Files.createTempDirectory("graft_zmw_crash2_").toString
+      def commit(id: Long): Unit = assert(fs.createNewFile(
+        new org.apache.hadoop.fs.Path(dir, f"_graft_committed_b$id%06d")))
+      commit(1); commit(2)
+      EventStreams.compactCommitMarkers(fs, dir)
+      commit(3)
+      Seq(a, b).foreach(k =>
+        CrashingFs.crashed(k)(EventStreams.compactCommitMarkers(_, dir)))
+      assert(EventStreams.committedBatchIds(fs, dir) == Set(1L, 2L, 3L),
+        s"compaction crashes after steps $a then $b")
+    }
+  }
+
   // ---- fold swap atomicity & bloom sizing -----------------------------------
 
   test("fold swap is rename-aside: a reader mid-swap still resolves; the next fold self-heals") {
@@ -725,38 +747,96 @@ class ZoneMapWriteSpec extends AnyFunSuite {
     }
   }
 
+  test("fold sizes fresh-file blooms by default when the standing bloom is not V2") {
+    val base = Files.createTempDirectory("graft_zmw_bv1_").toString
+    val out = s"$base/t"; val mf = s"$base/m"
+    spark.conf.set("spark.graft.zonemap.persistedConsultRows", "0")
+    try {
+      ZoneMaps.clusteredWrite(tables.lineitem, "l_partkey", out, 4)
+      // the default-sized bloom width, from a manifest of the same layout
+      ZoneMaps.writeManifest(spark, out, Seq("l_partkey"), s"$base/d",
+        bloomCols = Seq("l_partkey"))
+      def lens(m: String) = spark.read.parquet(m)
+        .select(octet_length(col("l_partkey_bloom")).as("len"))
+        .collect().map(_.getInt(0)).distinct.toSeq
+      val defaultLen = lens(s"$base/d")
+      // a standing manifest whose blooms carry a 12-byte (V1) header:
+      // 8x-sized V2 blooms with 4 header bytes cut off
+      ZoneMaps.writeManifest(spark, out, Seq("l_partkey"), s"$base/v2",
+        bloomCols = Seq("l_partkey"), expectedKeysPerFile = 1L << 16)
+      spark.read.parquet(s"$base/v2")
+        .withColumn("l_partkey_bloom", expr("substring(l_partkey_bloom, 5)"))
+        .coalesce(1).write.parquet(mf)
+      val standingLen = lens(mf)
+      assert(standingLen.length == 1 && (standingLen.head - 16) % 8 != 0)
+      ZoneMaps.loadManifest(spark, out, Seq("l_partkey"), mf)
+      ZoneMapFileIndex.enable(spark, out, Seq("l_partkey"),
+        Seq("l_partkey"), Some(mf))
+      GraftSession.ensureOptimizations(spark)
+      GraftSession.ensureExternalTable(spark, "graft_zmw_bv1", out)
+      val standingFiles = spark.read.parquet(mf).select("file")
+        .collect().map(_.getString(0)).toSeq
+      val gmax = ZoneMaps.manifestRows(spark, out, Seq("l_partkey"))
+        .map(_.getAs[Long]("l_partkey_max")).max
+      tables.lineitem.where(col("l_partkey") === gmax)
+        .createOrReplaceTempView("graft_zmw_bv1_src")
+      spark.sql("INSERT INTO graft_zmw_bv1 " +
+        "SELECT /*+ REPARTITION(1) */ * FROM graft_zmw_bv1_src")
+      val freshLen = spark.read.parquet(mf)
+        .where(!col("file").isin(standingFiles: _*))
+        .select(octet_length(col("l_partkey_bloom")))
+        .collect().map(_.getInt(0)).toSeq
+      assert(freshLen.length == 1 && freshLen == defaultLen,
+        s"fresh-file bloom width ${freshLen.mkString(",")} must be the " +
+          s"default ${defaultLen.mkString(",")}, not one sized off a " +
+          s"${standingLen.mkString(",")}-byte non-V2 bloom")
+    } finally {
+      spark.conf.unset("spark.graft.zonemap.persistedConsultRows")
+      spark.sql("DROP TABLE IF EXISTS graft_zmw_bv1")
+    }
+  }
+
   // ---- manifest-derived catalog stats ---------------------------------------
 
   test("prepareTable catalog stats fold from the manifest — ANALYZE parity, one scan fewer") {
     import org.apache.spark.sql.catalyst.TableIdentifier
     val base = Files.createTempDirectory("graft_zmw_stats_").toString
-    def prepared(name: String, sub: String): Unit =
-      GraftSession.prepareTable(spark, name, s"$sf/lineitem.parquet",
-        s"$base/$sub/t", Seq("l_orderkey", "l_partkey"), Nil,
-        nFiles = 4, manifestPath = Some(s"$base/$sub/m"))
-    prepared("graft_zmw_stats_mf", "mf") // default: stats from the manifest
-    spark.conf.set("spark.graft.stats.fromManifest", "false")
-    try prepared("graft_zmw_stats_an", "an") // flip: the ANALYZE scan
-    finally spark.conf.unset("spark.graft.stats.fromManifest")
     def stats(n: String) = spark.sessionState.catalog
       .getTableMetadata(TableIdentifier(n)).stats.get
-    val m = stats("graft_zmw_stats_mf"); val a = stats("graft_zmw_stats_an")
-    assert(m.rowCount.contains(BigInt(tables.lineitem.count())))
-    assert(m.rowCount == a.rowCount)
-    Seq("l_orderkey", "l_partkey").foreach { c =>
-      val cm = m.colStats(c); val ca = a.colStats(c)
-      assert(cm.min == ca.min && cm.max == ca.max,
-        s"$c min/max must fold to ANALYZE's exact values")
-      assert(cm.nullCount == ca.nullCount)
-      // NDV is the one stat the manifest cannot fold — documented absent
-      assert(cm.distinctCount.isEmpty && ca.distinctCount.nonEmpty)
-    }
-    // both routes plan with CBO stats and answer identically
-    def q(n: String) = spark.sql(s"SELECT count(*) AS c, sum(l_quantity) " +
-      s"AS s FROM $n WHERE l_orderkey <= 100").collect().toSeq
-    assert(q("graft_zmw_stats_mf") == q("graft_zmw_stats_an"))
-    spark.sql("DROP TABLE IF EXISTS graft_zmw_stats_mf")
-    spark.sql("DROP TABLE IF EXISTS graft_zmw_stats_an")
+    // a Z-ordered integral pair and a range-clustered string column; the
+    // reference table is the same directory under ANALYZE's full scan
+    Seq(("zz", Seq("l_orderkey", "l_partkey")), ("str", Seq("l_returnflag")))
+      .foreach { case (sub, zoneCols) =>
+        val mfName = s"graft_zmw_stats_${sub}_mf"
+        val anName = s"graft_zmw_stats_${sub}_an"
+        GraftSession.prepareTable(spark, mfName, s"$sf/lineitem.parquet",
+          s"$base/$sub/t", zoneCols, Nil,
+          nFiles = 4, manifestPath = Some(s"$base/$sub/m"))
+        GraftSession.analyzeForStats(spark, anName, s"$base/$sub/t", zoneCols)
+        val m = stats(mfName); val a = stats(anName)
+        assert(m.rowCount.contains(BigInt(tables.lineitem.count())))
+        assert(m.rowCount == a.rowCount)
+        zoneCols.foreach { c =>
+          val cm = m.colStats(c); val ca = a.colStats(c)
+          assert(cm.min == ca.min && cm.max == ca.max,
+            s"$c min/max must fold to ANALYZE's exact values")
+          assert(cm.nullCount == ca.nullCount)
+          // NDV is the one stat the manifest cannot fold — documented absent
+          assert(cm.distinctCount.isEmpty && ca.distinctCount.nonEmpty)
+          // fixed-width lengths equal ANALYZE's; a string's are measured
+          // by ANALYZE and left unset by the manifest, never guessed
+          if (sub == "str")
+            assert(cm.avgLen.isEmpty && cm.maxLen.isEmpty && ca.avgLen.nonEmpty,
+              s"$c: variable-length avgLen/maxLen must stay unset")
+          else assert(cm.avgLen == ca.avgLen && cm.maxLen == ca.maxLen)
+        }
+        // both routes plan with CBO stats and answer identically
+        def q(n: String) = spark.sql(s"SELECT count(*) AS c, sum(l_quantity) " +
+          s"AS s FROM $n WHERE l_orderkey <= 100").collect().toSeq
+        assert(q(mfName) == q(anName))
+        spark.sql(s"DROP TABLE IF EXISTS $mfName")
+        spark.sql(s"DROP TABLE IF EXISTS $anName")
+      }
   }
 
   // ---- per-dir stale-serve audit --------------------------------------------
