@@ -212,7 +212,7 @@ object GraftSession {
     *      picks rank-space buckets for skewed keys);
     *   2. build the zone-map manifest over ALL zone columns (+ per-file
     *      key Bloom filters for `bloomCols` — the membership grade) —
-    *      memoized for this session, and PERSISTED when `manifestPath` is
+    *      recorded for this session, and PERSISTED when `manifestPath` is
     *      given (the production form: a fresh session calls
     *      [[graft.sources.ZoneMaps.loadManifest]] and prunes for the cost
     *      of #files manifest rows, never re-scanning the data);
@@ -269,14 +269,14 @@ object GraftSession {
       case _ => throw new IllegalArgumentException(
         s"prepareTable: 1 (range) or 2-4 (Z-order) zone columns, got $zoneCols")
     }
-    // REFRESH, not memoize-once: a second prepareTable over the same
+    // REFRESH, not record-once: a second prepareTable over the same
     // outDir (the per-ingest-batch recipe) rewrites every part file, and
-    // a stale memoized manifest would prune to deleted paths
+    // stale recorded rows would prune to deleted paths
     val manRows = manifestPath match {
       case Some(p) =>
         graft.sources.ZoneMaps.persistManifest(s, outDir, zoneCols, p, bloomCols)
       case None =>
-        // no durable path asked for: still seed the session memos (the
+        // no durable path asked for: still seed the session record (the
         // refreshManifest discipline, membership included) via ONE scan —
         // bloomCols ride the same build
         graft.sources.ZoneMaps.refreshManifest(s, outDir, zoneCols, bloomCols)
@@ -298,24 +298,19 @@ object GraftSession {
   /** The QUERY-SESSION half of the durable recipe — [[prepareTable]] is
     * the per-ingest-batch call; `openTable` is what a fresh session (a
     * query service at startup) runs to get everything back WITHOUT
-    * touching the data: load the persisted manifest (#files rows, zero
-    * data-dir jobs — bloom columns re-seed the membership memo too),
-    * register the catalog table, and turn transparent pruning on, so the
-    * very first raw-SQL query scans only manifest survivors. Returns the
-    * catalog table name. */
+    * touching the data: load the persisted manifest into the directory's
+    * session record (#files rows, zero data-dir jobs — bloom columns
+    * included), register the catalog table, and turn transparent pruning
+    * on, so the very first raw-SQL query scans only manifest survivors.
+    * Returns the catalog table name. */
   def openTable(s: SparkSession, name: String, dir: String,
                 zoneCols: Seq[String], manifestPath: String): String = {
     graft.sources.ZoneMaps.loadManifest(s, dir, zoneCols, manifestPath)
-    // bloom columns come from the manifest FILE's schema (a footer read):
-    // above the persisted-consult threshold loadManifest's returned rows
-    // deliberately DROP the bloom fields, but membership pruning is still
-    // live (served from the persisted manifest executor-side)
-    val bloomCols = s.read.parquet(
-      graft.sources.ZoneMaps.resolveManifestPath(s, manifestPath))
-      .schema.fieldNames
-      .filter(_.endsWith("_bloom")).map(_.stripSuffix("_bloom")).toSeq
-    graft.sources.ZoneMapFileIndex.enable(s, dir, zoneCols, bloomCols,
-      Some(manifestPath))
+    // the loaded record names the manifest's bloom columns on either
+    // route (above the persisted-consult threshold its rows carry no bloom
+    // fields, yet membership pruning is live, served executor-side)
+    graft.sources.ZoneMapFileIndex.enable(s, dir, zoneCols,
+      graft.sources.ZoneMaps.zoneTable(s, dir).blooms, Some(manifestPath))
     ensureOptimizations(s)
     ensureExternalTable(s, name, dir)
     name

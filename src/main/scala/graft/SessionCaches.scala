@@ -87,19 +87,13 @@ final class SessionKeyedCache[K, V](onDrop: V => Unit = (_: V) => ()) {
   def peek(spark: SparkSession, key: K): Option[V] =
     Option(m.get((spark, key)))
 
-  /** Drop every entry of `spark` whose key matches `pred`, running onDrop
-    * on the evicted values — the targeted-invalidation hook (e.g. a table
-    * directory was rewritten, so every memo derived from it is stale
-    * regardless of which column set keyed it). */
-  def purgeKeys(spark: SparkSession, pred: K => Boolean): Unit = {
-    val it = m.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if ((e.getKey._1 eq spark) && pred(e.getKey._2)) {
-        try onDrop(e.getValue) catch { case NonFatal(_) => () }
-        it.remove()
-      }
-    }
+  /** Atomically replace the entry of `key` with `f` of it (None reads as
+    * absent and drops it); `f` must not block. onDrop does not run — the
+    * caller owns the replaced value. */
+  def update(spark: SparkSession, key: K)(f: Option[V] => Option[V]): Unit = {
+    SessionCaches.hook(spark)
+    m.compute((spark, key), (_, v) => f(Option(v)).getOrElse(null.asInstanceOf[V]))
+    ()
   }
 
   def sizeFor(spark: SparkSession): Int = {

@@ -14,15 +14,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reads a partitioned directory tree with partition pruning.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  def table(name: String): DataFrame =
+  def table(name: String): DataFrame = {
     // memoized per (session, dir, name): constructing the relation reads
     // parquet footers for schema, and every query call builds a fresh
     // Tables — without the memo each invocation re-pays footer I/O per
-    // table touched (and registerViews pays it ×10). The cached object is
-    // an immutable logical plan; Tables.invalidate drops it if the files
-    // under `dir` are rewritten mid-session. SessionCaches reclaims the
-    // entries when the session's application ends.
-    Tables.relCache.getOrElseUpdate(spark, (dir, name))(load(name))
+    // table touched (and registerViews pays it ×10). The relation's file
+    // listing is frozen when it is built, so each entry carries the
+    // (path, size, mtime) listing [[Memo]] fingerprints, checked by one
+    // listStatus per call: a file appended or rewritten under the table
+    // rebuilds the relation (and so every Memo entry over it).
+    // SessionCaches reclaims the entries when the session's application
+    // ends.
+    val files = Tables.listing(spark, s"$dir/$name.parquet")
+    Tables.relCache.peek(spark, (dir, name)) match {
+      case Some((seen, df)) if seen == files => df
+      case _ =>
+        val df = load(name)
+        Tables.relCache.put(spark, (dir, name), (files, df))
+        df
+    }
+  }
 
   private def load(name: String): DataFrame = {
     val df = widen(name, spark.read.parquet(s"$dir/$name.parquet"))
@@ -92,11 +103,16 @@ final case class Tables(spark: SparkSession, dir: String) {
 
   /** Register every table as a temp view (alias → files, like the reference's
     * `hdfsGlob#alias`). Enables the `spark.sql(...)` surface. Idempotent per
-    * (session, dir): re-registration is skipped unless the session's views
-    * currently point at a different dir. */
-  def registerViews(): Unit =
-    if (!Tables.lastViews.put(spark, (), dir).contains(dir))
-      Tables.names.foreach(n => table(n).createOrReplaceTempView(n))
+    * (session, dir): a view is re-registered only when the session's views
+    * point at a different dir or its relation was rebuilt. */
+  def registerViews(): Unit = {
+    val rels = Tables.names.map(table)
+    val prev = Tables.lastViews.put(spark, (), (dir, rels))
+    Tables.names.zip(rels).zipWithIndex.foreach { case ((n, df), i) =>
+      if (!prev.exists { case (d, dfs) => d == dir && (dfs(i) eq df) })
+        df.createOrReplaceTempView(n)
+    }
+  }
 }
 
 object Tables {
@@ -115,13 +131,20 @@ object Tables {
   private val factTables: Set[String] =
     Set("documents", "embeddings")
 
-  private val relCache = new SessionKeyedCache[(String, String), DataFrame]()
-  private val lastViews = new SessionKeyedCache[Unit, String]()
+  private type Listing = Set[(String, Long, Long)]
 
-  /** Drop memoized relations/views for `spark` (e.g. after rewriting the
-    * files under a dir this session already read). */
-  def invalidate(spark: SparkSession): Unit = {
-    relCache.purgeSession(Some(spark), None)
-    lastViews.purgeSession(Some(spark), None)
+  private val relCache = new SessionKeyedCache[(String, String), (Listing, DataFrame)]()
+  private val lastViews = new SessionKeyedCache[Unit, (String, Seq[DataFrame])]()
+
+  /** The visible files at `path` (a file, or a directory's direct
+    * children without `_`/`.` names) as (path, size, mtime); empty when
+    * the path does not exist, so the load reports it. */
+  private def listing(spark: SparkSession, path: String): Listing = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .filterNot(f => f.getPath.getName.startsWith("_") ||
+        f.getPath.getName.startsWith("."))
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+    catch { case _: java.io.FileNotFoundException => Set.empty }
   }
 }

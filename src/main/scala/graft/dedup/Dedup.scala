@@ -1343,16 +1343,16 @@ object Dedup {
     * statistics, so the quadratic exact baseline can only run when the
     * input is PROVABLY small.
     *
-    * Routing rule (mirrors the optimizer rule's crossover logic exactly):
-    *   - `plan.stats.sizeInBytes` ≤ `spark.graft.dedup.maxExactBytes`
+    * Routing rule ([[graft.plans.StatsRoute]], shared with d39/d40/s32):
+    *   - `plan.stats.sizeInBytes` ≤ `spark.graft.route.maxExactBytes`
     *     (default 32 MB): the exact all-pairs [[embeddingDupPairs]] — its
     *     n²/2 flops are affordable, and exactness is free;
     *   - larger or UNKNOWN (an RDD-backed frame reports the conf'd
     *     `defaultSizeInBytes` = Long.MaxValue): the IVF route
     *     [[embeddingDupPairsIvf]], with `nCells` grown with the measured
-    *     bytes (`spark.graft.dedup.cellBytes` per cell, default 4 MB,
-    *     min 10, cap 65536) — the scaladoc's own "cells ∝ corpus"
-    *     prescription, now enforced rather than hand-tuned.
+    *     bytes ([[graft.plans.StatsRoute.grownCells]]: one cell per 4 MB,
+    *     min 10, cap 65536) — the "cells ∝ corpus" prescription, enforced
+    *     rather than hand-tuned.
     * Unknown-routes-to-scale is the load-bearing choice: at 100 TB the one
     * unacceptable failure is the quadratic path firing on an input the
     * planner couldn't size.
@@ -1363,22 +1363,13 @@ object Dedup {
     * Both routes emit identical (d1, d2, cos) semantics; the IVF route's
     * pairs are a verbatim subset of exact (precision 1 by construction —
     * DedupSpec pins both the subset law and the conf-driven flip). */
-  def embeddingDupAuto(emb: DataFrame, threshold: Double = 0.45): DataFrame = {
-    val spark = emb.sparkSession
-    val maxExact = spark.conf.getOption("spark.graft.dedup.maxExactBytes")
-      .map(_.toLong).getOrElse(32L << 20)
-    val cellBytes = spark.conf.getOption("spark.graft.dedup.cellBytes")
-      .map(_.toLong).getOrElse(4L << 20)
-    val bytes = emb.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes <= BigInt(maxExact))
+  def embeddingDupAuto(emb: DataFrame, threshold: Double = 0.45): DataFrame =
+    if (graft.plans.StatsRoute.exactAffordable(emb))
       embeddingDupPairs(emb, threshold).withColumn("route", lit("exact"))
-    else {
-      val cells = (bytes / BigInt(math.max(cellBytes, 1L)))
-        .min(BigInt(65536)).max(BigInt(10)).toInt
-      embeddingDupPairsIvf(emb, threshold, nCells = cells)
+    else
+      embeddingDupPairsIvf(emb, threshold,
+        nCells = graft.plans.StatsRoute.grownCells(emb))
         .withColumn("route", lit("ivf"))
-    }
-  }
 
   /** d39: stats-routed n-gram Jaccard dedup — [[embeddingDupAuto]]'s
     * routing rule ([[graft.plans.StatsRoute]]) applied to the d02/d03

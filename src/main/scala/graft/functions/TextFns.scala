@@ -32,18 +32,11 @@ object TextFns {
       .otherwise(array(concat_ws(" ", toks)))
   }
 
-  /** Distinct 64-bit shingle identities: xxhash64 over the k token columns
-    * directly (no per-shingle string allocation — the hash accumulates each
-    * token with its length, so token boundaries stay unambiguous). Equivalent
-    * to hashing the `shingles` strings modulo 64-bit collisions: tokens are
-    * space-free, so "a b c" ↔ (a,b,c) is a bijection. Docs with < k tokens
-    * hash their whole token list (single-arg hash — disjoint identity space
-    * from the k-arg hashes, matching the string semantics where a < k-token
-    * text can never equal a k-gram). */
-  def shingleHashes(text: Column, k: Int = 3): Column =
-    shingleHashesOfTokens(tokens(text), k)
-
-  /** Same, over an already-bound token-array column.
+  /** Distinct 64-bit shingle identities of a token-array column: xxhash64
+    * over the k token columns directly (no per-shingle string allocation —
+    * the hash accumulates each token with its length, so token boundaries
+    * stay unambiguous). Docs with < k tokens hash their whole token list
+    * (single-arg hash — disjoint identity space from the k-arg hashes).
     *
     * IMPORTANT perf note: expressions captured inside a higher-order-function
     * lambda are re-evaluated PER ELEMENT (no subexpression elimination inside

@@ -47,8 +47,8 @@ object MaintainZoneManifestOnWrite extends Rule[LogicalPlan] {
 }
 
 /** The wrapped insert: delegate the write verbatim, then — only after it
-  * committed — fold the session manifest/membership memos forward and
-  * rewrite the persisted manifest if the registration names one. A failed
+  * committed — fold the directory's session record forward and rewrite
+  * the persisted manifest if the registration names one. A failed
   * write throws out of `run` before the fold, so the manifest never
   * indexes an uncommitted insert.
   *

@@ -41,13 +41,7 @@ object StatsRoute {
 
   /** Scale-route partition count grown from measured bytes — the
     * "cells ∝ corpus" prescription (d38's sizing rule): one cell/bucket
-    * per `cellBytes` of input, clamped to [minCells, maxCells]. */
-  def grownCells(df: DataFrame, cellBytesKey: String,
-                 defaultCellBytes: Long = 4L << 20,
-                 minCells: Int = 10, maxCells: Int = 65536): Int = {
-    val cellBytes = df.sparkSession.conf.getOption(cellBytesKey)
-      .map(_.toLong).getOrElse(defaultCellBytes)
-    (planBytes(df) / BigInt(math.max(cellBytes, 1L)))
-      .min(BigInt(maxCells)).max(BigInt(minCells)).toInt
-  }
+    * per 4 MB of input, clamped to [10, 65536]. */
+  def grownCells(df: DataFrame): Int =
+    (planBytes(df) / BigInt(4L << 20)).min(BigInt(65536)).max(BigInt(10)).toInt
 }

@@ -623,12 +623,9 @@ object Knn {
               k: Int = 5, nProbe: Int = 3): DataFrame =
     if (graft.plans.StatsRoute.exactAffordable(emb))
       bruteForce(emb, queryPred, k).withColumn("route", lit("exact"))
-    else {
-      val cells = graft.plans.StatsRoute.grownCells(
-        emb, "spark.graft.knn.cellBytes")
-      ivf(emb, queryPred, k, nProbe, nCells = cells)
+    else
+      ivf(emb, queryPred, k, nProbe, nCells = graft.plans.StatsRoute.grownCells(emb))
         .withColumn("route", lit("ivf"))
-    }
 
   /** s33: stats-routed kNN GRAPH — the rule over the s08 pair
     * ([[knnGraph]] exact all-pairs baseline / [[knnGraphIvf]] cell-pruned
@@ -643,12 +640,9 @@ object Knn {
   def knnGraphAuto(emb: DataFrame, k: Int = 5, nProbe: Int = 3): DataFrame =
     if (graft.plans.StatsRoute.exactAffordable(emb))
       knnGraph(emb, k).withColumn("route", lit("exact"))
-    else {
-      val cells = graft.plans.StatsRoute.grownCells(
-        emb, "spark.graft.knn.cellBytes")
-      knnGraphIvf(emb, k, nProbe, nCells = cells)
+    else
+      knnGraphIvf(emb, k, nProbe, nCells = graft.plans.StatsRoute.grownCells(emb))
         .withColumn("route", lit("ivf"))
-    }
 
   /** Stateless IVF serving against an already-fitted model (from
     * [[trainIvf]] or an external source): assigns on the fly, then serves.

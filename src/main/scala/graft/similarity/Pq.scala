@@ -231,15 +231,8 @@ object Pq {
     * shortlist, not the probability ADC ranks them exactly — the knob that
     * makes PQ usable on clusterless (worst-case) data. The candidate →
     * vector join broadcasts the tiny candidate set, so the index is
-    * scanned, never shuffled, in both passes. Stateless wrapper over
-    * [[pqRefinedIndexed]]. */
-  def pqRefined(emb: DataFrame, cb: Codebooks,
-                queryPred: String = "vec_id < 10", k: Int = 5,
-                shortlist: Int = 50): DataFrame =
-    pqRefinedIndexed(pqEncodeRefine(emb, cb), cb, queryPred, k, shortlist)
-
-  /** Shortlist + exact re-rank against a materialized index: candidates,
-    * queries and refine vectors all come from the index frame. */
+    * scanned, never shuffled, in both passes. Candidates, queries and
+    * refine vectors all come from the materialized index frame. */
   def pqRefinedIndexed(index: DataFrame, cb: Codebooks,
                        queryPred: String = "vec_id < 10", k: Int = 5,
                        shortlist: Int = 50): DataFrame = {

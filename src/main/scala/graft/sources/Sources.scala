@@ -101,25 +101,6 @@ object Sources {
       Option(Thread.currentThread().getContextClassLoader)
         .getOrElse(getClass.getClassLoader))
 
-  /** Fan compute-heavy per-row work out to every core when the scan yields
-    * fewer partitions than the session's parallelism — the "tiny file, heavy
-    * map" case (a single small parquet file scans as ONE partition, so an
-    * expensive projection — shingling, hashing, cosine loops — would run on
-    * one core). At production scale this is a no-op: a multi-TB source
-    * already scans as ≥ parallelism partitions, and the round-robin exchange
-    * is skipped entirely. */
-  def fanOut(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val p = spark.sparkContext.defaultParallelism
-    // Estimate the scan's parallelism from optimizer stats instead of
-    // df.rdd.getNumPartitions — the .rdd route compiles a second physical
-    // plan (and its codegen) per call, which costs ~1s of driver time per
-    // query. Stats are driver-side metadata only.
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val maxPart = BigInt(spark.sessionState.conf.filesMaxPartitionBytes)
-    if (bytes < maxPart * p) df.repartition(p) else df
-  }
-
   // ---- sinks (all emit _SUCCESS via FileOutputCommitter — parity with the
   // reference's _temporary→rename→_SUCCESS protocol, K1) -------------------
   def writeParquet(df: DataFrame, path: String): Unit =

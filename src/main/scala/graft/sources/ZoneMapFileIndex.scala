@@ -15,10 +15,8 @@ import org.apache.spark.sql.types.{DataType, DateType, IntegerType,
   StringType, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.SessionKeyedCache
-
 /** The PLANNER-TRANSPARENT serve path of the zone-map layer: a
-  * [[FileIndex]] that answers `listFiles` from the (session-memoized,
+  * [[FileIndex]] that answers `listFiles` from the (session-recorded,
   * possibly persisted) manifest instead of the raw directory listing — so
   * a user writing RAW SQL (or `spark.table`) against a
   * [[graft.GraftSession.prepareTable]]-registered table gets file-grain
@@ -40,7 +38,7 @@ import graft.SessionKeyedCache
   *     the survivors (Spark re-applies every filter), so envelope
   *     looseness can only over-keep;
   *   - membership (bloom) pruning fires only for `=`/`IN` on a column
-  *     whose manifest carries a bloom AND whose memo is already seeded
+  *     whose blooms the directory's session record already serves
   *     (prepareTable / loadManifest) — `mightContainLong` is the exact
   *     hash the build inserted with, so no false negatives;
   *   - the evaluator follows the boolean structure: AND intersects
@@ -64,10 +62,15 @@ import graft.SessionKeyedCache
   *     pruning back — in-session `INSERT INTO` paths do this
   *     automatically via [[graft.plans.MaintainZoneManifestOnWrite]].
   *
+  * State: everything the index consults — manifest rows, bloom route,
+  * registration — is the directory's one session record
+  * ([[ZoneMaps.ZoneTable]]), keyed by [[ZoneMapFileIndex.registryKey]],
+  * so any spelling of `dir` reads the same record.
+  *
   * Scale notes: the manifest consult is driver-side over #files rows (the
   * same object every table format's planner holds); the underlying
   * listing is delegated, so partition-pruning and listing parallelism are
-  * untouched. Memoized bloom rows are probed on the driver; a table
+  * untouched. Driver-held bloom rows are probed on the driver; a table
   * loaded above `spark.graft.zonemap.persistedConsultRows` keeps its
   * blooms off the driver and is probed executor-side straight from the
   * persisted manifest ([[ZoneMaps.membershipPruneFilesDistributed]]).
@@ -85,14 +88,14 @@ final class ZoneMapFileIndex(
   override def sizeInBytes: Long = underlying.sizeInBytes
 
   /** `REFRESH TABLE` must mean what it says: besides re-listing the
-    * underlying index, purge EVERY manifest/membership memo for this dir
-    * AND the transparent registration ([[ZoneMaps.dropMemos]]) — a
+    * underlying index, drop the directory's session record — rows, blooms
+    * AND the transparent registration ([[ZoneMaps.forget]]) — so a
     * refreshed table serves the real listing until the ingest recipe
     * (`prepareTable` / `openTable`) re-registers it with a manifest that
     * matches the directory again. */
   override def refresh(): Unit = {
     underlying.refresh()
-    ZoneMaps.dropMemos(spark, dir)
+    ZoneMaps.forget(spark, dir)
   }
 
   override def metadataOpsTimeNs: Option[Long] = underlying.metadataOpsTimeNs
@@ -128,26 +131,17 @@ final class ZoneMapFileIndex(
 
 object ZoneMapFileIndex {
 
-  /** A prepared directory's transparent registration: the dir string AS
-    * THE MANIFEST MEMOS KEY IT (the build/loadManifest argument), its zone
-    * and bloom columns, and — when the ingest recipe persisted one — the
-    * durable manifest path, so in-session write paths
+  /** A prepared directory's transparent registration, held in the
+    * directory's session record ([[ZoneMaps.ZoneTable]]): the directory as
+    * [[enable]] was given it (any spelling — the record is keyed by
+    * [[registryKey]]), the zone and bloom columns the index prunes on,
+    * and — when the ingest recipe persisted one — the durable manifest
+    * path, so in-session write paths
     * ([[graft.plans.MaintainZoneManifestOnWrite]]) can fold the PERSISTED
-    * manifest forward too, not just the session memo. */
+    * manifest forward too, not just the session record. */
   final case class Registration(dir: String, zoneCols: Seq[String],
                                 bloomCols: Seq[String],
                                 manifestPath: Option[String])
-
-  /** Session registry of transparently-pruned directories, keyed by
-    * scheme://authority/path (two directories with the same path on
-    * DIFFERENT filesystems — `file:///x` vs `hdfs://nn/x` — must not
-    * collide: a scan of one must never ride a manifest built over the
-    * other). [[graft.GraftSession.prepareTable]] registers;
-    * [[graft.plans.ApplyZoneMapIndex]] consults on every plan.
-    * Session-keyed like every engine memo: a fresh session re-registers
-    * via [[enable]] (typically right after [[ZoneMaps.loadManifest]] —
-    * #files rows, zero data jobs). */
-  private val registry = new SessionKeyedCache[String, Registration]()
 
   /** Count of `listFiles` calls that met a directory file the manifest
     * did not know (and kept it unpruned) — the observable half of the
@@ -175,13 +169,6 @@ object ZoneMapFileIndex {
   private[graft] def staleServesFor(dir: String): Long =
     Option(staleServesByKey.get(registryKey(dir))).map(_.get).getOrElse(0L)
 
-  /** Reset `dir`'s stale-serve counter — the lifecycle hook for "folded
-    * the manifest forward, start the audit clean" (tests and ops). */
-  private[graft] def clearStaleServesFor(dir: String): Unit = {
-    staleServesByKey.remove(registryKey(dir))
-    ()
-  }
-
   /** Normalize a file path string to its DECODED filesystem path for set
     * membership across the two spellings the layer must reconcile:
     * manifest rows carry `input_file_name()` strings (URL-ENCODED — Spark
@@ -205,10 +192,13 @@ object ZoneMapFileIndex {
         try new Path(p).toUri.getPath
         catch { case _: IllegalArgumentException => p })
 
-  /** The registry key: scheme + authority + decoded path, scheme-less
-    * specs defaulting to `file` (the [[graft.GraftSession.prepareTable]]
-    * normParts convention — a relative/bare local path and its
-    * `file:`-qualified spelling name the same directory). */
+  /** The session record's key: scheme + authority + decoded path,
+    * scheme-less specs defaulting to `file` (the
+    * [[graft.GraftSession.prepareTable]] normParts convention — a
+    * relative/bare local path and its `file:`-qualified spelling name the
+    * same directory). Two directories with the same path on DIFFERENT
+    * filesystems — `file:///x` vs `hdfs://nn/x` — never collide: a scan of
+    * one must never ride a manifest built over the other. */
   private[graft] def registryKey(p: String): String = {
     val (scheme, auth) =
       try {
@@ -219,25 +209,19 @@ object ZoneMapFileIndex {
     s"$scheme://$auth${normPath(p)}"
   }
 
-  /** Turn transparent pruning ON for `dir` in this session. Idempotent;
-    * call after the manifest memo is seeded (prepareTable does both).
-    * `dir` must be the SAME string the manifest memos were seeded under
-    * (the build/loadManifest argument) — the registry keys by
-    * scheme://authority/path but keeps the verbatim string for memo
-    * lookups. `manifestPath` records the persisted manifest (when the
-    * recipe wrote one) so in-session write paths can fold it forward. */
+  /** Turn transparent pruning ON for `dir` in this session: record the
+    * registration in the directory's session record, leaving its rows
+    * alone. Idempotent; before or after the manifest is seeded
+    * (prepareTable seeds, then enables). [[graft.plans.ApplyZoneMapIndex]]
+    * consults it on every plan. `manifestPath` records the persisted
+    * manifest (when the recipe wrote one) so in-session write paths can
+    * fold it forward. A fresh session re-registers (typically right after
+    * [[ZoneMaps.loadManifest]] — #files rows, zero data jobs). */
   def enable(spark: SparkSession, dir: String, zoneCols: Seq[String],
              bloomCols: Seq[String] = Nil,
-             manifestPath: Option[String] = None): Unit = {
-    registry.put(spark, registryKey(dir),
-      Registration(dir, zoneCols, bloomCols, manifestPath))
-    ()
-  }
-
-  /** Drop `dir`'s transparent registration (the [[ZoneMaps.dropMemos]]
-    * fresh-session simulation hook; also the opt-out). */
-  private[graft] def disable(spark: SparkSession, dir: String): Unit =
-    registry.purgeKeys(spark, _ == registryKey(dir))
+             manifestPath: Option[String] = None): Unit =
+    ZoneMaps.updateZoneTable(spark, dir)(_.copy(registration =
+      Some(Registration(dir, zoneCols, bloomCols, manifestPath))))
 
   /** The registration for a single-root FileIndex, if any — exact
     * directory match (a scan listing explicit FILES under the dir, e.g.
@@ -246,7 +230,7 @@ object ZoneMapFileIndex {
   def registeredFor(spark: SparkSession,
                     location: FileIndex): Option[Registration] =
     location.rootPaths match {
-      case Seq(single) => registry.peek(spark, registryKey(single.toString))
+      case Seq(single) => registeredForDir(spark, single.toString)
       case _ => None
     }
 
@@ -255,7 +239,7 @@ object ZoneMapFileIndex {
     * by their output path, before any FileIndex exists for the write). */
   private[graft] def registeredForDir(spark: SparkSession,
                                       dir: String): Option[Registration] =
-    registry.peek(spark, registryKey(dir))
+    ZoneMaps.zoneTable(spark, dir).registration
 
   /** One extracted constraint on a zone column: an interval with
     * inclusive/exclusive ends (None = unbounded), an optional key SET for
@@ -281,7 +265,7 @@ object ZoneMapFileIndex {
     * never a wrong skip). The universe is what the caller's
     * stale-manifest guard needs: membership in `keep` is only meaningful
     * for files the manifest has actually indexed. Driver-side over the
-    * memoized manifest rows. */
+    * directory's recorded manifest rows. */
   private[graft] def survivors(spark: SparkSession, dir: String,
                                zoneCols: Seq[String], bloomCols: Seq[String],
                                dataFilters: Seq[Expression])
@@ -316,11 +300,10 @@ object ZoneMapFileIndex {
   /** The (files kept, file universe) a single (column, constraint) yields
     * — nullness test off the manifest's exact `<c>_nulls`/`n_rows`
     * counts, envelope test, prefix test, then the bloom probe when the
-    * column has a SEEDED membership memo (transparent serving must never
-    * trigger a fact-data scan to build blooms mid-query). Every set is
-    * computed against the column's own manifest memo (seeded by
-    * prepareTable / loadManifest — single-column keys carry the full
-    * multi-column rows). */
+    * directory's record serves the column's blooms (transparent serving
+    * must never trigger a fact-data scan to build blooms mid-query). Every
+    * set is computed against the record's rows (seeded by prepareTable /
+    * loadManifest), so envelopes, blooms and universe name one file set. */
   private def filesFor(spark: SparkSession, dir: String, bloom: Set[String],
                        c: String, con: Constraint): (Set[String], Set[String]) = {
     val man = ZoneMaps.manifestRows(spark, dir, Seq(c))
@@ -353,8 +336,8 @@ object ZoneMapFileIndex {
           case Some(Right(manifestPath)) =>
             // the persisted-consult route: blooms are probed EXECUTOR-side
             // straight off the durable manifest (never collected — the
-            // driver memo holds envelopes only); only surviving file names
-            // come back. Identical survivor kernel as the memo route.
+            // record holds envelopes only); only surviving file names come
+            // back. Identical survivor kernel as the driver route.
             val byBloom = ZoneMaps.membershipPruneFilesDistributed(
               spark.read.parquet(
                 ZoneMaps.resolveManifestPath(spark, manifestPath)), c, ks).toSet

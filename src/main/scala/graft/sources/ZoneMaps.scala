@@ -36,8 +36,8 @@ import graft.SessionKeyedCache
   *     (`input_file_name()` group keys; partial aggregation bounds the
   *     exchange to #files rows). In production the manifest is a durable
   *     table maintained per ingest batch (the p21 shard-manifest
-  *     discipline); here it is session-memoized, built at most once per
-  *     (session, directory).
+  *     discipline); here it is the directory's session record
+  *     ([[ZoneTable]]), built at most once per (session, directory).
   *   - [[ZoneMapFileIndex]]: the one read path. A directory registered
   *     with [[ZoneMapFileIndex.enable]] answers `listFiles` from the
   *     manifest rows (bounded by #files — the same object a table
@@ -263,17 +263,55 @@ object ZoneMaps extends Logging {
     }
   }
 
-  private val manifestCache = new SessionKeyedCache[(String, Seq[String]), Array[Row]]()
+  /** What this session knows about one zone-mapped directory: the
+    * collected manifest rows, the columns whose `<c>_min`/`<c>_max`/
+    * `<c>_nulls` envelopes they carry, the bloom columns the record
+    * serves — as `<c>_bloom` fields of `rows` (on the driver) or, when
+    * `persisted` names a manifest path, probed executor-side from that
+    * manifest with no bloom bytes in `rows` — and the transparent
+    * [[ZoneMapFileIndex.Registration]] once [[ZoneMapFileIndex.enable]]
+    * ran. One record per directory, keyed by
+    * [[ZoneMapFileIndex.registryKey]], so every spelling of the directory
+    * (`/x`, `file:///x`) reads and writes the same record. */
+  private[graft] final case class ZoneTable(
+      rows: Array[Row] = Array.empty,
+      cols: Seq[String] = Nil,
+      blooms: Seq[String] = Nil,
+      persisted: Option[String] = None,
+      registration: Option[ZoneMapFileIndex.Registration] = None) {
+    /** Do `rows` carry the envelopes of `cs` and driver blooms of `bs`? */
+    def serves(cs: Seq[String], bs: Seq[String]): Boolean =
+      cs.forall(cols.contains) &&
+        (bs.isEmpty || (persisted.isEmpty && bs.forall(blooms.contains)))
+  }
 
-  /** (dir, keyCol) → persisted manifest path, for tables whose membership
-    * probe serves EXECUTOR-SIDE from the durable manifest instead of
-    * driver-memoized bloom rows — the ≥10⁵-file route (see
-    * [[loadManifest]]). The driver then holds envelopes only: at 10⁶
-    * files × ~10 KB of bloom each, memoizing bloom rows is ~10 GB of
-    * driver heap re-serialized per probe, while the persisted parquet
-    * manifest is exactly the object [[membershipPruneFilesDistributed]]
-    * wants — scanned executor-side, only surviving file NAMES collected. */
-  private val persistedMembershipCache = new SessionKeyedCache[(String, String), String]()
+  private val zoneTables = new SessionKeyedCache[String, ZoneTable]()
+
+  private[graft] def zoneTable(spark: SparkSession, dir: String): ZoneTable =
+    zoneTables.peek(spark, ZoneMapFileIndex.registryKey(dir))
+      .getOrElse(ZoneTable())
+
+  /** Replace `dir`'s record with `f` of it (absent reads as empty). */
+  private[sources] def updateZoneTable(spark: SparkSession, dir: String)(
+      f: ZoneTable => ZoneTable): Unit =
+    zoneTables.update(spark, ZoneMapFileIndex.registryKey(dir))(
+      t => Some(f(t.getOrElse(ZoneTable()))))
+
+  /** Replace the rows of `dir`'s record — after a build, a load or a fold
+    * they name the directory's current file set — keeping its
+    * registration. `cols` and `blooms` are the columns `rows` cover. */
+  private def replaceRows(spark: SparkSession, dir: String,
+                          rows: Array[Row], cols: Seq[String],
+                          blooms: Seq[String],
+                          persisted: Option[String] = None): Unit =
+    updateZoneTable(spark, dir)(t => ZoneTable(rows,
+      (cols ++ blooms.filterNot(cols.contains)).distinct, blooms, persisted,
+      t.registration))
+
+  /** Drop everything this session knows about `dir`: rows, blooms and the
+    * transparent registration (a fresh session, for one directory). */
+  private[graft] def forget(spark: SparkSession, dir: String): Unit =
+    zoneTables.update(spark, ZoneMapFileIndex.registryKey(dir))(_ => None)
 
   /** Manifest row count above which [[loadManifest]] keeps bloom bytes OFF
     * the driver and routes membership probes through the persisted
@@ -284,119 +322,101 @@ object ZoneMaps extends Logging {
       spark.conf.get("spark.graft.zonemap.persistedConsultRows", "65536").toLong)
       .getOrElse(65536L)
 
-  /** Drop every manifest/membership memo AND the transparent-pruning
-    * registration for `dir` (test + lifecycle hook — simulates a fresh
-    * session for one table without draining the whole session's caches). */
-  private[graft] def dropMemos(spark: SparkSession, dir: String): Unit = {
-    purgeMemos(spark, dir)
-    ZoneMapFileIndex.disable(spark, dir)
+  /** `dir`'s rows when its record covers `cols` (envelopes) and `blooms`
+    * (on the driver); otherwise ONE build over the union of what the
+    * record covers and what is asked, which replaces the record — so a
+    * record's rows always cover one file set, and a bloom-serving record
+    * that is rebuilt keeps serving its blooms (on the driver). */
+  private def rowsFor(spark: SparkSession, dir: String, cols: Seq[String],
+                      blooms: Seq[String]): Array[Row] = {
+    val t = zoneTable(spark, dir)
+    if (t.serves(cols, blooms)) t.rows
+    else {
+      val cs = (t.cols ++ cols).distinct
+      val bs = (t.blooms ++ blooms).distinct
+      val rows = build(spark, dir, cs, bs).collect()
+      replaceRows(spark, dir, rows, cs, bs)
+      rows
+    }
   }
 
-  /** Drop every manifest and membership memo of `dir`, whatever column
-    * set it was keyed under: after a rewrite or an append they all name
-    * the old file set. */
-  private def purgeMemos(spark: SparkSession, dir: String): Unit = {
-    manifestCache.purgeKeys(spark, _._1 == dir)
-    membershipCache.purgeKeys(spark, _._1 == dir)
-    persistedMembershipCache.purgeKeys(spark, _._1 == dir)
-  }
-
-  /** Collected manifest rows, built at most once per (session, dir, cols).
+  /** Collected manifest rows covering `cols`, built at most once per
+    * (session, directory) unless a later lookup asks for more columns.
     * Driver-resident by design: #files rows is what Delta/Iceberg hold in
     * their metadata layer too — at 10⁶ files this is megabytes, and it is
     * consulted by every query where the data scan it replaces is terabytes. */
   def manifestRows(spark: SparkSession, dir: String,
                    cols: Seq[String]): Array[Row] =
-    manifestCache.getOrElseUpdate(spark, (dir, cols))(
-      build(spark, dir, cols).collect())
+    rowsFor(spark, dir, cols, Nil)
 
-  /** Rebuild the manifest and REPLACE the session memo — the step after
-    * any rewrite of `dir` (a re-clustering, a compaction): the memoized
-    * rows name the old files, and a stale manifest prunes to paths that
-    * no longer exist. [[graft.GraftSession.prepareTable]] calls this, so
-    * re-running the ingest recipe in one session stays consistent. Also
-    * seeds the per-column subset keys (a manifest over (a, b) carries
-    * a's and b's envelopes, so single-column prunes hit the memo too). */
+  /** Rebuild the manifest and REPLACE the session record's rows — the step
+    * after any rewrite of `dir` (a re-clustering, a compaction): the
+    * recorded rows name the old files, and a stale manifest prunes to
+    * paths that no longer exist. [[graft.GraftSession.prepareTable]] calls
+    * this, so re-running the ingest recipe in one session stays
+    * consistent. `bloomCols` ride the SAME build (one scan carries
+    * envelopes AND blooms), so the record serves membership too. */
   def refreshManifest(spark: SparkSession, dir: String,
                       cols: Seq[String],
                       bloomCols: Seq[String] = Nil): Array[Row] = {
-    // `bloomCols` rides the SAME build (one scan carries envelopes AND
-    // blooms — cheaper than a separate membership pass) and seeds the
-    // membership memo, so bloom-carrying session rows stay maintainable by
-    // [[incrementalBuild]] without a schema split between the two memos.
-    // EVERY memo for this dir is replaced, not just the keys derived from
-    // `cols`: one memoized under another column set names deleted files
     val rows = build(spark, dir, cols, bloomCols,
       expectedKeysPerFile = 1L << 13).collect()
-    seedMaintained(spark, dir, cols, rows, bloomCols)
+    replaceRows(spark, dir, rows, cols, bloomCols)
     rows
   }
 
-  private def seed(spark: SparkSession, dir: String, cols: Seq[String],
-                   rows: Array[Row]): Unit = {
-    manifestCache.put(spark, (dir, cols), rows)
-    cols.foreach(c => manifestCache.put(spark, (dir, Seq(c)), rows))
-  }
-
-  /** Re-seed the session memos with MAINTAINED manifest rows (an
-    * [[incrementalBuild]] result) — the fold-forward half of the append
-    * paths' contract: after [[graft.streaming.EventStreams.maintainZoneMapStream]]
-    * or an in-session `INSERT INTO`
-    * ([[graft.plans.MaintainZoneManifestOnWrite]]) lands files, the
-    * transparent serve path must consult rows that KNOW them, or every
-    * later scan rides the stale-manifest guard (correct but unpruned).
-    * Purges every other memoized key for the dir first (they name the
-    * pre-append file set) and re-seeds the membership memo for each bloom
-    * column — maintained rows carry the same `<c>_bloom` fields. */
-  private[graft] def seedMaintained(spark: SparkSession, dir: String,
-                                    cols: Seq[String], rows: Array[Row],
-                                    bloomCols: Seq[String] = Nil): Unit = {
-    purgeMemos(spark, dir)
-    seed(spark, dir, cols, rows)
-    bloomCols.foreach { c =>
-      membershipCache.put(spark, (dir, c), rows)
-      manifestCache.put(spark, (dir, Seq(c)), rows)
-    }
+  /** Fold `dir`'s record forward over the files landed since its rows were
+    * taken ([[incrementalBuild]] — only unseen files are scanned): the
+    * fold-forward half of the append paths' contract. After
+    * [[graft.streaming.EventStreams.maintainZoneMapStream]] or an
+    * in-session `INSERT INTO` ([[graft.plans.MaintainZoneManifestOnWrite]])
+    * lands files, the transparent serve path must consult rows that KNOW
+    * them, or every later scan rides the stale-manifest guard (correct but
+    * unpruned). Rows that do not cover `cols` with driver blooms of
+    * `blooms` are rebuilt from scratch over the union, as
+    * [[manifestRows]] does. */
+  private[graft] def foldRows(spark: SparkSession, dir: String,
+                              cols: Seq[String],
+                              blooms: Seq[String]): Array[Row] = {
+    val t = zoneTable(spark, dir)
+    // envelope-only rows of the persisted route cannot stand for blooms
+    val standing =
+      if (t.persisted.isEmpty && t.serves(cols, blooms)) t.rows
+      else Array.empty[Row]
+    val cs = (t.cols ++ cols).distinct
+    val bs = (t.blooms ++ blooms).distinct
+    val updated = incrementalBuild(spark, dir, cs, standing, bs)
+    replaceRows(spark, dir, updated, cs, bs)
+    updated
   }
 
   /** The write-path fold ([[graft.plans.MaintainZoneManifestOnWrite]]'s
-    * commit hook): merge the just-landed files into the standing session
-    * manifest via [[incrementalBuild]] (scans ONLY files the memo has not
-    * seen — cost ∝ the insert), re-seed every session memo, and rewrite
-    * the PERSISTED manifest when the registration names one (a #files-row
-    * write — the same object [[writeManifest]] produces, so a fresh
-    * session's [[loadManifest]] sees the inserted files too). An absent
-    * or bloom-less standing memo degrades to a from-scratch build of the
+    * commit hook): fold the just-landed files into the directory's session
+    * record ([[foldRows]] — cost ∝ the insert) and rewrite the PERSISTED
+    * manifest when the registration names one (a #files-row write — the
+    * same object [[writeManifest]] produces, so a fresh session's
+    * [[loadManifest]] sees the inserted files too). Rows that cannot serve
+    * as the standing manifest degrade to a from-scratch build of the
     * directory — one stats scan, never wrong. */
   private[graft] def foldManifestForward(
       spark: SparkSession, reg: ZoneMapFileIndex.Registration): Unit = {
+    val t = zoneTable(spark, reg.dir)
     // the PERSISTED-CONSULT route (the table was loaded above
-    // `spark.graft.zonemap.persistedConsultRows` — driver memo holds
+    // `spark.graft.zonemap.persistedConsultRows` — the record holds
     // envelopes only): fold the durable manifest forward as a DataFrame
     // union, so bloom bytes never tour the driver on the write path either
     val persistedRoute = reg.manifestPath.filter(_ =>
-      reg.bloomCols.exists(c =>
-        persistedMembershipCache.peek(spark, (reg.dir, c)).isDefined))
+      t.persisted.isDefined && reg.bloomCols.exists(t.blooms.contains))
     persistedRoute match {
-      case Some(p) => foldPersistedManifest(spark, reg, p)
+      case Some(p) => foldPersistedManifest(spark, reg, t, p)
       case None =>
-        val memo = manifestCache.peek(spark, (reg.dir, reg.zoneCols))
-          .getOrElse(Array.empty[Row])
-        // a standing memo without the registration's bloom fields (legacy
-        // seeding) cannot row-union with bloom-carrying fresh rows — rebuild
-        val standing =
-          if (reg.bloomCols.forall(c => memo.headOption.forall(
-            _.schema.fieldNames.contains(s"${c}_bloom")))) memo
-          else Array.empty[Row]
-        val updated = incrementalBuild(spark, reg.dir, reg.zoneCols, standing,
-          reg.bloomCols)
-        seedMaintained(spark, reg.dir, reg.zoneCols, updated, reg.bloomCols)
+        val updated = foldRows(spark, reg.dir, reg.zoneCols, reg.bloomCols)
         reg.manifestPath.foreach { p =>
           // an INSERT OVERWRITE from an empty source leaves no data files:
           // land an EMPTY manifest with the standing schema (one naming the
           // vanished files would seed a fresh session with deleted paths);
           // with no schema to name, drop it so loadManifest fails loudly
-          updated.headOption.orElse(memo.headOption).map(_.schema)
+          updated.headOption.orElse(t.rows.headOption).map(_.schema)
             .orElse(scala.util.Try(
               spark.read.parquet(resolveManifestPath(spark, p)).schema).toOption)
           match {
@@ -413,28 +433,26 @@ object ZoneMaps extends Logging {
   }
 
   /** The DataFrame-native fold for persisted-consult tables: compute the
-    * fresh-file set from the envelope memo (names only — never blooms),
-    * keep the durable manifest's rows for still-present files via a
-    * broadcast semi-join on the file name, union the fresh files' stats
+    * fresh-file set from the record's envelope rows (names only), keep
+    * the durable manifest's rows for still-present files via a broadcast
+    * semi-join on the file name, union the fresh files' stats
     * (ONE scan of just the inserted files, blooms aggregated
     * executor-side), and land the result through [[DurableSwap.replace]],
     * whose scratch sibling also lets the fold read the manifest it
     * replaces (parquet cannot overwrite a path it is reading). The driver
-    * touches file-name strings and envelope rows only; re-seeds follow the
-    * same envelopes-only policy [[loadManifest]] applied. */
+    * touches file-name strings and envelope rows only; the record keeps
+    * the same envelopes-only policy [[loadManifest]] applied. */
   private def foldPersistedManifest(spark: SparkSession,
                                     reg: ZoneMapFileIndex.Registration,
-                                    p: String): Unit = {
+                                    t: ZoneTable, p: String): Unit = {
     def norm(f: String): String = ZoneMapFileIndex.normPath(f)
-    val memo = manifestCache.peek(spark, (reg.dir, reg.zoneCols))
-      .getOrElse(Array.empty[Row])
     val listing = spark.read.parquet(reg.dir).inputFiles
     val current = listing.map(norm).toSet
-    val known = memo.map(r => norm(r.getAs[String]("file"))).toSet
+    val known = t.rows.map(r => norm(r.getAs[String]("file"))).toSet
     val fresh = listing.filterNot(f => known(norm(f)))
-    // keep rows for files still present — raw manifest spellings (the memo
-    // rows ARE collected manifest rows, so the strings match exactly)
-    val keptNames = memo.map(_.getAs[String]("file"))
+    // keep rows for files still present — raw manifest spellings (the
+    // record's rows ARE collected manifest rows, so the strings match exactly)
+    val keptNames = t.rows.map(_.getAs[String]("file"))
       .filter(f => current(norm(f)))
     val statCols = (reg.zoneCols ++
       reg.bloomCols.filterNot(reg.zoneCols.contains)).toSeq
@@ -494,15 +512,10 @@ object ZoneMaps extends Logging {
           .agg(aggs.head, aggs.tail: _*),
         allowMissingColumns = false)
     }
-    // re-seed under the loadManifest policy (the table IS the big route)
-    purgeMemos(spark, reg.dir)
+    // the record keeps the loadManifest policy (the table IS the big route)
     val rows = spark.read.parquet(p)
       .drop(reg.bloomCols.map(c => s"${c}_bloom"): _*).collect()
-    seed(spark, reg.dir, reg.zoneCols, rows)
-    reg.bloomCols.foreach { c =>
-      persistedMembershipCache.put(spark, (reg.dir, c), p)
-      manifestCache.put(spark, (reg.dir, Seq(c)), rows)
-    }
+    replaceRows(spark, reg.dir, rows, reg.zoneCols, reg.bloomCols, Some(p))
   }
 
   /** Normalize a manifest value / caller bound to a comparable form:
@@ -566,17 +579,20 @@ object ZoneMaps extends Logging {
     * integrals widened, mixed numeric widths exact in decimal space). */
   private[graft] def cmpExternal(a: Any, b: Any): Int = cmp(a, b)
 
-  /** The membership consult's SOURCE for (dir, keyCol), if seeded: either
-    * the driver-memoized bloom rows (Left — the ≤threshold route) or the
-    * persisted manifest's path (Right — the big-table route, probed
-    * executor-side with zero driver-resident bloom bytes). None when
-    * neither is seeded — the transparent serve path then skips membership
-    * pruning rather than scanning fact data to build blooms mid-query. */
+  /** The membership consult's SOURCE for (dir, keyCol), if the record
+    * serves its blooms: the record's rows (Left — blooms on the driver,
+    * the ≤threshold route) or the persisted manifest's path (Right — the
+    * big-table route, probed executor-side with zero driver-resident bloom
+    * bytes). None otherwise — the transparent serve path then skips
+    * membership pruning rather than scanning fact data to build blooms
+    * mid-query; a consult never builds. */
   private[graft] def membershipSourceIfSeeded(
       spark: SparkSession, dir: String,
-      keyCol: String): Option[Either[Array[Row], String]] =
-    membershipCache.peek(spark, (dir, keyCol)).map(Left(_))
-      .orElse(persistedMembershipCache.peek(spark, (dir, keyCol)).map(Right(_)))
+      keyCol: String): Option[Either[Array[Row], String]] = {
+    val t = zoneTable(spark, dir)
+    if (!t.blooms.contains(keyCol)) None
+    else Some(t.persisted.toRight(t.rows))
+  }
 
   /** Files whose [min, max] envelope overlaps the predicate interval
     * [lo, hi) — inclusive lower, exclusive upper, the natural shape for
@@ -603,26 +619,25 @@ object ZoneMaps extends Logging {
     swapManifest(spark, manifestPath)(
       build(spark, dir, cols, bloomCols, expectedKeysPerFile))
 
-  /** Load a persisted manifest into the session memo so every
+  /** Load a persisted manifest into the session record so every
     * [[ZoneMapFileIndex]] scan of `dir` (and every [[pruneFiles]] /
     * [[membershipPruneFiles]] survivor count) consults it without
     * re-scanning the data — the session-open step a query service runs
-    * ([[graft.GraftSession.openTable]] then registers the index). Seeds
-    * the per-column subset keys too: the index looks up (dir,
-    * Seq(zoneCol)), and a multi-column manifest row carries every tracked
-    * column's envelope — and, when the persisted manifest carries
-    * `<c>_bloom` columns, the MEMBERSHIP memo for each, so bloom pruning is
-    * fresh-session durable exactly like envelope pruning.
+    * ([[graft.GraftSession.openTable]] then registers the index). The
+    * record covers `cols` and, when the persisted manifest carries
+    * `<c>_bloom` columns, serves MEMBERSHIP for each (a bloom column's
+    * envelope rides along too), so bloom pruning is fresh-session durable
+    * exactly like envelope pruning.
     *
     * SIZE-ROUTED consult (the 100 TB rung): above
     * `spark.graft.zonemap.persistedConsultRows` manifest rows
-    * ([[persistedConsultThreshold]]), the driver memo keeps ENVELOPES ONLY
+    * ([[persistedConsultThreshold]]), the record keeps ENVELOPES ONLY
     * — the `<c>_bloom` columns are dropped BEFORE the collect, so parquet
     * column pruning means zero bloom bytes ever reach the driver — and
     * membership probes route through the persisted manifest executor-side
     * ([[membershipPruneFilesDistributed]] over
     * `spark.read.parquet(manifestPath)`; only surviving file NAMES come
-    * back). At 10⁶ files × ~10 KB of bloom, driver-memoized bloom rows are
+    * back). At 10⁶ files × ~10 KB of bloom, driver-held bloom rows are
     * ~10 GB of heap re-serialized per probe; envelopes are a few MB. The
     * survivor sets are identical on either route (same
     * envelope-restrict + `mightContainLong` kernel — conf-flip spec). */
@@ -630,35 +645,29 @@ object ZoneMaps extends Logging {
                    manifestPath: String): Array[Row] = {
     // a manifest parked by a crashed swap still opens (read-only)
     val df = spark.read.parquet(resolveManifestPath(spark, manifestPath))
-    val bloomFields = df.schema.fieldNames.filter(_.endsWith("_bloom")).toSeq
+    val blooms = df.schema.fieldNames.filter(_.endsWith("_bloom"))
+      .map(_.stripSuffix("_bloom")).toSeq
     // #rows from parquet footers — a metadata-only job, no bloom bytes move
-    val big = bloomFields.nonEmpty && df.count() > persistedConsultThreshold(spark)
+    val big = blooms.nonEmpty && df.count() > persistedConsultThreshold(spark)
     val rows =
-      if (big) df.drop(bloomFields: _*).collect()
+      if (big) df.drop(blooms.map(c => s"${c}_bloom"): _*).collect()
       else df.collect()
-    seed(spark, dir, cols, rows)
-    bloomFields.map(_.stripSuffix("_bloom")).foreach { c =>
-      if (big) persistedMembershipCache.put(spark, (dir, c), manifestPath)
-      else membershipCache.put(spark, (dir, c), rows)
-      // the same rows carry the bloom column's envelope too ([[build]]
-      // tracks min/max/nulls for every bloom column)
-      manifestCache.put(spark, (dir, Seq(c)), rows)
-    }
+    replaceRows(spark, dir, rows, cols, blooms,
+      if (big) Some(manifestPath) else None)
     rows
   }
 
   /** The durable-ingest step: build the manifest with ONE data scan,
-    * persist it at `manifestPath` AND seed the session memo — so THIS
-    * session prunes immediately and every FRESH session gets pruning for
-    * the cost of reading #files manifest rows ([[loadManifest]]) instead
-    * of re-scanning the data. Purges every stale memo for `dir` first
-    * (the [[refreshManifest]] discipline — the caller just rewrote the
+    * persist it at `manifestPath` AND load it into the session record —
+    * so THIS session prunes immediately and every FRESH session gets
+    * pruning for the cost of reading #files manifest rows
+    * ([[loadManifest]]) instead of re-scanning the data. The load
+    * replaces whatever the record held (the caller just rewrote the
     * directory). `bloomCols` makes the SAME durable row set carry per-file
     * key blooms, so membership pruning survives sessions too. */
   def persistManifest(spark: SparkSession, dir: String, cols: Seq[String],
                       manifestPath: String,
                       bloomCols: Seq[String] = Nil): Array[Row] = {
-    purgeMemos(spark, dir)
     writeManifest(spark, dir, cols, manifestPath, bloomCols)
     loadManifest(spark, dir, cols, manifestPath)
   }
@@ -703,10 +712,8 @@ object ZoneMaps extends Logging {
 
   // ---- membership manifest: per-file key Bloom filters ---------------------
 
-  private val membershipCache = new SessionKeyedCache[(String, String), Array[Row]]()
-
-  /** Collected membership-manifest rows, built at most once per
-    * (session, dir, keyCol): one row per file with the key column's
+  /** Collected membership-manifest rows — the record's rows once it
+    * serves `keyCol`'s blooms on the driver: one row per file with the key column's
     * [min, max] envelope AND a Bloom filter over its key SET — the sketch
     * that closes the gap a pure envelope leaves open for star joins. A
     * scattered dim key set ("these 200 customer ids" spread over the
@@ -733,8 +740,7 @@ object ZoneMaps extends Logging {
     * ([[membershipPruneFilesDistributed]]). */
   def membershipRows(spark: SparkSession, dir: String,
                      keyCol: String): Array[Row] =
-    membershipCache.getOrElseUpdate(spark, (dir, keyCol))(
-      build(spark, dir, Nil, Seq(keyCol)).collect())
+    rowsFor(spark, dir, Nil, Seq(keyCol))
 
   /** Files at least one of `keys` might land in ([[BloomProbe]]'s test
     * per manifest row). Cost: #files × log|keys| searches +
@@ -841,7 +847,7 @@ object ZoneMaps extends Logging {
     * (session, source dir), the ingest-side step a production table does
     * once per batch — and registered with [[ZoneMapFileIndex]], so a
     * filtered `spark.read.parquet` of it prunes. A fresh temp dir per
-    * session (never a fixed path) keeps the memoized manifest and the
+    * session (never a fixed path) keeps the recorded manifest and the
     * files on disk consistent by construction. */
   private def clusteredLineitem(spark: SparkSession, dir: String): String =
     clusteredCache.getOrElseUpdate(spark, dir)(
@@ -1402,7 +1408,7 @@ object ZoneMaps extends Logging {
     * whose strip misses it — read as a filter on the prepared catalog
     * table, which [[ZoneMapFileIndex]] prunes. The oracle recomputes from
     * the unpruned table; `pruned` pins real skips; the durable-manifest
-    * half (a fresh memo loading #files rows with ZERO data-dir jobs) is
+    * half (a fresh record loading #files rows with ZERO data-dir jobs) is
     * spec-pinned in ZoneMapsSpec. */
   def q136ZOrderPrepared(spark: SparkSession, dir: String): DataFrame = {
     val cdir = preparedZLineitem(spark, dir)
@@ -1428,7 +1434,7 @@ object ZoneMaps extends Logging {
 
   /** q137: metadata-only aggregate, end to end — count(*) + the shipdate
     * extremes of the clustered lineitem answered from the manifest alone
-    * (a 1-row local relation; the only job is the memoized manifest's
+    * (a 1-row local relation; the only job is the recorded manifest's
     * one-time build, attributed to `_shared_zonemap_manifest` in the
     * bench). The oracle recomputes all three from the full table, so a
     * manifest that miscounts a file or carries a loose envelope
@@ -1486,7 +1492,7 @@ object ZoneMaps extends Logging {
     val keys = boundedDimKeys(dim, "p_partkey").getOrElse(sys.error(
       "q139: demo dim slice exceeded the membership key guard"))
     val manifest = spark.read.parquet(persistedPartManifest(spark, dir))
-    // files_total from the (warmed) driver memo — the #files count is
+    // files_total from the (warmed) session record — the #files count is
     // metadata the session already holds; no count() job per call
     val total = membershipRows(spark, cdir, "l_partkey").length
     val files = membershipPruneFilesDistributed(manifest, "l_partkey", keys)

@@ -78,14 +78,6 @@ object EventStreams {
         col("n_types"), col("value_sum"),
         (col("end_us") - col("start_us")).as("duration_us"))
 
-  /** Session windows with gap, streaming-native. */
-  def sessionCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("session_start"), col("user_id"), col("n_events"))
-
   /** Stream-stream interval join: purchases within 1 hour after an error by
     * the same user (streaming analog of operators.Temporal.q25RangeJoin).
     * Both sides carry watermarks and the join condition bounds event time on
@@ -330,10 +322,11 @@ object EventStreams {
 
   /** Streaming zone-map manifest maintenance — the metadata layer kept
     * current WHILE the ingest stream writes: each micro-batch lands its
-    * rows as new parquet files under `dir`, then the standing file-grain
-    * manifest folds forward via [[graft.sources.ZoneMaps.incrementalBuild]]
-    * — the one listing serves both sides, only the batch's NEW files are
-    * scanned (per-file stats are immutable, so the merge is row union),
+    * rows as new parquet files under `dir`, then the session's record of
+    * the directory folds forward ([[graft.sources.ZoneMaps.foldRows]] over
+    * [[graft.sources.ZoneMaps.incrementalBuild]]) — the one listing serves
+    * both sides, only the batch's NEW files are scanned (per-file stats
+    * are immutable, so the merge is row union),
     * and the maintained manifest equals a from-scratch build of the
     * directory after every batch (spec-pinned). `bloomCols` maintains the
     * MEMBERSHIP grade under the same contract (a file's key bloom is as
@@ -356,20 +349,15 @@ object EventStreams {
                             cols: Seq[String],
                             onBatch: (Array[Row], Long) => Unit,
                             bloomCols: Seq[String] = Nil): DataStreamWriter[Row] = {
-    val standing =
-      new java.util.concurrent.atomic.AtomicReference[Array[Row]](Array.empty)
     rowStream.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         idempotentBatchAppend(dir, batch, batchId)
-        val updated = graft.sources.ZoneMaps.incrementalBuild(
-          batch.sparkSession, dir, cols, standing.get, bloomCols)
-        standing.set(updated)
-        // fold the SESSION memos forward too: a transparent scan of `dir`
-        // in this session must consult rows that know the new files, or
-        // it rides the stale-manifest guard (correct but unpruned)
-        graft.sources.ZoneMaps.seedMaintained(
-          batch.sparkSession, dir, cols, updated, bloomCols)
+        // the standing manifest IS `dir`'s record in the batch's session
+        // (the streaming query's own): a transparent scan there consults
+        // rows that know the new files instead of riding the stale guard
+        val updated = graft.sources.ZoneMaps.foldRows(
+          batch.sparkSession, dir, cols, bloomCols)
         onBatch(updated, batchId)
       }
   }

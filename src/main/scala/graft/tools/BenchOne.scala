@@ -1,10 +1,12 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import graft.{Bench, GraftSession, SparkEntry}
+import graft.{Bench, GraftSession, SessionCaches, SparkEntry}
 
 /** Replicates graft.Bench's harness (session conf, warmup, count() action)
   * for an explicit list of queries — for isolating per-query regressions.
+  * Each query runs `$SPARK_GRAFT_REPS` times (default 1), every rep cold:
+  * the session's memos are released and Spark's cache cleared before it.
   * Usage: BenchOne <sfDir> <query> [query...]
   */
 object BenchOne {
@@ -24,10 +26,13 @@ object BenchOne {
       case Some(build) => build(spark, sfDir)
       case None => SparkEntry.queries(name)(spark, sfDir).count()
     }
-    args.drop(1).foreach { name =>
+    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt)
+    for (name <- args.drop(1); rep <- 1 to reps) {
+      SessionCaches.release(spark)
+      spark.catalog.clearCache()
       val t0 = System.nanoTime()
       val n = run(name)
-      println(f"$name%s n=$n%d ${(System.nanoTime() - t0) / 1e9}%.3f s")
+      println(f"$name%s rep$rep%d n=$n%d ${(System.nanoTime() - t0) / 1e9}%.3f s")
     }
     spark.stop()
   }

@@ -224,4 +224,20 @@ class DataPlaneSpec extends AnyFunSuite {
     assert(got.map(_._1).sorted.sameElements(0 until 4))
     assert(got.forall(_._3 == 4))
   }
+
+  test("tfidfPipeline: one row per doc, and a token in every doc weighs zero") {
+    import spark.implicits._
+    val docs = Seq((1L, "common alpha"), (2L, "common beta beta"),
+      (3L, "common gamma")).toDF("doc_id", "text")
+    val got = ml.MlOps.tfidfPipeline(docs).collect()
+    assert(got.map(_.getAs[Long]("doc_id")).sorted.toSeq == Seq(1L, 2L, 3L))
+    val tf = new org.apache.spark.ml.feature.HashingTF().setNumFeatures(1 << 12)
+    def weight(doc: Long, token: String): Double =
+      got.find(_.getAs[Long]("doc_id") == doc).get
+        .getAs[org.apache.spark.ml.linalg.Vector]("tfidf")(tf.indexOf(token))
+    // IDF = log((docs + 1) / (docs with the token + 1)): zero when every
+    // doc holds the token, positive for a token only one doc holds
+    assert((1L to 3L).forall(weight(_, "common") == 0.0))
+    assert(weight(1L, "alpha") > 0.0 && weight(2L, "alpha") == 0.0)
+  }
 }

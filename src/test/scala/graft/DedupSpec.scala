@@ -596,7 +596,7 @@ class DedupSpec extends AnyFunSuite {
       == exact, "small route must be the exact baseline verbatim")
     // conf flip: a zero ceiling makes the same corpus route IVF, and the
     // routed pairs obey the subset law vs exact
-    val key = "spark.graft.dedup.maxExactBytes"
+    val key = graft.plans.StatsRoute.ceilingKey
     spark.conf.set(key, "0")
     try {
       val ivf = Dedup.embeddingDupAuto(tables.embeddings, 0.45)

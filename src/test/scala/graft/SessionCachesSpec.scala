@@ -92,6 +92,35 @@ class SessionCachesSpec extends AnyFunSuite {
     }
   }
 
+  test("a Tables relation, its view and its memo consumers see a file appended under the table") {
+    val s = spark.newSession()
+    val dir = java.nio.file.Files.createTempDirectory("tables-append")
+    val orders = dir.resolve("orders.parquet")
+    java.nio.file.Files.createDirectory(orders)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/orders.parquet"),
+      orders.resolve("part-0.parquet"))
+    Tables.names.filterNot(_ == "orders").foreach(n =>
+      java.nio.file.Files.createSymbolicLink(dir.resolve(s"$n.parquet"),
+        java.nio.file.Paths.get(s"$sf/$n.parquet")))
+    def t = Tables(s, dir.toString)
+    def memoCount: Long = { val o = t.orders; Memo.value("spec.orders.count", o)(o.count()) }
+    def viewCount: Long = { t.registerViews(); s.sql("SELECT count(*) FROM orders").head().getLong(0) }
+    try {
+      val before = t.table("orders").count()
+      assert(before > 0 && memoCount === before && viewCount === before)
+      java.nio.file.Files.copy(orders.resolve("part-0.parquet"),
+        orders.resolve("part-1.parquet"))
+      assert(t.table("orders").count() === 2 * before, "the relation kept its old listing")
+      assert(memoCount === 2 * before, "the memo served the pre-append value")
+      assert(viewCount === 2 * before, "the view kept the old relation")
+    } finally {
+      SessionCaches.release(s)
+      java.nio.file.Files.list(orders).forEach(f => java.nio.file.Files.delete(f))
+      java.nio.file.Files.list(dir).forEach(f => java.nio.file.Files.delete(f))
+      java.nio.file.Files.delete(dir)
+    }
+  }
+
   test("nested builds succeed and a failed build leaves no entry") {
     val s = spark.newSession()
     val t = Tables(s, sf)

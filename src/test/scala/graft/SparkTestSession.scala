@@ -36,8 +36,8 @@ object SparkTestSession {
   }
 
   /** Register `dir` for transparent zone-map pruning on `cols` (blooms on
-    * `bloomCols`, whose membership memo must already be seeded) and
-    * return it. */
+    * `bloomCols`, which the directory's session record must already
+    * serve) and return it. */
   def registered(dir: String, cols: Seq[String],
                  bloomCols: Seq[String] = Nil): String = {
     graft.sources.ZoneMapFileIndex.enable(spark, dir, cols, bloomCols)

@@ -512,7 +512,7 @@ class ZoneMapWriteSpec extends AnyFunSuite {
     // executor-side from the persisted manifest, survivors identical
     spark.conf.set("spark.graft.zonemap.persistedConsultRows", "0")
     try {
-      ZoneMaps.dropMemos(spark, out) // fresh-session simulation
+      ZoneMaps.forget(spark, out) // fresh-session simulation
       GraftSession.openTable(spark, "graft_zmw_pc", out, Seq("l_partkey"), mf)
       val rows = ZoneMaps.manifestRows(spark, out, Seq("l_partkey"))
       assert(rows.length == man.length)
@@ -682,7 +682,7 @@ class ZoneMapWriteSpec extends AnyFunSuite {
       assert(fs.rename(hp, prev))
       // a READER (a fresh query session opening the table) resolves the
       // parked manifest instead of failing hard
-      ZoneMaps.dropMemos(spark, out)
+      ZoneMaps.forget(spark, out)
       GraftSession.openTable(spark, "graft_zmw_swap", out,
         Seq("l_partkey"), mf)
       val gmax = ZoneMaps.manifestRows(spark, out, Seq("l_partkey"))

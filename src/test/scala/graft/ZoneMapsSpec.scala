@@ -399,9 +399,9 @@ class ZoneMapsSpec extends AnyFunSuite {
     val man = ZoneMaps.manifestRows(spark, out, Seq("o_orderkey"))
     assert(man.length == 4)
     // simulate a fresh session AND prove the load touches only the
-    // manifest: drop the memos, DELETE the data files, then load + prune —
+    // manifest: forget the record, DELETE the data files, then load + prune —
     // any data-dir access would throw
-    ZoneMaps.dropMemos(spark, out)
+    ZoneMaps.forget(spark, out)
     val dataFiles = new java.io.File(out).listFiles()
     val moved = Files.createTempDirectory("graft_zm_moved_").toString
     dataFiles.foreach(f => f.renameTo(new java.io.File(moved, f.getName)))
@@ -702,8 +702,8 @@ class ZoneMapsSpec extends AnyFunSuite {
     val man = ZoneMaps.manifestRows(spark, out, Seq("o_orderkey"))
     val gmin = man.map(_.getAs[Long]("o_orderkey_min")).min
     val cut = man.map(_.getAs[Long]("o_orderkey_max")).min
-    // fresh-session simulation: memos AND the transparent registration gone
-    ZoneMaps.dropMemos(spark, out)
+    // fresh-session simulation: rows AND the transparent registration gone
+    ZoneMaps.forget(spark, out)
     spark.sql("DROP TABLE IF EXISTS graft_zm_open_spec")
     GraftSession.openTable(spark, "graft_zm_open_spec", out,
       Seq("o_orderkey"), mf)
@@ -944,9 +944,9 @@ class ZoneMapsSpec extends AnyFunSuite {
     val keys = Array(gmin, gmax).sorted
     val before = ZoneMaps.membershipPruneFiles(mrows, "l_partkey", keys).toSet
     assert(before.nonEmpty && before.size < man.length)
-    // fresh session simulation: drop memos, DELETE the data, re-load —
-    // the membership memo must reseed from the manifest parquet alone
-    ZoneMaps.dropMemos(spark, out)
+    // fresh session simulation: forget the record, DELETE the data,
+    // re-load — the blooms must reseed from the manifest parquet alone
+    ZoneMaps.forget(spark, out)
     val moved = Files.createTempDirectory("graft_zm_mdur_moved_").toString
     new java.io.File(out).listFiles().foreach(f =>
       f.renameTo(new java.io.File(moved, f.getName)))
@@ -1074,6 +1074,93 @@ class ZoneMapsSpec extends AnyFunSuite {
     intercept[Exception] {
       GraftSession.prepareTable(spark, "graft_zm_uriguard_spec",
         s"$d/nope_src", s"$d/nope_out", Seq("o_orderkey"), Nil)
+    }
+  }
+
+  // ---- one session record per directory -----------------------------------
+
+  /** Jobs `body` launches, read off a job group (a marker job in a second
+    * group shows the status tracker has caught up). */
+  private def jobsOf(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    sc.setJobGroup(s"$group-marker", group)
+    spark.range(1).count()
+    sc.clearJobGroup()
+    val deadline = System.currentTimeMillis() + 30000
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-marker").isEmpty &&
+           System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(sc.statusTracker.getJobIdsForGroup(s"$group-marker").nonEmpty,
+      "marker job never observed")
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("a manifest loaded under one spelling of a directory serves another without a job") {
+    val base = Files.createTempDirectory("graft_zm_spell_").toString
+    val out = s"$base/t"; val mf = s"$base/m"
+    ZoneMaps.clusteredWrite(tables.orders, "o_orderkey", out, 4)
+    ZoneMaps.writeManifest(spark, out, Seq("o_orderkey"), mf)
+    val loaded = ZoneMaps.loadManifest(spark, out, Seq("o_orderkey"), mf)
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val jobs = jobsOf("zm-spell") {
+      rows = ZoneMaps.manifestRows(spark, s"file://$out", Seq("o_orderkey"))
+    }
+    assert(jobs == 0, "the qualified spelling must read the loaded record")
+    assert(rows.length == loaded.length)
+    ZoneMaps.forget(spark, out)
+  }
+
+  test("forget drops the directory's one record: rows, blooms and registration") {
+    val s = spark.newSession()
+    val d = Files.createTempDirectory("graft_zm_forget_").toString
+    ZoneMaps.clusteredWrite(tables.orders, "o_orderkey", d, 4)
+    try {
+      ZoneMaps.refreshManifest(s, d, Seq("o_orderkey"), Seq("o_orderkey"))
+      graft.sources.ZoneMapFileIndex.enable(s, s"file://$d", Seq("o_orderkey"),
+        Seq("o_orderkey"))
+      assert(ZoneMaps.manifestRows(s, d, Seq("o_orderkey")).length == 4)
+      assert(ZoneMaps.membershipRows(s, d, "o_orderkey").length == 4)
+      val entries = SessionCaches.entriesFor(s)
+      ZoneMaps.forget(s, s"file://$d")
+      assert(SessionCaches.entriesFor(s) == entries - 1,
+        "rows, blooms and registration are one entry")
+      assert(graft.sources.ZoneMapFileIndex.registeredForDir(s, d).isEmpty)
+      assert(ZoneMaps.membershipSourceIfSeeded(s, d, "o_orderkey").isEmpty)
+      assert(ZoneMaps.zoneTable(s, d).rows.isEmpty &&
+        ZoneMaps.zoneTable(s, d).cols.isEmpty)
+    } finally SessionCaches.release(s)
+  }
+
+  test("route priority: driver blooms built over a persisted-route load win, same survivors") {
+    val base = Files.createTempDirectory("graft_zm_route_").toString
+    val out = s"$base/t"; val mf = s"$base/m"
+    ZoneMaps.clusteredWrite(tables.lineitem, "l_partkey", out, 8)
+    ZoneMaps.writeManifest(spark, out, Seq("l_partkey"), mf,
+      bloomCols = Seq("l_partkey"))
+    spark.conf.set("spark.graft.zonemap.persistedConsultRows", "0")
+    try {
+      val man = ZoneMaps.loadManifest(spark, out, Seq("l_partkey"), mf)
+      assert(ZoneMaps.membershipSourceIfSeeded(spark, out, "l_partkey")
+        .exists(_.isRight), "the load above the threshold takes the persisted route")
+      val keys = Array(man.map(_.getAs[Long]("l_partkey_min")).min,
+        man.map(_.getAs[Long]("l_partkey_max")).max).sorted
+      val persisted = ZoneMaps.membershipPruneFilesDistributed(
+        spark.read.parquet(mf), "l_partkey", keys).toSet
+      assert(persisted.nonEmpty && persisted.size < man.length)
+      val mrows = ZoneMaps.membershipRows(spark, out, "l_partkey")
+      assert(ZoneMaps.membershipSourceIfSeeded(spark, out, "l_partkey")
+        .exists(_.isLeft), "driver blooms win over the persisted route")
+      assert(ZoneMaps.membershipPruneFiles(mrows, "l_partkey", keys).toSet ==
+        persisted)
+      val df = spark.read.parquet(registered(out, Seq("l_partkey"),
+        Seq("l_partkey"))).where(col("l_partkey").isin(keys.toSeq: _*))
+      assert(scannedFiles(df) == persisted.size)
+      assert(df.count() == tables.lineitem
+        .where(col("l_partkey").isin(keys.toSeq: _*)).count())
+    } finally {
+      spark.conf.unset("spark.graft.zonemap.persistedConsultRows")
+      ZoneMaps.forget(spark, out)
     }
   }
 }
