@@ -132,7 +132,8 @@ object GraftSession {
     * unreadable directory size falls back to [[analyzeForStats]]. */
   private[graft] def statsFromManifest(s: SparkSession, name: String,
       parquetDir: String, zoneCols: Seq[String],
-      rows: Array[org.apache.spark.sql.Row]): String = {
+      rows: Array[org.apache.spark.sql.Row],
+      schema: Option[org.apache.spark.sql.types.StructType] = None): String = {
     import org.apache.spark.sql.catalyst.{CatalystTypeConverters, TableIdentifier}
     import org.apache.spark.sql.catalyst.catalog.CatalogStatistics
     import org.apache.spark.sql.catalyst.plans.logical.ColumnStat
@@ -143,7 +144,7 @@ object GraftSession {
       s.sessionState.newHadoopConf()).getContentSummary(dirPath).getLength)
     if (size.isFailure) return analyzeForStats(s, name, parquetDir, zoneCols)
     s.conf.set("spark.sql.cbo.enabled", "true")
-    ensureExternalTable(s, name, parquetDir)
+    ensureExternalTable(s, name, parquetDir, schema)
     val ord = Ordering.fromLessThan[Any](
       graft.sources.ZoneMaps.cmpExternal(_, _) < 0)
     val rowCount = rows.map(_.getAs[Number]("n_rows").longValue).sum
@@ -186,9 +187,13 @@ object GraftSession {
   /** Register `name` as an external parquet table at `parquetDir`,
     * RE-POINTING it if a table of that name exists at another location —
     * a stale location would silently serve the old directory (and dodge
-    * the transparent-pruning registration keyed by the new one). */
+    * the transparent-pruning registration keyed by the new one). A caller
+    * that wrote the directory passes its `schema`: the table is declared
+    * with it (nullable, as a parquet write stores it — the schema Spark
+    * would infer) instead of running a schema-inference job. */
   private[graft] def ensureExternalTable(s: SparkSession, name: String,
-                                         parquetDir: String): Unit = {
+      parquetDir: String,
+      schema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
     val existing = s.catalog.tableExists(name)
     val sameLocation = existing && {
       try s.sql(s"DESCRIBE TABLE EXTENDED $name").collect().exists(r =>
@@ -197,7 +202,10 @@ object GraftSession {
     }
     if (existing && !sameLocation) s.sql(s"DROP TABLE IF EXISTS $name")
     if (!existing || !sameLocation)
-      s.sql(s"CREATE TABLE $name USING parquet LOCATION '$parquetDir'")
+      s.sql(s"CREATE TABLE $name " +
+        schema.fold("")(st =>
+          s"(${org.apache.spark.sql.graft.SchemaBridge.asNullable(st).toDDL}) ") +
+        s"USING parquet LOCATION '$parquetDir'")
   }
 
   /** The INGEST RECIPE — one call turns a raw parquet directory into a
@@ -210,14 +218,18 @@ object GraftSession {
     *      ([[graft.sources.ZoneMaps.clusteredWriteZN]] — one layout
     *      serving range predicates on ANY of the columns; `equiDepth`
     *      picks rank-space buckets for skewed keys);
-    *   2. build the zone-map manifest over ALL zone columns (+ per-file
-    *      key Bloom filters for `bloomCols` — the membership grade) —
+    *   2. build the zone-map manifest over ALL zone columns off the
+    *      footers of the files step 1 just wrote — no second scan of them
+    *      (per-file key Bloom filters for `bloomCols`, the membership
+    *      grade, and float/double zone columns take one stats scan) —
     *      recorded for this session, and PERSISTED when `manifestPath` is
     *      given (the production form: a fresh session calls
     *      [[graft.sources.ZoneMaps.loadManifest]] and prunes for the cost
     *      of #files manifest rows, never re-scanning the data);
-    *   3. register as a catalog table and ANALYZE column stats with CBO on
-    *      ([[analyzeForStats]]) — NDV feeds
+    *   3. register as a catalog table (declared with the written schema —
+    *      no inference job) and fold its stats from the manifest
+    *      ([[statsFromManifest]]), or ANALYZE column stats with CBO on
+    *      ([[analyzeForStats]]) for non-zone `statsCols` — NDV feeds
     *      [[graft.plans.RewriteLowCardWindow]]'s stats trigger and size
     *      stats feed its small-input bypass, join planning, and d38-style
     *      operator routing;
@@ -260,12 +272,13 @@ object GraftSession {
       s"prepareTable: outDir ($outDir) must not equal or nest with srcDir ($srcDir)")
     require(bloomCols.forall(zoneCols.contains),
       s"prepareTable: bloomCols ($bloomCols) must be among zoneCols ($zoneCols)")
+    val src = s.read.parquet(srcDir)
     zoneCols match {
       case Seq(a) => graft.sources.ZoneMaps.clusteredWrite(
-        s.read.parquet(srcDir), a, outDir, nFiles)
+        src, a, outDir, nFiles)
       case cs if cs.lengthCompare(2) >= 0 && cs.lengthCompare(4) <= 0 =>
         graft.sources.ZoneMaps.clusteredWriteZN(
-          s.read.parquet(srcDir), cs, outDir, nFiles, equiDepth)
+          src, cs, outDir, nFiles, equiDepth)
       case _ => throw new IllegalArgumentException(
         s"prepareTable: 1 (range) or 2-4 (Z-order) zone columns, got $zoneCols")
     }
@@ -277,8 +290,8 @@ object GraftSession {
         graft.sources.ZoneMaps.persistManifest(s, outDir, zoneCols, p, bloomCols)
       case None =>
         // no durable path asked for: still seed the session record (the
-        // refreshManifest discipline, membership included) via ONE scan —
-        // bloomCols ride the same build
+        // refreshManifest discipline, membership included) — bloomCols
+        // ride one stats scan
         graft.sources.ZoneMaps.refreshManifest(s, outDir, zoneCols, bloomCols)
     }
     graft.sources.ZoneMapFileIndex.enable(s, outDir, zoneCols, bloomCols,
@@ -292,7 +305,7 @@ object GraftSession {
     val extraStats = statsCols.filterNot(zoneCols.contains)
     if (extraStats.nonEmpty || manRows.isEmpty)
       analyzeForStats(s, name, outDir, (zoneCols ++ extraStats).toSeq)
-    else statsFromManifest(s, name, outDir, zoneCols, manRows)
+    else statsFromManifest(s, name, outDir, zoneCols, manRows, Some(src.schema))
   }
 
   /** The QUERY-SESSION half of the durable recipe — [[prepareTable]] is

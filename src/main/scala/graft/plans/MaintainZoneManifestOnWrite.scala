@@ -23,7 +23,7 @@ import graft.sources.{ZoneMapFileIndex, ZoneMaps}
   * (correct but unpruned). This is the table-format write path one rung
   * below a DSv2 `SupportsWrite`: Delta/Iceberg fold their log forward in
   * the commit; here the fold is the batch-incremental manifest merge
-  * ([[graft.sources.ZoneMaps.incrementalBuild]] — scans ONLY the files
+  * ([[graft.sources.ZoneMaps.incrementalBuild]] — reads ONLY the files
   * the standing manifest has not seen, cost ∝ the insert, never the
   * standing table) plus a #files-row rewrite of the persisted manifest
   * when the registration carries one.

@@ -339,8 +339,7 @@ object ZoneMapFileIndex {
             // record holds envelopes only); only surviving file names come
             // back. Identical survivor kernel as the driver route.
             val byBloom = ZoneMaps.membershipPruneFilesDistributed(
-              spark.read.parquet(
-                ZoneMaps.resolveManifestPath(spark, manifestPath)), c, ks).toSet
+              ZoneMaps.readManifest(spark, manifestPath)._1, c, ks).toSet
             byEnvelope.filter(byBloom.contains)
           case None => byEnvelope
         }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import org.apache.spark.internal.Logging
 
@@ -32,7 +33,10 @@ import graft.SessionKeyedCache
   *     nothing. Range clustering makes file envelopes DISJOINT (up to
   *     boundary ties), so a point/range predicate overlaps O(selectivity ·
   *     nFiles) envelopes — the write-side half of the contract.
-  *   - [[build]]: ONE distributed scan → one manifest row per file
+  *   - the manifest, one row per file: read off the files' parquet
+  *     FOOTERS ([[FileStats]]), so the ingest recipe never re-scans the
+  *     files it just wrote, or — for blooms, float/double columns and
+  *     footers without the statistics — [[build]]'s ONE distributed scan
   *     (`input_file_name()` group keys; partial aggregation bounds the
   *     exchange to #files rows). In production the manifest is a durable
   *     table maintained per ingest batch (the p21 shard-manifest
@@ -205,42 +209,24 @@ object ZoneMaps extends Logging {
   def build(spark: SparkSession, dir: String, cols: Seq[String],
             bloomCols: Seq[String] = Nil,
             expectedKeysPerFile: Long = 1L << 13,
-            fpp: Double = 0.01): DataFrame = {
-    val statCols = (cols ++ bloomCols.filterNot(cols.contains)).toSeq
-    val aggs = count(lit(1)).as("n_rows") +: (statCols.flatMap { c =>
-      Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max"),
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}_nulls"))
-    } ++ bloomCols.map(c => bloomAgg(col(c), expectedKeysPerFile, fpp)
-      .as(s"${c}_bloom")))
-    spark.read.parquet(dir)
-      .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-  }
+            fpp: Double = 0.01): DataFrame =
+    FileStats.aggregate(spark.read.parquet(dir), cols, bloomCols,
+      c => FileStats.bloomAgg(col(c), expectedKeysPerFile, fpp))
 
-  /** A per-group Bloom filter over `keyCol` cast to long — the sketch
-    * [[build]] (membership manifests) inserts with;
-    * the driver probe uses the library's own `mightContainLong`, the exact
-    * hash, so a present key can never probe false (no false negatives). */
-  private def bloomAgg(keyCol: Column, expectedKeysPerFile: Long,
-                       fpp: Double): Column = {
-    require(fpp > 0 && fpp < 1, s"fpp=$fpp must be in (0, 1)")
-    bloomAggSized(keyCol, expectedKeysPerFile, math.ceil(
-      -expectedKeysPerFile * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
-  }
+  /** `dir`'s manifest through [[FileStats.of]]: off the footers, else
+    * [[build]]'s scan. */
+  private def manifestOf(spark: SparkSession, dir: String, cols: Seq[String],
+                         bloomCols: Seq[String], expectedKeysPerFile: Long = 1L << 13)
+      : Either[DataFrame, (StructType, Array[Row])] =
+    FileStats.of(spark, FileStats.listing(spark, dir), cols, bloomCols,
+      build(spark, dir, cols, bloomCols, expectedKeysPerFile))
 
-  /** [[bloomAgg]] with the bit width pinned directly — the fold path sizes
-    * fresh-file blooms to the STANDING manifest's measured width instead of
-    * re-deriving it from a (possibly wrong) expectedKeysPerFile guess. */
-  private def bloomAggSized(keyCol: Column, expectedItems: Long,
-                            numBits: Long): Column = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.toColumn(new BloomFilterAggregate(
-      ColumnBridge.toExpression(keyCol.cast("long")),
-      Literal(math.max(1L, expectedItems)),
-      Literal(math.max(64L, numBits))).toAggregateExpression())
-  }
+  private def collected(m: Either[DataFrame, (StructType, Array[Row])]): Array[Row] =
+    m.fold(_.collect(), _._2)
+
+  private def rowsFrame(spark: SparkSession, schema: StructType,
+                        rows: Array[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** The path a reader loads the durable manifest at `p` from
     * ([[DurableSwap.resolve]]): `p`, or the copy a fold parked mid-swap. */
@@ -250,6 +236,12 @@ object ZoneMaps extends Logging {
     DurableSwap.resolve(
       hp.getFileSystem(spark.sessionState.newHadoopConf()), hp).toString
   }
+
+  /** The durable manifest at `p` ([[resolveManifestPath]]) and its row
+    * count, both off its own footers ([[FileStats.read]]). */
+  private[sources] def readManifest(spark: SparkSession,
+                                    p: String): (DataFrame, Option[Long]) =
+    FileStats.read(spark, resolveManifestPath(spark, p))
 
   /** Replace the durable manifest at `p` with `df` through
     * [[DurableSwap.replace]]. `df` is built after a manifest parked by a
@@ -334,7 +326,7 @@ object ZoneMaps extends Logging {
     else {
       val cs = (t.cols ++ cols).distinct
       val bs = (t.blooms ++ blooms).distinct
-      val rows = build(spark, dir, cs, bs).collect()
+      val rows = collected(manifestOf(spark, dir, cs, bs))
       replaceRows(spark, dir, rows, cs, bs)
       rows
     }
@@ -354,13 +346,13 @@ object ZoneMaps extends Logging {
     * recorded rows name the old files, and a stale manifest prunes to
     * paths that no longer exist. [[graft.GraftSession.prepareTable]] calls
     * this, so re-running the ingest recipe in one session stays
-    * consistent. `bloomCols` ride the SAME build (one scan carries
-    * envelopes AND blooms), so the record serves membership too. */
+    * consistent. The rows come off the files' footers when they can
+    * ([[FileStats.of]]); `bloomCols` ride ONE scan that carries envelopes AND
+    * blooms, so the record serves membership too. */
   def refreshManifest(spark: SparkSession, dir: String,
                       cols: Seq[String],
                       bloomCols: Seq[String] = Nil): Array[Row] = {
-    val rows = build(spark, dir, cols, bloomCols,
-      expectedKeysPerFile = 1L << 13).collect()
+    val rows = collected(manifestOf(spark, dir, cols, bloomCols))
     replaceRows(spark, dir, rows, cols, bloomCols)
     rows
   }
@@ -397,7 +389,7 @@ object ZoneMaps extends Logging {
     * same object [[writeManifest]] produces, so a fresh session's
     * [[loadManifest]] sees the inserted files too). Rows that cannot serve
     * as the standing manifest degrade to a from-scratch build of the
-    * directory — one stats scan, never wrong. */
+    * directory — never wrong. */
   private[graft] def foldManifestForward(
       spark: SparkSession, reg: ZoneMapFileIndex.Registration): Unit = {
     val t = zoneTable(spark, reg.dir)
@@ -418,10 +410,9 @@ object ZoneMaps extends Logging {
           // with no schema to name, drop it so loadManifest fails loudly
           updated.headOption.orElse(t.rows.headOption).map(_.schema)
             .orElse(scala.util.Try(
-              spark.read.parquet(resolveManifestPath(spark, p)).schema).toOption)
+              readManifest(spark, p)._1.schema).toOption)
           match {
-            case Some(sch) => swapManifest(spark, p)(spark.createDataFrame(
-              java.util.Arrays.asList(updated: _*), sch))
+            case Some(sch) => swapManifest(spark, p)(rowsFrame(spark, sch, updated))
             case None =>
               val hp = new org.apache.hadoop.fs.Path(p)
               hp.getFileSystem(spark.sessionState.newHadoopConf())
@@ -446,7 +437,7 @@ object ZoneMaps extends Logging {
                                     reg: ZoneMapFileIndex.Registration,
                                     t: ZoneTable, p: String): Unit = {
     def norm(f: String): String = ZoneMapFileIndex.normPath(f)
-    val listing = spark.read.parquet(reg.dir).inputFiles
+    val listing = FileStats.dataFiles(spark, reg.dir)._1
     val current = listing.map(norm).toSet
     val known = t.rows.map(r => norm(r.getAs[String]("file"))).toSet
     val fresh = listing.filterNot(f => known(norm(f)))
@@ -454,12 +445,10 @@ object ZoneMaps extends Logging {
     // record's rows ARE collected manifest rows, so the strings match exactly)
     val keptNames = t.rows.map(_.getAs[String]("file"))
       .filter(f => current(norm(f)))
-    val statCols = (reg.zoneCols ++
-      reg.bloomCols.filterNot(reg.zoneCols.contains)).toSeq
     // the block reads `p` while the swap writes its scratch sibling; it
     // runs after a manifest parked by a crashed fold is restored
     swapManifest(spark, p) {
-      val man = spark.read.parquet(p)
+      val man = readManifest(spark, p)._1
       val keptDf = man.join(
         broadcast(spark.createDataFrame(
           java.util.Arrays.asList(keptNames.map(org.apache.spark.sql.Row(_)): _*),
@@ -496,24 +485,18 @@ object ZoneMaps extends Logging {
             }
         }.toOption.flatten
       }.toMap
-      val aggs = count(lit(1)).as("n_rows") +: (statCols.flatMap { c =>
-        Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max"),
-          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}_nulls"))
-      } ++ reg.bloomCols.map { c =>
-        (freshBloomParams.get(c) match {
-          case Some((items, bits)) => bloomAggSized(col(c), items, bits)
-          case None => bloomAgg(col(c), 1L << 13, 0.01)
-        }).as(s"${c}_bloom")
-      })
       if (fresh.isEmpty) keptDf
       else keptDf.unionByName(
-        spark.read.parquet(fresh.toIndexedSeq.map(readablePath): _*)
-          .groupBy(input_file_name().as("file"))
-          .agg(aggs.head, aggs.tail: _*),
+        FileStats.aggregate(FileStats.reader(spark, t.rows,
+            reg.zoneCols ++ reg.bloomCols).parquet(fresh.map(readablePath): _*),
+          reg.zoneCols, reg.bloomCols, c => freshBloomParams.get(c) match {
+            case Some((items, bits)) => FileStats.bloomAggSized(col(c), items, bits)
+            case None => FileStats.bloomAgg(col(c), 1L << 13, 0.01)
+          }),
         allowMissingColumns = false)
     }
     // the record keeps the loadManifest policy (the table IS the big route)
-    val rows = spark.read.parquet(p)
+    val rows = readManifest(spark, p)._1
       .drop(reg.bloomCols.map(c => s"${c}_bloom"): _*).collect()
     replaceRows(spark, reg.dir, rows, reg.zoneCols, reg.bloomCols, Some(p))
   }
@@ -612,12 +595,14 @@ object ZoneMaps extends Logging {
     * maintain with [[incrementalBuild]] + rewrite). One tiny write:
     * #files rows (× bloom bytes when `bloomCols` is non-empty — size the
     * blooms to the real per-file key count, [[membershipRows]]'s note),
-    * swapped in crash-safely over any manifest already at the path. */
+    * swapped in crash-safely over any manifest already at the path (a
+    * scan is written straight through, never collected). */
   def writeManifest(spark: SparkSession, dir: String, cols: Seq[String],
                     manifestPath: String, bloomCols: Seq[String] = Nil,
                     expectedKeysPerFile: Long = 1L << 13): Unit =
     swapManifest(spark, manifestPath)(
-      build(spark, dir, cols, bloomCols, expectedKeysPerFile))
+      manifestOf(spark, dir, cols, bloomCols, expectedKeysPerFile)
+        .fold(identity, { case (schema, rows) => rowsFrame(spark, schema, rows) }))
 
   /** Load a persisted manifest into the session record so every
     * [[ZoneMapFileIndex]] scan of `dir` (and every [[pruneFiles]] /
@@ -644,11 +629,12 @@ object ZoneMaps extends Logging {
   def loadManifest(spark: SparkSession, dir: String, cols: Seq[String],
                    manifestPath: String): Array[Row] = {
     // a manifest parked by a crashed swap still opens (read-only)
-    val df = spark.read.parquet(resolveManifestPath(spark, manifestPath))
+    val (df, n) = readManifest(spark, manifestPath)
     val blooms = df.schema.fieldNames.filter(_.endsWith("_bloom"))
       .map(_.stripSuffix("_bloom")).toSeq
-    // #rows from parquet footers — a metadata-only job, no bloom bytes move
-    val big = blooms.nonEmpty && df.count() > persistedConsultThreshold(spark)
+    // #rows off the manifest's own footers: no job, no bloom bytes move
+    val big = blooms.nonEmpty &&
+      n.getOrElse(df.count()) > persistedConsultThreshold(spark)
     val rows =
       if (big) df.drop(blooms.map(c => s"${c}_bloom"): _*).collect()
       else df.collect()
@@ -657,20 +643,29 @@ object ZoneMaps extends Logging {
     rows
   }
 
-  /** The durable-ingest step: build the manifest with ONE data scan,
-    * persist it at `manifestPath` AND load it into the session record —
-    * so THIS session prunes immediately and every FRESH session gets
-    * pruning for the cost of reading #files manifest rows
-    * ([[loadManifest]]) instead of re-scanning the data. The load
-    * replaces whatever the record held (the caller just rewrote the
-    * directory). `bloomCols` makes the SAME durable row set carry per-file
-    * key blooms, so membership pruning survives sessions too. */
+  /** The durable-ingest step: build the manifest ([[FileStats.of]]),
+    * persist it at `manifestPath` AND keep the rows it wrote as the
+    * session record — so THIS session prunes immediately and every FRESH
+    * session gets pruning for the cost of reading #files manifest rows
+    * ([[loadManifest]]) instead of re-scanning the data. The rows replace
+    * whatever the record held (the caller just rewrote the directory).
+    * `bloomCols` makes the SAME durable row set carry per-file key
+    * blooms, so membership pruning survives sessions too; that scan is
+    * written straight through and loaded back, so [[loadManifest]]'s size
+    * rule keeps bloom bytes off the driver. */
   def persistManifest(spark: SparkSession, dir: String, cols: Seq[String],
                       manifestPath: String,
-                      bloomCols: Seq[String] = Nil): Array[Row] = {
-    writeManifest(spark, dir, cols, manifestPath, bloomCols)
-    loadManifest(spark, dir, cols, manifestPath)
-  }
+                      bloomCols: Seq[String] = Nil): Array[Row] =
+    if (bloomCols.nonEmpty) {
+      writeManifest(spark, dir, cols, manifestPath, bloomCols)
+      loadManifest(spark, dir, cols, manifestPath)
+    } else {
+      val (schema, rows) = manifestOf(spark, dir, cols, Nil)
+        .fold(df => (df.schema, df.collect()), identity)
+      swapManifest(spark, manifestPath)(rowsFrame(spark, schema, rows))
+      replaceRows(spark, dir, rows, cols, Nil)
+      rows
+    }
 
   /** Join-driven file pruning — dynamic partition pruning at the FILE
     * grain: bound the dim side's join-key domain with one tiny aggregate
@@ -796,15 +791,16 @@ object ZoneMaps extends Logging {
   }
 
   /** Batch-incremental manifest maintenance — the p58 census discipline at
-    * the file grain: scan ONLY files the standing manifest has not seen
-    * (cost ∝ the ingest batch, never the standing 100 TB), drop rows for
+    * the file grain: read ONLY files the standing manifest has not seen
+    * ([[FileStats.of]]: their footers, or one scan of just them — cost ∝
+    * the ingest batch, never the standing 100 TB), drop rows for
     * files that vanished (compaction/retention), keep the rest verbatim.
     * Per-file stats never change after the file is written (parquet files
     * are immutable), so the merge is row union — the maintained manifest
     * equals a from-scratch [[build]] exactly (spec-pinned). `bloomCols`
     * rides the same contract: a file's key bloom is as immutable as its
-    * envelope, so the membership manifest maintains by the identical
-    * batch-only scan + row union. */
+    * envelope, so the membership manifest maintains by a batch-only scan
+    * + row union. */
   def incrementalBuild(spark: SparkSession, dir: String, cols: Seq[String],
                        standing: Array[Row],
                        bloomCols: Seq[String] = Nil,
@@ -817,24 +813,18 @@ object ZoneMaps extends Logging {
     def norm(f: String): String = ZoneMapFileIndex.normPath(f)
     // ONE listing serves both sides — at 10⁵–10⁶ files the listing is the
     // dominant metadata cost of the maintenance call
-    val listing = spark.read.parquet(dir).inputFiles
+    val (listing, statuses) = FileStats.dataFiles(spark, dir)
     val current = listing.map(norm).toSet
     val kept = standing.filter(r => current(norm(r.getAs[String]("file"))))
     val known = standing.map(r => norm(r.getAs[String]("file"))).toSet
     val fresh = listing.filterNot(f => known(norm(f)))
     if (fresh.isEmpty) kept
-    else {
-      val statCols = (cols ++ bloomCols.filterNot(cols.contains)).toSeq
-      val aggs = count(lit(1)).as("n_rows") +: (statCols.flatMap { c =>
-        Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max"),
-          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}_nulls"))
-      } ++ bloomCols.map(c => bloomAgg(col(c), expectedKeysPerFile, 0.01)
-        .as(s"${c}_bloom")))
-      kept ++ spark.read.parquet(fresh.toIndexedSeq.map(readablePath): _*)
-        .groupBy(input_file_name().as("file"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect()
-    }
+    else kept ++ collected(FileStats.of(spark,
+      statuses.map(_.filterNot(s => known(norm(FileStats.fileName(s))))),
+      cols, bloomCols,
+      FileStats.aggregate(FileStats.reader(spark, standing, cols ++ bloomCols)
+          .parquet(fresh.map(readablePath): _*),
+        cols, bloomCols, c => FileStats.bloomAgg(col(c), expectedKeysPerFile, 0.01))))
   }
 
   // ---- q133: the registered end-to-end proof ------------------------------
@@ -894,8 +884,14 @@ object ZoneMaps extends Logging {
     val cdir = clusteredLineitemByPart(spark, dir)
     clusteredCache.getOrElseUpdate(spark, s"$dir#partmanifest") {
       val out = Files.createTempDirectory("graft_zonemap_mm_").toString + "/m"
-      writeManifest(spark, cdir, Seq("l_partkey"), out,
-        bloomCols = Seq("l_partkey"))
+      // the record's bloom rows (warmed by membershipRows) are exactly
+      // writeManifest's: write them instead of re-scanning the layout
+      val rows = membershipRows(spark, cdir, "l_partkey")
+      rows.headOption.map(_.schema) match {
+        case Some(schema) => swapManifest(spark, out)(rowsFrame(spark, schema, rows))
+        case None => writeManifest(spark, cdir, Seq("l_partkey"), out,
+          bloomCols = Seq("l_partkey"))
+      }
       out
     }
   }
@@ -1334,7 +1330,8 @@ object ZoneMaps extends Logging {
       refreshManifest(spark, out, Seq("l_retqty"))
       ZoneMapFileIndex.enable(spark, out, Seq("l_retqty"))
       graft.GraftSession.ensureOptimizations(spark)
-      graft.GraftSession.ensureExternalTable(spark, "graft_q145_nulls", out)
+      graft.GraftSession.ensureExternalTable(spark, "graft_q145_nulls", out,
+        Some(src.schema))
       out
     }
 
@@ -1491,7 +1488,7 @@ object ZoneMaps extends Logging {
     // getOrElse keeps the guard visible in the proof query)
     val keys = boundedDimKeys(dim, "p_partkey").getOrElse(sys.error(
       "q139: demo dim slice exceeded the membership key guard"))
-    val manifest = spark.read.parquet(persistedPartManifest(spark, dir))
+    val manifest = readManifest(spark, persistedPartManifest(spark, dir))._1
     // files_total from the (warmed) session record — the #files count is
     // metadata the session already holds; no count() job per call
     val total = membershipRows(spark, cdir, "l_partkey").length

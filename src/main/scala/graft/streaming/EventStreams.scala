@@ -322,11 +322,14 @@ object EventStreams {
 
   /** Streaming zone-map manifest maintenance — the metadata layer kept
     * current WHILE the ingest stream writes: each micro-batch lands its
-    * rows as new parquet files under `dir`, then the session's record of
-    * the directory folds forward ([[graft.sources.ZoneMaps.foldRows]] over
+    * rows as new parquet files under `dir`, then the directory's record in
+    * the session that defined the stream (`rowStream`'s, whose queries
+    * read `dir`; not the streaming query's own clone) folds forward
+    * ([[graft.sources.ZoneMaps.foldRows]] over
     * [[graft.sources.ZoneMaps.incrementalBuild]]) — the one listing serves
-    * both sides, only the batch's NEW files are scanned (per-file stats
-    * are immutable, so the merge is row union),
+    * both sides, only the batch's NEW files are read (footers, or a scan
+    * for bloom columns; per-file stats are immutable, so the merge is row
+    * union),
     * and the maintained manifest equals a from-scratch build of the
     * directory after every batch (spec-pinned). `bloomCols` maintains the
     * MEMBERSHIP grade under the same contract (a file's key bloom is as
@@ -349,15 +352,17 @@ object EventStreams {
                             cols: Seq[String],
                             onBatch: (Array[Row], Long) => Unit,
                             bloomCols: Seq[String] = Nil): DataStreamWriter[Row] = {
+    val owner = rowStream.sparkSession
     rowStream.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         idempotentBatchAppend(dir, batch, batchId)
-        // the standing manifest IS `dir`'s record in the batch's session
-        // (the streaming query's own): a transparent scan there consults
-        // rows that know the new files instead of riding the stale guard
+        // the standing manifest IS `dir`'s record in the defining session
+        // (`batch.sparkSession` is the query's own clone, which no reader
+        // of `dir` uses): its transparent scans consult rows that know the
+        // new files instead of riding the stale guard
         val updated = graft.sources.ZoneMaps.foldRows(
-          batch.sparkSession, dir, cols, bloomCols)
+          owner, dir, cols, bloomCols)
         onBatch(updated, batchId)
       }
   }

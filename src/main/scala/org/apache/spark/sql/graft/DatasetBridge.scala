@@ -17,3 +17,10 @@ object DatasetBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }
+
+/** The schema a file-source write stores for `st`: every field nullable,
+  * at every depth (`StructType.asNullable` is `private[spark]`). */
+object SchemaBridge {
+  def asNullable(st: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = st.asNullable
+}

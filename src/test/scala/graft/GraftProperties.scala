@@ -442,6 +442,60 @@ object GraftProperties extends Properties("graft") {
     }
   }
 
+  property("footer-built manifests equal the scan's rows on arbitrary layouts") = {
+    // arbitrary long / int / short / byte / boolean / date / timestamp_ntz
+    // / timestamp (written as INT64 micros) / decimal (INT64 and
+    // fixed-length) / string columns, ~1 in 5 NULL, range-split into 1-5
+    // files under a directory whose name holds a space — plus, now and
+    // then, an all-NULL file, or no rows at all (one empty file). The
+    // manifest must come off the footers (no job) and equal the scan's
+    // rows field for field: same schema, same classes, same values
+    def opt[T](g: Gen[T]): Gen[Option[T]] =
+      Gen.frequency(4 -> g.map(Some(_)), 1 -> Gen.const(None))
+    val rowGen = for {
+      l <- opt(Gen.chooseNum(Long.MinValue / 2, Long.MaxValue / 2))
+      i <- opt(Gen.chooseNum(Int.MinValue, Int.MaxValue))
+      d <- opt(Gen.chooseNum(-150000, 60000))
+      t <- opt(Gen.chooseNum(-4000000000000000L, 4000000000000000L))
+      m <- opt(Gen.chooseNum(-99999999999L, 99999999999L))
+      s <- opt(nastyString)
+    } yield (l, i, d, t, m, s)
+    val layout = Gen.frequency(
+      1 -> Gen.listOfN(0, rowGen),
+      6 -> Gen.chooseNum(1, 40).flatMap(Gen.listOfN(_, rowGen)))
+    Prop.forAllNoShrink(layout, Gen.chooseNum(1, 5), Gen.oneOf(true, false)) {
+      (rows, nFiles, nullFile) =>
+        val dir = java.nio.file.Files.createTempDirectory("graft prop footer ")
+          .resolve("t").toString
+        val df = rows.toDF("l", "i", "d0", "t0", "m0", "s").select(col("l"),
+          col("i"), date_from_unix_date(col("d0")).as("d"),
+          timestamp_micros(col("t0")).cast("timestamp_ntz").as("t"),
+          timestamp_micros(col("t0")).as("u"),
+          (col("i") % 32768).cast("short").as("h"),
+          (col("i") % 128).cast("byte").as("b"), (col("i") % 2 === 0).as("z"),
+          (col("m0").cast("decimal(20,0)") / 100).cast("decimal(12,2)").as("m"),
+          (col("m0").cast("decimal(20,0)") / 10000).cast("decimal(30,4)").as("w"),
+          col("s"))
+        // INT96, Spark's default for TIMESTAMP, keeps no footer statistics
+        spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        try {
+          df.repartitionByRange(nFiles, col("l")).write.parquet(dir)
+          if (nullFile && rows.nonEmpty)
+            spark.createDataFrame(java.util.Arrays.asList(
+                org.apache.spark.sql.Row.fromSeq(Seq.fill(df.schema.length)(null))),
+              df.schema).coalesce(1).write.mode("append").parquet(dir)
+        } finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
+        val cols = Seq("l", "i", "h", "b", "z", "d", "t", "u", "m", "w", "s")
+        var got = Array.empty[org.apache.spark.sql.Row]
+        val jobs = SparkTestSession.jobsOf(s"prop-footer-$dir") {
+          got = graft.sources.ZoneMaps.manifestRows(spark, dir, cols)
+        }
+        val scanned = graft.sources.ZoneMaps.build(spark, dir, cols).collect()
+        graft.sources.ZoneMaps.forget(spark, dir)
+        jobs == 0 && SparkTestSession.sameManifest(got, scanned)
+    }
+  }
+
   property("the commit ledger names exactly the committed ids through compaction crashes") = {
     // a step is 0 (commit the next id: its marker lands), k in 1..12 (a
     // compaction that crashes after its k-th filesystem step; early steps

@@ -20,6 +20,38 @@ object SparkTestSession {
     case o => o.children.flatMap(fileScans)
   }
 
+  /** The Spark jobs `body` ran: its jobs run under job group `group`,
+    * counted once a marker job submitted after them has been observed (the
+    * status tracker learns of jobs asynchronously). */
+  def jobsOf(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    sc.setJobGroup(s"$group-marker", group)
+    spark.range(1).count()
+    sc.clearJobGroup()
+    val deadline = System.currentTimeMillis() + 30000
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-marker").isEmpty &&
+           System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(sc.statusTracker.getJobIdsForGroup(s"$group-marker").nonEmpty,
+      "marker job never observed")
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** Are `a` and `b` the same manifest rows in any order: the same
+    * schema, and per field the same value of the same class? */
+  def sameManifest(a: Array[org.apache.spark.sql.Row],
+                   b: Array[org.apache.spark.sql.Row]): Boolean = {
+    def canon(rs: Array[org.apache.spark.sql.Row]) =
+      rs.sortBy(_.getAs[String]("file")).toSeq.map(r => (r.schema,
+        r.toSeq.map {
+          case null => null
+          case bs: Array[Byte] => bs.toSeq
+          case v => (v.getClass, v)
+        }))
+    canon(a) == canon(b)
+  }
+
   /** Runs `df`, then sums the plan's `numFiles` scan metric: the files the
     * query really opened (0 when the optimizer removed every scan). */
   def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {

@@ -914,4 +914,29 @@ class StreamingSpec extends AnyFunSuite {
       "k", Array(40L, 55L))
     assert(pruned.nonEmpty && pruned.length < fresh.length)
   }
+
+  test("streamed zone-map folds land in the defining session: no stale serves") {
+    implicit val sql = spark.sqlContext
+    import graft.sources.ZoneMapFileIndex
+    val dir = java.nio.file.Files.createTempDirectory("graft_zm_stream_own_")
+      .resolve("t").toString
+    registered(dir, Seq("k"))
+    val mem = MemoryStream[(Long, Double)]
+    val q = EventStreams.maintainZoneMapStream(
+      mem.toDF().toDF("k", "v"), dir, Seq("k"), (_, _) => ()).start()
+    try {
+      def read = spark.read.parquet(dir).where(col("k") === 1L)
+      mem.addData((1L, 0.5), (2L, 1.5)); q.processAllAvailable()
+      assert(scannedFiles(read) == 1)
+      mem.addData((10L, 2.5), (11L, 3.5)); q.processAllAvailable()
+      // batch 1's file folded into THIS session's record: the k = 1 read
+      // prunes it instead of keeping it as a file the manifest never saw
+      val after = read
+      assert(scannedFiles(after) == 1 && after.count() == 1)
+      assert(ZoneMapFileIndex.staleServesFor(dir) == 0)
+    } finally {
+      q.stop()
+      graft.sources.ZoneMaps.forget(spark, dir)
+    }
+  }
 }

@@ -1081,21 +1081,6 @@ class ZoneMapsSpec extends AnyFunSuite {
 
   /** Jobs `body` launches, read off a job group (a marker job in a second
     * group shows the status tracker has caught up). */
-  private def jobsOf(group: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try body finally sc.clearJobGroup()
-    sc.setJobGroup(s"$group-marker", group)
-    spark.range(1).count()
-    sc.clearJobGroup()
-    val deadline = System.currentTimeMillis() + 30000
-    while (sc.statusTracker.getJobIdsForGroup(s"$group-marker").isEmpty &&
-           System.currentTimeMillis() < deadline) Thread.sleep(50)
-    assert(sc.statusTracker.getJobIdsForGroup(s"$group-marker").nonEmpty,
-      "marker job never observed")
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
-
   test("a manifest loaded under one spelling of a directory serves another without a job") {
     val base = Files.createTempDirectory("graft_zm_spell_").toString
     val out = s"$base/t"; val mf = s"$base/m"
@@ -1162,5 +1147,89 @@ class ZoneMapsSpec extends AnyFunSuite {
       spark.conf.unset("spark.graft.zonemap.persistedConsultRows")
       ZoneMaps.forget(spark, out)
     }
+  }
+
+  test("footer-built manifest: an integral or timestamp layout builds with zero jobs") {
+    val d = Files.createTempDirectory("graft_zm_footer_").toString
+    ZoneMaps.clusteredWrite(tables.lineitem, "l_shipdate", d, 4)
+    val cols = Seq("l_shipdate", "l_orderkey", "l_linenumber", "l_returnflag")
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val jobs = jobsOf("zm-footer") {
+      rows = ZoneMaps.manifestRows(spark, d, cols)
+    }
+    assert(jobs == 0, "the rows come off the footers the write left")
+    assert(rows.length == 4 &&
+      sameManifest(rows, ZoneMaps.build(spark, d, cols).collect()))
+    // above Spark's parallel-discovery threshold the footers are read in
+    // one job over the file list, with the same rows
+    ZoneMaps.forget(spark, d)
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "2")
+    try {
+      val inJob = jobsOf("zm-footer-job") {
+        rows = ZoneMaps.manifestRows(spark, d, cols)
+      }
+      assert(inJob == 1 &&
+        sameManifest(rows, ZoneMaps.build(spark, d, cols).collect()))
+    } finally {
+      spark.conf.unset("spark.sql.sources.parallelPartitionDiscovery.threshold")
+      ZoneMaps.forget(spark, d)
+    }
+  }
+
+  test("footer route: a double, a bloom, a >4 KB string and a non-Spark file take the scan") {
+    import spark.implicits._
+    var n = 0
+    def viaScan(d: String, cols: Seq[String], blooms: Seq[String] = Nil): Unit = {
+      ZoneMaps.forget(spark, d)
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      n += 1
+      val jobs = jobsOf(s"zm-route-$n") {
+        rows = blooms.headOption.fold(ZoneMaps.manifestRows(spark, d, cols))(
+          ZoneMaps.membershipRows(spark, d, _))
+      }
+      assert(jobs > 0, s"$cols / blooms $blooms must take the scan")
+      assert(rows.nonEmpty &&
+        sameManifest(rows, ZoneMaps.build(spark, d, cols, blooms).collect()))
+      ZoneMaps.forget(spark, d)
+    }
+    val li = Files.createTempDirectory("graft_zm_route_li_").toString
+    ZoneMaps.clusteredWrite(tables.lineitem, "l_orderkey", li, 3)
+    viaScan(li, Seq("l_quantity"))
+    viaScan(li, Nil, Seq("l_orderkey"))
+    // parquet keeps no min/max for a column chunk over 4 KB of statistics
+    val wide = Files.createTempDirectory("graft_zm_route_wide_").toString + "/t"
+    Seq((1L, "x" * 5000), (2L, "y")).toDF("k", "s").coalesce(1)
+      .write.parquet(wide)
+    viaScan(wide, Seq("s"))
+    // a file written without Spark carries no Spark row schema
+    val plain = Files.createTempDirectory("graft_zm_route_plain_").toString
+    val schema = org.apache.parquet.schema.MessageTypeParser
+      .parseMessageType("message m { required int64 k; }")
+    val conf = spark.sessionState.newHadoopConf()
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(
+        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+          new org.apache.hadoop.fs.Path(s"$plain/part-0.parquet"), conf))
+      .withType(schema).withConf(conf).build()
+    val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+    try Seq(5L, 3L, 9L).foreach(k => w.write(groups.newGroup().append("k", k)))
+    finally w.close()
+    viaScan(plain, Seq("k"))
+  }
+
+  test("prepareTable (Z-order, persisted): at most 7 jobs, the catalog table reads as inferred") {
+    val base = Files.createTempDirectory("graft_zm_prepjobs_").toString
+    val out = s"$base/t"; val mf = s"$base/m"
+    val jobs = jobsOf("zm-prepare") {
+      GraftSession.prepareTable(spark, "graft_zm_prepjobs_spec",
+        s"$sf/lineitem.parquet", out, Seq("l_orderkey", "l_partkey"), Nil,
+        nFiles = 8, manifestPath = Some(mf))
+    }
+    assert(jobs <= 7, s"prepareTable ran $jobs jobs")
+    // the table is declared with the written schema instead of inferring
+    // it; it must read exactly as the inferred one
+    assert(spark.table("graft_zm_prepjobs_spec").schema ==
+      spark.read.parquet(out).schema)
+    spark.sql("DROP TABLE IF EXISTS graft_zm_prepjobs_spec")
+    ZoneMaps.forget(spark, out)
   }
 }
