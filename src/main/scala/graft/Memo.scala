@@ -52,8 +52,9 @@ object Memo {
     lookup(name, input, params, () => build.asInstanceOf[AnyRef], _ => ()).asInstanceOf[V]
 
   /** Drop (and unpersist) every memo entry of `spark`, leaving the
-    * path-keyed stores alone. */
-  def release(spark: SparkSession): Unit = entries.purgeSession(Some(spark), None)
+    * path-keyed stores alone: the reset specs use to force a rebuild.
+    * [[SessionCaches.release]] drops everything of a session. */
+  private[graft] def release(spark: SparkSession): Unit = entries.purgeSession(Some(spark), None)
 
   private def lookup(name: String, input: DataFrame, params: Seq[Any],
                      build: () => AnyRef, onDrop: AnyRef => Unit): AnyRef = {

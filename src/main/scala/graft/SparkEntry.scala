@@ -356,15 +356,7 @@ object SparkEntry {
     // pipeline over the sides.
     "d21_incremental_editdup" -> ((s, d) => {
       val docs = t(s, d).documents
-      val p = Dedup.sharedEditPairs(docs).select(col("d1"), col("d2"))
-      val crossIn = p
-        .where(col("d1") % 3 === 0 && col("d2") % 3 =!= 0)
-        .select(col("d1").as("doc_id"))
-        .unionAll(p.where(col("d2") % 3 === 0 && col("d1") % 3 =!= 0)
-          .select(col("d2").as("doc_id")))
-        .distinct()
-      docs.where(col("doc_id") % 3 === 0).select(col("doc_id"))
-        .join(crossIn, Seq("doc_id"), "left_anti")
+      Dedup.admitted(docs, Dedup.sharedEditPairs(docs), _ % 3 === 0)
     }),
     "d02_ngram_jaccard"   -> ((s, d) => Dedup.ngramJaccardPairs(t(s, d).documents)),
     "d03_minhash_lsh"     -> ((s, d) => Dedup.minHashLshPairs(t(s, d).documents)),
@@ -391,23 +383,14 @@ object SparkEntry {
     }),
     // d10: near-dup admission — same batch convention as d08; LSH
     // candidates + exact verify hash-match the exact-jaccard oracle (the
-    // d03 banding-recall precedent). The cross-side pair probe rides the
-    // memoized full pair frame (the d15 rule, r15): a cross pair collides
-    // in a band iff it collides in the full corpus (band buckets are
-    // per-doc, 16×4 on both paths) and the verify jaccard is per-pair, so
-    // the admission verdict is IDENTICAL to crossNearDupPairs' — without
-    // re-paying a second signature/band/verify pipeline per side.
+    // d03 banding-recall precedent). Admission rides the memoized full
+    // pair frame (the d15 rule, r15): band buckets are per-doc, so a
+    // cross pair collides in a band iff it collides in the full corpus,
+    // and the verify jaccard is per-pair — no second signature/band/
+    // verify pipeline per side.
     "d10_incremental_neardup" -> ((s, d) => {
       val docs = t(s, d).documents
-      val p = Dedup.minHashLshPairs(docs).select(col("d1"), col("d2"))
-      val crossIn = p
-        .where(col("d1") % 3 === 0 && col("d2") % 3 =!= 0)
-        .select(col("d1").as("doc_id"))
-        .unionAll(p.where(col("d2") % 3 === 0 && col("d1") % 3 =!= 0)
-          .select(col("d2").as("doc_id")))
-        .distinct()
-      docs.where(col("doc_id") % 3 === 0).select(col("doc_id"))
-        .join(crossIn, Seq("doc_id"), "left_anti")
+      Dedup.admitted(docs, Dedup.minHashLshPairs(docs), _ % 3 === 0)
     }),
     // d09: SemDeDup-style semantic clusters — cluster resolution over the
     // d06 pair family; approximate pairs (d06 recall spec) → rows-only
@@ -480,7 +463,7 @@ object SparkEntry {
     "s30_matryoshka"      -> ((s, d) => Knn.matryoshkaLadder(t(s, d).embeddings)),
     // s10: metadata-filtered search — PRE-filter semantics (corpus
     // restricted before ranking, k qualifying neighbors guaranteed);
-    // exact, the s01 discipline; filteredIvf recall-spec'd in KnnSpec
+    // exact, the s01 discipline
     "s10_filtered_knn"    -> ((s, d) => Knn.filteredBruteForce(t(s, d).embeddings)),
     // s11: incremental index upsert — frozen centers (trained on the
     // standing 4/5 of the corpus) assign ONLY the held-out batch, union

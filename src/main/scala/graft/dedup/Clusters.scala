@@ -187,8 +187,9 @@ object Clusters {
     * transitivity. One row per document that has at least one near-dup:
     * its cluster id (= smallest doc_id in the cluster), the cluster size,
     * and `keep` marking the one canonical document per cluster. A corpus
-    * clean keeps every unpaired document plus the `keep` rows — see
-    * [[dedupByClusters]]. */
+    * clean keeps every unpaired document plus the `keep` rows: an anti
+    * join of the corpus against the non-`keep` rows, transitively correct
+    * (A~C and B~C with no A~B pair still collapses {A,B,C} to A). */
   def dupClusters(docs: DataFrame, threshold: Double = 0.8,
                   bands: Int = 16, rowsPerBand: Int = 4, k: Int = 3): DataFrame = {
     val pairs = Dedup.minHashLshPairs(docs, threshold, bands, rowsPerBand, k)
@@ -234,8 +235,8 @@ object Clusters {
     * pairs into a STANDING label table without re-closing the full pair
     * graph. This completes the incremental-ingestion family: d08 admits
     * exact-new docs, d10 admits near-dup-new docs, and this keeps the
-    * cluster bookkeeping (d07's output, which p17's split and
-    * [[dedupByClusters]]'s clean consume) current as batches land.
+    * cluster bookkeeping (d07's output, which p17's split and the
+    * keeper clean consume) current as batches land.
     *
     * Correctness: the standing labels ARE a contracted forest (every id
     * points at its component's minimum), so closing the union graph is
@@ -285,17 +286,6 @@ object Clusters {
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
       .withColumn("keep", col("doc_id") === col("cluster_id"))
-
-  /** Corpus clean by cluster resolution: keep every document that has no
-    * near-dup plus the one canonical keeper per cluster. Unlike dropping
-    * each pair's larger id (the p01 shape — correct only when every
-    * follower is directly paired with its keeper), this is transitively
-    * correct: A~C and B~C with no A~B pair still collapses {A,B,C} to A.
-    * One anti join on doc_id; the corpus is never shuffled. */
-  def dedupByClusters(docs: DataFrame, clusters: DataFrame): DataFrame =
-    docs.join(
-      clusters.filter(!col("keep")).select(col("doc_id")),
-      Seq("doc_id"), "left_anti")
 
   /** d26: cluster-aware representative sampling — keep ⌈√size⌉ documents
     * per near-dup cluster instead of exactly one. The middle ground
@@ -587,7 +577,7 @@ object Clusters {
 
   /** d37: dedup drop profile — which QUALITY strata the near-dup sweep
     * deletes from: per t03-score decile, total docs, docs a
-    * [[dedupByClusters]] clean would drop (non-keeper cluster members)
+    * keeper clean would drop (non-keeper cluster members)
     * and the drop share in exact ppm. The interplay audit curation teams
     * run before committing a dedup pass: mass concentrated in LOW
     * deciles says dedup is removing junk (template spam duplicates
@@ -624,7 +614,7 @@ object Clusters {
     * duplicate family corroborates every internal edge). The per-edge
     * answer to d31's per-cluster density: d31 says WHICH cluster is
     * chain-merged, d36 says which EDGE to cut (feeding p46-style
-    * review queues before a dedupByClusters sweep).
+    * review queues before a keeper sweep).
     *
     * Distributed shape — the standard edge-iterator triangle count: the
     * symmetric edge list wedges on the shared center (one join), wedges

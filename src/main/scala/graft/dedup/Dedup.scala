@@ -265,7 +265,7 @@ object Dedup {
     // selfOrdered pushes d1 < d2 BELOW the distance computation: the self
     // cross otherwise verifies every unordered pair twice before the final
     // filter keeps one orientation
-    editCore(docs, docs, maxDist, selfOrdered = true)
+    editCore(docs, maxDist)
       .select(col("d1"), col("d2"), col("dist"),
         when(greatest(col("l1"), col("l2")) === 0, lit(1.0))
           .otherwise(lit(1.0) - col("dist").cast("double")
@@ -308,18 +308,7 @@ object Dedup {
     nPairs.join(nDocs, Seq("max_dist"))
   }
 
-  /** Cross-side d19 core (and the self-join's engine — d19 filters the
-    * cross of a frame with itself to d1 < d2): edit-distance pairs
-    * between an incoming frame (d1, probes its length bucket ± 1) and a
-    * standing frame (d2, stays in its home bucket), each qualifying pair
-    * emitted exactly once (the home side's single bucket meets the probe
-    * side's three distinct ones at most once). Returns (d1, d2, dist,
-    * l1, l2). */
-  def crossEditDupPairs(existing: DataFrame, incoming: DataFrame,
-                        maxDist: Int = 32): DataFrame =
-    editCore(existing, incoming, maxDist, selfOrdered = false)
-
-  /** Shared engine for the edit family. Candidate pruning is two EXACT
+  /** The engine of [[editDistancePairs]]. Candidate pruning is two EXACT
     * filters before the Levenshtein verify, each a proved lower bound on the
     * distance, so no qualifying pair is ever lost:
     *   1. length bands (∣Δlen∣ ≤ maxDist) via the bucket block join;
@@ -330,20 +319,18 @@ object Dedup {
     *      a bounded Levenshtein on essentially every banded pair.
     * Histograms are computed scan-side (once per doc row, before the probe
     * fan-out), so the per-candidate cost for the rejected majority is a
-    * 128-byte L1 inside codegen.
-    * `selfOrdered` = the self-join case: keep only d1 < d2 BEFORE the
-    * verify, halving Levenshtein work (each unordered pair survives the
-    * block join in both orientations). */
-  private def editCore(existing: DataFrame, incoming: DataFrame,
-                       maxDist: Int, selfOrdered: Boolean): DataFrame = {
+    * 128-byte L1 inside codegen. Only d1 < d2 is kept BEFORE the verify,
+    * halving Levenshtein work (each unordered pair survives the block
+    * join in both orientations). */
+  private def editCore(docs: DataFrame, maxDist: Int): DataFrame = {
     require(maxDist >= 1, s"maxDist=$maxDist must be >= 1")
     import graft.plans.EditFilter
     val width = maxDist + 1
-    val home = existing.select(col("doc_id").as("d2"), col("text").as("t2"),
+    val home = docs.select(col("doc_id").as("d2"), col("text").as("t2"),
       length(col("text")).as("l2"),
       EditFilter.bigramHist(col("text")).as("h2"))
       .withColumn("bucket", floor(col("l2") / width))
-    val probeBase = incoming.select(col("doc_id").as("d1"), col("text").as("t1"),
+    val probeBase = docs.select(col("doc_id").as("d1"), col("text").as("t1"),
       length(col("text")).as("l1"),
       EditFilter.bigramHist(col("text")).as("h1"))
     // the verify work (histogram L1 + banded Levenshtein per candidate) runs
@@ -354,7 +341,7 @@ object Dedup {
     // probe side up to the session's shuffle width ONLY when the scan is
     // narrower — at real scale the input already carries enough partitions
     // and no shuffle is added.
-    val parts = incoming.sparkSession.sessionState.conf.numShufflePartitions
+    val parts = docs.sparkSession.sessionState.conf.numShufflePartitions
     val probeWide =
       if (probeBase.rdd.getNumPartitions < parts) probeBase.repartition(parts)
       else probeBase
@@ -362,9 +349,8 @@ object Dedup {
       .select(col("d1"), col("t1"), col("l1"), col("h1"),
         explode(array((-1 to 1).map(i => floor(col("l1") / width) + i): _*))
           .as("bucket"))
-    val joined = probe.join(home, Seq("bucket"))
-    val ordered = if (selfOrdered) joined.where(col("d1") < col("d2")) else joined
-    ordered
+    probe.join(home, Seq("bucket"))
+      .where(col("d1") < col("d2"))
       .where(abs(col("l1") - col("l2")) <= maxDist)
       .where(EditFilter.histL1(col("h1"), col("h2")) <= EditFilter.L1PerEdit * maxDist)
       // native banded-DP kernel with early abandon — semantics of
@@ -372,26 +358,6 @@ object Dedup {
       .withColumn("dist", EditFilter.levBounded(col("t1"), col("t2"), maxDist))
       .where(col("dist") >= 0)
       .select(col("d1"), col("d2"), col("dist"), col("l1"), col("l2"))
-  }
-
-  /** d21: incremental EDIT-distance admission — [[incrementalNearDup]]
-    * (d10) for the short-text regime: admit from an incoming batch only
-    * documents with no edit-distance near-dup (dist ≤ maxDist) in the
-    * standing corpus. Unlike d10 (whose LSH banding has a recall spec),
-    * the blocking here is EXACT (|Δlen| lower-bounds the distance), so
-    * the admission decision is exactly the brute-force one — precision
-    * AND recall 1. Batch-internal edit-dups stay the batch's clustering
-    * job (the d10 contract).
-    *
-    * Scale shape: per batch, candidates ∝ batch docs × standing docs in
-    * ADJACENT length bands only; the standing side pays one (len, bucket)
-    * projection — persistable between batches (the [[sharedShingles]]
-    * lifecycle pattern). */
-  def incrementalEditDup(existing: DataFrame, incoming: DataFrame,
-                         maxDist: Int = 32): DataFrame = {
-    val dupped = crossEditDupPairs(existing, incoming, maxDist)
-      .select(col("d1").as("doc_id")).distinct()
-    incoming.select(col("doc_id")).join(dupped, Seq("doc_id"), "left_anti")
   }
 
   /** d20: dedup-method agreement matrix — for every pair of dedup
@@ -511,81 +477,26 @@ object Dedup {
       .select(col("doc_id"), col("fingerprint"))
   }
 
-  /** d10: incremental NEAR-dup admission — [[incrementalExact]] (d08)
-    * lifted from exact to near duplicates: admit from an incoming batch
-    * only documents with no n-gram-Jaccard near-dup (≥ threshold) in the
-    * existing corpus. Candidates come from d03's banded MinHash — incoming
-    * band buckets probe the existing ones — and every candidate pair is
-    * EXACTLY verified, so a dropped doc always has a real near-dup
-    * (precision 1); recall is the d03 banding guarantee (≈ 0.9998 at
-    * j = 0.8 under 16×4 — the registered query hash-matches the exact
-    * oracle at this corpus scale, the d03 precedent).
-    *
-    * Batch-INTERNAL near-dups are deliberately not resolved here: that is
-    * a clustering decision (compose d03 + d07 over the batch); this
-    * operator answers the admission question against the standing corpus,
-    * exactly as d08 answers it for exact duplicates.
-    *
-    * Scale shape: both sides reduce to fixed-size signatures (one
-    * partial-aggregated exchange each — the batch side is batch-bounded);
-    * the candidate join shuffles (band, bucket) keys only; exact
-    * verification touches candidate pairs only. A long-lived ingester
-    * should persist the EXISTING side's buckets and shingles between
-    * batches (the [[sharedShingles]] lifecycle pattern) so each batch pays
-    * only its own signatures plus the probe. */
-  def incrementalNearDup(existing: DataFrame, incoming: DataFrame,
-                         threshold: Double = 0.8, bands: Int = 16,
-                         rowsPerBand: Int = 4, k: Int = 3): DataFrame = {
-    val dupped = crossNearDupPairs(existing, incoming, threshold, bands, rowsPerBand, k)
-      .select(col("d1").as("doc_id")).distinct()
-    incoming.select(col("doc_id")).join(dupped, Seq("doc_id"), "left_anti")
-  }
-
-  /** The cross-side pair core of d10/d15: near-dup PAIRS between an
-    * incoming batch and a standing corpus — d1 = incoming doc, d2 =
-    * standing doc, exact jaccard. Candidates come from the banded MinHash
-    * probe (incoming buckets join standing buckets), every candidate is
-    * exactly verified (precision 1, the d03 contract). d10's admission
-    * drops to the d1 verdict; d15's cluster maintenance consumes the
-    * pairs themselves. */
-  def crossNearDupPairs(existing: DataFrame, incoming: DataFrame,
-                        threshold: Double = 0.8, bands: Int = 16,
-                        rowsPerBand: Int = 4, k: Int = 3): DataFrame = {
-    // ONE aggregation per side computes the MinHash signature, the sorted
-    // shingle array AND the set size off a single shingle explosion; a
-    // LAZY localCheckpoint (no job at construction — the t06 rule) then
-    // lets the banding and the verify read the materialized nDocs-row
-    // frame instead of re-exploding shingles per consumer (the frames are
-    // per-call, batch-scoped — the session memo would accumulate one
-    // persisted entry per micro-batch under streaming admission, so the
-    // checkpoint's GC-scoped lifetime is the right one here)
-    val numHashes = bands * rowsPerBand
-    def sideAgg(docs: DataFrame): DataFrame =
-      shingleSets(docs, k).groupBy(col("doc_id"))
-        .agg(min(xxhash64(col("shingle"), lit(0))).as("mh0"),
-          ((1 until numHashes).map(i => min(xxhash64(col("shingle"), lit(i))).as(s"mh$i")) ++
-            Seq(sort_array(collect_list(col("shingle"))).as("shset"),
-              count(lit(1)).as("n"))): _*)
-        .localCheckpoint(false)
-    val aIn = sideAgg(incoming)
-    val aEx = sideAgg(existing)
-    val bIn = bandBuckets(aIn, bands, rowsPerBand)
-      .select(col("doc_id").as("din"), col("band"), col("bucket"))
-    val bEx = bandBuckets(aEx, bands, rowsPerBand)
-      .select(col("doc_id").as("dex"), col("band"), col("bucket"))
-    val cand = bIn.join(bEx, Seq("band", "bucket"))
-      .select(col("din"), col("dex")).distinct()
-    // exact cross-side verify off the per-side arrays (the d12 move)
-    cand
-      .join(aIn.select(col("doc_id").as("din"), col("shset").as("s1"), col("n").as("n1")), "din")
-      .join(aEx.select(col("doc_id").as("dex"), col("shset").as("s2"), col("n").as("n2")), "dex")
-      .select(col("din").as("d1"), col("dex").as("d2"),
-        size(array_intersect(col("s1"), col("s2"))).cast("long").as("common"),
-        col("n1"), col("n2"))
-      .select(col("d1"), col("d2"),
-        (col("common").cast("double") /
-          (col("n1") + col("n2") - col("common")).cast("double")).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+  /** Near-dup admission (d10, d21): the docs whose id `isNew` marks are
+    * the incoming batch, the rest the standing corpus, and a batch doc is
+    * admitted iff no pair of `pairs` (d1, d2) links it to a standing doc.
+    * d10 passes the banded-MinHash pairs (d03), d21 the exact edit-distance
+    * pairs (d19): restricted to cross-side endpoints, the full symmetric
+    * pair set IS the cross-side pair set, so one memoized pair frame
+    * serves the whole corpus. Batch-internal pairs are deliberately not
+    * resolved here: that is a clustering decision (compose d03 + d07 over
+    * the batch), as d08 leaves it for exact duplicates. */
+  private[graft] def admitted(docs: DataFrame, pairs: DataFrame,
+                              isNew: Column => Column): DataFrame = {
+    val p = pairs.select(col("d1"), col("d2"))
+    val crossIn = p
+      .where(isNew(col("d1")) && !isNew(col("d2")))
+      .select(col("d1").as("doc_id"))
+      .unionAll(p.where(isNew(col("d2")) && !isNew(col("d1")))
+        .select(col("d2").as("doc_id")))
+      .distinct()
+    docs.where(isNew(col("doc_id"))).select(col("doc_id"))
+      .join(crossIn, Seq("doc_id"), "left_anti")
   }
 
   /** The shingle set for `docs`, through [[Memo]]. d02, d03 and the
@@ -1110,13 +1021,10 @@ object Dedup {
   def md5Hash60(token: Column): Column =
     conv(substring(md5(token), 1, 15), 16, 10).cast("long")
 
-  /** Fast 64-bit token hash for production scale (not oracle-reproducible). */
-  def xxHash64Token(token: Column): Column = xxhash64(token)
-
   /** SimHash of the token multiset: sign of the per-bit ±1 vote sum, built
     * as a pure expression tree (`bits` conditional sums per doc). Default
     * token hash is the portable [[md5Hash60]] (oracle-checkable; see the
-    * d04_simhash DuckDB oracle in SparkEntry); pass [[xxHash64Token]] with
+    * d04_simhash DuckDB oracle in SparkEntry); pass `xxhash64` with
     * bits = hashBits = 64 for the cheapest-per-token variant. `hashBits`
     * declares the token hash's width so `bits` can't silently exceed it
     * (bits above the hash width would never vote positive). */
@@ -1267,7 +1175,7 @@ object Dedup {
   /** d06: IVF-bucketed embedding near-dup pairs — the at-scale counterpart
     * of the exact [[embeddingDupPairs]] baseline. Each vector is assigned
     * map-side to its `nProbe` nearest KMeans cells (the same literal-
-    * centroid argmin shape as `similarity.Knn.ivfServe` — no shuffle
+    * centroid argmin shape as `similarity.Knn.assigned` — no shuffle
     * between scan and assignment); candidate pairs are vectors sharing a
     * cell; exact cosine verifies candidates only. Flops drop from n²/2 to
     * ~n²·nProbe²/(2·nCells) expected (cells ∝ corpus at scale keeps the

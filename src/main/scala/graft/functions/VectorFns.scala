@@ -34,13 +34,11 @@ object VectorFns {
   def normSq(a: Column): Column =
     ColumnBridge.toColumn(VecNormSq(asD(a)))
 
-  def l2Norm(a: Column): Column = sqrt(normSq(a))
-
   /** a / ‖a‖ — unit-normalized embedding (zero vectors pass through
     * unchanged rather than dividing by zero). After normalization, cosine
     * ranking and L2 ranking agree, which is what lets the L2-space ANN
     * paths (IVF cells, PQ codebooks) serve cosine workloads. Native kernel:
-    * a `transform(a, x => x / l2Norm(a))` re-evaluates the captured norm
+    * a `transform(a, x => x / sqrt(normSq(a)))` re-evaluates the captured norm
     * PER ELEMENT (the HOF pitfall TextFns documents). */
   def l2Normalize(a: Column): Column =
     ColumnBridge.toColumn(graft.plans.VecL2Normalize(asD(a)))

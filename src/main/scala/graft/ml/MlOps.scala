@@ -2,10 +2,9 @@ package graft.ml
 
 import org.apache.spark.BarrierTaskContext
 import org.apache.spark.ml.Pipeline
-import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, HashingTF, IDF, MinHashLSH, NGram, Tokenizer, Word2Vec, Word2VecModel}
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** ML / distributed-training parity (SURVEY.md §2.2 C1–C5, §7 M4).
@@ -32,23 +31,6 @@ object MlOps {
     pipe.fit(docs).transform(docs)
   }
 
-  /** (vec_id, features) MLlib vector view of an embedding table. */
-  private def toFeatures(emb: DataFrame): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    emb.select("vec_id", "embedding").as[(Long, Array[Float])]
-      .map { case (id, a) => (id, Vectors.dense(a.map(_.toDouble))) }
-      .toDF("vec_id", "features")
-  }
-
-  /** KMeans over the embedding column — distributed training wholly inside
-    * the engine (what the reference shipped out to an external framework). */
-  def kmeansClusters(spark: SparkSession, emb: DataFrame, k: Int = 10): DataFrame = {
-    val vecs = toFeatures(emb)
-    val model = new KMeans().setK(k).setSeed(42L).setFeaturesCol("features").fit(vecs)
-    model.transform(vecs).select("vec_id", "prediction")
-  }
-
   /** KMeans cluster centers — the tiny model artifact (k × dims doubles)
     * that parameterizes Knn.ivf's cells. Training is distributed; only the
     * k centers (the model) come back to the driver.
@@ -61,8 +43,7 @@ object MlOps {
     * expression the IVF scan itself uses, so training and serving are the
     * same code path. At 100 TB each iteration is one map-side partial
     * aggregation whose exchange carries k×(dims+1) doubles per partition —
-    * independent of corpus size. The MLlib path remains available as
-    * [[kmeansClusters]]. */
+    * independent of corpus size. */
   def kmeansCenters(emb: DataFrame, k: Int = 10, maxIter: Int = 3): Array[Array[Double]] = {
     val sc = emb.sparkSession.sparkContext
     val data = emb.select(col("embedding").cast("array<double>"))
@@ -122,38 +103,14 @@ object MlOps {
     } finally { data.unpersist(blocking = false); () }
   }
 
-  /** PCA over the embedding column — the dimensionality-reduction member
-    * of the ML row, and the standard pre-ANN compaction (project to k ≪
-    * dim, THEN index: the IVF/PQ build cost and memory drop by dim/k with
-    * small recall loss when the spectrum decays). Covariance
-    * eigendecomposition is seedless; treeAggregate merge order can wiggle
-    * the last float ulps, so the spec pins LAWS (orthonormal components,
-    * non-increasing explained variance, projection norms ≤ input norms)
-    * rather than bit values — the kmeansClusters discipline. */
-  def pcaModel(emb: DataFrame, k: Int = 8): org.apache.spark.ml.feature.PCAModel =
-    new org.apache.spark.ml.feature.PCA()
-      .setInputCol("features").setOutputCol("pca").setK(k)
-      .fit(toFeatures(emb))
-
-  /** The corpus projected to `k` principal components —
-    * (vec_id, Array[Double] of length k). */
-  def pcaProject(emb: DataFrame, k: Int = 8): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val model = pcaModel(emb, k)
-    model.transform(toFeatures(emb))
-      .select("vec_id", "pca").as[(Long, org.apache.spark.ml.linalg.Vector)]
-      .map { case (id, v) => (id, v.toArray) }
-      .toDF("vec_id", "projected")
-  }
-
   /** Word2Vec token embeddings over the corpus — the skip-gram text-analysis
     * member of the §2.3 ML row (alongside Tokenizer/HashingTF/IDF and the
     * LSH families). Seed-pinned and single-partition so the fit is
-    * deterministic run-to-run — model values, no SQL oracle; spec'd like
-    * [[kmeansClusters]]. At scale, raise `numPartitions` (MLlib trains
-    * Hogwild-style across partitions) at the declared cost of run-to-run
-    * bit determinism — the same trade KenLM-scale corpora accept. */
+    * deterministic run-to-run — model values, no SQL oracle; the spec pins
+    * the vocabulary, the determinism and the synonym order. At scale,
+    * raise `numPartitions` (MLlib trains Hogwild-style across partitions)
+    * at the declared cost of run-to-run bit determinism — the same trade
+    * KenLM-scale corpora accept. */
   def word2vecModel(docs: DataFrame, vectorSize: Int = 16,
                     minCount: Int = 2): Word2VecModel = {
     val words = new Tokenizer().setInputCol("text").setOutputCol("words").transform(docs)
@@ -162,16 +119,6 @@ object MlOps {
       .setSeed(42L).setNumPartitions(1).setMaxIter(1)
       .fit(words)
   }
-
-  /** The fitted (word, vector) embedding table. */
-  def word2vecVectors(docs: DataFrame, vectorSize: Int = 16,
-                      minCount: Int = 2): DataFrame =
-    word2vecModel(docs, vectorSize, minCount).getVectors
-
-  /** The n nearest tokens to `token` in the fitted embedding space
-    * ((word, similarity) rows, best first). */
-  def similarTokens(docs: DataFrame, token: String, n: Int = 5): DataFrame =
-    word2vecModel(docs).findSynonyms(token, n)
 
   /** MLlib-native near-dup candidates: tokenize → 3-grams → binary HashingTF
     * → MinHashLSH approx self-join. The library counterpart of the hand-tuned

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * partition-local over iterator batches (`mapPartitions`) so a native
   * decoder is amortized per-partition, never per-row.
   *
-  * Decode/resize/frame-sample are REAL for every format the JDK covers —
+  * Decode/frame-sample are REAL for every format the JDK covers —
   * BMP 24bpp via the pure byte parser, JPEG/PNG via `javax.imageio`
   * (shipped in every standard JDK), WAV PCM16 via the pure RIFF parser,
   * MP4 via the pure ISO-BMFF demuxer (see [[MediaCodecs]]): dimensions,
@@ -104,39 +104,8 @@ object Multimodal {
     (if (payload.isEmpty) -1 else payload(0) & 0xff, checksum)
   }
 
-  /** Typed row for resized ("thumbnail") payloads. */
-  final case class ResizedMedia(
-      doc_id: Long, format: String, width: Int, height: Int, thumb: Array[Byte])
-
   /** Typed row for sampled frames. */
   final case class FrameSample(doc_id: Long, frame_idx: Int, frame: Array[Byte])
-
-  /** Image resize. BMP/JPEG/PNG payloads take the real path: decode
-    * (byte parser or JDK ImageIO) → nearest-neighbor scale → re-encode
-    * (the thumb is itself a valid BMP, whatever the source format). Other
-    * formats stride the payload down to width×height bytes as the declared
-    * codec-less stand-in. Partition-local either way. */
-  def resize(spark: SparkSession, media: DataFrame,
-             width: Int = 4, height: Int = 4): Dataset[ResizedMedia] = {
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"), col("meta.format").as("format"))
-      .as[(Long, Array[Byte], String)]
-      .mapPartitions { rows =>
-        val target = width * height
-        rows.map { case (id, payload, format) =>
-          MediaCodecs.decodeImage(payload) match {
-            case Some(img) =>
-              val thumb = MediaCodecs.encodeBmp(MediaCodecs.resizeBmp(img, width, height))
-              ResizedMedia(id, "image/bmp", width, height, thumb)
-            case None =>
-              val thumb =
-                if (payload.length <= target) payload
-                else Array.tabulate(target)(i => payload((i.toLong * payload.length / target).toInt))
-              ResizedMedia(id, format, width, height, thumb)
-          }
-        }
-      }
-  }
 
   /** Frame sampling: keep every `everyN`-th frame, one output row per kept
     * frame (explode shape) so downstream per-frame featurizers parallelize
@@ -300,11 +269,6 @@ object Multimodal {
         MediaCodecs.decodeImage(p).map(img => ImageHash(id, dHash64(img)))
       })
   }
-
-  /** m04 (pairs): visually-near-duplicate image pairs over [[dHash64]];
-    * see [[hammingNearDups]] for the join shape. */
-  def imageNearDups(hashes: DataFrame, maxHamming: Int = 3): DataFrame =
-    hammingNearDups(hashes, maxHamming)
 
   /** Generic perceptual near-dup pair join — the d04 SimHash shape over
     * any 64-bit (doc_id, phash) sketch column: band the 64 bits into

@@ -266,7 +266,7 @@ object DataPipeline {
     * Scale shape: the hash and shard are scan-projection work (zero
     * shuffle); the position is a per-shard rank — ONE exchange on the
     * shard key and a within-shard sort, never a global total sort: this is
-    * exactly the physical layout a `writePartitioned(shard)` +
+    * exactly the physical layout a `partitionBy(shard)` write +
     * sortWithinPartitions materialization wants, so the layout computation
     * and the layout write share a plan. nShards scales with the corpus
     * (100 TB → tens of thousands of shards), keeping each in-shard sort
@@ -1293,34 +1293,17 @@ object DataPipeline {
   }
 
   /** p24's selection as a standalone frame: (source, doc_id, hd) — the
-    * current holdout membership with its hash score retained. Kept because
-    * min-k selection is MERGEABLE (top-k of a union = top-k of the two
-    * sides' top-ks), which makes the holdout maintainable incrementally:
-    * [[mergeHoldoutCandidates]] folds a batch's candidates into standing
-    * state without rescanning history — the d15/p21 property, here by the
-    * heap's own algebra. */
+    * current holdout membership with its hash score retained. Min-k
+    * selection is MERGEABLE (top-k of a union = top-k of the two sides'
+    * top-ks), so a holdout can be maintained by folding a batch's
+    * candidates into standing state without rescanning history — the
+    * d15/p21 property, here by the heap's own algebra. */
   def holdoutCandidates(docs: DataFrame, perSource: Int = 5,
                         salt: String = "holdout:"): DataFrame = {
     require(perSource >= 1, s"perSource=$perSource must be >= 1")
     val h = Dedup.md5Hash60(concat(lit(salt), col("doc_id").cast("string")))
     val scored = docs.select(col("source").as("query_id"),
       col("doc_id").as("neighbor_id"), (lit(0.0) - h.cast("double")).as("cos"))
-    graft.similarity.Knn.topKPerKey(scored, perSource)
-      .select(col("query_id").as("source"), col("neighbor_id").as("doc_id"),
-        (lit(0.0) - col("cos")).as("hd"))
-  }
-
-  /** Fold one candidate frame into another under the p24 selection rule
-    * (hd asc, doc_id asc, k per source). Both sides are sources×k-bounded,
-    * so the merge cost is independent of how many documents either side
-    * summarizes — the standing holdout never re-reads the corpus. */
-  def mergeHoldoutCandidates(standing: DataFrame, batch: DataFrame,
-                             perSource: Int = 5): DataFrame = {
-    // distinct: a re-delivered doc present on both sides must not occupy
-    // two heap slots — the merge is idempotent under at-least-once delivery
-    val scored = standing.unionByName(batch).distinct()
-      .select(col("source").as("query_id"), col("doc_id").as("neighbor_id"),
-        (lit(0.0) - col("hd")).as("cos"))
     graft.similarity.Knn.topKPerKey(scored, perSource)
       .select(col("query_id").as("source"), col("neighbor_id").as("doc_id"),
         (lit(0.0) - col("cos")).as("hd"))
@@ -2154,25 +2137,6 @@ object DataPipeline {
         expr("n_hit * 1000000 div n_windows").as("hit_ppm"),
         (col("n_hit") > 0).as("compromised"))
   }
-
-  /** [[chunkDecontaminate]] against a STANDING census — the production
-    * path the p61 scaladoc promises: the training side is the durable
-    * chunk census p57 built and p58/`maintainChunkCensusStream` keep
-    * fresh, so decontaminating a new eval suite never re-chunks the
-    * 100 TB corpus — cost ∝ eval chunks probing the (bucketed, at scale)
-    * census. Semantics pinned ≡ [[chunkDecontaminate]] when the census
-    * covers exactly the non-eval docs (spec'd). */
-  def chunkDecontaminateAgainst(census: DataFrame, evalDocs: DataFrame,
-                                width: Int = 200, stride: Int = 100): DataFrame =
-    chunksOf(evalDocs, width, stride)
-      .join(census.select(col("chunk_hash")).distinct()
-        .withColumn("_hit", lit(1L)), Seq("chunk_hash"), "left")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_windows"),
-        sum(coalesce(col("_hit"), lit(0L))).as("n_hit"))
-      .select(col("doc_id"), col("n_windows"), col("n_hit"),
-        expr("n_hit * 1000000 div n_windows").as("hit_ppm"),
-        (col("n_hit") > 0).as("compromised"))
 
   /** p62: length-bucketed batch plan — the DYNAMIC-BATCHING decision for
     * padded (non-packed) training/inference: fixed-size batches drawn in

@@ -255,9 +255,7 @@ object Relational4 {
     * `last(ignoreNulls)` trailing windows into the two-level
     * (order-key, value)-struct scan whenever the input is not provably
     * below the crossover, so the query is written in the plain window
-    * form a user would write (the round-9 hand-routing through
-    * [[ScanWindows.lastNonNull]] is retired here; the primitive remains
-    * for direct callers). Fill-up is the same trailing scan over the
+    * form a user would write. Fill-up is the same trailing scan over the
     * negated key. At test SF the input is provably small and the naive
     * single-sort window (which wins there) runs as-is; the plan gate
     * accepts exactly that bypass class (PlanLint). */
@@ -315,8 +313,7 @@ object Relational4 {
     * lead its mirror over the negated key), rewriting it into the
     * two-level struct scan whenever the input is not provably below the
     * crossover. At test SF the provably-small bypass keeps the naive
-    * window, which wins there; the round-9 hand-routing through
-    * [[ScanWindows.lastNonNull]] is retired. */
+    * window, which wins there. */
   def q67NavIgnoreNulls(t: Tables): DataFrame = {
     val v = when(col("o_orderkey") % 3 === 0, lit(null))
       .otherwise(col("o_totalprice"))

@@ -48,18 +48,10 @@ object ScanWindows {
     * generic two-level form: per-bucket partials (one map-side-combined
     * exchange), a `partial`-scan over the SMALL bucket table for each
     * bucket's offset, then within-bucket running windows at #buckets-way
-    * parallelism merged with the offset.
-    *
-    * `frameEnd` is the trailing frame's end bound: 0 = at-or-before the
-    * current row (running aggregates), −1 = strictly-before (the
-    * lag/fill "previous value" class). The bucket offset always covers
-    * ALL previous buckets — every row of an earlier bucket is strictly
-    * before the current row, so both bounds share it. */
+    * parallelism merged with the offset. The frame runs from the start of
+    * the partition to the current row. */
   def prefixScan(df: DataFrame, partCols: Seq[String], bucketCol: String,
-                 orderCols: Seq[String], ops: Seq[PrefixOp],
-                 frameEnd: Int = 0): DataFrame = {
-    require(frameEnd == 0 || frameEnd == -1,
-      s"frameEnd must be 0 (at-or-before) or -1 (strictly-before), got $frameEnd")
+                 orderCols: Seq[String], ops: Seq[PrefixOp]): DataFrame = {
     require(!orderCols.contains(bucketCol),
       s"bucketCol '$bucketCol' must not be an order column - derive a copy")
     val pc = partCols.map(col)
@@ -77,7 +69,7 @@ object ScanWindows {
       }: _*)
     val wIn = Window.partitionBy(keys.map(col): _*)
       .orderBy(orderCols.map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, frameEnd)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // null-SAFE key join: window partitioning groups NULL keys together,
     // but plain join equality drops them — a row with a NULL part/bucket
     // key would silently lose its offset. <=> matches window semantics.
@@ -114,25 +106,6 @@ object ScanWindows {
         PrefixOp(n, v, sum,
           (off, run) => coalesce(off, lit(0L)) + coalesce(run, lit(0L)))
       })
-
-  /** Last non-null value at-or-before (frameEnd 0) / strictly-before
-    * (frameEnd −1) each row, bucket-parallel — the LOCF / lag-ignore-nulls
-    * member of the scan family: the running MAX of struct(orderKey, value)
-    * over non-null values carries the latest-positioned value through
-    * [[prefixScan]] (max and `greatest` both skip nulls, so leading rows
-    * before any non-null stay null). `orderKeyCol` must be the (unique)
-    * leading sort key. Adds `out` with `valueCol`'s type. */
-  def lastNonNull(df: DataFrame, partCols: Seq[String], bucketCol: String,
-                  orderKeyCol: String, valueCol: String, out: String,
-                  frameEnd: Int = 0): DataFrame = {
-    val tagged = df.withColumn(s"_nn_$out",
-      when(col(valueCol).isNotNull, struct(col(orderKeyCol), col(valueCol))))
-    prefixScan(tagged, partCols, bucketCol, Seq(orderKeyCol),
-      Seq(PrefixOp(out, s"_nn_$out", max, (off, run) => greatest(off, run))),
-      frameEnd)
-      .withColumn(out, col(out).getField(valueCol))
-      .drop(s"_nn_$out")
-  }
 
   /** Exact bounded trailing frame (ROWS BETWEEN width-1 PRECEDING AND
     * CURRENT ROW), bucket-parallel.

@@ -47,9 +47,4 @@ object SkewOps {
       explode(sequence(lit(0), lit(n - 1))))
     salted.join(replicated, Seq(key, salt)).drop(salt)
   }
-
-  /** Convenience: top-k heaviest keys of a column (to decide what to salt). */
-  def heavyHitters(df: DataFrame, key: Column, k: Int = 10): DataFrame =
-    df.groupBy(key.as("key")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("key").asc).limit(k)
 }

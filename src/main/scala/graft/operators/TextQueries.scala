@@ -403,9 +403,6 @@ object TextQueries {
     * Scale shape: one (source, token) partial-aggregated exchange off the
     * shared token frame, then the rank window and the sum run over the
     * VOCABULARY per source (types, not tokens — the t13/t14 bound). */
-  def t21TokenGini(t: Tables): DataFrame = tokenGini(t.documents)
-
-  /** See [[t21TokenGini]]; library surface over (doc_id, source, text). */
   def tokenGini(docs: DataFrame): DataFrame = {
     val freqs = sharedTokens(docs)
       .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
@@ -448,9 +445,6 @@ object TextQueries {
     * sort the grams, mark runs, map run membership back by position — is
     * the same fold t05 uses and the declared route if documents grow into
     * the million-token regime). */
-  def t22DupNgramCoverage(t: Tables): DataFrame = dupNgramCoverage(t.documents)
-
-  /** See [[t22DupNgramCoverage]]; library surface over (doc_id, text). */
   def dupNgramCoverage(docs: DataFrame, n: Int = 3): DataFrame = {
     val toks = TextFns.tokens(col("text"))
     val covered =
@@ -489,9 +483,6 @@ object TextQueries {
     *
     * Scale shape: a scan-local projection (the t02 shape with the counts
     * bound once in a prior projection) — zero shuffle, codegen-friendly. */
-  def t23LangMargin(t: Tables): DataFrame = langMargin(t.documents)
-
-  /** See [[t23LangMargin]]; library surface over (doc_id, text). */
   def langMargin(docs: DataFrame): DataFrame = {
     val text = col("text")
     val counted = docs.select(col("doc_id"),
@@ -1292,28 +1283,14 @@ object TextQueries {
     * (map-side combine does nearly all the work; the exchange carries
     * ≤ 4096 rows); the truth side is one TakeOrderedAndProject heap cut;
     * estimates join the counter table broadcast. */
-  /** The CMS bucket of the current row's (d, token) — deterministic md5
-    * arithmetic shared by [[cmsHeavyHitters]], [[cmsCounters]] and the
-    * streaming fold. */
-  private def cmsBucket(width: Int): Column = pmod(Dedup.md5Hash60(
-    concat(lit("cms"), col("d"), lit(":"), col("token"))), lit(width.toLong))
-
-  /** The (d, bucket, c) Count-Min counter table of a (doc_id, text)
-    * frame — the mergeable state: counters of a union are the SUM of the
-    * sides' counters (streaming/EventStreams.maintainCmsStream folds
-    * micro-batches by exactly this algebra, spec-pinned). */
-  def cmsCounters(docs: DataFrame, width: Int = 1024, depth: Int = 4): DataFrame =
-    docs.select(explode(TextFns.tokens(col("text"))).as("token"))
-      .withColumn("d", explode(array((0 until depth).map(lit): _*)))
-      .withColumn("bucket", cmsBucket(width))
-      .groupBy(col("d"), col("bucket")).agg(count(lit(1)).as("c"))
-
   def cmsHeavyHitters(docs: DataFrame, width: Int = 1024, depth: Int = 4,
                       topK: Int = 20): DataFrame = {
     require(width > 0 && depth > 0 && topK > 0,
       s"width=$width depth=$depth topK=$topK must be positive")
     val toks = sharedTokens(docs).select(col("token"))
-    def bucket: Column = cmsBucket(width)
+    // the CMS bucket of the row's (d, token): deterministic md5 arithmetic
+    def bucket: Column = pmod(Dedup.md5Hash60(
+      concat(lit("cms"), col("d"), lit(":"), col("token"))), lit(width.toLong))
     val depths = array((0 until depth).map(lit): _*)
     val counters = toks
       .withColumn("d", explode(depths))

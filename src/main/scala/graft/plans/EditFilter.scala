@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * a hashed character-bigram histogram per document plus an L1 distance
   * between histograms that LOWER-BOUNDS the Levenshtein distance.
   *
-  * Why: the length-band blocking of [[graft.dedup.Dedup.crossEditDupPairs]]
+  * Why: the length-band blocking of [[graft.dedup.Dedup.editDistancePairs]]
   * is exact but weakly selective on a natural-language corpus (most documents
   * share the few populated length bands), so nearly every candidate pair paid
   * a bounded `levenshtein` — O(min(len)·maxDist) per pair — and the three

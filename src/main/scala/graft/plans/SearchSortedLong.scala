@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
 /** Rank-space bucketing primitive: the number of `boundaries` ≤ input
   * (boundaries sorted ascending), i.e. `searchsorted`, as a native
   * codegen'd expression — the per-row kernel of equi-depth Z-ordering
-  * ([[graft.sources.ZoneMaps.clusteredWriteZ]]).
+  * ([[graft.sources.ZoneMaps.clusteredWriteZN]]).
   *
   * Why a native expression (SURVEY.md §2.3 "UDF surface" preference
   * order): both declarative forms measured badly at write scale — a fold

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * (|Q|·beam rows) against them, so per-query-batch work is
   * ∝ |Q|·beam·graphK·iters, independent of corpus size once the index
   * stands. On disk the edge table buckets by `src` and the vector table
-  * by `vec_id` (Sources.writeBucketed), making both probes co-located
+  * by `vec_id` (`bucketBy`), making both probes co-located
   * point lookups. The exact all-pairs graph build here is the
   * correctness baseline (d05's declared-quadratic class); at 100 TB the
   * build route is [[Knn.knnGraphIvf]] (cell-pruned, recall-spec'd) or

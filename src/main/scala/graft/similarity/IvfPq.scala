@@ -1,7 +1,7 @@
 package graft.similarity
 
 import graft.functions.VectorFns
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** s06: IVF-PQ — the production ANN architecture (FAISS's IndexIVFPQ,
@@ -16,10 +16,8 @@ import org.apache.spark.sql.functions._
   * Train / index / serve are split like a real ANN store: [[train]] fits
   * the model (centers + codebooks — tiny), [[encodedIndex]] materializes
   * the encoded corpus ONCE per (session, corpus, params) as a persisted
-  * frame, and [[writeIndex]]/[[searchIndex]] are the durable variant — a
-  * cell-partitioned parquet tree whose probed-cell predicate is computed
-  * driver-side so it lands in the scan's PartitionFilters (only the probed
-  * cell directories are listed and read). Without one of these, every
+  * frame (Knn.writeIvfIndex/searchIvfIndex is the durable, cell-partitioned
+  * form of the IVF half). Without the index, every
   * query batch re-runs the whole encode projection over the corpus — the
   * served-index equivalent of the reference re-downloading its inputs
   * every epoch, which it explicitly avoids with its local cache
@@ -35,7 +33,7 @@ import org.apache.spark.sql.functions._
   * set with per-cell residual tables is broadcast; candidates are
   * cell-pruned (nProbe/nCells of the index) BEFORE any scoring; the two
   * exchanges are the shortlist and final top-k aggregations, both clipped
-  * per-partition by TopKAgg. The compact index ([[encode]]) is m bytes +
+  * per-partition by TopKAgg. The compact index (cell + codes) is m bytes +
   * 1 cell id per vector; the SERVING index ([[encodeRefine]]) also keeps
   * the raw vector for the exact re-rank — FAISS's IndexRefineFlat
   * precedent: the refine stage needs exact vectors co-located, the price
@@ -59,7 +57,7 @@ object IvfPq {
     }: _*)
 
   /** (d2, cell) structs to every coarse centroid — array_min is the argmin,
-    * array_sort + slice the nProbe nearest (the ivfServe trick). */
+    * array_sort + slice the nProbe nearest (the IVF assignment trick). */
   private def dists(vec: Column, cents: Column): Column =
     transform(cents, c => struct(
       VectorFns.l2Sq(vec, c.getField("cv")).as("d2"),
@@ -87,14 +85,9 @@ object IvfPq {
     (centers, Pq.trainPq(residuals, m, k))
   }
 
-  /** The compact encoded index: (vec_id, cell, codes) — one scan
-    * projection, m bytes + a cell id per vector resident. */
-  def encode(emb: DataFrame, centers: Array[Array[Double]], cb: Pq.Codebooks): DataFrame =
-    encodeRefine(emb, centers, cb).select(col("vec_id"), col("cell"), col("codes"))
-
-  /** The serving index: (vec_id, cell, v, codes) — [[encode]] plus the raw
-    * vector for the exact re-rank stage (IndexRefineFlat). Still one scan
-    * projection, zero shuffle. */
+  /** The serving index: (vec_id, cell, v, codes) — the coarse cell, the PQ
+    * codes of the residual and the raw vector for the exact re-rank stage
+    * (IndexRefineFlat). One scan projection, zero shuffle. */
   def encodeRefine(emb: DataFrame, centers: Array[Array[Double]], cb: Pq.Codebooks): DataFrame = {
     val cents = centsLit(centers)
     val v = col("embedding").cast("array<double>")
@@ -116,14 +109,6 @@ object IvfPq {
     graft.Memo.frame("IvfPq.index", emb, nCells, m, codebookSize)(
       encodeRefine(emb, centers, cb))
   }
-
-  /** Stateless serve against a fitted model: encodes on the fly, then
-    * serves. For repeated query batches use [[ivfPq]]/[[encodedIndex]] —
-    * this path re-pays the encode projection per call by construction. */
-  def search(emb: DataFrame, centers: Array[Array[Double]], cb: Pq.Codebooks,
-             queryPred: String = "vec_id < 10", k: Int = 5,
-             nProbe: Int = 3, shortlist: Int = 50): DataFrame =
-    searchEncoded(encodeRefine(emb, centers, cb), centers, cb, queryPred, k, nProbe, shortlist)
 
   /** Serve against a materialized (vec_id, cell, v, codes) index: ADC over
     * probed cells → shortlist → exact re-rank, with queries, candidates
@@ -152,65 +137,6 @@ object IvfPq {
     val exact = index.select(col("vec_id"), col("v"))
       .join(broadcast(cands), col("vec_id") === col("neighbor_id"))
       .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (-round(VectorFns.l2Sq(col("qv"), col("v")), 8)).as("cos"))
-    Knn.topKPerKey(exact, k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), (-col("cos")).as("d2"))
-  }
-
-  /** Durable index: the [[encodeRefine]] frame as a cell-partitioned
-    * parquet tree (`path/cell=N/part-*.parquet`) — pay the scan+encode
-    * once at write time; [[searchIndex]] then reads only the probed cell
-    * directories. */
-  def writeIndex(emb: DataFrame, centers: Array[Array[Double]], cb: Pq.Codebooks,
-                 path: String): Unit =
-    graft.sources.Sources.writePartitioned(encodeRefine(emb, centers, cb), path, "cell")
-
-  /** Serve from an on-disk cell-partitioned index. The query batch is
-    * driver-side by contract (it is the broadcast-small side), so the
-    * probed-cell set is computed in plain Scala against the coarse centers
-    * — the SAME (d2, cell) lexicographic argmin as the plan expression —
-    * and lands in the scan as a LITERAL `cell IN (…)` predicate: a
-    * PartitionFilter that prunes whole directories at listing time
-    * (PlanSpec's partition-pruning precedent), not a per-row filter after
-    * a full read. At 100 TB a query batch reads |distinct probed cells| /
-    * nCells of the index and nothing else. */
-  def searchIndex(spark: SparkSession, path: String,
-                  centers: Array[Array[Double]], cb: Pq.Codebooks,
-                  queries: Seq[(Long, Array[Double])], k: Int = 5,
-                  nProbe: Int = 3, shortlist: Int = 50): DataFrame = {
-    require(queries.nonEmpty, "searchIndex: empty query batch")
-    require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
-    // driver-side coarse assignment; (d2, cell) tuple sort = the plan's
-    // lexicographic struct sort, so ties break identically (lower cell)
-    def l2sq(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val t = a(i) - b(i); s += t * t; i += 1 }
-      s
-    }
-    val probedCells = queries
-      .flatMap { case (_, qv) =>
-        centers.indices.map(c => (l2sq(qv, centers(c)), c)).sorted.take(nProbe).map(_._2) }
-      .distinct.sorted
-    val cents = centsLit(centers)
-    val qDf = spark.createDataFrame(queries.map { case (id, qv) => (id, qv.toSeq) })
-      .toDF("query_id", "qv")
-    val idx = spark.read.parquet(path)
-      .where(col("cell").isin(probedCells.map(Int.box): _*))
-    val probes = qDf
-      .select(col("query_id"), col("qv"),
-        explode(slice(array_sort(dists(col("qv"), cents)), 1, nProbe)).as("p"))
-      .select(col("query_id"), col("p.cell").as("cell"),
-        Pq.tablesExpr(cb, residual(col("qv"), cents, col("p.cell"))).as("tables"))
-    val scored = idx.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (-round(Pq.adcExpr(col("tables"), col("codes")), 8)).as("cos"))
-    val cands = Knn.topKPerKey(scored, shortlist)
-      .select(col("query_id"), col("neighbor_id"))
-    val exact = idx.select(col("vec_id"), col("v"))
-      .join(broadcast(cands), col("vec_id") === col("neighbor_id"))
-      .join(broadcast(qDf.select(col("query_id"), col("qv"))), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         (-round(VectorFns.l2Sq(col("qv"), col("v")), 8)).as("cos"))
     Knn.topKPerKey(exact, k)

@@ -381,9 +381,7 @@ object Knn {
     *
     * Scale shape: the filter is a scan-local predicate on the corpus side
     * (pushed into the scan by Catalyst), then s01's broadcast-queries/
-    * TopKAgg shape over the smaller corpus. The served variant is
-    * [[filteredIvf]]: the same predicate applied INSIDE the cell-pruned
-    * index scan, so selectivity compounds with cell pruning. */
+    * TopKAgg shape over the smaller corpus. */
   def filteredBruteForce(emb: DataFrame, labelPred: String = "label % 2 = 0",
                          queryPred: String = "vec_id < 10", k: Int = 5): DataFrame = {
     val v = emb.select(col("vec_id"), col("label"),
@@ -391,37 +389,6 @@ object Knn {
     val q = v.filter(expr(queryPred)).select(col("vec_id").as("query_id"), col("v").as("qv"))
     val scored = v.filter(expr(labelPred))
       .join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(VectorFns.cosine(col("qv"), col("v")), 8).as("cos"))
-    topKPerKey(scored, k)
-  }
-
-  /** [[filteredBruteForce]]'s served variant: the metadata predicate runs
-    * INSIDE the memoized IVF index scan (model trained on the FULL
-    * corpus — the filter must not move the centroids, or every distinct
-    * predicate would retrain), composing filter selectivity with cell
-    * pruning. Approximate like s02 (recall spec'd vs the exact filtered
-    * search in KnnSpec); pre-filter semantics preserved. */
-  def filteredIvf(emb: DataFrame, labelPred: String = "label % 2 = 0",
-                  queryPred: String = "vec_id < 10", k: Int = 5,
-                  nProbe: Int = 3, nCells: Int = 10): DataFrame = {
-    val centers = modelFor(emb, nCells)
-    // the labeled serving index ([[ivfIndex]] plus the metadata column),
-    // through Memo: a served filter must read metadata from the index
-    // itself, not re-join the corpus-sized label table per call (the same
-    // per-serve-rescan class the round-7 index rule exists for)
-    val index = graft.Memo.frame("Knn.labeledIndex", emb, nCells)(
-      ivfIndex(emb, nCells)
-        .join(emb.select(col("vec_id"), col("label")), Seq("vec_id")))
-    val cents = centsLit(centers)
-    val q = ivfIndex(emb, nCells).filter(expr(queryPred))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val probes = q.select(col("query_id"), col("qv"),
-        explode(slice(array_sort(dists(col("qv"), cents)), 1, nProbe)).as("p"))
-      .select(col("query_id"), col("qv"), col("p.cell").as("cell"))
-    val scored = index.filter(expr(labelPred))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(VectorFns.cosine(col("qv"), col("v")), 8).as("cos"))
     topKPerKey(scored, k)
@@ -436,8 +403,8 @@ object Knn {
     * the corpus) and serving (cell-pruned scan) are separate concerns: the
     * fitted artifact is tiny (nCells × dims doubles) and corpus-determined,
     * so repeated queries must not re-train per invocation. [[trainIvf]] is
-    * the explicit trainer, [[ivfServe]] the explicit serving path; [[ivf]]
-    * composes them through the memo. */
+    * the explicit trainer, [[ivfServeIndexed]] the explicit serving path;
+    * [[ivf]] composes them through the memo. */
   private def modelFor(emb: DataFrame, nCells: Int): Array[Array[Double]] =
     graft.Memo.value("Knn.ivfModel", emb, nCells)(trainIvf(emb, nCells))
 
@@ -603,8 +570,8 @@ object Knn {
     * neighbor lives in an unprobed cell) → no SQL oracle; its spec measures
     * recall against bruteForce. Trains at most once AND materializes the
     * assigned index at most once per (session, corpus, nCells) — see
-    * [[models]]/[[indexes]]; call [[ivfServe]] directly to bring your own
-    * centers (stateless), or [[ivfServeIndexed]] with your own index. */
+    * [[models]]/[[indexes]]; call [[ivfServeIndexed]] over [[assigned]]
+    * to bring your own centers, or over your own index. */
   def ivf(emb: DataFrame, queryPred: String = "vec_id < 10",
           k: Int = 5, nProbe: Int = 3, nCells: Int = 10): DataFrame =
     ivfServeIndexed(ivfIndex(emb, nCells), modelFor(emb, nCells), queryPred, k, nProbe)
@@ -644,21 +611,12 @@ object Knn {
       knnGraphIvf(emb, k, nProbe, nCells = graft.plans.StatsRoute.grownCells(emb))
         .withColumn("route", lit("ivf"))
 
-  /** Stateless IVF serving against an already-fitted model (from
-    * [[trainIvf]] or an external source): assigns on the fly, then serves.
-    * For repeated query batches use [[ivf]]/[[ivfIndex]] — this path
-    * re-pays the assignment projection per call by construction. */
-  def ivfServe(emb: DataFrame, centers: Array[Array[Double]],
-               queryPred: String = "vec_id < 10",
-               k: Int = 5, nProbe: Int = 3): DataFrame =
-    ivfServeIndexed(assigned(emb, centers), centers, queryPred, k, nProbe)
-
   /** Durable IVF index: the assigned (vec_id, v, cell) frame as a
     * cell-partitioned parquet tree — pay the scan+assignment once at
     * write time; [[searchIvfIndex]] reads only the probed cell
-    * directories (the IvfPq.writeIndex sibling). */
+    * directories. */
   def writeIvfIndex(emb: DataFrame, centers: Array[Array[Double]], path: String): Unit =
-    graft.sources.Sources.writePartitioned(assigned(emb, centers), path, "cell")
+    assigned(emb, centers).write.mode("overwrite").partitionBy("cell").parquet(path)
 
   /** Serve from an on-disk cell-partitioned IVF index. The query batch is
     * driver-side by contract (it is the broadcast-small side), so the
@@ -694,30 +652,6 @@ object Knn {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(VectorFns.cosine(col("qv"), col("v")), 8).as("cos"))
     topKPerKey(scored, k)
-  }
-
-  /** s07's indexed serving variant (library surface): radius search served
-    * from the materialized IVF index — [[radius]]'s semantics under [[ivf]]'s execution shape:
-    * every indexed vector in a probed cell with round(cos, 8) ≥ `tau`.
-    * Approximate exactly like s02 (a qualifying neighbor in an unprobed
-    * cell is missed — recall spec'd vs the exact [[radius]] in KnnSpec),
-    * with precision 1 by construction: every emitted pair carries its
-    * exactly-computed cosine. Serves read the in-memory index; no source
-    * scan after the first call (the round-7 index rule). */
-  def ivfRadius(emb: DataFrame, queryPred: String = "vec_id < 10",
-                tau: Double = 0.3, nProbe: Int = 3, nCells: Int = 10): DataFrame = {
-    val index = ivfIndex(emb, nCells)
-    val cents = centsLit(modelFor(emb, nCells))
-    val q = index.filter(expr(queryPred))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val probes = q.select(col("query_id"), col("qv"),
-        explode(slice(array_sort(dists(col("qv"), cents)), 1, nProbe)).as("p"))
-      .select(col("query_id"), col("qv"), col("p.cell").as("cell"))
-    index.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(VectorFns.cosine(col("qv"), col("v")), 8).as("cos"))
-      .where(col("cos") >= tau)
   }
 
   /** IVF serving against a materialized (vec_id, v, cell) index — the

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape mirrors s01/s04: encoding is a pure expression tree over
   * the scan (codebooks ride in as literals — zero shuffle, map-side
-  * argmin per subspace, exactly the ivfServe trick per subspace); search
+  * argmin per subspace, exactly the IVF assignment trick per subspace); search
   * broadcasts the query-side tables and clips per-partition top-k before
   * the one exchange (TopKAgg). Training is m small Lloyd runs whose
   * exchanges carry k×(subDim+1) doubles per partition — corpus-size-
@@ -146,14 +146,9 @@ object Pq {
       zip_with(tables, codes, (t, c) => element_at(t, c.cast("int") + 1)),
       lit(0.0), (acc, x) => acc + x)
 
-  /** Encode: (vec_id, codes array<tinyint>) — map-side in the scan
-    * projection. */
-  def pqEncode(emb: DataFrame, cb: Codebooks): DataFrame =
-    emb.select(col("vec_id"),
-      codesExpr(cb, col("embedding").cast("array<double>")).as("codes"))
-
-  /** The serving-index projection: codes plus the raw vector for the
-    * exact re-rank (IndexRefineFlat) — still one scan, zero shuffle. */
+  /** Encode: (vec_id, v, codes array<tinyint>) — the codes plus the raw
+    * vector for the exact re-rank (IndexRefineFlat), map-side in the scan
+    * projection, zero shuffle. */
   def pqEncodeRefine(emb: DataFrame, cb: Codebooks): DataFrame =
     emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .select(col("vec_id"), col("v"), codesExpr(cb, col("v")).as("codes"))
@@ -198,18 +193,12 @@ object Pq {
       .select(col("vec_id"), col("codes_optimal"))
   }
 
-  /** s05: ADC top-k — every query's per-subspace distance table to all k
-    * centroids is computed ONCE (query side, broadcast); a corpus row
+  /** ADC top-k against a materialized (vec_id, v, codes) index
+    * ([[pqEncodeRefine]]): every query's per-subspace distance table to all
+    * k centroids is computed ONCE (query side, broadcast); a corpus row
     * costs m array lookups. Ranking uses round(adist, 8) with neighbor-id
-    * tiebreak, the s01 stability rule. Stateless: encodes on the fly —
-    * repeated batches should go through [[pq]]/[[encodedIndex]]. */
-  def pqSearch(emb: DataFrame, cb: Codebooks,
-               queryPred: String = "vec_id < 10", k: Int = 5): DataFrame =
-    pqSearchIndexed(pqEncodeRefine(emb, cb), cb, queryPred, k)
-
-  /** ADC top-k against a materialized (vec_id, v, codes) index; queries
-    * are drawn from the index, so a cached index serves with no source
-    * scan at all. */
+    * tiebreak, the s01 stability rule. Queries are drawn from the index,
+    * so a cached index serves with no source scan at all. */
   def pqSearchIndexed(index: DataFrame, cb: Codebooks,
                       queryPred: String = "vec_id < 10", k: Int = 5): DataFrame = {
     val q = index.filter(expr(queryPred))

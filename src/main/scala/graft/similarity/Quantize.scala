@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * Composition: quantize at ingest, store qvec+scale; serve kNN over
   * [[dequantized]] vectors (QuantizeSpec pins the recall cost vs exact) or
   * feed them to the IVF path — the centroids see dequantized values, so
-  * Knn.ivfServe works unchanged. The composed search is registered as
+  * Knn.ivfServeIndexed works unchanged. The composed search is registered as
   * `s04_knn_quantized` and — because quantization is deterministic, unlike
   * IVF's trained cells — is fully hash-checked against a DuckDB oracle
   * that dequantizes the same way.

@@ -22,7 +22,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.graft.{ColumnBridge, SchemaBridge}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -140,13 +140,18 @@ private[sources] object FileStats {
 
   /** The reader for a scan of files a manifest's `standing` rows do not
     * cover yet: with the schema those rows already name for `statCols`
-    * (their `<c>_min` types), so the scan runs no schema-inference job;
-    * plain inference with no standing rows. */
-  def reader(spark: SparkSession, standing: Array[Row],
-             statCols: Seq[String]): DataFrameReader =
+    * (their `<c>_min` types), or with no standing rows the `statCols`
+    * fields of the writer's `schema`, made nullable as a parquet read
+    * gives them — so the scan runs no schema-inference job. Plain
+    * inference when neither is known. */
+  def reader(spark: SparkSession, standing: Array[Row], statCols: Seq[String],
+             schema: Option[StructType] = None): DataFrameReader =
     standing.headOption.flatMap(r => scala.util.Try(StructType(
       statCols.distinct.map(c => StructField(c, r.schema(s"${c}_min").dataType))))
-      .toOption).fold(spark.read)(spark.read.schema(_))
+      .toOption)
+      .orElse(schema.flatMap(s => scala.util.Try(SchemaBridge.asNullable(
+        StructType(statCols.distinct.map(s(_))))).toOption))
+      .fold(spark.read)(spark.read.schema(_))
 
   /** The manifest rows of `files` for `cols`, with the schema
     * [[ZoneMaps.build]] gives them — or None when some footer cannot give

@@ -11,8 +11,10 @@ import org.apache.spark.sql.types.StructType
   * InputFormat-split distribution (S1–S5, `AM/ApplicationMaster.java:833-903`);
   * its sinks are upload/rename commit and a gzip TextOutputFormat stream
   * (K1/K2, `container/HboxContainer.java:524-613`, `1211-1257`). Spark
-  * DataSource covers all of it; this object pins the engine's entry points
-  * and keeps the Hadoop-InputFormat compatibility path alive.
+  * DataSource covers the built-in formats (`spark.read.*`, `df.write.*`,
+  * each committing `_SUCCESS`); this object keeps what it does not: the
+  * Hadoop InputFormat/OutputFormat compatibility path, the gzip text sink,
+  * Avro container files and whole-file media rows.
   *
   * Path schemes: every reader/writer here goes through the Hadoop
   * FileSystem API, so any scheme with a filesystem implementation on the
@@ -24,27 +26,9 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
-  // ---- scans -------------------------------------------------------------
-  def parquet(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
-
-  def csv(spark: SparkSession, path: String, schema: Option[StructType] = None,
-          header: Boolean = true): DataFrame = {
-    val r = spark.read.option("header", header.toString)
-    schema.fold(r.option("inferSchema", "true"))(s => r.schema(s)).csv(path)
-  }
-
-  def json(spark: SparkSession, path: String, schema: Option[StructType] = None): DataFrame = {
-    val r = spark.read
-    schema.fold(r)(s => r.schema(s)).json(path)
-  }
-
-  def orc(spark: SparkSession, path: String): DataFrame = spark.read.orc(path)
-
-  def text(spark: SparkSession, path: String): Dataset[String] = spark.read.textFile(path)
-
   /** Media-file ingestion: `binaryFile` scan mapped to the engine's
     * multimodal schema (doc_id = xxhash64(path), payload, meta struct) so
-    * the output feeds `Multimodal.extractFeatures/resize/frameSample`
+    * the output feeds `Multimodal.extractFeatures/frameSample`
     * directly. Whole files as single rows — the reference's DOWNLOAD
     * strategy for opaque inputs (S4); format comes from content sniffing
     * downstream, not the filename. */
@@ -103,98 +87,11 @@ object Sources {
 
   // ---- sinks (all emit _SUCCESS via FileOutputCommitter — parity with the
   // reference's _temporary→rename→_SUCCESS protocol, K1) -------------------
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(path)
-
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
-
-  /** Compacting parquet sink — the small-files mitigation every long-lived
-    * table needs (a curation pipeline's filtered outputs otherwise
-    * fragment into one sliver per task, and at 100 TB the NameNode/driver
-    * pays per file forever after). Sizes the file count from optimizer
-    * stats (driver-side metadata, no extra job) against a target bytes-
-    * per-file, then round-robin repartitions to exactly that many writers.
-    */
-  def writeCompacted(df: DataFrame, path: String,
-                     targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    require(targetFileBytes > 0, s"targetFileBytes=$targetFileBytes must be > 0")
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    df.repartition(compactedFileCount(bytes, targetFileBytes))
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** ⌈bytes / targetFileBytes⌉ clamped in BigInt space BEFORE narrowing:
-    * optimizer stats on joins / local relations can exceed Long range, and
-    * BigInt.toLong WRAPS (low 64 bits) — a garbage file count a post-hoc
-    * .min cap cannot guard. The 1M-file ceiling also bounds the
-    * writer-task count for unknown-stats plans. */
-  private[graft] def compactedFileCount(bytes: BigInt, targetFileBytes: Long): Int = {
-    val maxFiles = BigInt(1 << 20)
-    ((bytes + targetFileBytes - 1) / targetFileBytes)
-      .max(BigInt(1)).min(maxFiles).toInt
-  }
-
-  /** XML sink/scan — built into spark-sql since Spark 4 (the former
-    * spark-xml package); rowTag frames each record element. Rounds out the
-    * semi-structured surface next to json: same schema'd read contract. */
-  def writeXml(df: DataFrame, path: String, rowTag: String = "row"): Unit =
-    df.write.mode("overwrite").option("rowTag", rowTag).xml(path)
-
-  def readXml(spark: SparkSession, path: String, rowTag: String = "row"): DataFrame =
-    spark.read.option("rowTag", rowTag).xml(path)
 
   /** Gzip text sink — the reference's default output format
     * (gzip TextOutputFormat, `HboxConfiguration2.java:11-12`). */
   def writeGzipText(ds: Dataset[String], path: String): Unit =
     ds.write.mode("overwrite").option("compression", "gzip").text(path)
-
-  /** Hive-style partitioned parquet tree (`path/col=value/part-*.parquet`).
-    * This is the 100 TB scan-side story the flat-file sinks can't tell: a
-    * predicate on a partition column becomes a PartitionFilter, pruning
-    * whole directories at planning time — a day-filtered query over a
-    * years-deep tree lists and reads only the matching directories
-    * (PlanSpec asserts the pruning, not just the layout). */
-  def writePartitioned(df: DataFrame, path: String, partitionCols: String*): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-
-  /** Range-clustered parquet sink — the sorted-by-key data layout for
-    * min/max pruning: `repartitionByRange` gives the written files
-    * DISJOINT key ranges (equal keys can never straddle a boundary) and
-    * `sortWithinPartitions` orders rows inside each, so a point or range
-    * predicate on the cluster key skips whole files and row groups via
-    * parquet column statistics. This is the scan-side lever when the key
-    * is too high-cardinality for a directory layout (writePartitioned's
-    * contract tops out around 10³ distinct values — one directory per
-    * value; clustering handles 10⁹). The range exchange samples the key
-    * distribution, so skewed keys still yield balanced files. Pay the one
-    * sort at write time for every later selective scan — the same
-    * write-once/read-forever trade as writeBucketed, aimed at filters
-    * instead of joins. */
-  def writeClustered(df: DataFrame, path: String, clusterCol: String,
-                     nFiles: Int = 32): Unit = {
-    require(nFiles >= 1, s"nFiles=$nFiles must be >= 1")
-    df.repartitionByRange(nFiles, df(clusterCol))
-      .sortWithinPartitions(clusterCol)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Bucketed, sorted managed table — the co-located join path: two tables
-    * bucketed on their join key by the same bucket count join with ZERO
-    * shuffle exchanges (PlanSpec proves the exchange-free SortMergeJoin).
-    * This is the 100 TB answer to "the same fact-fact join runs every day":
-    * pay the bucketing shuffle once at write time, never at read time. */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    buckets: Int = 32): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-      .format("parquet").saveAsTable(table)
 
   /** Arbitrary `mapred.OutputFormat` sink, reflectively instantiated — full
     * parity with the reference's `hbox.outputformat.class` writer

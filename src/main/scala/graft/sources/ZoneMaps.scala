@@ -72,7 +72,7 @@ object ZoneMaps extends Logging {
       .sortWithinPartitions(colName)
       .write.mode("overwrite").parquet(dir)
 
-  /** Z-order-lite two-column clustering — ONE layout that serves range
+  /** Z-order-lite multi-column clustering — ONE layout that serves range
     * predicates on EITHER column (the Delta/Iceberg Z-ORDER pitch, public
     * design): each column is linearly scaled to a 16-bit bucket id off its
     * global [min, max] (one 1-row aggregate), the two ids are
@@ -98,13 +98,9 @@ object ZoneMaps extends Logging {
     * ~1/256 of the ROWS each by construction, so file envelopes stay tight
     * on the mass regardless of the distribution (spec-contrasted on a
     * skewed fixture). Correctness is unaffected either way — the manifest
-    * carries exact per-file min/max. */
-  def clusteredWriteZ(df: DataFrame, colA: String, colB: String,
-                      dir: String, nFiles: Int,
-                      equiDepth: Boolean = false): Unit =
-    clusteredWriteZN(df, Seq(colA, colB), dir, nFiles, equiDepth)
-
-  /** N-column Morton clustering (2 ≤ N ≤ 4 — the common lakehouse Z-ORDER
+    * carries exact per-file min/max.
+    *
+    * N-column Morton clustering (2 ≤ N ≤ 4 — the common lakehouse Z-ORDER
     * arity; beyond 4 the per-column envelope width (~nFiles^(1/N) of the
     * domain) stops paying for the interleave). Per-column bucket width is
     * ⌊60 / N⌋ bits capped at 16 (N=2 → 16+16=32 Morton bits, N=3 → 48,
@@ -366,10 +362,12 @@ object ZoneMaps extends Logging {
     * them, or every later scan rides the stale-manifest guard (correct but
     * unpruned). Rows that do not cover `cols` with driver blooms of
     * `blooms` are rebuilt from scratch over the union, as
-    * [[manifestRows]] does. */
+    * [[manifestRows]] does. `schema` is the writer's, for a scan of
+    * files no standing row covers ([[FileStats.reader]]). */
   private[graft] def foldRows(spark: SparkSession, dir: String,
                               cols: Seq[String],
-                              blooms: Seq[String]): Array[Row] = {
+                              blooms: Seq[String],
+                              schema: Option[StructType] = None): Array[Row] = {
     val t = zoneTable(spark, dir)
     // envelope-only rows of the persisted route cannot stand for blooms
     val standing =
@@ -377,7 +375,7 @@ object ZoneMaps extends Logging {
       else Array.empty[Row]
     val cs = (t.cols ++ cols).distinct
     val bs = (t.blooms ++ blooms).distinct
-    val updated = incrementalBuild(spark, dir, cs, standing, bs)
+    val updated = incrementalBuild(spark, dir, cs, standing, bs, schema = schema)
     replaceRows(spark, dir, updated, cs, bs)
     updated
   }
@@ -800,11 +798,13 @@ object ZoneMaps extends Logging {
     * equals a from-scratch [[build]] exactly (spec-pinned). `bloomCols`
     * rides the same contract: a file's key bloom is as immutable as its
     * envelope, so the membership manifest maintains by a batch-only scan
-    * + row union. */
+    * + row union. `schema`, the writer's, types the scan of fresh files
+    * when no standing row does ([[FileStats.reader]]). */
   def incrementalBuild(spark: SparkSession, dir: String, cols: Seq[String],
                        standing: Array[Row],
                        bloomCols: Seq[String] = Nil,
-                       expectedKeysPerFile: Long = 1L << 13): Array[Row] = {
+                       expectedKeysPerFile: Long = 1L << 13,
+                       schema: Option[StructType] = None): Array[Row] = {
     // the layer-wide normalization ([[ZoneMapFileIndex.normPath]]):
     // standing rows carry input_file_name() strings (URL-encoded), the
     // listing is unencoded FileStatus paths — both must land on the same
@@ -822,7 +822,7 @@ object ZoneMaps extends Logging {
     else kept ++ collected(FileStats.of(spark,
       statuses.map(_.filterNot(s => known(norm(FileStats.fileName(s))))),
       cols, bloomCols,
-      FileStats.aggregate(FileStats.reader(spark, standing, cols ++ bloomCols)
+      FileStats.aggregate(FileStats.reader(spark, standing, cols ++ bloomCols, schema)
           .parquet(fresh.map(readablePath): _*),
         cols, bloomCols, c => FileStats.bloomAgg(col(c), expectedKeysPerFile, 0.01))))
   }

@@ -141,19 +141,6 @@ class ClustersSpec extends AnyFunSuite {
       }
   }
 
-  test("dedupByClusters keeps exactly the unpaired docs plus one keeper per cluster") {
-    val docs = tables.documents
-    val clusters = Clusters.dupClusters(docs)
-    val cleaned = Clusters.dedupByClusters(docs, clusters)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val all = docs.select("doc_id").collect().map(_.getLong(0)).toSet
-    val rows = clusters.collect()
-    val paired = rows.map(_.getAs[Long]("doc_id")).toSet
-    val keepers = rows.filter(_.getAs[Boolean]("keep")).map(_.getAs[Long]("doc_id")).toSet
-    assert(cleaned === (all -- paired) ++ keepers)
-    assert(cleaned.size < all.size, "planted near-dups must shrink the corpus")
-  }
-
   test("d22: edit clusters close a planted edit chain transitively, keeper = min id") {
     import spark.implicits._
     // kitten–sitten dist 1, sitten–sittin dist 1, kitten–sittin dist 2:

@@ -704,21 +704,6 @@ class DataPipelineSpec extends AnyFunSuite {
     assert(got.count() === docs.count(), "every document keeps a flag row")
   }
 
-  test("p24 merge: two-batch candidate fold equals the full recompute; idempotent") {
-    val a = docs.where(col("doc_id") % 2 === 0)
-    val b = docs.where(col("doc_id") % 2 =!= 0)
-    val merged = DataPipeline.mergeHoldoutCandidates(
-      DataPipeline.holdoutCandidates(a), DataPipeline.holdoutCandidates(b))
-    val full = DataPipeline.holdoutCandidates(docs)
-    assert(merged.except(full).isEmpty && full.except(merged).isEmpty,
-      "min-k selection must be mergeable: top-k(A ∪ B) = top-k(top-k(A) ∪ top-k(B))")
-    // at-least-once delivery: re-folding an already-included batch is a no-op
-    val again = DataPipeline.mergeHoldoutCandidates(
-      merged, DataPipeline.holdoutCandidates(b))
-    assert(again.except(full).isEmpty && full.except(again).isEmpty,
-      "re-delivered batch must not evict or duplicate standing members")
-  }
-
   test("p24 plan: bounded heap partial-aggregates; no Window over the corpus") {
     val df = DataPipeline.stratifiedHoldout(docs)
     df.collect()
@@ -949,7 +934,7 @@ class DataPipelineSpec extends AnyFunSuite {
       assert(r.getLong(5) === ms.length.toLong - 1)
     }
     // the rule must actually differ from d07's min-id keeper somewhere,
-    // or the operator adds nothing over dedupByClusters
+    // or the operator adds nothing over d07's keeper
     assert(rows.exists(r => r.getLong(1) !== members(r.getLong(0)).min),
       "no cluster where priority overrides min-id — fixture too weak")
   }
@@ -1703,21 +1688,6 @@ class DataPipelineSpec extends AnyFunSuite {
     assert(got(0L)._3 == 3L * 1000000L / 5L && got(0L)._4)
     // doc 10: 4 windows, zero hits, not compromised
     assert(got(10L) == ((4L, 0L, 0L, false)))
-  }
-
-  test("p61 census path: decontaminating against the standing census equals recompute") {
-    import org.apache.spark.sql.functions.col
-    val isEval = col("doc_id") % 10 === 0
-    val docs = tables.documents.select(col("doc_id"), col("text"))
-    val census = graft.operators.DataPipeline
-      .chunkCensus(docs.where(!isEval), 200, 100)
-    val viaCensus = graft.operators.DataPipeline
-      .chunkDecontaminateAgainst(census, docs.where(isEval), 200, 100)
-    val recompute = graft.operators.DataPipeline
-      .chunkDecontaminate(docs, isEval, 200, 100)
-    assert(viaCensus.exceptAll(recompute).isEmpty &&
-      recompute.exceptAll(viaCensus).isEmpty,
-      "census-probe decontamination must equal the recompute form")
   }
 
   test("p62: length-sorted batching never pads more than arrival order; fixture exact") {

@@ -32,7 +32,8 @@ class DedupSpec extends AnyFunSuite {
       // 12/13 are near-dups of EACH OTHER only → both admitted (batch-
       // internal resolution is d03+d07's job, the documented contract)
     ).toDF("doc_id", "text")
-    val admitted = Dedup.incrementalNearDup(existing, incoming)
+    val docs = existing.unionByName(incoming)
+    val admitted = Dedup.admitted(docs, Dedup.minHashLshPairs(docs), _ >= 10L)
       .as[Long].collect().toSet
     assert(admitted === Set(12L, 13L))
   }
@@ -82,7 +83,8 @@ class DedupSpec extends AnyFunSuite {
       // 12/13 are 1 edit apart from EACH OTHER only → both admitted
       // (batch-internal resolution is downstream's job, the d10 contract)
     ).toDF("doc_id", "text")
-    val admitted = Dedup.incrementalEditDup(existing, incoming, maxDist = 4)
+    val docs = existing.unionByName(incoming)
+    val admitted = Dedup.admitted(docs, Dedup.editDistancePairs(docs, maxDist = 4), _ >= 10L)
       .as[Long].collect().toSet
     assert(admitted === Set(12L, 13L))
   }
@@ -133,9 +135,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("d10 plan: banded probe join, no cartesian, no all-pairs") {
-    val docs = tables.documents
-    val df = Dedup.incrementalNearDup(
-      docs.where(col("doc_id") % 3 =!= 0), docs.where(col("doc_id") % 3 === 0))
+    val df = SparkEntry.queries("d10_incremental_neardup")(spark, sf)
     df.collect()
     val p = SparkTestSession.finalPlan(df)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),

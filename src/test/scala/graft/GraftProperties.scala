@@ -753,27 +753,6 @@ object GraftProperties extends Properties("graft") {
       }
     }
 
-  property("ScanWindows.lastNonNull ≡ last(ignoreNulls) window on random frames") =
-    forAll(scanFrame) { case (rows, bw, _) =>
-      import org.apache.spark.sql.expressions.Window
-      rows.isEmpty || {
-        // null out a random-but-deterministic subset (v % 3) so runs of
-        // nulls regularly span whole buckets
-        val df = rows.toDF("g", "k", "v").repartition(5)
-          .withColumn("v2", when(pmod(col("v"), lit(3)) === 0, lit(null))
-            .otherwise(col("v")))
-          .withColumn("bkt", expr(s"k div $bw"))
-        val got = graft.operators.ScanWindows.lastNonNull(
-          df, Seq("g"), "bkt", "k", "v2", "locf")
-        val w = Window.partitionBy(col("g")).orderBy(col("k"))
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val want = df.withColumn("locf",
-          last(col("v2"), ignoreNulls = true).over(w))
-        got.select("g", "k", "locf").except(want.select("g", "k", "locf")).isEmpty &&
-          want.select("g", "k", "locf").except(got.select("g", "k", "locf")).isEmpty
-      }
-    }
-
   // nulls allowed in the partition key, order key AND value; k drawn from
   // a tiny range so RANGE-frame peer groups are everywhere
   private val ruleFrame: Gen[List[(Option[String], Option[Long], Option[Long])]] =

@@ -23,8 +23,8 @@ class IvfPqSpec extends AnyFunSuite {
       (2L, Seq(100.2, 99.9)),  // cell 1, residual ≈ (0.2, -0.1) → code 0
       (3L, Seq(0.1, -0.2))     // cell 0, residual ≈ 0 → code 0
     ).toDF("vec_id", "embedding")
-    val got = IvfPq.encode(vecs, centers, cb)
-      .as[(Long, Int, Seq[Byte])].collect().sortBy(_._1)
+    val got = IvfPq.encodeRefine(vecs, centers, cb)
+      .select("vec_id", "cell", "codes").as[(Long, Int, Seq[Byte])].collect().sortBy(_._1)
     assert(got(0) === ((1L, 0, Seq(1.toByte))))
     assert(got(1) === ((2L, 1, Seq(0.toByte))))
     assert(got(2) === ((3L, 0, Seq(0.toByte))))
@@ -68,39 +68,16 @@ class IvfPqSpec extends AnyFunSuite {
     assert(df2.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet === first)
   }
 
-  test("durable index: probed-cell predicate lands in PartitionFilters; parity with stateless serve") {
-    val (centers, cb) = IvfPq.train(emb)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_idx").toString
-    IvfPq.writeIndex(emb, centers, cb, dir)
-    // hive-style cell partition directories on disk
-    val cellDirs = new java.io.File(dir).listFiles().filter(_.getName.startsWith("cell="))
-    assert(cellDirs.nonEmpty, s"expected cell=N directories under $dir")
-    val queries = emb.filter("vec_id < 3")
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .as[(Long, Seq[Double])].collect().toSeq
-      .map { case (id, v) => (id, v.toArray) }
-    val df = IvfPq.searchIndex(spark, dir, centers, cb, queries, k = 5, nProbe = 2)
-    val got = df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    // the cell IN (…) predicate must surface as a PartitionFilter (pruned
-    // at listing time), not a data Filter after a full read
-    val plan = df.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(plan).isDefined,
-      s"probed-cell predicate must be a PartitionFilter:\n$plan")
-    val want = IvfPq.search(emb, centers, cb, "vec_id < 3", k = 5, nProbe = 2)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(got === want)
-  }
-
   test("plan: corpus cell-pruned and unshuffled; probes broadcast; two top-k exchanges") {
     val (centers, cb) = IvfPq.train(emb)
-    val df = IvfPq.search(emb, centers, cb)
+    val df = IvfPq.searchEncoded(IvfPq.encodeRefine(emb, centers, cb), centers, cb)
     df.collect()
     val p = SparkTestSession.finalPlan(df)
     assert(p.contains("BroadcastExchange"), s"probe set must broadcast:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"), p)
     assert("Exchange hashpartitioning".r.findAllIn(p).size <= 2,
       s"only the shortlist and final top-k aggs may shuffle:\n$p")
-    val encPlan = IvfPq.encode(emb, centers, cb).queryExecution.executedPlan.toString
+    val encPlan = IvfPq.encodeRefine(emb, centers, cb).queryExecution.executedPlan.toString
     assert(!encPlan.contains("Exchange hashpartitioning") && !encPlan.contains("Exchange rangepartitioning"),
       s"index build must be map-side (no keyed exchange):\n$encPlan")
   }

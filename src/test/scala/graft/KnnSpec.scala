@@ -51,21 +51,6 @@ class KnnSpec extends AnyFunSuite {
     assert(got.nonEmpty, "tau=0.1 must match something on this corpus")
   }
 
-  test("s07 indexed: IVF radius is a precision-1 subset of exact radius with bounded recall") {
-    Memo.release(spark)
-    val tau = 0.1
-    val exact = Knn.radius(tables.embeddings, "vec_id < 5", tau).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Knn.ivfRadius(tables.embeddings, "vec_id < 5", tau).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(ivf.subsetOf(exact), "every emitted pair is exact-verified (precision 1)")
-    assert(exact.nonEmpty)
-    // near-random embeddings: cell pruning keeps ~nProbe/nCells of the
-    // candidates (the s02 information-theoretic floor)
-    assert(ivf.size.toDouble / exact.size >= 0.2,
-      s"recall ${ivf.size}/${exact.size} fell below the probe-fraction floor")
-  }
-
   test("s08: kNN graph agrees with per-query brute force for every vector") {
     val emb = tables.embeddings.filter("vec_id < 40")
     val graph = Knn.knnGraph(emb, k = 3).collect()
@@ -136,25 +121,6 @@ class KnnSpec extends AnyFunSuite {
     rows.groupBy(_.getLong(0)).values.foreach(rs => assert(rs.length === 5))
   }
 
-  test("s10 served: filteredIvf is filter-pure with recall above the probe floor") {
-    Memo.release(spark)
-    val exact = Knn.filteredBruteForce(tables.embeddings).collect()
-      .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val served = Knn.filteredIvf(tables.embeddings).collect()
-    val evenLabels = tables.embeddings.filter("label % 2 = 0")
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    served.foreach(r => assert(evenLabels.contains(r.getLong(2)), "filter purity"))
-    val recall = (exact intersect served.map(r => (r.getLong(0), r.getLong(2))).toSet)
-      .size.toDouble / exact.size
-    assert(recall >= 0.25, s"filtered recall=$recall below the cell-pruning bound")
-    // second serve reads the memoized LABELED index — no corpus-sized
-    // label re-join per call (the round-7 index rule)
-    val again = Knn.filteredIvf(tables.embeddings)
-    again.collect()
-    assert(again.queryExecution.executedPlan.toString.contains("InMemoryTableScan"),
-      "repeat serves must read the cached labeled index")
-  }
-
   test("s08 plan: top-k clips map-side (TopKLocal) — the exchange is n·k, never n²") {
     val df = Knn.knnGraph(tables.embeddings, k = 5)
     df.collect()
@@ -193,7 +159,7 @@ class KnnSpec extends AnyFunSuite {
     // default (Lloyd init is deterministic), and no retraining per query
     val centers = Knn.trainIvf(tables.embeddings, nCells = 10)
     assert(centers.length === 10)
-    val served = Knn.ivfServe(tables.embeddings, centers, "vec_id < 5", k = 5, nProbe = 3)
+    val served = Knn.ivfServeIndexed(Knn.assigned(tables.embeddings, centers), centers, "vec_id < 5", k = 5, nProbe = 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val default = Knn.ivf(tables.embeddings, "vec_id < 5", k = 5, nProbe = 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
@@ -229,7 +195,7 @@ class KnnSpec extends AnyFunSuite {
     // serving from the upserted index == stateless serve over the union
     val a = Knn.ivfServeIndexed(upserted, centers, "vec_id < 5", k = 5, nProbe = 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val b = Knn.ivfServe(emb, centers, "vec_id < 5", k = 5, nProbe = 3)
+    val b = Knn.ivfServeIndexed(Knn.assigned(emb, centers), centers, "vec_id < 5", k = 5, nProbe = 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
     assert(a === b, "served results must be identical — not just recall-equivalent")
   }
@@ -252,7 +218,7 @@ class KnnSpec extends AnyFunSuite {
     assert(maintained.where(col("vec_id") % 7 === 0).isEmpty)
     val a = Knn.ivfServeIndexed(maintained, centers, "vec_id < 5", k = 5, nProbe = 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val b = Knn.ivfServe(survivors, centers, "vec_id < 5", k = 5, nProbe = 3)
+    val b = Knn.ivfServeIndexed(Knn.assigned(survivors, centers), centers, "vec_id < 5", k = 5, nProbe = 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
     assert(a === b, "served results must be identical over the survivors")
     assert(a.forall { case (_, _, nbr, _) => nbr % 7 != 0 },
@@ -296,7 +262,7 @@ class KnnSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(plan).isDefined,
       s"probed-cell predicate must be a PartitionFilter:\n$plan")
-    val want = Knn.ivfServe(tables.embeddings, centers, "vec_id < 3", k = 5, nProbe = 2)
+    val want = Knn.ivfServeIndexed(Knn.assigned(tables.embeddings, centers), centers, "vec_id < 3", k = 5, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(got === want)
   }

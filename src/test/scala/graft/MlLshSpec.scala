@@ -22,8 +22,8 @@ class MlLshSpec extends AnyFunSuite {
   }
 
   test("Word2Vec: seed-pinned fit is deterministic; vocabulary and synonyms behave") {
-    val vecs = MlOps.word2vecVectors(tables.documents, vectorSize = 16, minCount = 2)
-      .collect().map(r => r.getString(0) ->
+    val model = MlOps.word2vecModel(tables.documents, vectorSize = 16, minCount = 2)
+    val vecs = model.getVectors.collect().map(r => r.getString(0) ->
         r.getAs[org.apache.spark.ml.linalg.Vector](1).toArray.toSeq).toMap
     assert(vecs.nonEmpty, "vocabulary must be non-empty")
     assert(vecs.values.forall(_.length === 16))
@@ -34,49 +34,17 @@ class MlLshSpec extends AnyFunSuite {
     assert(vecs.keys.forall(w => counts.getOrElse(w, 0L) >= 2L),
       "vocab must respect minCount")
     // determinism: a second fit reproduces the vectors bit-for-bit
-    val again = MlOps.word2vecVectors(tables.documents, vectorSize = 16, minCount = 2)
-      .collect().map(r => r.getString(0) ->
+    val again = MlOps.word2vecModel(tables.documents, vectorSize = 16, minCount = 2)
+      .getVectors.collect().map(r => r.getString(0) ->
         r.getAs[org.apache.spark.ml.linalg.Vector](1).toArray.toSeq).toMap
     assert(again === vecs, "seed-pinned single-partition fit must be deterministic")
     // synonym query: n rows, best-first, never echoing the query token
     val probe = vecs.keys.min // deterministic vocab member
-    val syn = MlOps.similarTokens(tables.documents, probe, n = 5).collect()
+    val syn = model.findSynonyms(probe, 5).collect()
     assert(syn.length === 5)
     assert(syn.forall(_.getString(0) != probe))
     val sims = syn.map(_.getDouble(1))
     assert(sims.zip(sims.tail).forall { case (a, b) => a >= b }, "best-first order")
-  }
-
-  test("PCA: components orthonormal, variance non-increasing, projection contracts norms") {
-    val k = 8
-    val model = MlOps.pcaModel(tables.embeddings, k)
-    val pc = model.pc // dims × k
-    val dims = pc.numRows
-    // columns orthonormal: Cᵀ·C ≈ I
-    for (i <- 0 until k; j <- i until k) {
-      var dot = 0.0
-      var r = 0
-      while (r < dims) { dot += pc(r, i) * pc(r, j); r += 1 }
-      val expect = if (i == j) 1.0 else 0.0
-      assert(math.abs(dot - expect) < 1e-8, s"C[:,$i]·C[:,$j] = $dot")
-    }
-    val ev = model.explainedVariance.toArray
-    assert(ev.length === k && ev.forall(v => v >= 0.0 && v <= 1.0))
-    assert(ev.zip(ev.tail).forall { case (a, b) => a >= b - 1e-12 },
-      "explained variance is non-increasing")
-    assert(ev.sum <= 1.0 + 1e-9)
-    // orthonormal projection never lengthens a vector
-    val projected = MlOps.pcaProject(tables.embeddings, k).collect()
-      .map(r2 => r2.getLong(0) -> r2.getSeq[Double](1).toArray).toMap
-    val src = tables.embeddings.select("vec_id", "embedding").collect()
-      .map(r2 => r2.getLong(0) -> r2.getSeq[Float](1).toArray).toMap
-    assert(projected.keySet === src.keySet)
-    projected.foreach { case (id, p) =>
-      assert(p.length === k)
-      val pn = p.map(x => x * x).sum
-      val sn = src(id).map(x => x.toDouble * x).sum
-      assert(pn <= sn + 1e-6, s"vec $id projection must not lengthen")
-    }
   }
 
   test("BucketedRandomProjectionLSH pairs report true euclidean distances") {

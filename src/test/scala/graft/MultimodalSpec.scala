@@ -55,9 +55,8 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("BMP: resize takes the real path — thumb is a valid BMP with NN pixels") {
-    val out = Multimodal.resize(spark, mediaOf(1L -> testBmp), width = 2, height = 2).collect()(0)
-    assert(out.format === "image/bmp")
-    val thumb = MediaCodecs.decodeBmp(out.thumb).get
+    val thumb = MediaCodecs.decodeBmp(MediaCodecs.encodeBmp(
+      MediaCodecs.resizeBmp(MediaCodecs.decodeImage(testBmp).get, 2, 2))).get
     assert(thumb.width === 2 && thumb.height === 2)
     // nearest-neighbor: (x,y) samples source (x*6/2, y*4/2) of the gradient
     for (y <- 0 until 2; x <- 0 until 2) {
@@ -112,9 +111,9 @@ class MultimodalSpec extends AnyFunSuite {
     val f = Multimodal.extractFeatures(spark, mediaOf(8L -> jpg)).collect()(0)
     assert(f.sniffed === "image/jpeg" && f.width === 6 && f.height === 4)
     assert(f.sample_rate === -1)
-    val out = Multimodal.resize(spark, mediaOf(8L -> jpg), width = 2, height = 2).collect()(0)
-    assert(out.format === "image/bmp") // thumbs re-encode as BMP whatever the source
-    val thumb = MediaCodecs.decodeBmp(out.thumb).get
+    // thumbs re-encode as BMP whatever the source
+    val thumb = MediaCodecs.decodeBmp(MediaCodecs.encodeBmp(
+      MediaCodecs.resizeBmp(MediaCodecs.decodeImage(jpg).get, 2, 2))).get
     assert(thumb.width === 2 && thumb.height === 2)
   }
 
@@ -186,7 +185,7 @@ class MultimodalSpec extends AnyFunSuite {
     val planted = Seq(
       (1L, encodeBmp(base)), (2L, encodePng(base)), (3L, encodeBmp(inv)))
       .toDF("doc_id", "payload")
-    val pairs = Multimodal.imageNearDups(
+    val pairs = Multimodal.hammingNearDups(
         Multimodal.imageHashes(spark, planted).toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs === Set((1L, 2L)), "the cross-container duplicate, and only it")
@@ -197,7 +196,7 @@ class MultimodalSpec extends AnyFunSuite {
       a <- hashes; b <- hashes
       if a.doc_id < b.doc_id && java.lang.Long.bitCount(a.phash ^ b.phash) <= 3
     } yield (a.doc_id, b.doc_id)).toSet
-    val banded = Multimodal.imageNearDups(
+    val banded = Multimodal.hammingNearDups(
         Multimodal.imageHashes(
           spark, Multimodal.syntheticMedia(spark, tables.documents)).toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -393,13 +392,6 @@ class MultimodalSpec extends AnyFunSuite {
     val f = feats.find(_.doc_id == doc.getLong(0)).get
     assert(f.checksum === sum)
     assert(f.n_bytes === bytes.length)
-  }
-
-  test("resize bounds every thumbnail to width*height bytes") {
-    val out = Multimodal.resize(spark, media, width = 4, height = 4).collect()
-    assert(out.length === tables.documents.count())
-    assert(out.forall(_.thumb.length <= 16))
-    assert(out.forall(r => r.width == 4 && r.height == 4))
   }
 
   test("frame sampling keeps every Nth frame with correct sizes") {

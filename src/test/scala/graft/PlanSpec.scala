@@ -87,12 +87,12 @@ class PlanSpec extends AnyFunSuite {
     // join key at write time, then the sort-merge join needs no exchange
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      sources.Sources.writeBucketed(
-        tables.orders.select("o_orderkey", "o_custkey", "o_totalprice"),
-        "b_orders", "o_orderkey", buckets = 4)
-      sources.Sources.writeBucketed(
-        tables.lineitem.select("l_orderkey", "l_quantity"),
-        "b_lineitem", "l_orderkey", buckets = 4)
+      def bucketed(df: org.apache.spark.sql.DataFrame, table: String, key: String): Unit =
+        df.write.mode("overwrite").bucketBy(4, key).sortBy(key)
+          .format("parquet").saveAsTable(table)
+      bucketed(tables.orders.select("o_orderkey", "o_custkey", "o_totalprice"),
+        "b_orders", "o_orderkey")
+      bucketed(tables.lineitem.select("l_orderkey", "l_quantity"), "b_lineitem", "l_orderkey")
       val j = spark.table("b_orders")
         .join(spark.table("b_lineitem"), col("o_orderkey") === col("l_orderkey"))
       assert(j.count() > 0)
@@ -109,8 +109,8 @@ class PlanSpec extends AnyFunSuite {
   test("partitioned tree: partition filters prune directories at the scan") {
     import org.apache.spark.sql.functions.{col, month}
     val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
-    sources.Sources.writePartitioned(
-      tables.orders.withColumn("month", month(col("o_orderdate"))), dir, "month")
+    tables.orders.withColumn("month", month(col("o_orderdate")))
+      .write.mode("overwrite").partitionBy("month").parquet(dir)
     val pruned = spark.read.parquet(dir).filter(col("month") === 3)
     val prunedFiles = scannedFiles(pruned)
     // the month predicate must surface as a PartitionFilter (pruned at

@@ -23,7 +23,7 @@ class PqSpec extends AnyFunSuite {
       (1L, Seq(9.0, 9.0, 0.2, 4.8)), // sub0 → code 1, sub1 → code 0
       (2L, Seq(1.0, -1.0, 4.0, 1.0)) // sub0 → code 0, sub1 → code 1
     ).toDF("vec_id", "embedding")
-    val got = Pq.pqEncode(vecs, cb).as[(Long, Seq[Byte])].collect().sortBy(_._1)
+    val got = Pq.pqEncodeRefine(vecs, cb).select("vec_id", "codes").as[(Long, Seq[Byte])].collect().sortBy(_._1)
     assert(got(0) === ((1L, Seq(1.toByte, 0.toByte))))
     assert(got(1) === ((2L, Seq(0.toByte, 1.toByte))))
   }
@@ -37,7 +37,7 @@ class PqSpec extends AnyFunSuite {
       (2L, Seq(9.0, 9.0, 0.0, 5.0)),  // codes (1, 0)
       (3L, Seq(1.0, 1.0, 5.0, 0.0))   // codes (0, 1)
     ).toDF("vec_id", "embedding")
-    val got = Pq.pqSearch(vecs, cb, "vec_id = 1", k = 2)
+    val got = Pq.pqSearchIndexed(Pq.pqEncodeRefine(vecs, cb), cb, "vec_id = 1", k = 2)
       .as[(Long, Int, Long, Double)].collect().sortBy(_._2)
     // query (0,0,0,5): d² to sub0 centroids = [0, 200]; to sub1 = [0, 50]
     // neighbor 2 → table[0][1] + table[1][0] = 200 + 0 = 200
@@ -95,10 +95,10 @@ class PqSpec extends AnyFunSuite {
 
   test("plan: encoding is scan-local; search shuffles only for the top-k agg") {
     val cb = Pq.trainPq(emb, m = 8, k = 16)
-    val encPlan = Pq.pqEncode(emb, cb).queryExecution.executedPlan.toString
+    val encPlan = Pq.pqEncodeRefine(emb, cb).queryExecution.executedPlan.toString
     assert(!encPlan.contains("Exchange hashpartitioning") && !encPlan.contains("Exchange rangepartitioning"),
       s"encode must be map-side (no keyed exchange):\n$encPlan")
-    val df = Pq.pqSearch(emb, cb)
+    val df = Pq.pqSearchIndexed(Pq.pqEncodeRefine(emb, cb), cb)
     df.collect()
     val p = SparkTestSession.finalPlan(df)
     assert(p.contains("BroadcastExchange"), s"query tables must broadcast:\n$p")
@@ -110,7 +110,7 @@ class PqSpec extends AnyFunSuite {
   test("codes stay within the codebook and use exactly m bytes per vector") {
     val cb = Pq.trainPq(emb, m = 8, k = 16)
     assert(cb.length === 8 && cb.forall(_.length <= 16))
-    val codes = Pq.pqEncode(emb, cb).select(col("codes")).as[Seq[Byte]].collect()
+    val codes = Pq.pqEncodeRefine(emb, cb).select(col("codes")).as[Seq[Byte]].collect()
     assert(codes.forall(_.length === 8))
     assert(codes.flatten.forall(c => c >= 0 && c < 16))
   }

@@ -72,40 +72,6 @@ class ScanWindowsSpec extends AnyFunSuite {
       .except(got.select(cols.map(col): _*)).isEmpty)
   }
 
-  test("lastNonNull matches last/first(ignoreNulls) windows, both frame ends") {
-    // plant nulls on a modulus, including whole leading buckets of nulls
-    // for one group so the offset chain must skip entire buckets
-    val df = synth
-      .withColumn("v2",
-        when(col("k") % 3 === 0 || (col("g") === "b" && col("k") < 25),
-          lit(null)).otherwise(col("v")))
-      .withColumn("bkt", expr("k div 4"))
-      .withColumn("negk", -col("k"))
-      .withColumn("negbkt", expr("negk div 4"))
-    val got = {
-      val down = ScanWindows.lastNonNull(df, Seq("g"), "bkt", "k", "v2", "locf")
-      val up = ScanWindows.lastNonNull(down, Seq("g"), "negbkt", "negk", "v2", "nocf")
-      val prev = ScanWindows.lastNonNull(up, Seq("g"), "bkt", "k", "v2", "prev_nn",
-        frameEnd = -1)
-      ScanWindows.lastNonNull(prev, Seq("g"), "negbkt", "negk", "v2", "next_nn",
-        frameEnd = -1)
-    }
-    val w = Window.partitionBy(col("g")).orderBy(col("k"))
-    val want = df
-      .withColumn("locf", last(col("v2"), ignoreNulls = true)
-        .over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("nocf", first(col("v2"), ignoreNulls = true)
-        .over(w.rowsBetween(0, Window.unboundedFollowing)))
-      .withColumn("prev_nn", lag(col("v2"), 1, null, ignoreNulls = true).over(w))
-      .withColumn("next_nn", lead(col("v2"), 1, null, ignoreNulls = true).over(w))
-    val cols = Seq("g", "k", "locf", "nocf", "prev_nn", "next_nn")
-    assert(got.count() === want.count())
-    assert(got.select(cols.map(col): _*)
-      .except(want.select(cols.map(col): _*)).isEmpty)
-    assert(want.select(cols.map(col): _*)
-      .except(got.select(cols.map(col): _*)).isEmpty)
-  }
-
   test("slidingFrame width 1 degenerates to the row itself") {
     val df = synth.withColumn("bkt", expr("k div 5"))
     val got = ScanWindows.slidingFrame(df, Seq("g"), "bkt", Seq("k"), 1) { w =>

@@ -102,12 +102,6 @@ class SkewAndSketchSpec extends AnyFunSuite {
       tables.lineitem.select("l_suppkey", "l_orderkey").join(small, "l_suppkey").count())
   }
 
-  test("heavy hitters finds the hottest join keys") {
-    val hh = SkewOps.heavyHitters(tables.lineitem, col("l_suppkey"), 5).collect()
-    assert(hh.length === 5)
-    assert(hh.map(_.getLong(1)).toSeq === hh.map(_.getLong(1)).sortBy(-_).toSeq)
-  }
-
   test("approx_percentile tracks exact percentile within accuracy bound") {
     val r = tables.lineitem.agg(
       expr("percentile(l_extendedprice, 0.5)").as("exact"),

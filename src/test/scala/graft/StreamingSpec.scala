@@ -88,345 +88,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(rows("00:00") === 1L, "late row must not be counted")
   }
 
-  test("streaming near-dup admission matches the per-document batch d10 decision") {
-    implicit val sql = spark.sqlContext
-    val standing = Seq((1L, (1 to 12).map(i => s"w$i").mkString(" ")))
-      .toDF("doc_id", "text")
-    val mem = MemoryStream[(Long, String)]
-    val admitted = scala.collection.mutable.Set.empty[Long]
-    val q = EventStreams.admitNearDupsStream(
-      mem.toDF().toDF("doc_id", "text"), standing,
-      (df, _) => admitted ++= df.collect().map(_.getLong(0))).start()
-    // batch 1: an exact dup of standing doc 1 (dropped) + a fresh doc
-    mem.addData((10L, (1 to 12).map(i => s"w$i").mkString(" ")),
-      (11L, "totally fresh text one two three"))
-    q.processAllAvailable()
-    // batch 2: a near-dup of standing doc 1 (J = 9/10, dropped) + fresh
-    mem.addData((12L, (1 to 11).map(i => s"w$i").mkString(" ")),
-      (13L, "another unrelated document entirely"))
-    q.processAllAvailable(); q.stop()
-    // admission depends only on (doc, standing corpus) — the streamed
-    // union must equal the batch operator's decision doc-by-doc
-    assert(admitted.toSet === Set(11L, 13L))
-  }
-
-  test("streaming edit-distance admission matches the per-document batch d21 decision") {
-    implicit val sql = spark.sqlContext
-    val base = "the quick brown fox jumps over the lazy dog"
-    val standing = Seq((1L, base)).toDF("doc_id", "text")
-    val mem = MemoryStream[(Long, String)]
-    val admitted = scala.collection.mutable.Set.empty[Long]
-    val q = EventStreams.admitEditDupsStream(
-      mem.toDF().toDF("doc_id", "text"), standing,
-      (df, _) => admitted ++= df.collect().map(_.getLong(0)), maxDist = 4).start()
-    // batch 1: a 3-edit copy of standing doc 1 (dropped) + a far doc
-    mem.addData((10L, base.replace("dog", "cat")),
-      (11L, "entirely different words that share nothing with standing"))
-    q.processAllAvailable()
-    // batch 2: exact copy (dropped) + another far doc (admitted)
-    mem.addData((12L, base), (13L, "more fresh unrelated content again"))
-    q.processAllAvailable(); q.stop()
-    assert(admitted.toSet === Set(11L, 13L))
-  }
-
-  test("streaming embedding admission matches the per-vector batch d24 decision") {
-    implicit val sql = spark.sqlContext
-    def vec(f: Int => Double): Array[Float] =
-      Array.tabulate(graft.similarity.Srp.Dims)(i => f(i).toFloat)
-    val standing = Seq((1L, vec(i => math.sin(i + 1)))).toDF("vec_id", "embedding")
-    val mem = MemoryStream[(Long, Array[Float])]
-    val admitted = scala.collection.mutable.Set.empty[Long]
-    val q = EventStreams.admitEmbeddingsStream(
-      mem.toDF().toDF("vec_id", "embedding"), standing,
-      (df, _) => admitted ++= df.collect().map(_.getLong(0)), threshold = 0.9).start()
-    // batch 1: an exact copy of standing vec 1 (dropped) + a fresh vector
-    mem.addData((10L, vec(i => math.sin(i + 1))), (11L, vec(i => math.cos(7 * i + 3))))
-    q.processAllAvailable()
-    // batch 2: a near-copy of standing vec 1 (dropped) + another fresh one
-    mem.addData((12L, vec(i => math.sin(i + 1) + 0.001)), (13L, vec(i => math.cos(11 * i + 5))))
-    q.processAllAvailable(); q.stop()
-    assert(admitted.toSet === Set(11L, 13L))
-  }
-
-  test("streaming cluster maintenance converges to the full-recompute labels") {
-    implicit val sql = spark.sqlContext
-    // standing corpus: docs 1 and 2 are near-dups (J = 11/12), doc 3 unrelated
-    val standing = Seq(
-      (1L, (1 to 12).map(i => s"w$i").mkString(" ")),
-      (2L, (1 to 11).map(i => s"w$i").mkString(" ")),
-      (3L, "completely different standing content here")).toDF("doc_id", "text")
-    val initial = graft.dedup.Clusters.connectedComponents(
-      graft.dedup.Dedup.minHashLshPairs(standing).select(col("d1"), col("d2")))
-    val mem = MemoryStream[(Long, String)]
-    var finalLabels = Map.empty[Long, Long]
-    val q = EventStreams.maintainClustersStream(
-      mem.toDF().toDF("doc_id", "text"), standing, initial,
-      (df, _) => finalLabels = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-      .start()
-    // batch 1: doc 20 is a near-dup of standing doc 1 → joins cluster {1, 2}
-    mem.addData((20L, (0 to 11).map(i => s"w$i").mkString(" ")))
-    q.processAllAvailable()
-    // batch 2: an internal pair {30, 31}, untouched by standing
-    mem.addData((30L, (100 to 111).map(i => s"x$i").mkString(" ")),
-      (31L, (100 to 110).map(i => s"x$i").mkString(" ")))
-    q.processAllAvailable(); q.stop()
-    assert(finalLabels === Map(1L -> 1L, 2L -> 1L, 20L -> 1L, 30L -> 30L, 31L -> 30L),
-      "maintained labels must equal the full d07 recompute over standing + batches")
-  }
-
-  test("streaming manifest maintenance equals the batch manifest of the union") {
-    implicit val sql = spark.sqlContext
-    import graft.operators.DataPipeline
-    val standing = tables.documents.where(col("doc_id") < 100)
-      .select(col("doc_id"), col("text"))
-    val initial = DataPipeline.shardManifest(standing)
-    val mem = MemoryStream[(Long, String)]
-    var finalManifest = Map.empty[Int, (Long, Long, Long, Long, Long)]
-    val q = EventStreams.maintainManifestStream(
-      mem.toDF().toDF("doc_id", "text"), initial,
-      (df, _) => finalManifest = df.collect().map(r => r.getInt(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap)
-      .start()
-    val b1 = Seq((9001L, "streamed batch one alpha beta"), (9002L, "more streamed text"))
-    val b2 = Seq((9003L, "second batch gamma delta"))
-    mem.addData(b1: _*); q.processAllAvailable()
-    mem.addData(b2: _*); q.processAllAvailable(); q.stop()
-    import spark.implicits._
-    val union = standing.unionByName((b1 ++ b2).toDF("doc_id", "text"))
-    val expected = DataPipeline.shardManifest(union).collect().map(r => r.getInt(0) ->
-      ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
-    assert(finalManifest === expected,
-      "xor/min/max/sum folding must equal the batch manifest of the union")
-  }
-
-  test("streaming CMS maintenance equals batch counters over the streamed union") {
-    implicit val sql = spark.sqlContext
-    import graft.operators.TextQueries
-    val standing = tables.documents.where(col("doc_id") < 60)
-      .select(col("doc_id"), col("text"))
-    val initial = TextQueries.cmsCounters(standing).localCheckpoint(true)
-    val mem = MemoryStream[(Long, String)]
-    var finalState = Map.empty[(Int, Long), Long]
-    val q = EventStreams.maintainCmsStream(
-      mem.toDF().toDF("doc_id", "text"), initial,
-      (df, _) => finalState = df.collect()
-        .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap).start()
-    val b1 = Seq((9001L, "alpha beta alpha gamma"), (9002L, "beta beta delta"))
-    val b2 = Seq((9003L, "gamma alpha epsilon"))
-    mem.addData(b1: _*); q.processAllAvailable()
-    mem.addData(b2: _*); q.processAllAvailable(); q.stop()
-    import spark.implicits._
-    val union = standing.unionByName((b1 ++ b2).toDF("doc_id", "text"))
-    val expected = TextQueries.cmsCounters(union).collect()
-      .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(finalState === expected,
-      "additive counter folding must equal the batch counters of the union")
-    // the folded sketch never undercounts a planted heavy hitter
-    val alphaBuckets = TextQueries.cmsCounters(
-      Seq((1L, "alpha")).toDF("doc_id", "text")).collect()
-      .map(r => (r.getInt(0), r.getLong(1))).toSet
-    val est = alphaBuckets.map(finalState).min
-    val trueAlpha = union.select(explode(split(lower(col("text")), " ")).as("t"))
-      .where(col("t") === "alpha").count()
-    assert(est >= trueAlpha, "CMS point estimate is one-sided")
-  }
-
-  test("streaming chunk-census maintenance equals batch census over the streamed union") {
-    implicit val sql = spark.sqlContext
-    import graft.operators.DataPipeline
-    val standing = tables.documents.where(col("doc_id") < 60)
-      .select(col("doc_id"), col("text"))
-    val initial = DataPipeline.chunkCensus(standing, 200, 100)
-      .localCheckpoint(true)
-    val mem = MemoryStream[(Long, String)]
-    var finalState = Map.empty[String, Long]
-    val q = EventStreams.maintainChunkCensusStream(
-      mem.toDF().toDF("doc_id", "text"), initial,
-      (df, _) => finalState = df.collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap,
-      width = 200, stride = 100).start()
-    // b2 repeats b1's first text verbatim: its chunk counts must GROW
-    val b1 = Seq((9001L, "a" * 350), (9002L, ("b" * 200) + ("c" * 150)))
-    val b2 = Seq((9003L, "a" * 350))
-    mem.addData(b1: _*); q.processAllAvailable()
-    mem.addData(b2: _*); q.processAllAvailable(); q.stop()
-    import spark.implicits._
-    val union = standing.unionByName((b1 ++ b2).toDF("doc_id", "text"))
-    val expected = DataPipeline.chunkCensus(union, 200, 100).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(finalState === expected,
-      "additive count folding must equal the batch census of the union")
-    // the repeated document's aligned windows really merged (count 2+)
-    val dupHashes = DataPipeline.chunkCensus(
-      Seq((1L, "a" * 350)).toDF("doc_id", "text"), 200, 100).collect()
-      .map(_.getString(0))
-    dupHashes.foreach(h => assert(finalState(h) >= 2L,
-      s"replayed chunk $h should have merged counts"))
-  }
-
-  test("streaming media admission rejects the perceptual replay, admits the fresh image") {
-    implicit val sql = spark.sqlContext
-    import graft.multimodal.{MediaCodecs, Multimodal}
-    def bmp(f: (Int, Int) => (Int, Int, Int)): Array[Byte] = {
-      val (w, h) = (6, 4); val rgb = new Array[Byte](w * h * 3)
-      for (y <- 0 until h; x <- 0 until w) {
-        val d = (y * w + x) * 3; val (r, g, b) = f(x, y)
-        rgb(d) = r.toByte; rgb(d + 1) = g.toByte; rgb(d + 2) = b.toByte
-      }
-      MediaCodecs.encodeBmp(MediaCodecs.BmpImage(w, h, rgb))
-    }
-    val known = bmp((x, y) => (x * 40, y * 60, x + y))
-    val fresh = bmp((x, y) => (200 - x * 40, 10, 255 - y * 60))
-    // fixture precondition: the fresh image is perceptually FAR
-    val h1 = Multimodal.dHash64(MediaCodecs.decodeBmp(known).get)
-    val h2 = Multimodal.dHash64(MediaCodecs.decodeBmp(fresh).get)
-    assert(java.lang.Long.bitCount(h1 ^ h2) > 3, "fixture images too similar")
-    val standing = Seq((100L, h1)).toDF("doc_id", "phash")
-    val mem = MemoryStream[(Long, Array[Byte])]
-    var verdicts = Map.empty[Long, Boolean]
-    val q = EventStreams.admitMediaStream(
-      mem.toDF().toDF("doc_id", "payload"), standing,
-      (df, _) => verdicts ++= df.collect()
-        .map(r => r.getLong(0) -> r.getBoolean(4)).toMap).start()
-    mem.addData((1L, known), (2L, fresh))
-    q.processAllAvailable(); q.stop()
-    assert(verdicts(1L) === false, "perceptual replay of standing must be rejected")
-    assert(verdicts(2L) === true, "fresh image must be admitted")
-  }
-
-  test("streaming holdout maintenance equals batch p24 over the streamed union") {
-    implicit val sql = spark.sqlContext
-    import graft.operators.DataPipeline
-    val standing = tables.documents.where(col("doc_id") < 100)
-      .select(col("doc_id"), col("source"))
-    val initial = DataPipeline.holdoutCandidates(standing)
-    val mem = MemoryStream[(Long, String)]
-    var finalState = Set.empty[(String, Long)]
-    val q = EventStreams.maintainHoldoutStream(
-      mem.toDF().toDF("doc_id", "source"), initial,
-      (df, _) => finalState = df.collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSet).start()
-    // salt-hash order is unrelated to doc_id order, so late high-ids can
-    // evict standing members — the convergence check is the real property
-    val srcs = standing.select("source").distinct()
-      .collect().map(_.getString(0)).toSeq
-    val b1 = (9001L to 9020L).map(i => (i, srcs(i.toInt % srcs.length)))
-    val b2 = (9021L to 9040L).map(i => (i, srcs(i.toInt % srcs.length)))
-    mem.addData(b1: _*); q.processAllAvailable()
-    mem.addData(b2: _*); q.processAllAvailable(); q.stop()
-    import spark.implicits._
-    val union = standing.unionByName((b1 ++ b2).toDF("doc_id", "source"))
-    val expected = DataPipeline.holdoutCandidates(union).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(finalState === expected,
-      "folded per-source min-k state must equal batch p24 over the union")
-    assert((b1 ++ b2).map(_._1).toSet.intersect(expected.map(_._2)).nonEmpty ||
-      expected.nonEmpty, "sanity: expected state non-empty")
-  }
-
-  test("streaming index maintenance equals assigning the streamed union in one pass") {
-    implicit val sql = spark.sqlContext
-    import graft.similarity.Knn
-    val standing = tables.embeddings.where(col("vec_id") < 400)
-      .select(col("vec_id"), col("embedding"))
-    val centers = Knn.trainIvf(standing, nCells = 10)
-    val initial = Knn.assigned(standing, centers)
-    val late = tables.embeddings.where(col("vec_id") >= 400)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val mem = MemoryStream[(Long, Seq[Double])]
-    var finalIdx = Map.empty[Long, Int]
-    val q = EventStreams.maintainIndexStream(
-      mem.toDF().toDF("vec_id", "embedding"), centers, initial,
-      (df, _) => finalIdx = df.collect()
-        .map(r => r.getLong(0) -> r.getInt(2)).toMap).start()
-    val (b1, b2) = late.splitAt(late.length / 2)
-    mem.addData(b1.toIndexedSeq: _*); q.processAllAvailable()
-    mem.addData(b2.toIndexedSeq: _*); q.processAllAvailable(); q.stop()
-    val expected = Knn.assigned(
-      tables.embeddings.select(col("vec_id"), col("embedding")), centers)
-      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
-    assert(finalIdx === expected,
-      "per-batch frozen-model assignment must equal the one-pass rebuild")
-  }
-
-  test("streaming drift monitor converges to the batch p22 of the streamed union") {
-    implicit val sql = spark.sqlContext
-    import graft.operators.DataPipeline
-    val reference = tables.documents.where(col("doc_id") < 200)
-      .select(col("doc_id"), col("text"))
-    val mem = MemoryStream[(Long, String)]
-    var finalDrift = Map.empty[Double, (Long, Long)]
-    val q = EventStreams.monitorDriftStream(
-      mem.toDF().toDF("doc_id", "text"), reference,
-      (df, _) => finalDrift = df.collect().map(r =>
-        r.getDouble(0) -> ((r.getLong(1), r.getLong(2)))).toMap).start()
-    val b1 = Seq((9001L, "short"), (9002L, "a slightly longer streamed document here"))
-    val b2 = Seq((9003L, (1 to 120).map(i => s"w$i").mkString(" ")))
-    mem.addData(b1: _*); q.processAllAvailable()
-    mem.addData(b2: _*); q.processAllAvailable(); q.stop()
-    import spark.implicits._
-    val expected = DataPipeline.qualityDrift(
-      reference, (b1 ++ b2).toDF("doc_id", "text")).collect()
-      .map(r => r.getDouble(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(finalDrift === expected,
-      "folded histogram drift must equal batch p22 over the streamed union")
-  }
-
-  test("streaming concurrency monitor converges to batch q105 of the streamed union") {
-    implicit val sql = spark.sqlContext
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val mem = MemoryStream[(Long, java.sql.Timestamp)]
-    var finalRep = Map.empty[String, (Long, Long, String)]
-    val q = EventStreams.monitorConcurrencyStream(
-      mem.toDF().toDF("event_id", "ts"),
-      (df, _) => finalRep = df.collect().map(r =>
-        r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap)
-      .start()
-    // batch 1: two overlapping intervals on Jan 1 + one crossing midnight
-    val b1 = Seq((0L, ts("2024-01-01 10:00:00")), (960L, ts("2024-01-01 10:00:30")),
-      (240L, ts("2024-01-01 23:59:30")))
-    // batch 2: a third interval joins the Jan-1 cluster → peak rises to 3
-    val b2 = Seq((480L, ts("2024-01-01 10:00:40")))
-    mem.addData(b1: _*); q.processAllAvailable()
-    mem.addData(b2: _*); q.processAllAvailable(); q.stop()
-    import spark.implicits._
-    val expected = graft.operators.Relational5.concurrencySweep(
-      (b1 ++ b2).toDF("event_id", "ts")).collect().map(r =>
-      r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
-    assert(finalRep === expected,
-      "folded deltas must re-sweep to batch q105 over the streamed union")
-    assert(finalRep("2024-01-01")._2 === 3L, "cross-batch overlap raises the peak")
-    assert(finalRep.contains("2024-01-02"), "midnight tail day reported")
-  }
-
-  test("streaming recency monitor rolls aged days losslessly, equals batch q108") {
-    implicit val sql = spark.sqlContext
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val mem = MemoryStream[(Long, java.sql.Timestamp)]
-    var finalRep = Map.empty[Long, (Long, String, Long)]
-    val q = EventStreams.monitorRecencyStream(
-      mem.toDF().toDF("user_id", "ts"),
-      (df, _) => finalRep = df.collect().map(r =>
-        r.getLong(0) -> ((r.getLong(1), r.getString(2), r.getLong(3)))).toMap)
-      .start()
-    // batch 1: user 1 active long ago (three old days), user 2 recent
-    val b1 = Seq((1L, ts("2024-01-01 10:00:00")), (1L, ts("2024-01-02 10:00:00")),
-      (1L, ts("2024-01-03 10:00:00")), (2L, ts("2024-01-25 09:00:00")))
-    // batch 2: anchor jumps to Feb 20 — user 1's days age past the horizon
-    val b2 = Seq((2L, ts("2024-02-20 12:00:00")), (2L, ts("2024-02-20 13:00:00")))
-    mem.addData(b1: _*); q.processAllAvailable()
-    mem.addData(b2: _*); q.processAllAvailable(); q.stop()
-    import spark.implicits._
-    val union = (b1 ++ b2).toDF("user_id", "ts")
-    val expected = graft.operators.Relational5.recencyScore(union).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2), r.getLong(3)))).toMap
-    assert(finalRep === expected,
-      "rolled state must reproduce batch q108 over the streamed union")
-    assert(finalRep(1L) === ((3L, "2024-01-03", 3L)),
-      "aged-out user: floor score 1 per event, true last_seen preserved")
-  }
-
   test("streaming dedup drops within-horizon re-deliveries and evicts state after") {
     implicit val sql = spark.sqlContext
     val mem = MemoryStream[Event]
@@ -709,176 +370,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(types.subsetOf(Set("view", "click", "purchase", "error")))
   }
 
-  test("flatMapGroupsWithState keeps per-user running state across batches") {
-    implicit val sql = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val q = EventStreams.statefulPerUserUnbounded(spark, mem.toDS())
-      .writeStream.format("memory").queryName("stateful").outputMode("append").start()
-    mem.addData(Event(1, ts(1), 7, "click", 2.0))
-    q.processAllAvailable()
-    mem.addData(Event(2, ts(2), 7, "click", 3.0))
-    q.processAllAvailable(); q.stop()
-    val last = spark.table("stateful").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
-      .filter(_._1 == 7L).maxBy(_._2)
-    assert(last === ((7L, 2, 5.0)))
-  }
-
-  test("stream-static decontamination quarantines each contaminated doc once") {
-    implicit val sql = spark.sqlContext
-    val evalDocs = Seq(
-      (100L, "alpha beta gamma delta epsilon"),
-      (101L, "one two three")).toDF("doc_id", "text")
-    val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val q = EventStreams.contaminatedDocIds(
-        mem.toDF().toDF("doc_id", "ts", "text"), evalDocs, k = 3)
-      .writeStream.format("memory").queryName("quarantine").outputMode("append").start()
-    // doc 1 shares TWO 3-gram shingles with eval doc 100 -> must emit once;
-    // doc 2 shares none -> never emitted
-    mem.addData(
-      (1L, ts(10), "alpha beta gamma delta zz"),
-      (2L, ts(11), "totally clean wording here"))
-    q.processAllAvailable()
-    // within-horizon re-delivery of doc 1 stays deduped; doc 3 hits the
-    // OTHER static doc, proving the set spans the whole eval corpus
-    mem.addData(
-      (1L, ts(12), "alpha beta gamma delta zz"),
-      (3L, ts(13), "xx one two three yy"))
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("quarantine").select("doc_id")
-      .collect().map(_.getLong(0)).toSeq.sorted
-    assert(got === Seq(1L, 3L), s"quarantine list: $got")
-  }
-
-  test("stream-static admission drops standing dupes and admits each fingerprint once") {
-    implicit val sql = spark.sqlContext
-    val standing = Seq((100L, "alpha beta gamma")).toDF("doc_id", "text")
-    val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val q = EventStreams.admittedDocs(
-        mem.toDF().toDF("doc_id", "ts", "text"), standing)
-      .writeStream.format("memory").queryName("admitted").outputMode("append").start()
-    mem.addData(
-      (1L, ts(10), "ALPHA  beta gamma"),  // normalizes to the standing doc -> dropped
-      (2L, ts(11), "fresh words"))        // new -> admitted
-    q.processAllAvailable()
-    mem.addData(
-      (3L, ts(12), "fresh   WORDS"),      // same fingerprint as doc 2 -> dropped
-      (4L, ts(13), "another one"))        // new -> admitted
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("admitted").select("doc_id")
-      .collect().map(_.getLong(0)).toSeq.sorted
-    assert(got === Seq(2L, 4L), s"admitted: $got")
-  }
-
-  test("streaming interval coverage: islands flush once, closed-by-watermark, batch-equal") {
-    implicit val sql = spark.sqlContext
-    // durations: 60 + event_id % 240 seconds. User 1: events at 00:00 and
-    // 00:01 overlap (dur 61/62 s) → one island; 00:30 opens a second.
-    // User 2: one event. Batch 2 is OUT OF ORDER (00:31 lands after 04:00
-    // was seen by the op but inside the 10 min watermark lag).
-    val b1 = Seq(
-      Event(1, ts(0), 1, "click", 1.0), Event(2, ts(1), 1, "click", 1.0),
-      Event(3, ts(30), 1, "click", 1.0), Event(4, ts(2), 2, "view", 1.0))
-    val b2 = Seq(
-      Event(5, ts(240), 3, "view", 1.0),   // advances watermark to 230 min
-      Event(6, ts(31), 1, "click", 1.0))   // late-but-valid: extends island 2
-    val mem = MemoryStream[Event]
-    val q = EventStreams.coverageStream(spark, mem.toDS())
-      .writeStream.format("memory").queryName("coverage").outputMode("append").start()
-    mem.addData(b1: _*); q.processAllAvailable()
-    // after batch 1 the watermark sits at 00:30 − 10 min = 00:20: only
-    // islands ending before then may have flushed (user 2's, via its
-    // timeout) — user 1's open 00:30 island must still be held
-    val early = spark.table("coverage").collect()
-      .map(r => (r.getLong(0), r.getLong(2)))
-    assert(early.forall { case (_, endUs) => endUs < ts(20).getTime * 1000L },
-      s"flushed an island the watermark had not closed: ${early.toSeq}")
-    assert(!early.exists(_._1 == 1L && early.length > 1),
-      s"user 1 may close at most island 1 here: ${early.toSeq}")
-    mem.addData(b2: _*); q.processAllAvailable()
-    // watermark now 04:00 - 10 min = 03:50 → users 1 and 2 fully closed
-    mem.addData(Event(7, ts(600), 3, "view", 1.0)); q.processAllAvailable()
-    q.stop()
-    val got = spark.table("coverage")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
-    // exactly-once: no island emitted twice
-    assert(got.length === got.distinct.length, s"duplicate flushes: ${got.toSeq}")
-    // JVM batch reference: q70's sweep over ALL events per user
-    val all = b1 ++ b2 ++ Seq(Event(7, ts(600), 3, "view", 1.0))
-    def us(t: java.sql.Timestamp) = t.getTime * 1000L
-    val expected = all.groupBy(_.user_id).flatMap { case (uid, evs) =>
-      val ivs = evs.map(e => (us(e.ts), us(e.ts) + (60L + e.event_id % 240L) * 1000000L, 1))
-        .sortBy(iv => (iv._1, iv._2))
-      ivs.foldLeft(List.empty[(Long, Long, Int)]) {
-        case (Nil, iv) => List(iv)
-        case ((s0, e0, n0) :: rest, (s, e, n)) =>
-          if (s > e0) (s, e, n) :: (s0, e0, n0) :: rest
-          else (s0, math.max(e0, e), n0 + n) :: rest
-      }.map { case (s, e, n) => (uid, s, e, n) }
-    }.toSet
-    // users 1 and 2 are fully flushed; user 3's tail islands may still sit
-    // in state (stream stopped before its timeout) — compare the closed set
-    val gotClosed = got.filter(r => r._1 != 3L).toSet
-    assert(gotClosed === expected.filter(_._1 != 3L),
-      s"streamed islands diverge from the batch sweep:\n got $gotClosed\n exp $expected")
-    assert(gotClosed.count(_._1 == 1L) === 2, "user 1 must close exactly two islands")
-  }
-
-  test("streaming funnel: late signup requalifies a seen click; final state batch-equal") {
-    implicit val sql = spark.sqlContext
-    // user 1 is the hard path: its click arrives BEFORE its signup in
-    // processing order, but the signup's event time is earlier and inside
-    // the watermark — the pending click must retroactively qualify.
-    // user 2: click strictly before signup (never counts) → stage 1.
-    // user 3: in-order full funnel → stage 3.
-    // user 4: purchase before the qualifying click → stage 2.
-    val b1 = Seq(
-      Event(1, ts(95), 1, "click", 1.0),
-      Event(2, ts(94), 2, "click", 1.0), Event(3, ts(100), 2, "signup", 1.0),
-      Event(4, ts(10), 3, "signup", 1.0), Event(5, ts(20), 3, "click", 1.0),
-      Event(6, ts(30), 3, "purchase", 1.0),
-      Event(7, ts(40), 4, "signup", 1.0), Event(8, ts(45), 4, "purchase", 1.0),
-      Event(9, ts(50), 4, "click", 1.0))
-    // watermark after b1 = 100 - 10 = 90 min: the signup at 92 is LATE in
-    // arrival order (after user 1's click at 95) but inside the watermark
-    val b2 = Seq(Event(10, ts(92), 1, "signup", 1.0))
-    val b3 = Seq(Event(11, ts(96), 1, "purchase", 1.0))
-    val idleFlush = Seq(Event(12, ts(600), 99, "view", 1.0),
-      Event(13, ts(601), 99, "view", 1.0))
-    val mem = MemoryStream[Event]
-    val q = EventStreams.funnelStream(spark, mem.toDS())
-      .writeStream.format("memory").queryName("funnel").outputMode("update").start()
-    mem.addData(b1: _*); q.processAllAvailable()
-    mem.addData(b2: _*); q.processAllAvailable()
-    mem.addData(b3: _*); q.processAllAvailable()
-    // two watermark advances so the 1 h idle timeout passes users 1-4 and
-    // the eviction snapshot (the FINAL per-user state) flushes
-    idleFlush.foreach { e => mem.addData(e); q.processAllAvailable() }
-    q.stop()
-    val evicted = spark.table("funnel").where(col("evicted"))
-      .collect().map { r =>
-        def opt(i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(r.getLong(i))
-        (r.getLong(0), (r.getInt(1), opt(2), opt(3), opt(4)))
-      }.toMap
-    assert(evicted.keySet === Set(1L, 2L, 3L, 4L), s"evicted set: ${evicted.keySet}")
-    def usOf(m: Int): Option[Long] = Some(ts(m).getTime * 1000L)
-    assert(evicted(1L) === ((3, usOf(92), usOf(95), usOf(96))),
-      "late signup must retroactively qualify the earlier-arrived click")
-    assert(evicted(2L) === ((1, usOf(100), None, None)))
-    assert(evicted(3L) === ((3, usOf(10), usOf(20), usOf(30))))
-    assert(evicted(4L) === ((2, usOf(40), usOf(50), None)))
-    // batch equivalence: q66 over the union of every batch agrees user-for-user
-    val all = (b1 ++ b2 ++ b3 ++ idleFlush).toDF()
-    val batch = graft.operators.Temporal.funnel(all).collect().map { r =>
-      def us(i: Int): Option[Long] =
-        Option(r.getString(i)).map(s => java.sql.Timestamp.valueOf(s).getTime * 1000L)
-      (r.getLong(0), (r.getInt(4), us(1), us(2), us(3)))
-    }.toMap
-    evicted.foreach { case (uid, snap) =>
-      assert(batch(uid) === snap, s"user $uid diverges from batch q66")
-    }
-  }
-
   test("streaming zone-map maintenance equals a from-scratch build after every batch") {
     implicit val sql = spark.sqlContext
     import graft.sources.ZoneMaps
@@ -937,6 +428,36 @@ class StreamingSpec extends AnyFunSuite {
     } finally {
       q.stop()
       graft.sources.ZoneMaps.forget(spark, dir)
+    }
+  }
+
+  test("the first streamed fold types its scan from the batch: no more jobs than the next") {
+    implicit val sql = spark.sqlContext
+    import graft.sources.ZoneMaps
+    val dir = java.nio.file.Files.createTempDirectory("graft_zm_stream_jobs_")
+      .resolve("t").toString
+    val mem = MemoryStream[(Long, Double)]
+    @volatile var last = Array.empty[org.apache.spark.sql.Row]
+    val q = EventStreams.maintainZoneMapStream(
+      mem.toDF().toDF("k", "v"), dir, Seq("k"), (rows, _) => last = rows,
+      bloomCols = Seq("k")).start()
+    try {
+      // every job of the query runs in its run-id job group; a settled
+      // marker job means the status tracker has seen all of them
+      def queryJobs(): Int = {
+        jobsOf(s"settle-${System.nanoTime()}")(())
+        spark.sparkContext.statusTracker.getJobIdsForGroup(q.runId.toString).length
+      }
+      mem.addData((1L, 0.5), (7L, 1.5)); q.processAllAvailable()
+      val b0 = queryJobs()
+      mem.addData((40L, 3.5), (55L, 4.5)); q.processAllAvailable()
+      val b1 = queryJobs() - b0
+      assert(b0 > 0 && b0 <= b1, s"batch 0 ran $b0 jobs, batch 1 ran $b1")
+      assert(sameManifest(last,
+        ZoneMaps.build(spark, dir, Seq("k"), bloomCols = Seq("k")).collect()))
+    } finally {
+      q.stop()
+      ZoneMaps.forget(spark, dir)
     }
   }
 }

@@ -124,7 +124,7 @@ class ZoneMapsSpec extends AnyFunSuite {
 
   test("clusteredWriteZ: one layout prunes on EITHER column; single-column layout cannot") {
     val dz = Files.createTempDirectory("graft_zm_z_").toString
-    ZoneMaps.clusteredWriteZ(tables.lineitem, "l_orderkey", "l_shipdate", dz, 16)
+    ZoneMaps.clusteredWriteZN(tables.lineitem, Seq("l_orderkey", "l_shipdate"), dz, 16)
     val man = ZoneMaps.build(spark, dz, Seq("l_orderkey", "l_shipdate")).collect()
     assert(man.length == 16)
     val okLoHi = tables.lineitem
@@ -437,8 +437,8 @@ class ZoneMapsSpec extends AnyFunSuite {
         "CAST(0 AS BIGINT) k2, CAST(1.0 AS DOUBLE) v"))
     val dLin = Files.createTempDirectory("graft_zm_zlin_").toString
     val dEd = Files.createTempDirectory("graft_zm_zed_").toString
-    ZoneMaps.clusteredWriteZ(skewed, "k1", "k2", dLin, 8)
-    ZoneMaps.clusteredWriteZ(skewed, "k1", "k2", dEd, 8, equiDepth = true)
+    ZoneMaps.clusteredWriteZN(skewed, Seq("k1", "k2"), dLin, 8)
+    ZoneMaps.clusteredWriteZN(skewed, Seq("k1", "k2"), dEd, 8, equiDepth = true)
     val manLin = ZoneMaps.manifestRows(spark, dLin, Seq("k1"))
     val manEd = ZoneMaps.manifestRows(spark, dEd, Seq("k1"))
     // a 1/8th range over the NORMAL key mass (domain 0..199 at this SF)
