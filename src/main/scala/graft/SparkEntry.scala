@@ -1192,16 +1192,20 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  /** The t31 DEFLATE fixture, resolved at RUNTIME relative to the working
-    * directory (the verify harness runs from the repo root), falling back
-    * to the canonical checkout path — a hardcoded absolute path would
-    * break (or silently read stale data) on any relocated checkout. */
+  /** The t31 DEFLATE fixture: the system property `graft.t31Fixture`
+    * when set, else `tools/fixtures/t31_deflate.parquet` under the working
+    * directory (the verify harness runs from the checkout root). A missing
+    * file fails naming the path — never a fallback to some other
+    * checkout's copy, which could hold stale data. */
   private lazy val t31FixturePath: String = {
-    val rel = java.nio.file.Paths.get("tools", "fixtures", "t31_deflate.parquet")
-    val candidates = Seq(rel.toAbsolutePath.normalize,
-      java.nio.file.Paths.get("/root/repo").resolve(rel))
-    candidates.find(java.nio.file.Files.exists(_))
-      .getOrElse(candidates.head).toString
+    val path = sys.props.get("graft.t31Fixture")
+      .map(java.nio.file.Paths.get(_))
+      .getOrElse(java.nio.file.Paths.get("tools", "fixtures", "t31_deflate.parquet"))
+      .toAbsolutePath.normalize
+    require(java.nio.file.Files.exists(path),
+      s"t31 oracle fixture not found at $path (run from the checkout root " +
+        "or set -Dgraft.t31Fixture)")
+    path.toString
   }
 
   def oracleSql: Map[String, String] = Map(

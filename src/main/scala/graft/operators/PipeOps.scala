@@ -85,7 +85,6 @@ object PipeOps {
     * TextOutputFormat, `HboxConfiguration2.java:11-12`). */
   def runTextJob(spark: SparkSession, inputPath: String, cmd: Seq[String],
                  outputPath: String, epochs: Int = 1): Long = {
-    import spark.implicits._
     val in = spark.read.textFile(inputPath)
     val cached = if (epochs > 1) in.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY) else in
     // epoch replay = one ACTION per epoch over the disk-cached input: each

@@ -394,10 +394,12 @@ object Relational4 {
     *     size because the frame is fixed.
     * Scale form (round-8 fix): the priority key has 5 values, so naive
     * windows would shuffle all orders onto ≤5 reducers. Both passes run
-    * through ScanWindows' two-level scan instead — orderkey-range buckets
-    * (div 16384) carry the parallelism; the running sum adds exact bucket
-    * offsets and the sliding frame borrows each bucket's leading 9 rows
-    * by position, so both columns stay bit-identical to the naive form.
+    * through the ScanWindows helpers, which route by size: a provably
+    * small orders scan keeps the two plain windows, anything
+    * larger takes the two-level scan — orderkey-range buckets (div 16384)
+    * carry the parallelism; the running sum adds exact bucket offsets and
+    * the sliding frame borrows each bucket's leading 9 rows by position,
+    * so both columns stay bit-identical to the naive form.
     * DuckDB replays both with native `count(DISTINCT …) OVER`, so the
     * equivalence of the derivations to the textbook semantics is exactly
     * what the oracle checks. Integer counts, unroundable. */
@@ -592,11 +594,12 @@ object Relational4 {
     //
     // Scale form (round-8 fix): the flag key has 3 values, so a naive
     // window is a ≤3-way serial sort of all of lineitem. The trailing
-    // frame runs through ScanWindows.slidingFrame instead, bucketed by
-    // l_shipdate (the leading sort key, ~2,500 distinct days at any SF):
-    // each day finishes independently after borrowing the 29 rows that
-    // globally precede it — bit-identical sums (integer-valued inputs,
-    // any accumulation order) at day-count parallelism.
+    // frame runs through ScanWindows.slidingFrame instead, which keeps
+    // the plain window over a provably small lineitem and otherwise
+    // buckets by l_shipdate (the leading sort key, ~2,500 distinct days
+    // at any SF): each day finishes independently after borrowing the 29
+    // rows that globally precede it — bit-identical sums (integer-valued
+    // inputs, any accumulation order) at day-count parallelism.
     val base = t.lineitem
       .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
         col("l_shipdate"), x.as("x"), y.as("y"))
@@ -630,8 +633,9 @@ object Relational4 {
     * Scale shape: per-row cost ∝ the FIXED frame width (collect_list
     * over 30 rows — bounded state, the q69 sliding-frame discipline;
     * a growing frame would be quadratic and is deliberately absent).
-    * Round-8 fix: the frame runs through ScanWindows.slidingFrame
-    * bucketed by l_shipdate (the leading sort key), so parallelism is
+    * Round-8 fix: the frame runs through ScanWindows.slidingFrame —
+    * the plain window over a provably small lineitem, otherwise bucketed
+    * by l_shipdate (the leading sort key), so parallelism is
     * day-count-bounded instead of the 3-value flag key; the frame's
     * sorted multiset is position-borrowed-exact, hence bit-identical.
     * Values are integers end to end — nothing rounds. */

@@ -708,7 +708,8 @@ object Relational5 {
     // count over the (metric, custkey) total order, bucketed on a
     // metric-range prefix) pushed through the closed-form ntile remainder
     // rule (the q85 arithmetic, first n mod 5 buckets one row larger) —
-    // bit-identical to ntile(5), same DuckDB oracle.
+    // bit-identical to ntile(5), same DuckDB oracle. Over a provably
+    // small customer frame the helper keeps the plain running count.
     def score(df: DataFrame, metric: String, descending: Boolean,
               bucketDiv: Long, out: String): DataFrame = {
       val v = if (descending) -col(metric) else col(metric)

@@ -81,7 +81,9 @@ object Relational6 {
     * monotone, so bucket boundaries respect the order); the bucket table
     * carries the only global window (|buckets| rows), every fact-row pass
     * runs #buckets-way parallel, and the running sum is bit-identical to
-    * the naive form by the ScanWindowsSpec equivalence. Class cuts are
+    * the naive form by the ScanWindowsSpec equivalence. A provably small
+    * orders scan keeps the plain running window (the helper's size
+    * route: the two-level form only pays off past it). Class cuts are
     * exact integer comparisons (cum·5 ≤ tot·4, cum·20 ≤ tot·19) against
     * the plan-borne total — no percent float anywhere. */
   def q123ParetoClass(t: Tables): DataFrame = {
@@ -328,8 +330,9 @@ object Relational6 {
     * revenue" planning (t21 measures the same statistic over token mass;
     * this is the revenue-domain member, and the one that needs the
     * GLOBAL rank t21's per-source partition avoided). The rank comes
-    * from ScanWindows' bucket-parallel running count over the
-    * (cents, custkey) total order — never a single-partition window —
+    * from ScanWindows' running count over the (cents, custkey) total
+    * order — bucket-parallel unless the customer frame is provably small,
+    * so never a single-partition window over a large input —
     * and Gini = Σ(2i − n − 1)·xᵢ / (n·Σx) accumulates in decimal(38,0)
     * (the term product overflows a long past ~10⁶ customers; DuckDB's
     * HUGEINT matches), leaving two final IEEE divisions (gini unrounded

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
+import graft.plans.RewriteLowCardWindow
+
 /** Distributed forms of the two window shapes that do NOT scale when the
   * partition key is low-cardinality: the unbounded running sum (prefix
   * scan) and the bounded trailing ROWS frame.
@@ -17,7 +19,10 @@ import org.apache.spark.sql.functions._
   * per-bucket partials, prefix-scan the SMALL bucket table, then finish
   * each bucket independently with the bucket offset added back.
   *
-  * Both helpers keep results bit-identical to the naive single-window form
+  * Both helpers route by size: a provably small input keeps the plain
+  * single window, which is cheaper below the crossover (see
+  * [[slidingFrame]]); only other inputs pay for the two-level form, and
+  * both routes keep results bit-identical to the naive single-window form
   * (spec-pinned in ScanWindowsSpec): the per-bucket pass applies the exact
   * same window semantics, and the only cross-bucket state is an exact
   * partial aggregate (prefix sums) or the exact `width-1` preceding rows
@@ -49,12 +54,22 @@ object ScanWindows {
     * exchange), a `partial`-scan over the SMALL bucket table for each
     * bucket's offset, then within-bucket running windows at #buckets-way
     * parallelism merged with the offset. The frame runs from the start of
-    * the partition to the current row. */
+    * the partition to the current row. A provably small input takes the
+    * plain running window instead, `merge`d with a null offset (see the
+    * crossover note on [[slidingFrame]]). */
   def prefixScan(df: DataFrame, partCols: Seq[String], bucketCol: String,
                  orderCols: Seq[String], ops: Seq[PrefixOp]): DataFrame = {
     require(!orderCols.contains(bucketCol),
       s"bucketCol '$bucketCol' must not be an order column - derive a copy")
     val pc = partCols.map(col)
+    if (RewriteLowCardWindow.provablySmall(df.queryExecution.optimizedPlan)) {
+      val w = Window.partitionBy(pc: _*).orderBy(orderCols.map(col): _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      return ops.foldLeft(df) { case (acc, op) =>
+        acc.withColumn(op.out,
+          op.merge(lit(null), op.partial(col(op.value)).over(w)))
+      }
+    }
     val keys = partCols :+ bucketCol
     val partialAggs = ops.map(op => op.partial(col(op.value)).as(s"_ps_${op.out}"))
     val partials = df.groupBy(keys.map(col): _*)
@@ -129,12 +144,17 @@ object ScanWindows {
     * table (broadcast) on a position-range predicate. Everything heavy
     * stays keyed by (part, bucket).
     *
-    * Crossover: this form is multi-pass by construction (bucket table +
-    * borrow join + window), costing ~0.5–0.7 s of fixed job overhead per
-    * call regardless of size. Below ~1 M rows per partition key the naive
-    * single window wins on wall-clock; use this form when any partition
-    * key's row count can exceed one executor's comfortable sort (the
-    * 100 TB contract), not for small frames on small inputs.
+    * Crossover: the two-level form is multi-pass by construction (bucket
+    * table + borrow join + window), costing ~0.5–0.7 s of fixed job
+    * overhead per call regardless of size, and below ~1 M rows per
+    * partition key the plain single window wins on wall-clock. So both
+    * helpers route by size on the planner's own predicate,
+    * [[RewriteLowCardWindow.provablySmall]] over the input's optimized
+    * plan (knob [[RewriteLowCardWindow.minChildBytesKey]], 64 MB): a
+    * provably small input gets the plain window over the same frame and
+    * the same output columns; an unknown or large size gets the two-level
+    * form (the 100 TB contract). The route reads plan statistics only —
+    * choosing it launches no job.
     */
   def slidingFrame(df: DataFrame, partCols: Seq[String], bucketCol: String,
                    orderCols: Seq[String], width: Int)
@@ -148,6 +168,11 @@ object ScanWindows {
       s"bucketCol '$bucketCol' must not be an order column - derive a copy")
     val need = width - 1
     val pc = partCols.map(col)
+    if (RewriteLowCardWindow.provablySmall(df.queryExecution.optimizedPlan))
+      return aggs(Window.partitionBy(pc: _*).orderBy(orderCols.map(col): _*)
+        .rowsBetween(-need, Window.currentRow)).foldLeft(df) {
+        case (acc, (n, c)) => acc.withColumn(n, c)
+      }
     val keys = partCols :+ bucketCol
     // bucket table: dense index + exclusive prefix count = global start
     // position of each bucket (1-based); |buckets| rows, tiny

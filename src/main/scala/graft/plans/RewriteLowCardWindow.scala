@@ -153,7 +153,10 @@ object RewriteLowCardWindow extends Rule[LogicalPlan] {
     * ~3-job fixed overhead and the rule stands down. 64 MB of scan bytes
     * ≈ several million rows of these tables — comfortably past the
     * measured crossover; unknown sizes (joins, streaming) estimate huge
-    * and keep rewriting, the safe default at scale. */
+    * and keep rewriting, the safe default at scale. The same knob routes
+    * the hand-called [[graft.operators.ScanWindows]] helpers through
+    * [[provablySmall]]: at 0 no non-empty input is provably small, so
+    * both this rule and the helpers build the two-level scan. */
   val minChildBytesKey = "spark.graft.scanWindowRewrite.minChildBytes"
   val minChildBytesDefault: Long = 64L * 1024 * 1024
 

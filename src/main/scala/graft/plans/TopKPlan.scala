@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** The engine's per-key bounded top-k as a first-class physical operator —
   * the whole-operator rung of the custom-Catalyst ladder (native

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute,
   BinaryComparison, Cast, EqualNullSafe, EqualTo, Expression, GreaterThan,
@@ -11,8 +11,8 @@ import org.apache.spark.sql.catalyst.expressions.{And, Attribute,
   LessThanOrEqual, Literal, StartsWith, Year}
 import org.apache.spark.sql.execution.datasources.{FileIndex,
   PartitionDirectory}
-import org.apache.spark.sql.types.{DataType, DateType, IntegerType,
-  StringType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, DateType, StringType,
+  StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The PLANNER-TRANSPARENT serve path of the zone-map layer: a

@@ -7,9 +7,21 @@ import graft.GraftSession
 
 /** Write `.explain("formatted")` for named queries to files — the
   * plan-evidence artifact the optimization rounds commit
-  * (`plans/r15/<query>_<tag>.txt`). Usage:
+  * (`plans/r15/<query>_<tag>.txt`) — and print each query's hash
+  * exchanges, broadcast exchanges and sort-merge joins, the quickest
+  * audit of its scale shape. The counts read the physical plan before
+  * execution (AQE may still turn a sort-merge join into a broadcast).
+  * Usage:
   *   ExplainDump <sfDir> <outDir> <tag> <queryName> [queryName...]
   * Pass `all` as the single query name to dump every registered query.
+  *
+  * `SPARK_GRAFT_EXPLAIN_CONF="k=v;k=v"` sets session conf before any
+  * query is built. Size-routed operators pick their route from the input
+  * size, so over a small input this dumps the small route; to dump the
+  * scale route without a big corpus, set
+  * `SPARK_GRAFT_EXPLAIN_CONF=spark.graft.scanWindowRewrite.minChildBytes=0`
+  * (the window rewrite and the ScanWindows helpers then take their
+  * two-level form over any non-empty input).
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -19,9 +31,6 @@ object ExplainDump {
       else args.drop(3).toSeq
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    // optional session conf overrides ("k=v;k=v") — lets a plan dump show a
-    // size-routed operator's ABOVE-threshold shape (e.g. d17's candidate-
-    // bounded df route) without synthesizing a big corpus
     sys.env.get("SPARK_GRAFT_EXPLAIN_CONF").foreach(_.split(";").foreach { kv =>
       kv.split("=", 2) match {
         case Array(k, v) if k.trim.nonEmpty => spark.conf.set(k.trim, v.trim)
@@ -36,7 +45,11 @@ object ExplainDump {
           org.apache.spark.sql.execution.FormattedMode)
         Files.write(Paths.get(outDir, s"${name}_$tag.txt"),
           formatted.getBytes(StandardCharsets.UTF_8))
-        println(s"wrote $name")
+        val p = df.queryExecution.executedPlan.toString
+        def n(node: String) = node.r.findAllIn(p).size
+        println(s"wrote $name: ${n("Exchange hashpartitioning")} hash " +
+          s"exchanges, ${n("BroadcastExchange")} broadcast exchanges, " +
+          s"${n("SortMergeJoin")} sort-merge joins")
       } catch { case e: Throwable => System.err.println(s"SKIP $name: $e") }
     }
     spark.stop()

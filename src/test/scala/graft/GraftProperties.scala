@@ -737,14 +737,23 @@ object GraftProperties extends Properties("graft") {
     (rows, bucketWidth, frameWidth)
   }
 
+  /** `body` with the crossover off, so the ScanWindows helpers and
+    * RewriteLowCardWindow take the two-level form over these tiny
+    * (provably small) frames. */
+  private def twoLevel[T](body: => T): T = {
+    val k = graft.plans.RewriteLowCardWindow.minChildBytesKey
+    spark.conf.set(k, "0")
+    try body finally spark.conf.unset(k)
+  }
+
   property("ScanWindows.prefixSums ≡ naive running sum on random frames") =
     forAll(scanFrame) { case (rows, bw, _) =>
       import org.apache.spark.sql.expressions.Window
       rows.isEmpty || {
         val df = rows.toDF("g", "k", "v").repartition(5)
           .withColumn("bkt", expr(s"k div $bw"))
-        val got = graft.operators.ScanWindows.prefixSums(
-          df, Seq("g"), "bkt", Seq("k"), Seq("run" -> "v"))
+        val got = twoLevel(graft.operators.ScanWindows.prefixSums(
+          df, Seq("g"), "bkt", Seq("k"), Seq("run" -> "v")))
         val w = Window.partitionBy(col("g")).orderBy(col("k"))
           .rowsBetween(Window.unboundedPreceding, 0)
         val want = df.withColumn("run", sum(col("v")).over(w))
@@ -780,11 +789,9 @@ object GraftProperties extends Properties("graft") {
           count(lit(1)).over(w).as("ca"))
       }
       val key = graft.plans.RewriteLowCardWindow.enabledKey
-      val minKey = graft.plans.RewriteLowCardWindow.minChildBytesKey
       // random frames are tiny — lift the crossover bypass so the rule
       // actually fires (production inputs are not provably small)
-      spark.conf.set(minKey, "0")
-      try {
+      twoLevel {
         spark.conf.set(key, "false")
         val want = try build().collect().map(_.toString).sorted
         finally spark.conf.set(key, "true")
@@ -792,7 +799,7 @@ object GraftProperties extends Properties("graft") {
         // plus counts is set-based and misses duplicate-multiplicity swaps
         val got = build().collect().map(_.toString).sorted
         got.sameElements(want)
-      } finally spark.conf.unset(minKey)
+      }
     }
 
   property("ScanWindows.slidingFrame ≡ naive trailing frame on random frames") =
@@ -801,10 +808,10 @@ object GraftProperties extends Properties("graft") {
       rows.isEmpty || {
         val df = rows.toDF("g", "k", "v").repartition(5)
           .withColumn("bkt", expr(s"k div $bw"))
-        val got = graft.operators.ScanWindows.slidingFrame(
+        val got = twoLevel(graft.operators.ScanWindows.slidingFrame(
           df, Seq("g"), "bkt", Seq("k"), fw) { w =>
           Seq("s" -> sum(col("v")).over(w), "n" -> count(lit(1)).over(w))
-        }
+        })
         val w = Window.partitionBy(col("g")).orderBy(col("k"))
           .rowsBetween(-(fw - 1), 0)
         val want = df

@@ -12,9 +12,38 @@ import graft.operators.ScanWindows
   * while trading the ≤5-way partition-key window for bucket-level
   * parallelism — and the fixed queries' plans must show the scale shape
   * (window input aggregate-bounded / bucket-keyed) the round-8 judge
-  * asked for. */
+  * asked for.
+  *
+  * The helpers route on the planner's crossover: a provably small input
+  * (every fixture here) takes the plain window. The two-level
+  * equivalences and scale-shape gates therefore run under [[twoLevel]]
+  * (crossover off — the route production-sized inputs take), and each
+  * has a default-conf twin. */
 class ScanWindowsSpec extends AnyFunSuite {
   import SparkTestSession._
+  import graft.plans.{PlanLint, RewriteLowCardWindow}
+  import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Window => LWindow}
+
+  /** `body` with the crossover off: the helpers build the two-level scan
+    * over any input, as they do over production-sized inputs. */
+  private def twoLevel[T](body: => T): T = {
+    spark.conf.set(RewriteLowCardWindow.minChildBytesKey, "0")
+    try body finally spark.conf.unset(RewriteLowCardWindow.minChildBytesKey)
+  }
+
+  /** The two-level route joins offsets/borrows back; the plain one never. */
+  private def hasJoin(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirst { case j: Join => j }.nonEmpty
+
+  /** TRUE multiset of the rows (sorted row strings). */
+  private def multiset(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  private def fieldTypes(df: DataFrame) =
+    df.schema.map(f => f.name -> f.dataType)
+
+  private def partNames(w: LWindow): Set[String] =
+    w.partitionSpec.flatMap(_.references.map(_.name)).toSet
 
   /** Synthetic frame engineered so buckets are TINY (0–3 rows each):
     * a 10-row trailing frame then has to borrow across SEVERAL earlier
@@ -32,8 +61,9 @@ class ScanWindowsSpec extends AnyFunSuite {
 
   test("prefixSums matches the naive running-sum window bit for bit") {
     val df = synth.withColumn("bkt", expr("k div 10"))
-    val got = ScanWindows.prefixSums(df, Seq("g"), "bkt", Seq("k"),
-      Seq("run_v" -> "v", "run_u" -> "u"))
+    val got = twoLevel(ScanWindows.prefixSums(df, Seq("g"), "bkt", Seq("k"),
+      Seq("run_v" -> "v", "run_u" -> "u")))
+    assert(hasJoin(got), "expected the two-level route")
     val w = Window.partitionBy(col("g")).orderBy(col("k"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val want = df
@@ -51,12 +81,9 @@ class ScanWindowsSpec extends AnyFunSuite {
     // and b's holes make some buckets 2 rows — the borrow must walk back
     // as many buckets as the positions demand
     val df = synth.withColumn("bkt", expr("k div 3"))
-    val got = ScanWindows.slidingFrame(df, Seq("g"), "bkt", Seq("k"), 10) { w =>
-      Seq("s10" -> sum(col("v")).over(w),
-        "n10" -> count(lit(1)).over(w),
-        "set10" -> size(collect_set(col("u")).over(w)).cast("long"),
-        "lst10" -> sort_array(collect_list(col("v")).over(w)))
-    }
+    val got = twoLevel(
+      ScanWindows.slidingFrame(df, Seq("g"), "bkt", Seq("k"), 10)(frame10))
+    assert(hasJoin(got), "expected the two-level route")
     val w = Window.partitionBy(col("g")).orderBy(col("k"))
       .rowsBetween(-9, Window.currentRow)
     val want = df
@@ -74,9 +101,9 @@ class ScanWindowsSpec extends AnyFunSuite {
 
   test("slidingFrame width 1 degenerates to the row itself") {
     val df = synth.withColumn("bkt", expr("k div 5"))
-    val got = ScanWindows.slidingFrame(df, Seq("g"), "bkt", Seq("k"), 1) { w =>
+    val got = twoLevel(ScanWindows.slidingFrame(df, Seq("g"), "bkt", Seq("k"), 1) { w =>
       Seq("s1" -> sum(col("v")).over(w))
-    }
+    })
     assert(got.where(col("s1") =!= col("v")).isEmpty)
   }
 
@@ -87,6 +114,49 @@ class ScanWindowsSpec extends AnyFunSuite {
         Seq("s" -> sum(col("v")).over(w))
       }
     }
+  }
+
+  /** The trailing-frame aggregates both routes are compared on. */
+  private def frame10(w: org.apache.spark.sql.expressions.WindowSpec) =
+    Seq("s10" -> sum(col("v")).over(w),
+      "n10" -> count(lit(1)).over(w),
+      "set10" -> size(collect_set(col("u")).over(w)).cast("long"),
+      "lst10" -> sort_array(collect_list(col("v")).over(w)))
+
+  test("default conf: a provably small input takes the plain window, same rows and schema as two-level") {
+    val df = synth.withColumn("bkt", expr("k div 3"))
+    assert(RewriteLowCardWindow.provablySmall(df.queryExecution.optimizedPlan))
+    def sums() = ScanWindows.prefixSums(df, Seq("g"), "bkt", Seq("k"),
+      Seq("run_v" -> "v", "run_u" -> "u"))
+    def frames() =
+      ScanWindows.slidingFrame(df, Seq("g"), "bkt", Seq("k"), 10)(frame10)
+    for ((plain, scale) <- Seq((sums(), twoLevel(sums())),
+                               (frames(), twoLevel(frames())))) {
+      assert(!hasJoin(plain) && hasJoin(scale), "the routes did not split")
+      assert(fieldTypes(plain) === fieldTypes(scale))
+      assert(multiset(plain) === multiset(scale))
+    }
+  }
+
+  test("require refusals throw on both routes") {
+    val df = synth.withColumn("bkt", expr("k div 3"))
+    def refusals(): Unit = {
+      intercept[IllegalArgumentException] {
+        ScanWindows.prefixSums(df, Seq("g"), "k", Seq("k"), Seq("r" -> "v"))
+      }
+      intercept[IllegalArgumentException] {
+        ScanWindows.slidingFrame(df, Seq("g"), "k", Seq("k"), 5) { w =>
+          Seq("s" -> sum(col("v")).over(w))
+        }
+      }
+      intercept[IllegalArgumentException] {
+        ScanWindows.slidingFrame(df, Seq("g"), "bkt", Seq("k"), 0) { w =>
+          Seq("s" -> sum(col("v")).over(w))
+        }
+      }
+    }
+    refusals()
+    twoLevel(refusals())
   }
 
   // ---- plan shape: the round-8 scale fixes must be visible in the plan ----
@@ -115,12 +185,13 @@ class ScanWindowsSpec extends AnyFunSuite {
 
   /** The per-row queries can't pre-aggregate their output away; instead
     * their heavy windows must partition by (key, bucket) — parallelism
-    * rides the bucket count, not the 3–5-value key. */
+    * rides the bucket count, not the 3–5-value key. Built and planned
+    * with the crossover off: the route production-sized inputs take. */
   private def heavyWindowsBucketKeyed(name: String,
-                                      bucketCols: Set[String]): Unit = {
+                                      bucketCols: Set[String]): Unit = twoLevel {
     val df = SparkEntry.queries(name)(spark, sf)
     val plan = df.queryExecution.optimizedPlan
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, Window => LWindow}
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
     val windows = plan.collect { case w: LWindow => w }
     assert(windows.nonEmpty, s"$name expected window operators")
     // an Aggregate reached WITHOUT crossing a Join bounds the window's own
@@ -131,13 +202,13 @@ class ScanWindowsSpec extends AnyFunSuite {
       case other => other.children.exists(aggAboveJoin)
     }
     windows.foreach { w =>
-      val partNames = w.partitionSpec.flatMap(_.references.map(_.name)).toSet
-      val bucketed = bucketCols.exists(partNames.contains)
+      val parts = partNames(w)
+      val bucketed = bucketCols.exists(parts.contains)
       // windows NOT keyed by the bucket must have bounded input (the tiny
       // bucket table) or a high-cardinality key (e.g. per-customer)
-      val highCard = partNames.exists(n => n.contains("custkey"))
+      val highCard = parts.exists(n => n.contains("custkey"))
       assert(bucketed || highCard || aggAboveJoin(w.child),
-        s"$name: window partitioned only by ${partNames.mkString(",")} over raw fact rows\n$w")
+        s"$name: window partitioned only by ${parts.mkString(",")} over raw fact rows\n$w")
     }
   }
 
@@ -150,27 +221,57 @@ class ScanWindowsSpec extends AnyFunSuite {
   test("q74: heavy windows are bucket-keyed (daybkt), never flag-only") {
     heavyWindowsBucketKeyed("q74_window_median", Set("daybkt"))
   }
+
+  /** The default-conf twin of [[heavyWindowsBucketKeyed]]: over the
+    * provably small test input the helper keeps the plain window — no
+    * window is bucket-keyed, and every window on a low-cardinality key
+    * (or none) reads an input the crossover proves small. */
+  private def plainWindowOverSmallInput(name: String,
+                                        bucketCols: Set[String]): Unit = {
+    val plan = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
+    val windows = plan.collect { case w: LWindow => w }
+    assert(!windows.exists(w => partNames(w).exists(bucketCols)),
+      s"$name: bucket-keyed window over a provably small input")
+    val plain = windows.filter(w =>
+      partNames(w).subsetOf(RewriteLowCardWindow.lowCardKeys))
+    assert(plain.nonEmpty, s"$name: expected the plain low-card window")
+    plain.foreach(w => assert(RewriteLowCardWindow.provablySmall(w.child),
+      s"$name: plain window over an input not provably small\n$w"))
+  }
+
+  for ((q, bucketCols) <- Seq(
+    "q69_window_distinct" -> Set("okbkt"),
+    "q73_rolling_regression" -> Set("daybkt"),
+    "q74_window_median" -> Set("daybkt"),
+    "q92_rfm" -> Set("_vb_r_score", "_vb_f_score", "_vb_m_score"),
+    "q123_pareto_class" -> Set("negbkt")))
+    test(s"${q.takeWhile(_ != '_')}: default conf keeps the plain window over the provably small input") {
+      plainWindowOverSmallInput(q, bucketCols)
+    }
+
+  test("q69: the plain route runs at most 4 jobs at the default conf") {
+    val jobs = jobsOf("q69-plain") {
+      SparkEntry.queries("q69_window_distinct")(spark, sf).collect()
+    }
+    assert(jobs <= 4, s"q69 ran $jobs jobs")
+  }
   test("q63/q67: nav windows rewrite ENGINE-side past the crossover (round 11)") {
     // round 11 retired the hand-routing: both queries are plain
     // last/lag(ignoreNulls) windows, and RewriteLowCardWindow owns the
     // scale shape. With the provably-small bypass off (the 100 TB stand-in
     // — production inputs are not provably small), the optimized plan
     // must contain ONLY _gsw_-bucket-keyed or bounded windows
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val k = graft.plans.RewriteLowCardWindow.minChildBytesKey
-    spark.conf.set(k, "0")
-    try for (q <- Seq("q63_gap_fill", "q67_nav_ignore_nulls")) {
+    twoLevel(for (q <- Seq("q63_gap_fill", "q67_nav_ignore_nulls")) {
       val plan = SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan
       val naive = plan.collect {
-        case w: LWindow if !w.partitionSpec.flatMap(_.references.map(_.name))
-          .contains("_gsw_bkt") &&
-          !graft.plans.RewriteLowCardWindow.boundedBelow(w.child) => w
+        case w: LWindow if !partNames(w).contains("_gsw_bkt") &&
+          !RewriteLowCardWindow.boundedBelow(w.child) => w
       }
       assert(naive.isEmpty, s"$q: naive nav window survived, bypass off:\n$naive")
       assert(plan.collect { case w: LWindow => w }.exists(
-        _.partitionSpec.flatMap(_.references.map(_.name)).contains("_gsw_bkt")),
+        partNames(_).contains("_gsw_bkt")),
         s"$q: expected the two-level _gsw_bkt windows in the plan")
-    } finally spark.conf.unset(k)
+    })
   }
   test("q63/q67: at test SF the crossover bypass keeps the naive window, lint-clean") {
     // below the crossover the naive single sort WINS (round-10 p47
@@ -268,15 +369,39 @@ class ScanWindowsSpec extends AnyFunSuite {
     // accepts exactly that class because the same plan over
     // production-sized stats rewrites (RewriteLowCardWindowSpec pins
     // both sides of the crossover).
+    // The ScanWindows helpers route on the same crossover, so this gate
+    // builds every query with it off: the route production inputs take.
     val declared = Set.empty[String]
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, _) if declared(name) => Nil
-      case (name, fn) =>
-        val df = try fn(spark, sf)
-        catch { case e: Throwable => fail(s"$name failed to plan: $e") }
-        graft.plans.PlanLint.lowCardWindows(df.queryExecution.optimizedPlan)
-          .map(f => s"$name: ${f.detail}")
+    val offenders = twoLevel(lowCardFlagged()).collect {
+      case (name, plan) if !declared(name) =>
+        PlanLint.lowCardWindows(plan).map(f => s"$name: ${f.detail}")
+          .mkString("\n")
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  test("full-surface audit at the default conf: only helper-routed queries keep a flagged plain window, each over a provably small input") {
+    // a helper's plain trailing frame (ROWS n PRECEDING) is a shape the
+    // rule never rewrites, so the lint flags it; the helper builds the
+    // two-level scan itself once its input is not provably small
+    val helperRouted = Set("q69_window_distinct", "q73_rolling_regression",
+      "q74_window_median")
+    val flagged = lowCardFlagged()
+    val unlisted = flagged.map(_._1).filterNot(helperRouted)
+    assert(unlisted.isEmpty, s"flagged outside the helper-routed set: $unlisted")
+    for ((name, plan) <- flagged; w <- plan.collect { case w: LWindow => w }
+         if partNames(w).subsetOf(RewriteLowCardWindow.lowCardKeys))
+      assert(RewriteLowCardWindow.provablySmall(w.child),
+        s"$name: low-card window over an input not provably small\n$w")
+  }
+
+  /** Every registered query the low-card lint flags, with its optimized
+    * plan; each query is built and planned under the current conf. */
+  private def lowCardFlagged(): Seq[(String, LogicalPlan)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val df = try fn(spark, sf)
+      catch { case e: Throwable => fail(s"$name failed to plan: $e") }
+      val plan = df.queryExecution.optimizedPlan
+      if (PlanLint.lowCardWindows(plan).isEmpty) None else Some(name -> plan)
+    }
 }
