@@ -1134,7 +1134,7 @@ object SparkEntry {
     // rule; one user exchange, O(1) window state, integer micros
     "q122_sessionize"     -> ((s, d) => Relational6.q122Sessionize(t(s, d))),
     // q123: global Pareto/ABC revenue classes — the no-partition-key
-    // running sum through ScanWindows.prefixSums (bucket-parallel),
+    // running sum (bucket-parallel past the window-scan crossover),
     // integer class cuts against the plan-borne total
     "q123_pareto_class"   -> ((s, d) => Relational6.q123ParetoClass(t(s, d))),
     // q124: RFM segmentation — quintile boundaries by the explicit

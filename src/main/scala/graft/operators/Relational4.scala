@@ -392,13 +392,12 @@ object Relational4 {
     *   - sliding 10-row distinct customers: size(collect_set) over the
     *     BOUNDED frame — per-row cost ∝ frame width, fine at any corpus
     *     size because the frame is fixed.
-    * Scale form (round-8 fix): the priority key has 5 values, so naive
-    * windows would shuffle all orders onto ≤5 reducers. Both passes run
-    * through the ScanWindows helpers, which route by size: a provably
-    * small orders scan keeps the two plain windows, anything
-    * larger takes the two-level scan — orderkey-range buckets (div 16384)
-    * carry the parallelism; the running sum adds exact bucket offsets and
-    * the sliding frame borrows each bucket's leading 9 rows by position,
+    * Scale form: the priority key has 5 values, so naive windows would
+    * shuffle all orders onto ≤5 reducers. Both frames are plain windows
+    * that RewriteLowCardWindow routes by size: a provably small orders
+    * scan keeps them, anything larger takes the two-level scan on
+    * orderkey buckets — the running sum adds exact bucket offsets and
+    * the 10-row frame borrows each bucket's leading 9 rows by position,
     * so both columns stay bit-identical to the naive form.
     * DuckDB replays both with native `count(DISTINCT …) OVER`, so the
     * equivalence of the derivations to the textbook semantics is exactly
@@ -407,18 +406,16 @@ object Relational4 {
     import org.apache.spark.sql.expressions.Window
     val byCust = Window.partitionBy(col("o_orderpriority"), col("o_custkey"))
       .orderBy(col("o_orderkey"))
-    val flagged = t.orders
+    val byPriority = Window.partitionBy(col("o_orderpriority"))
+      .orderBy(col("o_orderkey"))
+    t.orders
       .select(col("o_orderkey"), col("o_orderpriority"), col("o_custkey"))
       .withColumn("first_seen", (row_number().over(byCust) === 1).cast("long"))
-      .withColumn("okbkt", expr("o_orderkey div 16384"))
-    val withCum = ScanWindows.prefixSums(flagged,
-      Seq("o_orderpriority"), "okbkt", Seq("o_orderkey"),
-      Seq("cum_distinct_cust" -> "first_seen"))
-    ScanWindows.slidingFrame(withCum,
-      Seq("o_orderpriority"), "okbkt", Seq("o_orderkey"), 10) { w =>
-      Seq("win10_distinct_cust" ->
-        size(collect_set(col("o_custkey")).over(w)).cast("long"))
-    }.drop("first_seen", "okbkt")
+      .select(col("o_orderkey"), col("o_orderpriority"), col("o_custkey"),
+        sum(col("first_seen")).over(byPriority.rowsBetween(
+          Window.unboundedPreceding, Window.currentRow)).as("cum_distinct_cust"),
+        size(collect_set(col("o_custkey")).over(byPriority.rowsBetween(-9,
+          Window.currentRow))).cast("long").as("win10_distinct_cust"))
   }
 
   /** q70: interval union (gaps-and-islands merge) — per user, the total
@@ -592,27 +589,26 @@ object Relational4 {
     // influences the output — swapping such rows permutes identical
     // output rows, so the result multiset is deterministic anyway.
     //
-    // Scale form (round-8 fix): the flag key has 3 values, so a naive
-    // window is a ≤3-way serial sort of all of lineitem. The trailing
-    // frame runs through ScanWindows.slidingFrame instead, which keeps
+    // Scale form: the flag key has 3 values, so a naive window is a
+    // ≤3-way serial sort of all of lineitem. RewriteLowCardWindow keeps
     // the plain window over a provably small lineitem and otherwise
     // buckets by l_shipdate (the leading sort key, ~2,500 distinct days
     // at any SF): each day finishes independently after borrowing the 29
-    // rows that globally precede it — bit-identical sums (integer-valued
-    // inputs, any accumulation order) at day-count parallelism.
-    val base = t.lineitem
+    // rows that globally precede it — the same frame rows in the same
+    // order, so even the double sums are bit-identical.
+    val w = Window.partitionBy(col("l_returnflag"))
+      .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
+        col("x"), col("y"))
+      .rowsBetween(-29, Window.currentRow)
+    t.lineitem
       .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
         col("l_shipdate"), x.as("x"), y.as("y"))
-      .withColumn("daybkt", col("l_shipdate"))
-    ScanWindows.slidingFrame(base, Seq("l_returnflag"), "daybkt",
-      Seq("l_shipdate", "l_orderkey", "l_linenumber", "x", "y"), 30) { w =>
-      Seq(
-        "n" -> count(lit(1)).over(w).cast("double"),
-        "sx" -> sum(col("x")).over(w),
-        "sy" -> sum(col("y")).over(w),
-        "sxy" -> sum(col("x") * col("y")).over(w),
-        "sxx" -> sum(col("x") * col("x")).over(w))
-    }
+      .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
+        count(lit(1)).over(w).cast("double").as("n"),
+        sum(col("x")).over(w).as("sx"),
+        sum(col("y")).over(w).as("sy"),
+        sum(col("x") * col("y")).over(w).as("sxy"),
+        sum(col("x") * col("x")).over(w).as("sxx"))
       .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
         (round(
           (col("n") * col("sxy") - col("sx") * col("sy"))
@@ -633,21 +629,20 @@ object Relational4 {
     * Scale shape: per-row cost ∝ the FIXED frame width (collect_list
     * over 30 rows — bounded state, the q69 sliding-frame discipline;
     * a growing frame would be quadratic and is deliberately absent).
-    * Round-8 fix: the frame runs through ScanWindows.slidingFrame —
-    * the plain window over a provably small lineitem, otherwise bucketed
-    * by l_shipdate (the leading sort key), so parallelism is
-    * day-count-bounded instead of the 3-value flag key; the frame's
-    * sorted multiset is position-borrowed-exact, hence bit-identical.
+    * The frame is a plain window that RewriteLowCardWindow keeps over a
+    * provably small lineitem and otherwise buckets by l_shipdate (the
+    * leading sort key), so parallelism is day-count-bounded instead of
+    * the 3-value flag key; the frame's sorted multiset is
+    * position-borrowed-exact, hence bit-identical.
     * Values are integers end to end — nothing rounds. */
   def q74WindowMedian(t: Tables): DataFrame = {
-    val base = t.lineitem
+    val w = Window.partitionBy(col("l_returnflag"))
+      .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
+        col("l_quantity"))
+      .rowsBetween(-29, Window.currentRow)
+    t.lineitem
       .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
-        col("l_shipdate"), col("l_quantity"))
-      .withColumn("daybkt", col("l_shipdate"))
-    ScanWindows.slidingFrame(base, Seq("l_returnflag"), "daybkt",
-      Seq("l_shipdate", "l_orderkey", "l_linenumber", "l_quantity"), 30) { w =>
-      Seq("frame" -> sort_array(collect_list(col("l_quantity")).over(w)))
-    }
+        sort_array(collect_list(col("l_quantity")).over(w)).as("frame"))
       .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
         element_at(col("frame"), ((size(col("frame")) + 1) / 2).cast("int"))
           .as("med30"),

@@ -130,12 +130,12 @@ object Relational5 {
         round(col("l_quantity"), 0).cast("long").as("qty"))
       .groupBy(col("l_returnflag"), col("cents"))
       .agg(sum(col("qty")).as("w"))
-    // r15 measured note: a ScanWindows.prefixSums bucket-parallel variant
-    // was tried (the #flags-partition window caps parallelism at ≤4) and
-    // REVERTED — at bench scale the histogram is price-cardinality-bounded
-    // and the plain window costs ~0.2 s, while the prefix-scan's extra
-    // offsets pass + join cost ~+0.4 s. The window input is already the
-    // pre-aggregated histogram, so the corpus never hits the window.
+    // r15 measured note: a bucket-parallel prefix-scan variant was tried
+    // (the #flags-partition window caps parallelism at ≤4) and REVERTED —
+    // at bench scale the histogram is price-cardinality-bounded and the
+    // plain window costs ~0.2 s, while the scan's extra offsets pass +
+    // join cost ~+0.4 s. The window input is already the pre-aggregated
+    // histogram, so the corpus never hits the window.
     val wRun = Window.partitionBy(col("l_returnflag"))
       .orderBy(col("cents"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -702,46 +702,22 @@ object Relational5 {
       .select(col("o_custkey"),
         datediff(col("max_day"), col("last_day")).cast("long").as("recency_days"),
         col("frequency"), col("monetary_cents"))
-    // Round-9 scale form: ntile(5) over (metric, custkey) WITHOUT the
-    // three global single-partition windows — each score derives from the
-    // row's exact global position (a ScanWindows bucket-parallel running
-    // count over the (metric, custkey) total order, bucketed on a
-    // metric-range prefix) pushed through the closed-form ntile remainder
-    // rule (the q85 arithmetic, first n mod 5 buckets one row larger) —
-    // bit-identical to ntile(5), same DuckDB oracle. Over a provably
-    // small customer frame the helper keeps the plain running count.
-    def score(df: DataFrame, metric: String, descending: Boolean,
-              bucketDiv: Long, out: String): DataFrame = {
+    // Scale form: each ntile(5) is a plain global window over a total
+    // (metric, custkey) order. RewriteLowCardWindow keeps it over a
+    // provably small customer aggregate and otherwise derives it from
+    // bucket-parallel positions and the partition total (the closed-form
+    // big-buckets-first split), bit-identical to ntile(5).
+    def score(metric: String, descending: Boolean): Column = {
       val v = if (descending) -col(metric) else col(metric)
-      val tagged = df
-        .withColumn(s"_v_$out", v)
-        .withColumn(s"_one_$out", lit(1L))
-        .withColumn(s"_vb_$out", expr(s"_v_$out div $bucketDiv"))
-      val pos = ScanWindows.prefixSums(tagged, Seq.empty, s"_vb_$out",
-        Seq(s"_v_$out", "o_custkey"), Seq(s"_pos_$out" -> s"_one_$out"))
-      def idiv(a: Column, b: Column): Column =
-        ((a - pmod(a, b)) / b).cast("long")
-      def cdiv(a: Column, b: Column): Column = idiv(a + b - lit(1L), b)
-      val p = col(s"_pos_$out")
-      val qq = idiv(col("_n"), lit(5L))
-      val rr = pmod(col("_n"), lit(5L))
-      pos
-        .withColumn(out,
-          when(p <= rr * (qq + 1), cdiv(p, qq + 1))
-            .otherwise(rr + cdiv(p - rr * (qq + 1), greatest(qq, lit(1L))))
-            .cast("int"))
-        .drop(s"_v_$out", s"_one_$out", s"_vb_$out", s"_pos_$out")
+      ntile(5).over(Window.orderBy(v, col("o_custkey")))
     }
-    val withN = scored.crossJoin(broadcast(
-      scored.agg(count(lit(1)).as("_n"))))
-    val r3 = score(score(score(withN,
-      "recency_days", descending = false, 64L, "r_score"),
-      "frequency", descending = true, 1L, "f_score"),
-      "monetary_cents", descending = true, 1L << 20, "m_score")
-    r3.select(col("o_custkey"), col("recency_days"), col("frequency"),
-      col("monetary_cents"), col("r_score"), col("f_score"), col("m_score"),
-      concat(col("r_score").cast("string"), col("f_score").cast("string"),
-        col("m_score").cast("string")).as("segment"))
+    scored.select(col("o_custkey"), col("recency_days"), col("frequency"),
+      col("monetary_cents"),
+      score("recency_days", descending = false).as("r_score"),
+      score("frequency", descending = true).as("f_score"),
+      score("monetary_cents", descending = true).as("m_score"))
+      .withColumn("segment", concat(col("r_score").cast("string"),
+        col("f_score").cast("string"), col("m_score").cast("string")))
   }
 
   /** q93: market-basket affinity — the top part pairs co-purchased within

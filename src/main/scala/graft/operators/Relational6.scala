@@ -9,8 +9,9 @@ import graft.Tables
 /** Sixth relational batch (round 9, nineteenth wave): the classic
   * whole-corpus ordered analytics — idle-gap sessionization, global
   * Pareto/ABC classification, RFM segmentation — each built on the
-  * round-9 scale primitives: ScanWindows' distributed prefix scan where
-  * the order is global, histogram position arithmetic where a quantile
+  * round-9 scale primitives: the distributed prefix scan
+  * (RewriteLowCardWindow) where the order is global, histogram position
+  * arithmetic where a quantile
   * boundary is all that's needed. The reference ships no analytic
   * operator at all (its `common`/`core` are YARN orchestration); these
   * are the dashboard shapes its users run downstream, expressed
@@ -34,7 +35,7 @@ object Relational6 {
     *
     * Scale shape: ONE user_id exchange feeds both window passes and the
     * session aggregation (q70's discipline); per-row window state is
-    * O(1). The user key is high-cardinality, so no ScanWindows detour is
+    * O(1). The user key is high-cardinality, so no two-level scan is
     * needed — the q08 class, not the q86 class. */
   def q122Sessionize(t: Tables, idleSec: Long = 1800L): DataFrame =
     sessionizeBatch(t.events, idleSec)
@@ -74,27 +75,22 @@ object Relational6 {
     * orders carry 80 % of revenue"), and the one window shape with NO
     * partition key at all.
     *
-    * Scale form: this is exactly what [[ScanWindows.prefixSums]] exists
-    * for — a naive `SUM OVER (ORDER BY …)` with no PARTITION BY shuffles
-    * every order onto ONE reducer. Here the total order (neg = −cents,
-    * orderkey) buckets by `neg div 2^20` (truncation toward zero is
-    * monotone, so bucket boundaries respect the order); the bucket table
-    * carries the only global window (|buckets| rows), every fact-row pass
-    * runs #buckets-way parallel, and the running sum is bit-identical to
-    * the naive form by the ScanWindowsSpec equivalence. A provably small
-    * orders scan keeps the plain running window (the helper's size
-    * route: the two-level form only pays off past it). Class cuts are
+    * Scale form: a naive `SUM OVER (ORDER BY …)` with no PARTITION BY
+    * shuffles every order onto ONE reducer. The running sum is a plain
+    * window over the total order (neg = −cents, orderkey) that
+    * RewriteLowCardWindow keeps over a provably small orders scan and
+    * otherwise rewrites: the bucket table carries the only global window
+    * (|buckets| rows), every fact-row pass runs #buckets-way parallel,
+    * and the running sum is bit-identical to the naive form. Class cuts are
     * exact integer comparisons (cum·5 ≤ tot·4, cum·20 ≤ tot·19) against
     * the plan-borne total — no percent float anywhere. */
   def q123ParetoClass(t: Tables): DataFrame = {
-    val base = t.orders
+    val run = t.orders
       .select(col("o_orderkey"),
         round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-      .withColumn("neg", -col("cents"))
-      .withColumn("negbkt", expr("neg div 1048576"))
-    val run = graft.operators.ScanWindows.prefixSums(base,
-      Seq.empty, "negbkt", Seq("neg", "o_orderkey"),
-      Seq("cum_cents" -> "cents"))
+      .withColumn("cum_cents", sum(col("cents")).over(
+        Window.orderBy(-col("cents"), col("o_orderkey"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     val tot = t.orders.agg(
       sum(round(col("o_totalprice") * 100, 0).cast("long")).as("tot"))
     run.crossJoin(broadcast(tot))
@@ -329,10 +325,11 @@ object Relational6 {
     * the CLV-inequality read-out behind "10 % of customers carry 60 % of
     * revenue" planning (t21 measures the same statistic over token mass;
     * this is the revenue-domain member, and the one that needs the
-    * GLOBAL rank t21's per-source partition avoided). The rank comes
-    * from ScanWindows' running count over the (cents, custkey) total
-    * order — bucket-parallel unless the customer frame is provably small,
-    * so never a single-partition window over a large input —
+    * GLOBAL rank t21's per-source partition avoided). The rank is a
+    * plain row_number over the (cents, custkey) total order, which
+    * RewriteLowCardWindow makes bucket-parallel unless the customer
+    * aggregate is provably small, so never a single-partition window
+    * over a large input —
     * and Gini = Σ(2i − n − 1)·xᵢ / (n·Σx) accumulates in decimal(38,0)
     * (the term product overflows a long past ~10⁶ customers; DuckDB's
     * HUGEINT matches), leaving two final IEEE divisions (gini unrounded
@@ -340,11 +337,8 @@ object Relational6 {
   def q131CustomerGini(t: Tables): DataFrame = {
     val perCust = t.orders.groupBy(col("o_custkey"))
       .agg(sum(round(col("o_totalprice") * 100, 0).cast("long")).as("cents"))
-    val base = perCust
-      .withColumn("one", lit(1L))
-      .withColumn("cbkt", expr("cents div 1048576"))
-    val pos = graft.operators.ScanWindows.prefixSums(base, Seq.empty, "cbkt",
-      Seq("cents", "o_custkey"), Seq("rnk" -> "one"))
+    val pos = perCust.withColumn("rnk",
+      row_number().over(Window.orderBy(col("cents"), col("o_custkey"))))
     pos.crossJoin(broadcast(perCust.agg(count(lit(1)).as("n"))))
       .agg(max(col("n")).as("n_customers"),
         sum(col("cents")).as("total_cents"),

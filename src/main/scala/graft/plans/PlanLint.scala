@@ -17,9 +17,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LeafNode, L
   *  - `low-card-window`: a window partitioned by nothing or by a known
   *    3-5-value key whose input is unbounded — everything funnels through
   *    ≤ NDV(partition) reducers. [[RewriteLowCardWindow]] auto-rewrites
-  *    the supported running-aggregate shapes; this lint catches the rest
-  *    (rank functions, fp sums, value-offset frames) that still need a
-  *    hand-routed [[graft.operators.ScanWindows]] form or a declared
+  *    the supported shapes; this lint catches the rest (running fp
+  *    sums, value-offset RANGE frames, lead) that need a declared
   *    exception.
   *  - `non-equi-join`: a join with no equality conjunct multiplies its
   *    inputs, acceptable only when one side is provably bounded (an
@@ -68,8 +67,8 @@ object PlanLint {
 
   def unboundedNonEquiJoins(plan: LogicalPlan): Seq[Finding] =
     plan.collect { case j: Join => j }.flatMap { j =>
-      // null-safe <=> plans as a shuffled equi join too (ScanWindows'
-      // offset joins emit it) — both count as equality conjuncts
+      // null-safe <=> plans as a shuffled equi join too (the window
+      // rewrite's offset joins emit it) — both count as equality conjuncts
       val hasEqui = j.condition.exists(c =>
         c.collectFirst { case _: EqualTo => (); case _: EqualNullSafe => () }
           .nonEmpty)

@@ -1,30 +1,29 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, Project, Window => LWindow}
+import org.apache.spark.sql.catalyst.optimizer.EliminateResolvedHint
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.expressions.{Window => W, WindowSpec}
-import org.apache.spark.sql.functions.{coalesce, col, countDistinct, dense_rank => denseRankFn, greatest, least, lit, rank => rankFn, row_number => rowNumberFn, struct, sum => sumFn, when}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, count => countFn, countDistinct, dense_rank => denseRankFn, greatest, least, lit, rank => rankFn, row_number => rowNumberFn, struct, sum => sumFn, when}
 import org.apache.spark.sql.graft.{ColumnBridge, DatasetBridge}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Auto-rewrite low-cardinality-partition running windows into the
-  * two-level bucket scan (the [[graft.operators.ScanWindows]] shape),
-  * engine-side.
+  * two-level bucket scan (Blelloch's parallel prefix, written
+  * relationally), engine-side — the engine's one window-scan mechanism.
   *
   * The round-8/9 finding, closed structurally: a window partitioned by
   * nothing or by a handful-of-values key (`SUM(x) OVER (ORDER BY d)`,
   * `... PARTITION BY l_returnflag ORDER BY d`) funnels the ENTIRE input
   * through ≤ NDV(partition) reducers, each sorting and scanning its whole
-  * partition serially — a parallelism ceiling no cluster size fixes. Round
-  * 9 hand-routed every registered query through `ScanWindows.*` and added
-  * a plan gate that *detects* offenders; this rule promotes the property
-  * from authoring discipline to an engine guarantee: any eligible window —
-  * including one written by a raw-SQL user who never heard of ScanWindows
-  * — is rewritten by the optimizer into
+  * partition serially — a parallelism ceiling no cluster size fixes. This
+  * rule makes the fix an engine guarantee rather than authoring
+  * discipline: any eligible window — registered query or raw SQL alike —
+  * is rewritten by the optimizer into
   *
   *   1. per-(partition, bucket) partial aggregates (one map-side-combined
   *      exchange; bucket = a monotone function of the leading order key),
@@ -60,6 +59,18 @@ import org.apache.spark.sql.types._
   *     an earlier bucket is strictly before the current row, so the
   *     bucket offset is shared by both frame ends and only the
   *     within-bucket frame end changes;
+  *   - bounded trailing frames (ROWS n PRECEDING → CURRENT ROW) merge no
+  *     partials at all: the bucket table carries each bucket's row count,
+  *     whose prefix sum is the bucket's global start position; the last n
+  *     rows of every bucket are broadcast-joined, on a position range, to
+  *     the later buckets whose leading frame they fill, the original
+  *     aggregate runs over each extended bucket, and the borrowed copies
+  *     are dropped. Every surviving row sees exactly its global frame, in
+  *     the same order, so ANY deterministic aggregate is exact — fp sums
+  *     and `collect_list`/`collect_set` included. The borrow copies n
+  *     rows per bucket, so its cost grows with the frame width. A node
+  *     mixing running and bounded frames is split into two windows, each
+  *     rewritten;
   *   - the rank family rewrites by the same decomposition: ROW_NUMBER
   *     and RANK add the previous buckets' ROW count to the within-bucket
   *     function, DENSE_RANK adds the previous buckets' DISTINCT
@@ -86,30 +97,30 @@ import org.apache.spark.sql.types._
   * Trigger: partition keys absent, all in [[lowCardKeys]] (the plan
   * gate's set — the engine's known 3-5-value columns), or all having
   * catalog column stats with NDV ≤ [[statsNdvCeiling]]; AND the child is
-  * unbounded (no Aggregate reachable without crossing a Join — the same
-  * [[boundedBelow]] walk the gate uses; a window over an aggregate is
-  * already histogram-sized and cheaper naive); AND the child plan is
-  * NOT provably below the rewrite's crossover ([[minChildBytesKey]],
-  * default 64 MB): `child.stats.sizeInBytes` is a real bound for file
-  * scans and local data, so a provably-small input keeps the naive
-  * single-sort window (which wins below ~1M rows per partition value —
-  * the measured crossover) while an unknown or large size rewrites (the
-  * safe default at scale — joins and streaming estimates read huge);
-  * AND the child subtree evaluates no nondeterministic expression — the
-  * rewrite reads the child TWICE (probe rows + the offsets side of the
-  * self-join), so a nondeterministic child (rand() filter) could hand
-  * the two sides different row sets where the naive window evaluates it
-  * once. Bucket derivation by leading-key type: date → the day itself,
-  * timestamp → its date, integral → `floor(k / bucketDiv)`
-  * (floor-of-double is monotone even where the double conversion
-  * rounds, which is all bucketing needs), string → the 2-character
-  * prefix (monotone under binary collation). Unsupported shapes (double
-  * sums, avg, DISTINCT/FILTER aggregates, value-offset frames,
+  * not bounded by a provably small aggregate (an Aggregate reachable
+  * without crossing a Join bounds the window — the [[boundedBelow]] walk
+  * the plan gate uses — but only while that aggregate is itself below
+  * the crossover: a per-customer aggregate at scale is as large as a
+  * fact table); AND the child plan is NOT provably below the rewrite's
+  * crossover ([[minChildBytesKey]], default 64 MB):
+  * `child.stats.sizeInBytes` is a real bound for file scans and local
+  * data, so a provably-small input keeps the naive single-sort window
+  * (which wins below ~1M rows per partition value — the measured
+  * crossover) while an unknown or large size rewrites (the safe default
+  * at scale — joins and streaming estimates read huge); AND the child
+  * subtree evaluates no nondeterministic expression — the rewrite reads
+  * the child TWICE (probe rows + the bucket table), so a
+  * nondeterministic child (rand() filter) could hand the two sides
+  * different row sets where the naive window evaluates it once. The
+  * bucket is range-free ([[bucketExpr]]): its count is bounded by the key
+  * type, never by a tuned divisor. Unsupported shapes (running double
+  * sums, avg, DISTINCT/FILTER aggregates, value-offset RANGE frames,
   * lead/nth_value, nav shapes over non-asc-nulls-first orders) are left
   * alone — the spec gate still catches any of those that would not
   * scale. [[ScanWindowWatch]] (a QueryExecutionListener the session
   * installs) warns post-execution when a rewrite's partials table came
-  * back degenerate (≤ a handful of buckets — see [[bucketExpr]]).
+  * back degenerate (≤ a handful of buckets: a leading key with that few
+  * distinct values).
   *
   * Scale shape at 100 TB: stage 1 is a map-side-combined exchange to
   * (NDV(partition) × #buckets) rows; stages 2-4 never move the fact table
@@ -133,7 +144,7 @@ import org.apache.spark.sql.types._
 object RewriteLowCardWindow extends Rule[LogicalPlan] {
 
   /** The engine's known low-NDV column names — the plan gate's key set
-    * (ScanWindowsSpec imports this set; one source of truth). */
+    * (the plan-gate specs import this set; one source of truth). */
   val lowCardKeys: Set[String] = Set(
     "l_returnflag", "l_linestatus", "o_orderpriority", "o_orderstatus",
     "event_type", "lang", "capped", "converted", "kept", "sampled",
@@ -144,7 +155,6 @@ object RewriteLowCardWindow extends Rule[LogicalPlan] {
   val statsNdvCeiling = 1024L
 
   val enabledKey = "spark.graft.scanWindowRewrite.enabled"
-  val bucketDivKey = "spark.graft.scanWindowRewrite.bucketDiv"
 
   /** Crossover bypass (round-10 judge finding: p47 paid 3.7× at sf0.1 for
     * a rewrite that only wins past ~1M rows per partition value): when the
@@ -153,20 +163,23 @@ object RewriteLowCardWindow extends Rule[LogicalPlan] {
     * ~3-job fixed overhead and the rule stands down. 64 MB of scan bytes
     * ≈ several million rows of these tables — comfortably past the
     * measured crossover; unknown sizes (joins, streaming) estimate huge
-    * and keep rewriting, the safe default at scale. The same knob routes
-    * the hand-called [[graft.operators.ScanWindows]] helpers through
-    * [[provablySmall]]: at 0 no non-empty input is provably small, so
-    * both this rule and the helpers build the two-level scan. */
+    * and keep rewriting, the safe default at scale. At 0 no non-empty
+    * input (and no non-empty bounding aggregate) is provably small, so
+    * every eligible shape builds the two-level scan. */
   val minChildBytesKey = "spark.graft.scanWindowRewrite.minChildBytes"
   val minChildBytesDefault: Long = 64L * 1024 * 1024
 
   /** Bounded input = an Aggregate reachable without crossing a Join, or a
     * join ALL of whose inputs are bounded — shared with the plan gate. */
-  def boundedBelow(p: LogicalPlan): Boolean = p match {
-    case _: Aggregate => true
-    case j: Join => j.children.forall(boundedBelow)
-    case other => other.children.exists(boundedBelow)
-  }
+  def boundedBelow(p: LogicalPlan): Boolean = boundedBy(p, _ => true)
+
+  /** [[boundedBelow]] counting only the aggregates that pass `ok`. */
+  private def boundedBy(p: LogicalPlan, ok: Aggregate => Boolean): Boolean =
+    p match {
+      case a: Aggregate => ok(a)
+      case j: Join => j.children.forall(boundedBy(_, ok))
+      case other => other.children.exists(boundedBy(_, ok))
+    }
 
   private def conf(key: String, default: String): String =
     SQLConf.get.getConfString(key, default)
@@ -174,7 +187,17 @@ object RewriteLowCardWindow extends Rule[LogicalPlan] {
   def apply(plan: LogicalPlan): LogicalPlan = {
     if (conf(enabledKey, "true") != "true") return plan
     plan.transformUp {
-      case w: LWindow if eligible(w) => rewrite(w).getOrElse(w)
+      case w: LWindow if eligible(w) =>
+        // running and bounded frames take different scans: a mixed node
+        // becomes the bounded window over the running one
+        val (bounded, running) = w.windowExpressions.partition(boundedExpr)
+        if (bounded.isEmpty || running.isEmpty) rewrite(w).getOrElse(w)
+        else {
+          val inner = w.copy(windowExpressions = running)
+          val outer = w.copy(windowExpressions = bounded,
+            child = rewrite(inner).getOrElse(inner))
+          Project(w.output, rewrite(outer).getOrElse(outer))
+        }
     }
   }
 
@@ -214,6 +237,7 @@ object RewriteLowCardWindow extends Rule[LogicalPlan] {
     * key must sort that way (and be struct-comparable) for min/max of
     * struct(orderKeys, value) to pick the window's first/last row. */
   private def navShape(ne: NamedExpression): Boolean = ne match {
+    case _ if boundedExpr(ne) => false
     case Alias(WindowExpression(ae: AggregateExpression, _), _) =>
       ae.aggregateFunction match {
         case _: Last | _: First => true
@@ -230,9 +254,11 @@ object RewriteLowCardWindow extends Rule[LogicalPlan] {
   /** Trailing-scan frames: at-or-before (ROWS/RANGE UNBOUNDED PRECEDING →
     * CURRENT ROW) and strictly-before (ROWS ... → 1 PRECEDING, the
     * lag/fill class; RANGE value offsets are a different shape). `avg` is
-    * deliberately absent everywhere: Spark's Average accumulates integral
-    * inputs in a DOUBLE sum, so an exact-integer two-level rewrite could
-    * differ in ulps from the naive window — not bit-parity-safe. */
+    * deliberately absent from these scans: Spark's Average accumulates
+    * integral inputs in a DOUBLE sum, so an exact-integer two-level
+    * rewrite could differ in ulps from the naive window — not
+    * bit-parity-safe (a bounded frame's borrow merges nothing, so it
+    * takes `avg`). */
   private def supportedFrame(f: SpecifiedWindowFrame): Boolean =
     f.lower == UnboundedPreceding &&
       ((f.upper == CurrentRow &&
@@ -242,7 +268,29 @@ object RewriteLowCardWindow extends Rule[LogicalPlan] {
          case _ => false
        })))
 
+  /** `n` of a bounded trailing frame, ROWS n PRECEDING → CURRENT ROW. */
+  private def trailingRows(f: SpecifiedWindowFrame): Option[Int] =
+    if (f.frameType != RowFrame || f.upper != CurrentRow) None
+    else f.lower match {
+      case CurrentRow => Some(0)
+      case e if e.foldable && e.dataType == IntegerType =>
+        Option(e.eval()).map(v => -v.asInstanceOf[Int]).filter(_ >= 0)
+      case _ => None
+    }
+
+  /** An aggregate over a bounded trailing frame: the positional borrow
+    * copies rows and merges no partials, so any deterministic aggregate
+    * is exact. */
+  private def boundedExpr(ne: NamedExpression): Boolean = ne match {
+    case Alias(WindowExpression(ae: AggregateExpression,
+        WindowSpecDefinition(_, _, f: SpecifiedWindowFrame)), _) =>
+      trailingRows(f).isDefined && !ae.isDistinct && ae.filter.isEmpty &&
+        ae.deterministic
+    case _ => false
+  }
+
   private def supportedWinExpr(ne: NamedExpression): Boolean = ne match {
+    case _ if boundedExpr(ne) => true
     case Alias(WindowExpression(ae: AggregateExpression,
         WindowSpecDefinition(_, _, f: SpecifiedWindowFrame)), _) =>
       supportedFrame(f) && supportedAgg(ae) && ae.deterministic
@@ -313,9 +361,10 @@ object RewriteLowCardWindow extends Rule[LogicalPlan] {
       (!w.windowExpressions.exists(navShape) || navOrderOk(w.orderSpec)) &&
       w.partitionSpec.forall(_.deterministic) &&
       lowCardPartition(w) &&
-      !boundedBelow(w.child) &&
-      // the rewrite evaluates the child TWICE (probe rows + the offsets
-      // side); a nondeterministic child could hand the sides different
+      // an aggregate bounds the window only while it is provably small
+      !boundedBy(w.child, provablySmall) &&
+      // the rewrite evaluates the child TWICE (probe rows + the bucket
+      // table); a nondeterministic child could hand the sides different
       // row sets where the naive window evaluates it once
       !w.child.exists(_.expressions.exists(!_.deterministic)) &&
       // name-based reconstruction needs an unambiguous child schema
@@ -519,17 +568,11 @@ object RewriteLowCardWindow extends Rule[LogicalPlan] {
 
   /** Monotone non-decreasing, null-preserving bucket function of the
     * leading order key; for RANGE exactness it is a pure function of the
-    * key value, so peers share a bucket.
-    *
-    * Integral granularity: `floor(k / div)` with `div` derived from CBO
-    * column stats when ANALYZE has run (`span / 4096` → ~4k buckets at
-    * any key range) and [[bucketDivKey]] (default 16384, the hand-routed
-    * ScanWindows precedent) otherwise. Degenerate bound: a statless
-    * integral key whose whole domain fits one divisor span collapses to
-    * a single bucket — the rewrite then matches the naive window's
-    * parallelism ceiling (one reducer per partition value) plus one
-    * extra scan, never less; tune the conf (or ANALYZE) for such keys. */
-  private def bucketExpr(child: LogicalPlan, k: Expression): Column = {
+    * key value, so peers share a bucket. Range-free: the bucket count is
+    * bounded by the key type, never by the data or a tuned divisor, so
+    * only a leading key with a handful of distinct values degenerates
+    * (the [[ScanWindowWatch]] case). */
+  private def bucketExpr(k: Expression): Column = {
     val c = ColumnBridge.toColumn(k)
     k.dataType match {
       case DateType => c
@@ -544,19 +587,7 @@ object RewriteLowCardWindow extends Rule[LogicalPlan] {
       // construction, no zone involved
       case TimestampNTZType => c.cast(DateType)
       case ByteType | ShortType | IntegerType | LongType =>
-        val statsDiv = k match {
-          case a: Attribute => child.stats.attributeStats.toSeq.collectFirst {
-            case (attr, s) if attr.semanticEquals(a) &&
-                s.min.isDefined && s.max.isDefined =>
-              val lo = s.min.get.toString.toDouble
-              val hi = s.max.get.toString.toDouble
-              math.max(1L, ((hi - lo) / 4096.0).toLong)
-          }
-          case _ => None
-        }
-        val div = statsDiv.getOrElse(conf(bucketDivKey, "16384").toLong)
-        org.apache.spark.sql.functions.floor(
-          c.cast(DoubleType) / lit(div.toDouble)).cast(LongType)
+        ColumnBridge.toColumn(integralBucket(k))
       case StringType => c.substr(1, 2)
       case FloatType | DoubleType =>
         // floor(64·k): IEEE multiply by a positive constant is monotone,
@@ -565,10 +596,26 @@ object RewriteLowCardWindow extends Rule[LogicalPlan] {
         // like the key itself), ±Inf keep their extremes. ~64 buckets per
         // unit of key range — scores in [0,1] still fan out; a key whose
         // whole span is ≪ 1/64 degenerates to few buckets (correct, naive
-        // parallelism — see the integral note above)
+        // parallelism)
         org.apache.spark.sql.functions.floor(c.cast(DoubleType) * 64d)
       case dt => throw new IllegalStateException(s"unbucketable $dt")
     }
+  }
+
+  /** Integral bucket: the key with all but its top 12 significant bits
+    * cleared, in exact long arithmetic. A key below 2^12 is its own
+    * bucket, and each power-of-two range [2^p, 2^(p+1)) splits into at
+    * most 2^11 buckets at any magnitude. A negative key is mirrored
+    * through bitwise NOT (`~k = -k - 1`, no overflow at Long.MinValue):
+    * `~top(~k)` is monotone because `~` reverses order twice, and it is
+    * negative, so negatives sort below non-negatives. Null in, null out. */
+  private[graft] def integralBucket(k: Expression): Expression = {
+    val x = Cast(k, LongType)
+    def top(v: Expression): Expression = {
+      val drop = Greatest(Seq(Subtract(Length(Bin(v)), Literal(12)), Literal(0)))
+      ShiftLeft(ShiftRight(v, drop), drop)
+    }
+    If(GreaterThanOrEqual(x, Literal(0L)), top(x), BitwiseNot(top(BitwiseNot(x))))
   }
 
   private def sorted(c: Column, so: SortOrder): Column =
@@ -582,74 +629,111 @@ object RewriteLowCardWindow extends Rule[LogicalPlan] {
   private def rewrite(w: LWindow): Option[LogicalPlan] = try {
     val spark = SparkSession.getActiveSession.get
     def cb(e: Expression): Column = ColumnBridge.toColumn(e)
-    val ops = w.windowExpressions.map(opFor(_, w.orderSpec.map(_.child)))
+    val bounded = w.windowExpressions.forall(boundedExpr)
+    val ops = if (bounded) Nil
+      else w.windowExpressions.map(opFor(_, w.orderSpec.map(_.child)))
     val leading = w.orderSpec.head
 
-    val df0 = DatasetBridge.ofRows(spark, w.child)
     val childCols = w.child.output.map(cb)
     val partNames = w.partitionSpec.indices.map(i => s"_gsw_p_$i")
     val bkt = "_gsw_bkt"
-    val df = df0.select(childCols ++
+    val keys = partNames :+ bkt
+    val df = DatasetBridge.ofRows(spark, w.child).select(childCols ++
       w.partitionSpec.zip(partNames).map { case (e, n) => cb(e).as(n) } ++
-      Seq(bucketExpr(w.child, leading.child).as(bkt)) ++
+      Seq(bucketExpr(leading.child).as(bkt)) ++
       ops.zipWithIndex.collect { case (op, i) if op.value.isDefined =>
         cb(op.value.get).as(s"_gsw_v_$i") }: _*)
     def valCol(i: Int): Option[Column] =
       ops(i).value.map(_ => col(s"_gsw_v_$i"))
-
-    // 1. per-(partition, bucket) partials — one map-side-combined exchange
-    val keys = partNames :+ bkt
-    val partialCols = ops.zipWithIndex.map {
-      case (op, i) => op.partial(valCol(i)).as(s"_gsw_ps_$i")
-    }
-    val partials = df.groupBy(keys.map(col): _*)
-      .agg(partialCols.head, partialCols.tail: _*)
-
-    // 2. offsets: prefix-scan the |buckets|-row table (bounded input — a
-    // window above an Aggregate, which neither this rule nor the plan
-    // gate treats as an offender); ntile also reads the whole-partition
-    // total off the same tiny table
+    // scans over the |buckets|-row table run in the leading key's order
+    // (bounded input — a window above an Aggregate, which neither this
+    // rule nor the plan gate treats as an offender)
     val wB = W.partitionBy(partNames.map(col): _*)
       .orderBy(sorted(col(bkt), leading))
-      .rowsBetween(W.unboundedPreceding, -1)
-    val wAll = W.partitionBy(partNames.map(col): _*)
-      .orderBy(sorted(col(bkt), leading))
-      .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    val offsets = partials.select(keys.map(col) ++
-      ops.indices.map { i =>
-        ops(i).scan(col(s"_gsw_ps_$i")).over(wB).as(s"_gsw_off_$i")
-      } ++
-      ops.zipWithIndex.collect { case (op, i) if op.needsTotal =>
-        op.scan(col(s"_gsw_ps_$i")).over(wAll).as(s"_gsw_tot_$i")
+    val before = wB.rowsBetween(W.unboundedPreceding, -1)
+    // null-safe join of bucket-table columns back to the rows (window
+    // partitioning groups NULL keys; plain equality would drop them)
+    def joinBack(table: DataFrame, cols: Seq[String]): DataFrame =
+      df.join(table.select(keys.map(n => col(n).as(s"_gsw_k_$n")) ++
+        cols.map(col): _*),
+        keys.map(n => col(n) <=> col(s"_gsw_k_$n")).reduce(_ && _), "left")
+    // within-bucket windows at (partition, bucket) grain
+    val base = W.partitionBy(keys.map(col): _*)
+      .orderBy(w.orderSpec.map(so => sorted(cb(so.child), so)): _*)
+
+    val res = if (bounded) {
+      val frames = w.windowExpressions.map(_.asInstanceOf[Alias].child)
+        .map { case WindowExpression(f, spec) => f ->
+          trailingRows(spec.frameSpecification.asInstanceOf[SpecifiedWindowFrame]).get }
+      val need = frames.map(_._2).max
+      // 1. bucket table: row count and 1-based global start position
+      val counts = df.groupBy(keys.map(col): _*)
+        .agg(countFn(lit(1)).as("_gsw_n"))
+        .withColumn("_gsw_start",
+          coalesce(sumFn(col("_gsw_n")).over(before), lit(0L)) + 1)
+      val positioned = joinBack(counts, Seq("_gsw_n", "_gsw_start"))
+        .withColumn("_gsw_rn", rowNumberFn().over(base))
+        .withColumn("_gsw_pos", col("_gsw_start") + col("_gsw_rn") - 1)
+      // 2. the last `need` rows of each bucket, copied into every later
+      // bucket whose leading frame they fill: bucket b needs positions
+      // [start(b) - need, start(b) - 1]. The target side renames every
+      // column, so the self-join keeps its partition-key equality
+      val targets = counts.select(partNames.map(n => col(n).as(s"_gsw_t_$n")) ++
+        Seq(col(bkt).as("_gsw_tb"), col("_gsw_start").as("_gsw_ts")): _*)
+      val borrowed = positioned.where(col("_gsw_rn") > col("_gsw_n") - need)
+        .join(broadcast(targets),
+          (partNames.map(n => col(n) <=> col(s"_gsw_t_$n")) ++ Seq(
+            col("_gsw_pos") >= col("_gsw_ts") - need,
+            col("_gsw_pos") < col("_gsw_ts"))).reduce(_ && _))
+        .withColumn(bkt, col("_gsw_tb"))
+        .drop(partNames.map(n => s"_gsw_t_$n") ++ Seq("_gsw_tb", "_gsw_ts"): _*)
+      // 3. the original aggregates over each extended bucket: borrowed
+      // rows come from earlier buckets, so they sort before its own rows
+      // and every own row's frame is its global frame; borrowed copies go
+      positioned.withColumn("_gsw_own", lit(true))
+        .unionByName(borrowed.withColumn("_gsw_own", lit(false)))
+        .select(childCols ++ frames.zipWithIndex.map { case ((f, n), i) =>
+          cb(f).over(base.rowsBetween(-n, W.currentRow)).as(s"_gsw_out_$i")
+        } :+ col("_gsw_own"): _*)
+        .where(col("_gsw_own"))
+    } else {
+      // 1. per-(partition, bucket) partials — one map-side-combined exchange
+      val partialCols = ops.zipWithIndex.map {
+        case (op, i) => op.partial(valCol(i)).as(s"_gsw_ps_$i")
+      }
+      val partials = df.groupBy(keys.map(col): _*)
+        .agg(partialCols.head, partialCols.tail: _*)
+      // 2. offsets: prefix-scan the bucket table; ntile also reads the
+      // whole-partition total off the same tiny table
+      val totals = ops.indices.filter(ops(_).needsTotal)
+      val offsets = partials.select(keys.map(col) ++
+        ops.indices.map { i =>
+          ops(i).scan(col(s"_gsw_ps_$i")).over(before).as(s"_gsw_off_$i")
+        } ++
+        totals.map { i =>
+          ops(i).scan(col(s"_gsw_ps_$i")).over(wB.rowsBetween(
+            W.unboundedPreceding, W.unboundedFollowing)).as(s"_gsw_tot_$i")
+        }: _*)
+      // 3. offset join back to the rows, 4. within-bucket windows + merge
+      val joined = joinBack(offsets,
+        ops.indices.map(i => s"_gsw_off_$i") ++ totals.map(i => s"_gsw_tot_$i"))
+      joined.select(childCols ++ ops.zipWithIndex.map { case (op, i) =>
+        val tot = if (op.needsTotal) Some(col(s"_gsw_tot_$i")) else None
+        op.merge(col(s"_gsw_off_$i"), op.run(base, valCol(i)), tot)
+          .cast(op.out.dataType).as(s"_gsw_out_$i")
       }: _*)
-
-    // 3. null-safe offset join back to the rows (window partitioning
-    // groups NULL keys; plain equality would drop them)
-    val offR = offsets.select(keys.map(n => col(n).as(s"_gsw_k_$n")) ++
-      ops.indices.map(i => col(s"_gsw_off_$i")) ++
-      ops.zipWithIndex.collect { case (op, i) if op.needsTotal =>
-        col(s"_gsw_tot_$i") }: _*)
-    val joined = df.join(offR,
-      keys.map(n => col(n) <=> col(s"_gsw_k_$n")).reduce(_ && _), "left")
-
-    // 4. within-bucket windows at (partition, bucket) grain + merge
-    val orderCols = w.orderSpec.map(so => sorted(cb(so.child), so))
-    val base = W.partitionBy(keys.map(col): _*).orderBy(orderCols: _*)
-    val outCols = ops.zipWithIndex.map { case (op, i) =>
-      val tot = if (op.needsTotal) Some(col(s"_gsw_tot_$i")) else None
-      op.merge(col(s"_gsw_off_$i"), op.run(base, valCol(i)), tot)
-        .cast(op.out.dataType).as(s"_gsw_out_$i")
     }
-    val res = joined.select(childCols ++ outCols: _*)
 
     // splice: re-emit the Window's exact output (attributes AND exprIds) —
     // the left join side keeps the child's original exprIds, so child
-    // columns pass through untouched and only the window outputs re-alias
-    val analyzed = res.queryExecution.analyzed
+    // columns pass through untouched and only the window outputs re-alias;
+    // the borrow's broadcast hint becomes a join hint here, since the
+    // optimizer pass that does that has already run
+    val analyzed = EliminateResolvedHint(res.queryExecution.analyzed)
     val byName = analyzed.output.map(a => a.name -> a).toMap
-    val winAliases = ops.zipWithIndex.map { case (op, i) =>
-      Alias(byName(s"_gsw_out_$i"), op.out.name)(exprId = op.out.exprId,
-        qualifier = op.out.qualifier, explicitMetadata = Some(op.out.metadata))
+    val winAliases = w.windowExpressions.map(_.toAttribute).zipWithIndex.map {
+      case (out, i) => Alias(byName(s"_gsw_out_$i"), out.name)(exprId = out.exprId,
+        qualifier = out.qualifier, explicitMetadata = Some(out.metadata))
     }
     Some(Project(w.child.output ++ winAliases, analyzed))
   } catch {

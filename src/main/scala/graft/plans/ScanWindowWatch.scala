@@ -10,18 +10,17 @@ import org.apache.spark.sql.util.QueryExecutionListener
 /** Post-execution degeneracy watch for [[RewriteLowCardWindow]]'s bucket
   * scan — a `QueryExecutionListener` the session installs.
   *
-  * The rule's bucket function can DEGENERATE silently (scaladoc'd on
-  * [[RewriteLowCardWindow.bucketExpr]]): a statless integral key whose
-  * whole domain fits one `bucketDiv` span collapses every row into one
-  * bucket, leaving the rewrite correct but no more parallel than the
-  * naive window — plus an extra scan's cost. The optimizer cannot see
-  * this (no stats is exactly the failing case), but the EXECUTED plan
+  * The rule's bucket function is range-free, so it can degenerate in one
+  * case only: a leading order key with a handful of distinct values
+  * yields that many buckets, leaving the rewrite correct but no more
+  * parallel than the naive window — plus an extra scan's cost. The
+  * optimizer cannot see this without column stats, but the EXECUTED plan
   * can: the rewrite's partials aggregate (grouping on `_gsw_bkt`)
   * reports its actual output rows in SQL metrics, and that count IS
   * NDV(partition) × #buckets. When it comes back at-or-below
   * [[warnRowsKey]] (default 4 — so at most a handful of buckets per
   * partition value however the product splits), the degradation gets a
-  * `logWarning` naming the tuning knobs instead of passing silently.
+  * `logWarning` naming the cause instead of passing silently.
   *
   * Metrics read AFTER execution are free — this never runs a job. The
   * reference has no analytic engine to compare (ref `doc/README.md`);
@@ -66,10 +65,8 @@ object ScanWindowWatch extends QueryExecutionListener with Logging {
     }.flatten.filter(rows => rows > 0 && rows <= ceiling).map { rows =>
       s"scan-window rewrite degenerated: the partials table has only $rows " +
         s"row(s) = NDV(partition) x buckets, so the two-level scan is no " +
-        s"more parallel than the naive window (narrow statless key? " +
-        s"lower ${RewriteLowCardWindow.bucketDivKey} or ANALYZE TABLE ... " +
-        s"COMPUTE STATISTICS FOR COLUMNS so the bucket span derives from " +
-        s"the key's real range)"
+        s"more parallel than the naive window (the leading ORDER BY key " +
+        s"has that few distinct values; put a finer key first)"
     }
   }
 

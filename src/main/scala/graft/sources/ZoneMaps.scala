@@ -68,9 +68,21 @@ object ZoneMaps extends Logging {
     * with the file-grain manifest. */
   def clusteredWrite(df: DataFrame, colName: String, dir: String,
                      nFiles: Int): Unit =
-    df.repartitionByRange(nFiles, col(colName))
-      .sortWithinPartitions(colName)
-      .write.mode("overwrite").parquet(dir)
+    writeLayout(df.repartitionByRange(nFiles, col(colName))
+      .sortWithinPartitions(colName), dir)
+
+  /** Overwrite `dir` with an engine-owned layout. TIMESTAMP columns go out
+    * as INT64 micros, whose footers carry min/max: Spark's INT96 default
+    * keeps none, which would send the manifest build to the stats scan.
+    * Other writes keep the session default. */
+  private def writeLayout(df: DataFrame, dir: String): Unit = {
+    val key = "spark.sql.parquet.outputTimestampType"
+    val conf = df.sparkSession.conf
+    val prev = conf.getOption(key)
+    conf.set(key, "TIMESTAMP_MICROS")
+    try df.write.mode("overwrite").parquet(dir)
+    finally prev.fold(conf.unset(key))(conf.set(key, _))
+  }
 
   /** Z-order-lite multi-column clustering — ONE layout that serves range
     * predicates on EITHER column (the Delta/Iceberg Z-ORDER pitch, public
@@ -186,11 +198,10 @@ object ZoneMaps extends Logging {
     val withIds = zCols.indices.foldLeft(df) { case (acc, j) =>
       acc.withColumn(s"_gzm_$j", buckets(j))
     }
-    withIds.withColumn("_gzm_z", coalesce(z, lit(-1L)))
+    writeLayout(withIds.withColumn("_gzm_z", coalesce(z, lit(-1L)))
       .repartitionByRange(nFiles, col("_gzm_z"))
       .sortWithinPartitions("_gzm_z")
-      .drop(working: _*)
-      .write.mode("overwrite").parquet(dir)
+      .drop(working: _*), dir)
   }
 
   /** The manifest as a DataFrame: one row per file with its row count and,

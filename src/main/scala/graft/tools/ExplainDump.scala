@@ -20,8 +20,8 @@ import graft.GraftSession
   * size, so over a small input this dumps the small route; to dump the
   * scale route without a big corpus, set
   * `SPARK_GRAFT_EXPLAIN_CONF=spark.graft.scanWindowRewrite.minChildBytes=0`
-  * (the window rewrite and the ScanWindows helpers then take their
-  * two-level form over any non-empty input).
+  * (the window rewrite then takes its two-level form over any non-empty
+  * input).
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {

@@ -720,47 +720,67 @@ object GraftProperties extends Properties("graft") {
       }
     }
 
-  // random frame for the ScanWindows laws: 1-3 groups, unique keys per
-  // group (the total-order contract), values small longs; bucket width
-  // drawn small so frames regularly straddle several buckets
-  private val scanFrame: Gen[(List[(String, Long, Long)], Long, Int)] = for {
+  // random frame for the bounded-frame laws: 1-3 low-card groups, a
+  // strictly increasing key per group (tie-free, so ROWS frames are
+  // deterministic) whose gaps straddle the integral bucket width, long
+  // and double values, and a trailing frame wider than most buckets
+  private val boundedFrame: Gen[(List[(String, Long, Long, Double)], Int)] = for {
     nG <- Gen.chooseNum(1, 3)
     sizes <- Gen.listOfN(nG, Gen.chooseNum(0, 60))
-    vals <- Gen.sequence[List[List[Long]], List[Long]](
-      sizes.map(n => Gen.listOfN(n, Gen.chooseNum(-9L, 9L))))
-    bucketWidth <- Gen.chooseNum(1L, 9L)
+    rows <- Gen.sequence[List[List[(Long, Long, Double)]], List[(Long, Long, Double)]](
+      sizes.map(n => Gen.listOfN(n, for {
+        gap <- Gen.oneOf(Gen.chooseNum(1L, 3L), Gen.chooseNum(1L, 9000L))
+        v <- Gen.chooseNum(-9L, 9L)
+        d <- Gen.chooseNum(-1e3, 1e3)
+      } yield (gap, v, d))))
     frameWidth <- Gen.chooseNum(1, 12)
   } yield {
-    val rows = vals.zipWithIndex.flatMap { case (vs, g) =>
-      vs.zipWithIndex.map { case (v, i) => (s"g$g", i.toLong * 3 + 1, v) }
+    val flat = rows.zipWithIndex.flatMap { case (rs, g) =>
+      rs.scanLeft((0L, 0L, 0d)) { case ((k, _, _), (gap, v, d)) => (k + gap, v, d) }
+        .tail.map { case (k, v, d) => (Seq("A", "B", "C")(g), k, v, d) }
     }
-    (rows, bucketWidth, frameWidth)
+    (flat, frameWidth)
   }
 
-  /** `body` with the crossover off, so the ScanWindows helpers and
-    * RewriteLowCardWindow take the two-level form over these tiny
-    * (provably small) frames. */
+  /** `body` with the crossover off, so RewriteLowCardWindow takes the
+    * two-level form over these tiny (provably small) frames. */
   private def twoLevel[T](body: => T): T = {
     val k = graft.plans.RewriteLowCardWindow.minChildBytesKey
     spark.conf.set(k, "0")
     try body finally spark.conf.unset(k)
   }
 
-  property("ScanWindows.prefixSums ≡ naive running sum on random frames") =
-    forAll(scanFrame) { case (rows, bw, _) =>
-      import org.apache.spark.sql.expressions.Window
-      rows.isEmpty || {
-        val df = rows.toDF("g", "k", "v").repartition(5)
-          .withColumn("bkt", expr(s"k div $bw"))
-        val got = twoLevel(graft.operators.ScanWindows.prefixSums(
-          df, Seq("g"), "bkt", Seq("k"), Seq("run" -> "v")))
-        val w = Window.partitionBy(col("g")).orderBy(col("k"))
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val want = df.withColumn("run", sum(col("v")).over(w))
-        got.select("g", "k", "run").except(want.select("g", "k", "run")).isEmpty &&
-          want.select("g", "k", "run").except(got.select("g", "k", "run")).isEmpty
-      }
+  /** Sorted rows of `build()` with the rule off and, under [[twoLevel]],
+    * with it on — a TRUE multiset comparison (sorted row strings) — and
+    * whether the rule-on plan holds the rewrite's bucket-keyed windows. */
+  private def ruleOffOn(build: () => org.apache.spark.sql.DataFrame)
+      : (Seq[String], Seq[String], Boolean) = {
+    val key = graft.plans.RewriteLowCardWindow.enabledKey
+    spark.conf.set(key, "false")
+    val off = try build().collect().map(_.toString).toSeq.sorted
+      finally spark.conf.unset(key)
+    twoLevel {
+      val df = build()
+      (off, df.collect().map(_.toString).toSeq.sorted,
+        df.queryExecution.optimizedPlan.toString.contains("_gsw_bkt"))
     }
+  }
+
+  private def boundedLaw(aggs: org.apache.spark.sql.expressions.WindowSpec =>
+                           Seq[org.apache.spark.sql.Column]) =
+    // no shrinking: each shrink step would run two Spark jobs
+    Prop.forAllNoShrink(boundedFrame) { case (rows, fw) =>
+      import org.apache.spark.sql.expressions.Window
+      val df = rows.toDF("l_returnflag", "k", "v", "d").repartition(5)
+      val w = Window.partitionBy(col("l_returnflag")).orderBy(col("k"))
+        .rowsBetween(-(fw - 1), 0)
+      val (off, on, fired) = ruleOffOn(() =>
+        df.select(Seq(col("l_returnflag"), col("k")) ++ aggs(w): _*))
+      off == on && (fired || rows.isEmpty)
+    }
+
+  property("RewriteLowCardWindow ≡ naive bounded ROWS frame: long and double sums") =
+    boundedLaw(w => Seq(sum(col("v")).over(w).as("s"), sum(col("d")).over(w).as("sd")))
 
   // nulls allowed in the partition key, order key AND value; k drawn from
   // a tiny range so RANGE-frame peer groups are everywhere
@@ -788,39 +808,40 @@ object GraftProperties extends Properties("graft") {
           max(col("v")).over(w).as("mx"), count(col("v")).over(w).as("c"),
           count(lit(1)).over(w).as("ca"))
       }
-      val key = graft.plans.RewriteLowCardWindow.enabledKey
       // random frames are tiny — lift the crossover bypass so the rule
       // actually fires (production inputs are not provably small)
-      twoLevel {
-        spark.conf.set(key, "false")
-        val want = try build().collect().map(_.toString).sorted
-        finally spark.conf.set(key, "true")
-        // TRUE multiset equality (sorted row strings): except()-both-ways
-        // plus counts is set-based and misses duplicate-multiplicity swaps
-        val got = build().collect().map(_.toString).sorted
-        got.sameElements(want)
-      }
+      val (off, on, fired) = ruleOffOn(() => build())
+      off == on && fired
     }
 
-  property("ScanWindows.slidingFrame ≡ naive trailing frame on random frames") =
-    forAll(scanFrame) { case (rows, bw, fw) =>
-      import org.apache.spark.sql.expressions.Window
-      rows.isEmpty || {
-        val df = rows.toDF("g", "k", "v").repartition(5)
-          .withColumn("bkt", expr(s"k div $bw"))
-        val got = twoLevel(graft.operators.ScanWindows.slidingFrame(
-          df, Seq("g"), "bkt", Seq("k"), fw) { w =>
-          Seq("s" -> sum(col("v")).over(w), "n" -> count(lit(1)).over(w))
-        })
-        val w = Window.partitionBy(col("g")).orderBy(col("k"))
-          .rowsBetween(-(fw - 1), 0)
-        val want = df
-          .withColumn("s", sum(col("v")).over(w))
-          .withColumn("n", count(lit(1)).over(w))
-        got.select("g", "k", "s", "n").except(want.select("g", "k", "s", "n")).isEmpty &&
-          want.select("g", "k", "s", "n").except(got.select("g", "k", "s", "n")).isEmpty
-      }
+  property("RewriteLowCardWindow ≡ naive bounded ROWS frame: count and sorted collect_list") =
+    boundedLaw(w => Seq(count(lit(1)).over(w).as("n"),
+      sort_array(collect_list(col("v")).over(w)).as("lst")))
+
+  // the integral bucket on random longs, the extremes included: monotone
+  // non-decreasing, null-preserving, and at most 4,096 buckets in any
+  // power-of-two range (probed with a dense run of consecutive keys)
+  property("integral bucket: monotone, null-preserving, <= 4096 buckets per power-of-two range") = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.LongType
+    val e = graft.plans.RewriteLowCardWindow.integralBucket(
+      BoundReference(0, LongType, nullable = true))
+    def bucket(k: java.lang.Long): Any = e.eval(InternalRow(k))
+    val keys = Gen.listOf(Gen.oneOf(Gen.chooseNum(Long.MinValue, Long.MaxValue),
+      Gen.chooseNum(-70000L, 70000L), Gen.oneOf(Long.MinValue, Long.MaxValue, 0L, -1L)))
+    forAll(keys, Gen.chooseNum(0, 62), Gen.oneOf(1L, -1L)) { (ks, p, sign) =>
+      val sorted = (ks ++ Seq(Long.MinValue, Long.MaxValue)).sorted
+      val bs = sorted.map(k => bucket(k).asInstanceOf[Long])
+      // consecutive keys from the start of [2^p, 2^(p+1)) (or its mirror):
+      // 10,000 of them, or the whole range when it is smaller
+      val lo = 1L << p
+      val dense = (0L until math.min(lo, 10000L)).map(i => sign * (lo + i))
+      bucket(null) == null &&
+        bs.zip(bs.drop(1)).forall { case (a, b) => a <= b } &&
+        dense.map(k => bucket(k)).distinct.size <= 4096
     }
+  }
 
   // shared clustered copy for the zone-map law (written once per JVM)
   private lazy val zmDir: String = {

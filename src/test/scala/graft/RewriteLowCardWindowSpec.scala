@@ -17,24 +17,16 @@ import graft.plans.RewriteLowCardWindow
   *
   * Suite conf: the crossover bypass is OFF (minChildBytes = 0 — these
   * fixtures are deliberately tiny and must still rewrite; the bypass has
-  * its own tests) and bucketDiv = 16 so integral keys really span
-  * MULTIPLE buckets (at the production default 16384 a 0–500 key domain
-  * collapses to one bucket and the cross-bucket merges go unexercised). */
+  * its own tests). The integral bucket keeps every key below 4096 as its
+  * own bucket, so the fixtures' keys really span MULTIPLE buckets. */
 class RewriteLowCardWindowSpec extends AnyFunSuite with BeforeAndAfterAll {
   import SparkTestSession._
 
   private val enabledKey = RewriteLowCardWindow.enabledKey
   private val minBytesKey = RewriteLowCardWindow.minChildBytesKey
-  private val divKey = RewriteLowCardWindow.bucketDivKey
 
-  override def beforeAll(): Unit = {
-    spark.conf.set(minBytesKey, "0")
-    spark.conf.set(divKey, "16")
-  }
-  override def afterAll(): Unit = {
-    spark.conf.unset(minBytesKey)
-    spark.conf.unset(divKey)
-  }
+  override def beforeAll(): Unit = spark.conf.set(minBytesKey, "0")
+  override def afterAll(): Unit = spark.conf.unset(minBytesKey)
 
   /** Nulls everywhere they can be: partition keys, order keys, values;
     * heavy ties on k (i % 37) so RANGE-frame peer handling is exercised. */
@@ -255,8 +247,8 @@ class RewriteLowCardWindowSpec extends AnyFunSuite with BeforeAndAfterAll {
     // fp sum — reassociation would change results
     assert(offending(synth()
       .withColumn("run", sum(col("v").cast("double")).over(w))).nonEmpty)
-    // value-offset frame — not the unbounded-preceding scan shape
-    val wf = w.rowsBetween(-5, Window.currentRow)
+    // value-offset RANGE frame — neither a scan nor a positional borrow
+    val wf = w.rangeBetween(-5, Window.currentRow)
     assert(offending(synth().withColumn("run", sum(col("v")).over(wf))).nonEmpty)
     // high-card partition key name — not in the gate set, no stats
     val wh = Window.partitionBy(col("id")).orderBy(col("k"))
@@ -308,27 +300,24 @@ class RewriteLowCardWindowSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ScanWindowWatch flags a degenerate statless bucketing after execution") {
-    // narrow statless integral domain at the PRODUCTION bucketDiv: k in
-    // 0..36 fits one 16384 span -> one bucket; the optimizer cannot see
-    // it (no stats is exactly the failing case) but the executed partials
-    // aggregate reports 1 output row and the watch names the knobs
-    spark.conf.set(divKey, "16384")
-    try {
-      val w = Window.orderBy(col("k"))
-      val df = synth().select(col("id"), col("k"),
-        sum(col("v")).over(w).as("run"))
-      assertRewritten(df)
-      df.collect() // populate SQL metrics (count() would prune the window)
-      val findings = graft.plans.ScanWindowWatch.check(df.queryExecution)
-      assert(findings.nonEmpty, "expected a degeneracy warning")
-      assert(findings.head.contains(RewriteLowCardWindow.bucketDivKey))
-      // and a healthy bucketing stays silent
-      spark.conf.set(divKey, "4")
-      val ok = synth().select(col("id"), col("k"),
-        sum(col("v")).over(w).as("run2"))
-      ok.collect()
-      assert(graft.plans.ScanWindowWatch.check(ok.queryExecution).isEmpty)
-    } finally spark.conf.set(divKey, "16")
+    // the one case range-free buckets leave: a leading key with at most
+    // 4 distinct values gives at most 4 buckets; the optimizer cannot see
+    // it without stats, but the executed partials aggregate reports its
+    // output rows and the watch names the cause
+    val df = synth().withColumn("k4", col("id") % 4)
+      .select(col("id"), col("k4"),
+        sum(col("v")).over(Window.orderBy(col("k4"), col("id"))).as("run"))
+    assertRewritten(df)
+    df.collect() // populate SQL metrics (count() would prune the window)
+    val findings = graft.plans.ScanWindowWatch.check(df.queryExecution)
+    assert(findings.nonEmpty, "expected a degeneracy warning")
+    assert(findings.head.contains("leading ORDER BY key"))
+    assert(!findings.head.contains("spark.graft"), "names a knob")
+    // and a 37-value leading key stays silent
+    val ok = synth().select(col("id"), col("k"),
+      sum(col("v")).over(Window.orderBy(col("k"))).as("run2"))
+    ok.collect()
+    assert(graft.plans.ScanWindowWatch.check(ok.queryExecution).isEmpty)
   }
 
   test("last/first IGNORE NULLS rewrite: LOCF fill over a total order") {
@@ -403,12 +392,43 @@ class RewriteLowCardWindowSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("windows over aggregates stay naive (bounded input)") {
-    val agg = synth().groupBy(col("l_returnflag"), col("k"))
+    // a provably small aggregate bounds the window: naive at the default
+    // conf; under minChildBytes = 0 no aggregate is provably small, so
+    // the same window rewrites — exactly
+    def build() = synth().groupBy(col("l_returnflag"), col("k"))
       .agg(sum(col("v")).as("sv"))
-    val w = Window.partitionBy(col("l_returnflag")).orderBy(col("k"))
-    val df = agg.withColumn("run", sum(col("sv")).over(w))
-    val windows = df.queryExecution.optimizedPlan.collect { case x: LWindow => x }
-    assert(windows.nonEmpty, "aggregate-bounded window should survive as-is")
-    assert(windows.forall(x => RewriteLowCardWindow.boundedBelow(x.child)))
+      .withColumn("run", sum(col("sv")).over(
+        Window.partitionBy(col("l_returnflag")).orderBy(col("k"))))
+    spark.conf.unset(minBytesKey)
+    try {
+      val windows = build().queryExecution.optimizedPlan.collect { case x: LWindow => x }
+      assert(windows.nonEmpty, "aggregate-bounded window should survive as-is")
+      assert(windows.forall(x => RewriteLowCardWindow.boundedBelow(x.child) &&
+        !x.partitionSpec.flatMap(_.references.map(_.name)).contains("_gsw_bkt")))
+    } finally spark.conf.set(minBytesKey, "0")
+    pinned(build())
+  }
+
+  test("bounded ROWS frames borrow exactly: fp sums, lists and sets, mixed with running frames") {
+    // total order (unique id): ROWS frames are deterministic; the frame
+    // widths exceed the one-key buckets, so every borrow crosses buckets
+    pinned {
+      val w = Window.partitionBy(col("l_returnflag")).orderBy(col("id"))
+      synth().select(col("id"), col("l_returnflag"), col("v"),
+        sum(col("v")).over(w.rowsBetween(-5, Window.currentRow)).as("s5"),
+        sum(col("v").cast("double") / 7).over(w.rowsBetween(-29, 0)).as("d30"),
+        sort_array(collect_list(col("v")).over(w.rowsBetween(-9, 0))).as("l10"),
+        size(collect_set(col("v")).over(w.rowsBetween(-9, 0))).as("u10"),
+        avg(col("v")).over(w.rowsBetween(-3, 0)).as("a4"),
+        // running frames in the same node: the rule splits it in two
+        sum(col("v")).over(w.rowsBetween(Window.unboundedPreceding, 0)).as("run"),
+        row_number().over(w).as("rn"))
+    }
+    pinned { // global, through a null leading key group and descending
+      val w = Window.orderBy(col("k").desc, col("id"))
+        .rowsBetween(-12, Window.currentRow)
+      synth().select(col("id"), col("k"),
+        count(col("v")).over(w).as("c13"), max(col("v")).over(w).as("m13"))
+    }
   }
 }

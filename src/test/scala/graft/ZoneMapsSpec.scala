@@ -1176,6 +1176,28 @@ class ZoneMapsSpec extends AnyFunSuite {
     }
   }
 
+  test("an events.ts layout writes INT64 micros: zero-job manifest, the same values back") {
+    // INT96, Spark's session default for TIMESTAMP, keeps no footer
+    // statistics; the layout writer overrides it for its own write only
+    val d = Files.createTempDirectory("graft_zm_ts_").toString
+    val key = "spark.sql.parquet.outputTimestampType"
+    val before = spark.conf.getOption(key)
+    ZoneMaps.clusteredWrite(tables.events, "ts", d, 4)
+    assert(spark.conf.getOption(key) == before, "the session default changed")
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val jobs = jobsOf("zm-ts-footer") {
+      rows = ZoneMaps.manifestRows(spark, d, Seq("ts", "event_id"))
+    }
+    assert(jobs == 0, "the ts envelopes come off the footers the write left")
+    assert(rows.length == 4 && sameManifest(rows,
+      ZoneMaps.build(spark, d, Seq("ts", "event_id")).collect()))
+    val back = spark.read.parquet(d)
+    assert(back.schema == tables.events.schema)
+    assert(back.exceptAll(tables.events).isEmpty &&
+      tables.events.exceptAll(back).isEmpty)
+    ZoneMaps.forget(spark, d)
+  }
+
   test("footer route: a double, a bloom, a >4 KB string and a non-Spark file take the scan") {
     import spark.implicits._
     var n = 0
